@@ -140,51 +140,35 @@ def main() -> None:
         .save()
     )
 
-    # Medians of 3 full suite passes (round-robin, so no query benefits
-    # from back-to-back cache warmth): single runs carry ±15% noise
-    # (SCALING.md), which made round-over-round per-query comparisons
-    # unadjudicable. `queries` quotes the median; `queries_min` the best
-    # observed run (the steady-state throughput bound).
+    # Medians of 3 round-robin passes (no query benefits from back-to-back
+    # cache warmth; single runs carry ±15% noise, SCALING.md). `queries`
+    # quotes the median, `queries_min` the best run.
     passes = 3
 
     def run_suite(names: list[str], drop_first: bool = False) -> tuple[dict, dict]:
         import gc
 
-        from corintick_spark.operators.ckpt import release_all_persistent
+        from corintick_spark.operators.ckpt import scope
 
         samples: dict[str, list[float]] = {n: [] for n in names}
         for _ in range(passes):
             for name in names:
                 q = registry[name]
-                t0 = time.perf_counter()
-                q.spark(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples[name].append(time.perf_counter() - t0)
-                # drop py4j refs promptly so the ContextCleaner can reclaim
-                # finished queries' localCheckpoint blocks between samples
-                # (iterative ops release in-loop blocks themselves — ckpt.py
-                # — but their final frames ride the GC path)
+                # the scope frees the query's persisted/checkpointed blocks
+                # once the noop sink has materialized it, outside the timing
+                with scope(spark):
+                    t0 = time.perf_counter()
+                    q.spark(spark, sf_dir).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
+                    samples[name].append(time.perf_counter() - t0)
+                # drop py4j refs so the ContextCleaner can reclaim the
+                # query's shuffle files and broadcasts
                 gc.collect()
-                # Measurement-hygiene fix (round 11, guide §5 "unpersist
-                # when done"): gc.collect() alone is NOT enough — the JVM
-                # Dataset must also be garbage-collected before the
-                # ContextCleaner queues the unpersist, and with a 16 GB
-                # heap that lags by many queries. Leaked localCheckpoint
-                # blocks (~1 GB/suite pass) degraded extras medians 10-60x
-                # by pass 3 while minima stayed flat. The query's result
-                # is fully materialized by the noop sink above and its
-                # frame dropped, so releasing every leftover block here is
-                # outside the timed region and changes no result.
-                release_all_persistent(spark)
-        # drop_first: the heavy iterative extras (pagerank, survivors, PQ
-        # fit) pay one-time session costs (codegen, broadcast warmup,
-        # checkpoint dirs) on pass 1 that made driver-bench medians read
-        # ~40% above SCALING.md's warm medians (verdict r05 item 3) —
-        # excluding pass 1 quotes the steady state the scale tables use;
-        # the index len//2 then picks the LARGER of the two warm runs
-        # (conservative). Headline keys keep all passes for cross-round
-        # comparability with r01-r05.
+        # drop_first: the heavy iterative extras pay one-time session costs
+        # (codegen, broadcast warm-up, checkpoint dirs) on pass 1, so their
+        # medians exclude it; len//2 then picks the larger of the two warm
+        # runs. Headline keys keep all passes.
         timed = {
             n: (v[1:] if drop_first and len(v) > 1 else v)
             for n, v in samples.items()

@@ -163,7 +163,6 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
     from pyspark.sql.window import Window
 
     solved_parts: "list[DataFrame]" = []
-    ckpts = [bounds]  # every round's checkpoint feeds a solved slice
     while True:
         solved_parts.append(
             bounds.filter(F.col("lo") == F.col("hi")).select(
@@ -240,17 +239,9 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
             ).alias("hi"),
             (F.col("k") - (F.col("cum") - F.col("c"))).alias("k"),
         ).localCheckpoint()
-        ckpts.append(bounds)
     out = solved_parts[0]
     for part in solved_parts[1:]:
         out = out.unionByName(part)
-    # operator-scoped release (round 12, verdict r11 item 7): every round's
-    # bounds checkpoint feeds a slice of the result, so none can be
-    # released here — the NEXT invocation releases this generation instead
-    # (ckpt.rotate_generation), bounding a long session's leak.
-    from corintick_spark.operators.ckpt import rotate_generation
-
-    rotate_generation("quantile._grouped_refine", *ckpts)
     return out
 
 

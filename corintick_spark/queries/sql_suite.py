@@ -460,9 +460,6 @@ def sql_recursive(spark, sf_dir):
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         WHERE c.c_nationkey <> s.s_nationkey
     """).localCheckpoint(eager=True)
-    from corintick_spark.operators.ckpt import rotate_generation
-
-    rotate_generation("sql_recursive.edges", edges)
     edges.createOrReplaceTempView("edges_mat_recursive")
     return spark.sql("""
         WITH RECURSIVE reach(nation, hops) AS (

@@ -13,6 +13,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import sys
@@ -39,6 +40,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from corintick_spark.operators.ckpt import scope
     from corintick_spark.registry import DRIVER_WINDOW, load_all
     from tests.oracle import compare, duck_connection, run_duck
 
@@ -56,7 +58,10 @@ def main() -> int:
         q = queries[name]
         t0 = time.time()
         try:
-            pdf = q.spark(spark, args.sf).toPandas()
+            # toPandas materializes the query inside the scope, which then
+            # frees its persisted blocks so a long sweep does not pile them up
+            with scope(spark):
+                pdf = q.spark(spark, args.sf).toPandas()
             if q.sql is None:
                 problems = []
                 if "inv_ok" not in pdf.columns:
@@ -73,15 +78,7 @@ def main() -> int:
             problems, status = [f"{type(e).__name__}: {e}"], "ERROR"
             pdf = None
         dt = time.time() - t0
-        # the query is fully materialized (toPandas) — release every
-        # leftover persisted/localCheckpointed block so a 350-query sweep
-        # doesn't accumulate them for the session's life (ckpt.py)
-        import gc as _gc
-
-        _gc.collect()
-        from corintick_spark.operators.ckpt import release_all_persistent
-
-        release_all_persistent(spark)
+        gc.collect()  # lets the ContextCleaner reclaim shuffles/broadcasts
         ok = status in ("MATCH", "ROWS-ONLY-OK")
         n_ok += ok
         n_bad += not ok

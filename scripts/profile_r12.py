@@ -1,7 +1,7 @@
-"""Round-11 optimization profiler: for each named query, capture
+"""Optimization profiler: for each named query, capture
 explain("formatted") into plans/r12/<name>_<tag>.txt and time N noop-sink
 passes (same methodology as bench.py: warm medians, per-query
-setJobDescription labels). Prints one JSON line with per-query medians.
+setJobDescription labels, one checkpoint scope per pass). Prints one JSON line with per-query medians.
 
 Usage:
     python scripts/profile_r12.py --names q1,q2 [--tag before]
@@ -11,6 +11,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import sys
@@ -40,6 +41,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from corintick_spark.catalog import table
+    from corintick_spark.operators.ckpt import scope
     from corintick_spark.registry import load_all
 
     registry = load_all()
@@ -60,10 +62,11 @@ def main() -> None:
     for name in names:
         q = registry[name]
         if not args.no_plans:
-            df = q.spark(spark, args.sf)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            with scope(spark):
+                df = q.spark(spark, args.sf)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
             with open(
                 os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w"
             ) as fh:
@@ -71,19 +74,14 @@ def main() -> None:
         vals = []
         for i in range(args.passes):
             spark.sparkContext.setJobDescription(f"{name} pass {i}")
-            t0 = time.perf_counter()
-            q.spark(spark, args.sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            vals.append(time.perf_counter() - t0)
+            with scope(spark):
+                t0 = time.perf_counter()
+                q.spark(spark, args.sf).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                vals.append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
-            # same post-materialization block hygiene as bench.py
-            import gc as _gc
-
-            _gc.collect()
-            from corintick_spark.operators.ckpt import release_all_persistent
-
-            release_all_persistent(spark)
+            gc.collect()  # same post-materialization hygiene as bench.py
         samples[name] = [round(v, 3) for v in vals]
         # warm median: drop the first pass when >1 pass ran
         timed = vals[1:] if len(vals) > 1 else vals

@@ -1,77 +1,86 @@
-"""Coverage for the round-11 session-lifetime leak fixes (ADVICE r11):
-release_all_persistent and the streaming worker-spawn-flake retry matcher.
-Without these, a Spark upgrade that changes py4j internals or the exception
-message would silently revert both to no-ops.
+"""Checkpoint lifetime (operators/ckpt.py::scope) and the streaming
+worker-spawn-flake retry matcher. Without these, a Spark upgrade that
+changes py4j internals or the exception message would silently revert
+both to no-ops.
 """
 
 from __future__ import annotations
 
+import os
 
-def _persistent_count(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+from corintick_spark.operators.ckpt import release_local_checkpoint, scope
 
-
-def test_release_all_persistent_releases_blocks(spark):
-    from corintick_spark.operators.ckpt import release_all_persistent
-
-    # clean slate (other session-scoped tests may have leaked frames)
-    release_all_persistent(spark)
-    assert _persistent_count(spark) == 0
-
-    df = spark.range(1000).localCheckpoint(eager=True)
-    cached = spark.range(500).persist()
-    cached.count()
-    assert _persistent_count(spark) >= 2
-
-    n = release_all_persistent(spark)
-    assert n >= 2
-    assert _persistent_count(spark) == 0
-    del df, cached
+# the registered queries whose operators leave result-feeding checkpoints
+# alive when they return (nndescent/ANN frames are held across operator
+# calls by GraphIndex and are left to the ContextCleaner, see ann_index.py)
+_CHECKPOINTING_QUERIES = [
+    "dedup_minhash", "dedup_ngram", "dedup_survivors",
+    "dedup_clusters", "dedup_image_phash", "graph_pagerank",
+    "graph_bfs", "sql_recursive", "agg_group_median",
+    "text_heavyhitters",
+]
 
 
-def test_release_all_persistent_refuses_during_active_stream(spark):
-    """The session-global hammer must not strip an active streaming query's
-    state (ADVICE r11 guard)."""
-    from corintick_spark.operators.ckpt import release_all_persistent
-
-    leaked = spark.range(10).localCheckpoint(eager=True)
-
-    class _Streams:
-        active = [object()]  # pretend a query is running
-
-    class _FakeSession:
-        streams = _Streams()
-        sparkContext = spark.sparkContext
-
-    assert release_all_persistent(_FakeSession()) == 0
-    assert _persistent_count(spark) >= 1  # nothing was released
-    assert release_all_persistent(spark) >= 1  # real session releases
-    del leaked
+def _persistent_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-def test_release_all_persistent_survives_bad_rdd(spark):
-    """One RDD failing to unpersist must not abort the rest (ADVICE r11)."""
-    from corintick_spark.operators import ckpt
+def test_scope_releases_rdds_persisted_inside(spark):
+    before = _persistent_ids(spark)
+    with scope(spark):
+        ck = spark.range(1000).localCheckpoint(eager=True)
+        cached = spark.range(500).persist()
+        cached.count()
+        inside = _persistent_ids(spark) - before
+        assert len(inside) >= 2
+    assert not inside & _persistent_ids(spark)
+    del ck, cached
 
-    good = spark.range(100).localCheckpoint(eager=True)
+
+def test_scope_keeps_cache_persisted_before(spark):
+    before = _persistent_ids(spark)
+    user = spark.range(300).persist()
+    user.count()
+    user_ids = _persistent_ids(spark) - before
+    assert user_ids
+    with scope(spark):
+        spark.range(10).localCheckpoint(eager=True).count()
+    assert user_ids <= _persistent_ids(spark)
+    assert user.count() == 300
+    user.unpersist()
+
+
+def test_nested_scopes_release_only_their_own(spark):
+    base = _persistent_ids(spark)
+    with scope(spark):
+        outer = spark.range(10).localCheckpoint(eager=True)
+        outer_ids = _persistent_ids(spark) - base
+        with scope(spark):
+            spark.range(20).localCheckpoint(eager=True)
+            inner_ids = _persistent_ids(spark) - base - outer_ids
+        now = _persistent_ids(spark)
+        assert inner_ids and not inner_ids & now
+        assert outer_ids and outer_ids <= now
+        assert outer.count() == 10  # the outer frame is still readable
+    assert not outer_ids & _persistent_ids(spark)
+
+
+def test_scope_survives_bad_rdd(spark):
+    """One RDD failing to unpersist must not stop the rest."""
+    real_get = spark.sparkContext._jsc.getPersistentRDDs
+    calls = []
 
     class _BadRDD:
         def unpersist(self, blocking):
             raise RuntimeError("boom")
 
-    real_get = spark.sparkContext._jsc.getPersistentRDDs
-
     class _JSC:
         @staticmethod
         def getPersistentRDDs():
-            jmap = real_get()
-
-            class _Map:
-                @staticmethod
-                def values():
-                    return [_BadRDD(), *list(jmap.values())]
-
-            return _Map()
+            calls.append(1)
+            real = dict(real_get().items())
+            # entry sees the real map; exit sees a failing RDD listed first
+            return real if len(calls) == 1 else {-1: _BadRDD(), **real}
 
     class _SC:
         _jsc = _JSC()
@@ -80,10 +89,32 @@ def test_release_all_persistent_survives_bad_rdd(spark):
         streams = spark.streams
         sparkContext = _SC()
 
-    n = ckpt.release_all_persistent(_FakeSession())
-    assert n >= 1  # the real RDD was still released past the bad one
-    assert _persistent_count(spark) == 0
+    before = _persistent_ids(spark)
+    with scope(_FakeSession()):
+        good = spark.range(100).localCheckpoint(eager=True)
+        inside = _persistent_ids(spark) - before
+    assert inside and not inside & _persistent_ids(spark)
     del good
+
+
+def test_scope_releases_nothing_while_stream_active(spark):
+    """An active streaming query may hold state persisted inside the
+    scope — the scope must leave everything in place."""
+
+    class _Streams:
+        active = [object()]  # pretend a query is running
+
+    class _FakeSession:
+        streams = _Streams()
+        sparkContext = spark.sparkContext
+
+    before = _persistent_ids(spark)
+    with scope(_FakeSession()):
+        kept = spark.range(10).localCheckpoint(eager=True)
+        inside = _persistent_ids(spark) - before
+    assert inside and inside <= _persistent_ids(spark)
+    assert kept.count() == 10
+    release_local_checkpoint(kept)
 
 
 def test_worker_spawn_flake_matcher():
@@ -99,44 +130,43 @@ def test_worker_spawn_flake_matcher():
     assert not _worker_spawn_flake(RuntimeError("FileNotFoundException"))
 
 
-def test_long_session_checkpoint_leak_bounded(spark, sf_dir):
-    """Round-12 operator-scoped release (verdict r11 item 7): 20 heavy
-    query runs in ONE session, with NO harness-level global release —
-    the persistent-RDD count must stay bounded (one generation per
-    operator via ckpt.rotate_generation), not grow per run.
-
-    Round 11 measured ~1 GB of leaked localCheckpoint blocks per suite
-    pass without this (extras medians degraded 10-60x by pass 3)."""
-    from corintick_spark.operators.ckpt import release_all_persistent
+def _run_scoped_session(spark, sf_dir: str, passes: int) -> None:
+    """Run every checkpointing query ``passes`` times in ONE session, each
+    run in its own scope, with no session-wide release anywhere. After
+    every scope the persistent RDDs this test created are exactly the ones
+    before the scope: the cache the user materialized first."""
     from corintick_spark.registry import load_all
 
     registry = load_all()
-    # rotation-wired operators' registered queries (nndescent/ANN frames
-    # deliberately ride the GC path — GraphIndex holds results across
-    # operator calls, see ann_index.py)
-    names = [
-        "dedup_minhash", "dedup_ngram", "dedup_survivors",
-        "dedup_clusters", "dedup_image_phash", "graph_pagerank",
-        "graph_bfs", "sql_recursive", "agg_group_median",
-        "text_heavyhitters",
-    ]
-    release_all_persistent(spark)  # clean slate from other tests
+    # RDD ids are sequential, so ids from `mark` on belong to this test;
+    # RDDs earlier tests left to the ContextCleaner may vanish at any time
+    mark = spark.sparkContext.emptyRDD()._jrdd.id()
 
-    def persistent() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def ours() -> set:
+        return {i for i in _persistent_ids(spark) if i >= mark}
 
-    counts = []
-    for _pass in range(3):
-        for n in names:
-            registry[n].spark(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        counts.append(persistent())
-    # two generations are kept per operator (A/B-safe rotation), so the
-    # steady state is reached by pass 2: pass 3 must not accumulate past
-    # it by more than one extra generation's worth of frames
-    assert counts[2] <= counts[1] + 2, counts
-    # and the absolute count stays at ~two generations per operator,
-    # nowhere near the grow-per-pass shape of the unrotated code
-    assert counts[2] <= 5 * len(names), counts
-    release_all_persistent(spark)
+    user = spark.range(1000).persist()
+    user.count()
+    user_ids = ours()
+    assert user_ids
+    for _pass in range(passes):
+        for name in _CHECKPOINTING_QUERIES:
+            with scope(spark):
+                registry[name].spark(spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            assert ours() == user_ids, (name, _pass)
+    assert user.count() == 1000
+    user.unpersist()
+
+
+def test_long_session_scoped_runs_fast(spark, sf_dir):
+    """Fast-gate form: 20 scoped runs at sf0.001."""
+    _run_scoped_session(
+        spark, os.path.join(os.path.dirname(sf_dir), "sf0.001"), passes=2
+    )
+
+
+def test_long_session_checkpoint_leak_bounded(spark, sf_dir):
+    """30 scoped runs at the suite's scale factor (``TEST_SF_DIR``)."""
+    _run_scoped_session(spark, sf_dir, passes=3)

@@ -420,6 +420,18 @@ def test_connected_components_random_vs_union_find(spark):
     assert got == want
 
 
+def test_connected_components_raises_without_fixpoint(spark):
+    """Exhausting max_iter before the fixpoint is an error, not a forest
+    whose nodes may carry several component labels."""
+    from corintick_spark.operators.dup_clusters import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "a_id long, b_id long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
+
+
 def test_approx_count_distinct_accuracy(spark, sf_dir):
     """HLL++ sketch must land within its configured relative error (2% rsd
     -> assert a loose 10% envelope)."""

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from bench import EXTRAS, HEADLINE
+from bench import HEADLINE
 from corintick_spark.registry import DRIVER_WINDOW, load_all
 from tests.oracle import compare, run_duck
 
