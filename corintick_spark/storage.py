@@ -20,6 +20,15 @@ scans stream in time order per uid without a sort. For very high uid
 cardinality (100 TB, millions of uids) use ``bucket_uids=N`` to hash uids
 into N directories instead of one-dir-per-uid (avoids small-file explosion
 while keeping pruning ~N-fold effective).
+
+Schema of record: every writer (``write``, ``upsert``, ``append_stream``)
+records the written columns and types in a ``_schema.json`` sidecar before
+its files land. Partition-directory values lose their type (Spark would
+re-infer ``uid="007"`` as the integer 7), so reads take the schema from the
+sidecar instead of inferring it from the files; appends may add columns or
+widen a type the parquet reader widens (int -> bigint, int -> double,
+float -> double), and any other type change is refused. ``merge_schema``
+only matters for stores written without a sidecar.
 """
 
 from __future__ import annotations
@@ -31,7 +40,47 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+# (narrow, wide) type pairs Spark's parquet reader widens on read: a column
+# may change between them across appends, and the sidecar keeps the wide one.
+_READER_WIDENS = {
+    (IntegerType, LongType),
+    (IntegerType, DoubleType),
+    (FloatType, DoubleType),
+}
+
+
+def _evolve_schema(prior: StructType, new: StructType) -> StructType:
+    """``prior``'s columns in order, each widened where ``new`` carries a
+    type the reader widens to, then ``new``'s added columns. Raises
+    ValueError on any other type change (nullability is not a change: the
+    reader returns every column nullable)."""
+    incoming = {f.name: f for f in new.fields}
+    fields = []
+    for old in prior.fields:
+        f = incoming.pop(old.name, old)
+        a, b = old.dataType, f.dataType
+        if a.simpleString() == b.simpleString() or (type(b), type(a)) in _READER_WIDENS:
+            fields.append(old)
+        elif (type(a), type(b)) in _READER_WIDENS:
+            fields.append(f)
+        else:
+            raise ValueError(
+                f"column {old.name!r} is recorded as {a.simpleString()}; a write "
+                f"of {b.simpleString()} is not a widening the parquet reader applies"
+            )
+    return StructType(fields + list(incoming.values()))
 
 
 @dataclass
@@ -66,6 +115,7 @@ class TickStore:
                 raise ValueError(
                     f"write overlaps existing data for uids: {[r[0] for r in sample]}"
                 )
+        self._record_schema(df.schema, replace=mode == "overwrite")
         out, part_cols = self._partitioned(df)
         (
             out.repartition(*[F.col(c) for c in part_cols])
@@ -74,27 +124,6 @@ class TickStore:
             .partitionBy(*part_cols)
             .parquet(self._data_dir())
         )
-        # Schema sidecar: partition-directory values lose their type (Spark
-        # re-infers them on read — a string uid '3' comes back as int), the
-        # corintick dtype round-trip guarantee (serialization.py † dtype
-        # strings) needs the written schema recorded. Appends with NEW
-        # columns merge into the sidecar (corintick allowed different chunks
-        # of one uid to carry different column sets † — SURVEY §1.1), with
-        # the latest write winning per-column. Local-FS write; on a real
-        # cluster this sidecar lives next to the dataset via the hadoop FS
-        # API.
-        os.makedirs(self.root, exist_ok=True)
-        schema = df.schema
-        if mode == "append" and os.path.exists(self._schema_path()):
-            with open(self._schema_path()) as fh:
-                prior = StructType.fromJson(json.load(fh))
-            new_names = set(schema.fieldNames())
-            merged = list(schema.fields) + [
-                f for f in prior.fields if f.name not in new_names
-            ]
-            schema = StructType(merged)
-        with open(self._schema_path(), "w") as fh:
-            fh.write(schema.json())
         if metadata:
             self.put_metadata(metadata)
             self._log_write_metadata(df, metadata)
@@ -135,17 +164,46 @@ class TickStore:
         interval filter, and Mongo projection (api.py::Corintick.read †).
         Range semantics inclusive of both ends, like DataFrame.loc[start:end].
 
-        ``merge_schema=True`` unions the schemas of every data file
-        (columns absent from older appends come back NULL) — corintick
-        allowed different chunks of one uid to carry different column sets
-        (SURVEY §1.1 †); heterogeneous appends need this flag to see every
-        column. The default stays False: schema merging foots the bill of a
-        footer read per file, which a 100 TB store pays only when asked.
+        The ``_schema.json`` sidecar is the schema of record: every column
+        any write recorded comes back with its recorded type (columns absent
+        from older appends read as NULL), with no footer read. On the plain
+        uid layout a read of string or integral uids opens only the
+        requested ``uid=<value>`` directories, so planning runs no Spark job;
+        when none of them exists the result is an empty frame with the same
+        columns.
+
+        ``merge_schema=True`` applies only to stores without a sidecar: it
+        unions the schemas of every data file instead of inferring from one
+        — corintick allowed different chunks of one uid to carry different
+        column sets (SURVEY §1.1 †). It stays off by default because it
+        reads a footer per file.
         """
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(self._data_dir())
+        schema = self._schema()
+        data_dir = self._data_dir()
+        if schema is None:
+            reader = self.spark.read
+            if merge_schema:
+                reader = reader.option("mergeSchema", "true")
+            df = reader.parquet(data_dir)
+        else:
+            dirs = self._uid_dirs(uids, schema)
+            if dirs is None:
+                df = self.spark.read.schema(schema).parquet(data_dir)
+            elif dirs:
+                df = (
+                    self.spark.read.schema(schema)
+                    .option("basePath", data_dir)
+                    .parquet(*dirs)
+                )
+            else:
+                # the scan's columns: data columns, then uid, all nullable;
+                # limit(0) lets the optimizer see the frame is empty, so a
+                # collect runs no job either
+                order = [f for f in schema.fields if f.name != self.uid_col]
+                order.append(schema[self.uid_col])
+                df = self.spark.createDataFrame(
+                    [], StructType([StructField(f.name, f.dataType) for f in order])
+                ).limit(0)
         if self.bucket_uids and "uid_bucket" in df.columns and uids is not None:
             # Bucket-level partition pruning: hash the requested uids with
             # the same (dtype-faithful) function the write path used, so a
@@ -161,12 +219,6 @@ class TickStore:
             if end is not None:
                 df = df.filter(F.col("_date") <= F.lit(end).cast("date"))
             df = df.drop("_date")
-        if os.path.exists(self._schema_path()):
-            with open(self._schema_path()) as fh:
-                written = StructType.fromJson(json.load(fh))
-            for f in written.fields:
-                if f.name in df.columns and df.schema[f.name].dataType != f.dataType:
-                    df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
         if uids is not None:
             df = df.filter(F.col(self.uid_col).isin(list(uids)))
         if start is not None:
@@ -214,6 +266,7 @@ class TickStore:
             if merge:
                 self.upsert(batch_df)
                 return
+            self._record_schema(batch_df.schema)
             (
                 batch_df.repartition(F.col(uid_col))
                 .sortWithinPartitions(ts_col)
@@ -411,6 +464,8 @@ class TickStore:
             return
         from pyspark.sql import Window as W
 
+        self._record_schema(df.schema)
+
         old = self.read(merge_schema=True).withColumn("_prio", F.lit(0))
         new = df.withColumn("_prio", F.lit(1))
         for c in old.columns:
@@ -461,7 +516,7 @@ class TickStore:
         if not self.bucket_uids:
             # one uid == one partition directory (possibly with date
             # sub-partitions inside) — removal is a file operation
-            part = os.path.join(data_dir, f"{self.uid_col}={uid}")
+            part = self._uid_dir(uid)
             if not os.path.exists(part):
                 return False
             shutil.rmtree(part)
@@ -560,17 +615,73 @@ class TickStore:
     def _schema_path(self) -> str:
         return os.path.join(self.root, "_schema.json")
 
+    def _schema(self) -> StructType | None:
+        """The sidecar's recorded schema; None for a store without one."""
+        if not os.path.exists(self._schema_path()):
+            return None
+        with open(self._schema_path()) as fh:
+            return StructType.fromJson(json.load(fh))
+
+    def _record_schema(self, schema: StructType, replace: bool = False) -> None:
+        """Record a write's schema in the sidecar, before its files land, so
+        the sidecar always covers every file on disk. ``replace`` (an
+        overwrite) records ``schema`` as is; otherwise it merges into the
+        recorded one (see :func:`_evolve_schema`), raising ValueError before
+        anything is written if a column changes to an incompatible type. A
+        store written before sidecars existed seeds the merge from its
+        files' merged footers, minus the partition columns, whose inferred
+        types are unreliable. Local-FS write; on a real cluster the sidecar
+        lives next to the dataset via the Hadoop FS API."""
+        prior = None if replace else self._schema()
+        if prior is None and not replace and self._exists():
+            inferred = self.spark.read.option("mergeSchema", "true").parquet(
+                self._data_dir()
+            )
+            prior = StructType([
+                f for f in inferred.schema.fields
+                if f.name not in (self.uid_col, "uid_bucket", "_date")
+            ])
+        if prior is not None:
+            schema = _evolve_schema(prior, schema)
+        os.makedirs(self.root, exist_ok=True)
+        with open(self._schema_path(), "w") as fh:
+            fh.write(schema.json())
+
+    def _uid_dirs(self, uids: list | None, schema: StructType) -> list[str] | None:
+        """The existing ``uid=<value>`` directories of the requested uids, or
+        None when the read must list the whole store: no uid list, a
+        bucketed layout, or uids that are not Python values of the recorded
+        uid type (str for a string uid, int for an integral one) — the
+        ``isin`` filter would coerce those, so only a full listing is safe."""
+        if uids is None or self.bucket_uids:
+            return None
+        dtype = schema[self.uid_col].dataType
+        if isinstance(dtype, StringType):
+            kind = str
+        elif isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
+            kind = int
+        else:
+            return None
+        if not all(isinstance(u, kind) and not isinstance(u, bool) for u in uids):
+            return None
+        dirs = [self._uid_dir(u) for u in dict.fromkeys(uids)]
+        return [d for d in dirs if os.path.isdir(d)]
+
+    def _uid_dir(self, uid) -> str:
+        """The plain layout's ``uid=<value>`` directory, escaped the way
+        Spark writes partition directories."""
+        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        return os.path.join(
+            self._data_dir(), utils.getPartitionPathString(self.uid_col, str(uid))
+        )
+
     def _buckets_for(self, uids: list) -> list[int]:
         """Bucket ids for the given uids, hashed with the written uid dtype
         (xxhash64(string) != xxhash64(long) — the sidecar keeps them aligned)."""
-        from pyspark.sql.types import StringType, StructField, StructType
-
         dtype = StringType()
-        if os.path.exists(self._schema_path()):
-            with open(self._schema_path()) as fh:
-                written = StructType.fromJson(json.load(fh))
-            if self.uid_col in written.fieldNames():
-                dtype = written[self.uid_col].dataType
+        written = self._schema()
+        if written is not None and self.uid_col in written.fieldNames():
+            dtype = written[self.uid_col].dataType
         tiny = self.spark.createDataFrame(
             [(u,) for u in uids], StructType([StructField(self.uid_col, dtype)])
         )

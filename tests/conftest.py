@@ -44,6 +44,19 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_connected_components_raises_without_fixpoint",
         "test_pagerank_matches_numpy_power_iteration",
         "test_operators_accept_empty_inputs",
+        # the TickStore battery: its read path and schema sidecar changed
+        "test_tickstore_roundtrip_and_overlap",
+        "test_tickstore_per_write_metadata",
+        "test_tickstore_schema_evolution_merge_read",
+        "test_tickstore_compact_preserves_layout",
+        "test_tickstore_date_partitioning_prunes",
+        "test_tickstore_bucketed_uids_prunes_partitions",
+        "test_tickstore_streaming_append_and_source",
+        "test_tickstore_compact_after_streaming",
+        "test_tickstore_vacuum_both_paths",
+        "test_tickstore_upsert_and_delete",
+        "test_tickstore_streaming_merge_ingestion",
+        "test_tickstore_full_lifecycle_integration",
     },
     "test_snapshots.py": {
         # append_split landed this round (stream_cdf_partitioned path)
