@@ -13,10 +13,13 @@ Chunking, per-column compression, and min/max chunk stats are Parquet-native
 (row groups + zstd + stats); the (uid, start, end) B-tree becomes Hive
 partition pruning on ``uid`` plus row-group stat skipping on ``ts``.
 
-Scale design: data is written ``partitionBy(uid)`` with
-``sortWithinPartitions(ts)`` so that (a) a single-uid range read prunes to
-one partition directory and then skips row groups by ts stats, and (b) full
-scans stream in time order per uid without a sort. For very high uid
+Scale design: data is written ``partitionBy(uid)``, one file per partition
+directory per write, each file sorted by the partition columns then ``ts``,
+so that (a) a single-uid range read prunes to one partition directory and
+then skips row groups by ts stats, and (b) full scans stream in time order
+per uid without a sort. A write's cost is per file, so it shuffles into
+``spark.sql.shuffle.partitions`` tasks (a fixed count AQE does not coalesce
+into one task) and those write the files in parallel. For very high uid
 cardinality (100 TB, millions of uids) use ``bucket_uids=N`` to hash uids
 into N directories instead of one-dir-per-uid (avoids small-file explosion
 while keeping pruning ~N-fold effective).
@@ -35,6 +38,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass
 from datetime import datetime
 
@@ -116,23 +120,43 @@ class TickStore:
                     f"write overlaps existing data for uids: {[r[0] for r in sample]}"
                 )
         self._record_schema(df.schema, replace=mode == "overwrite")
-        out, part_cols = self._partitioned(df)
-        (
-            out.repartition(*[F.col(c) for c in part_cols])
-            .sortWithinPartitions(self.ts_col)
-            .write.mode(mode)
-            .partitionBy(*part_cols)
-            .parquet(self._data_dir())
-        )
+        self._write_files(df, self._data_dir(), mode)
         if metadata:
             self.put_metadata(metadata)
             self._log_write_metadata(df, metadata)
 
+    def _write_files(
+        self, df: DataFrame, path: str, mode: str, zorder_by: list[str] | None = None
+    ) -> None:
+        """Write ``df`` under ``path`` in the store's layout — every TickStore
+        file write goes through here. The shuffle has a fixed
+        ``spark.sql.shuffle.partitions`` count, which AQE does not coalesce,
+        so a write's files (its cost is per file) come from that many tasks
+        rather than one; each partition value still hashes to one task, so
+        one file per directory. Rows are sorted by the partition columns,
+        then ``ts`` (or the Morton key of ``zorder_by``): that meets the
+        planned write's required ordering, so Spark adds no sort of its own
+        and the time order reaches the files."""
+        out, part_cols = self._partitioned(df)
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        out = out.repartition(n, *part_cols)
+        if zorder_by:
+            from corintick_spark.operators.zorder import with_zvalue
+
+            out = (
+                with_zvalue(out, zorder_by)
+                .sortWithinPartitions(*part_cols, "_zvalue")
+                .drop("_zvalue")
+            )
+        else:
+            out = out.sortWithinPartitions(*part_cols, self.ts_col)
+        out.write.mode(mode).partitionBy(*part_cols).parquet(path)
+
     def _partitioned(self, df: DataFrame) -> tuple[DataFrame, list[str]]:
         """Apply the store's configured partition layout (plain uid, hashed
         uid buckets, optional date sub-partition) to an outgoing frame —
-        shared by write() and compact() so maintenance can never silently
-        rewrite a store into a different layout."""
+        applied by _write_files() to every writer, so maintenance can never
+        silently rewrite a store into a different layout."""
         part_col = self.uid_col
         out = df
         if self.bucket_uids:
@@ -255,9 +279,6 @@ class TickStore:
             raise NotImplementedError(
                 "streaming append currently supports the plain uid layout"
             )
-        data_dir = self._data_dir()
-        uid_col, ts_col = self.uid_col, self.ts_col
-
         # foreachBatch + the normal batch writer, NOT the parquet streaming
         # sink: the file sink's _spark_metadata log would make batch reads
         # of the directory ignore every non-streaming-written file (so a
@@ -267,13 +288,7 @@ class TickStore:
                 self.upsert(batch_df)
                 return
             self._record_schema(batch_df.schema)
-            (
-                batch_df.repartition(F.col(uid_col))
-                .sortWithinPartitions(ts_col)
-                .write.mode("append")
-                .partitionBy(uid_col)
-                .parquet(data_dir)
-            )
+            self._write_files(batch_df, self._data_dir(), "append")
 
         writer = (
             stream_df.writeStream.foreachBatch(_write_batch)
@@ -404,46 +419,12 @@ class TickStore:
         listed dimension, so scans filtered by secondary columns also
         prune files. Use when queries filter on more than the time axis.
 
-        Local-FS implementation writes to a sibling directory and swaps via
-        rename; on a real cluster use the same pattern through the Hadoop
-        FileSystem API (or table-format compaction). Returns the number of
-        data files after compaction.
+        Returns the number of data files after compaction.
         """
-        import shutil
-
-        data_dir = self._data_dir()
-        tmp_dir = data_dir + ".compact_tmp"
-        old_dir = data_dir + ".compact_old"
         # merge_schema: heterogeneous appends must not lose columns in the
-        # rewrite; _partitioned(): the rewrite must reproduce the store's
-        # configured layout (uid buckets / date level), not reset it to
-        # plain-uid partitioning.
-        out, part_cols = self._partitioned(self.read(merge_schema=True))
-        out = out.repartition(*[F.col(c) for c in part_cols])
-        if zorder_by:
-            from corintick_spark.operators.zorder import with_zvalue
-
-            out = (
-                with_zvalue(out, zorder_by)
-                .sortWithinPartitions("_zvalue")
-                .drop("_zvalue")
-            )
-        else:
-            out = out.sortWithinPartitions(self.ts_col)
-        (
-            out.write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(tmp_dir)
-        )
-        os.rename(data_dir, old_dir)
-        os.rename(tmp_dir, data_dir)
-        shutil.rmtree(old_dir)
-        return sum(
-            1
-            for root, _, files in os.walk(data_dir)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        # rewrite (the writer keeps the store's configured layout)
+        self._swap_in(self.read(merge_schema=True), "compact", zorder_by)
+        return self._count_files()
 
     def upsert(self, df: DataFrame, keys: list[str] | None = None) -> None:
         """MERGE semantics on the store: rows of ``df`` REPLACE existing
@@ -485,22 +466,7 @@ class TickStore:
             .filter(F.col("_rn") == 1)
             .drop("_prio", "_rn")
         )
-        import shutil
-
-        data_dir = self._data_dir()
-        tmp_dir = data_dir + ".upsert_tmp"
-        old_dir = data_dir + ".upsert_old"
-        out, part_cols = self._partitioned(merged)
-        (
-            out.repartition(*[F.col(c) for c in part_cols])
-            .sortWithinPartitions(self.ts_col)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(tmp_dir)
-        )
-        os.rename(data_dir, old_dir)
-        os.rename(tmp_dir, data_dir)
-        shutil.rmtree(old_dir)
+        self._swap_in(merged, "upsert")
 
     def delete_uid(self, uid) -> bool:
         """Drop one uid's data. With plain uid partitioning this is a pure
@@ -508,9 +474,6 @@ class TickStore:
         path); bucketed layouts share directories between uids, so there
         it falls back to a layout-preserving filtered rewrite (compact()
         swap pattern). Returns True if anything was deleted."""
-        import shutil
-
-        data_dir = self._data_dir()
         if not self._exists():
             return False
         if not self.bucket_uids:
@@ -524,21 +487,7 @@ class TickStore:
         existing = self.read(merge_schema=True)
         if existing.filter(F.col(self.uid_col) == F.lit(uid)).limit(1).count() == 0:
             return False
-        kept, part_cols = self._partitioned(
-            existing.filter(F.col(self.uid_col) != F.lit(uid))
-        )
-        tmp_dir = data_dir + ".delete_tmp"
-        old_dir = data_dir + ".delete_old"
-        (
-            kept.repartition(*[F.col(c) for c in part_cols])
-            .sortWithinPartitions(self.ts_col)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(tmp_dir)
-        )
-        os.rename(data_dir, old_dir)
-        os.rename(tmp_dir, data_dir)
-        shutil.rmtree(old_dir)
+        self._swap_in(existing.filter(F.col(self.uid_col) != F.lit(uid)), "delete")
         return True
 
     def vacuum(self, before) -> int:
@@ -558,7 +507,6 @@ class TickStore:
         Returns the number of partition directories (date path) or files
         (rewrite path) removed.
         """
-        import shutil
         from datetime import date as _date
 
         cutoff = before if isinstance(before, _date) else _date.fromisoformat(str(before))
@@ -577,32 +525,39 @@ class TickStore:
                         shutil.rmtree(os.path.join(root, d))
                         removed += 1
             return removed
-        before_files = sum(
-            1 for r, _, fs in os.walk(data_dir) for f in fs if f.endswith(".parquet")
-        )
-        tmp_dir = data_dir + ".vacuum_tmp"
-        old_dir = data_dir + ".vacuum_old"
-        kept, part_cols = self._partitioned(
+        before_files = self._count_files()
+        self._swap_in(
             self.read(merge_schema=True).filter(
                 F.col(self.ts_col).cast("date") >= F.lit(cutoff.isoformat()).cast("date")
-            )
+            ),
+            "vacuum",
         )
-        (
-            kept.repartition(*[F.col(c) for c in part_cols])
-            .sortWithinPartitions(self.ts_col)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(tmp_dir)
-        )
+        return max(0, before_files - self._count_files())
+
+    # -- helpers -------------------------------------------------------------
+    def _swap_in(
+        self, df: DataFrame, tag: str, zorder_by: list[str] | None = None
+    ) -> None:
+        """Replace the store's data with ``df``: write it to the sibling
+        ``data.<tag>_tmp``, rename ``data`` to ``data.<tag>_old`` and the new
+        files into place, then remove the old ones. Local-FS renames; on a
+        real cluster the same pattern runs through the Hadoop FileSystem API
+        (or table-format compaction)."""
+        data_dir = self._data_dir()
+        tmp_dir, old_dir = f"{data_dir}.{tag}_tmp", f"{data_dir}.{tag}_old"
+        self._write_files(df, tmp_dir, "overwrite", zorder_by)
         os.rename(data_dir, old_dir)
         os.rename(tmp_dir, data_dir)
         shutil.rmtree(old_dir)
-        after_files = sum(
-            1 for r, _, fs in os.walk(data_dir) for f in fs if f.endswith(".parquet")
-        )
-        return max(0, before_files - after_files)
 
-    # -- helpers -------------------------------------------------------------
+    def _count_files(self) -> int:
+        return sum(
+            1
+            for _, _, files in os.walk(self._data_dir())
+            for f in files
+            if f.endswith(".parquet")
+        )
+
     def _data_dir(self) -> str:
         return os.path.join(self.root, "data")
 

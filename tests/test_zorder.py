@@ -58,7 +58,8 @@ def test_zorder_write_preserves_rows_and_clusters(spark, sf_dir, tmp_path):
 
 def test_tickstore_compact_zorder(spark, sf_dir, tmp_path):
     """compact(zorder_by=...) rewrites the store clustered on the Morton
-    key and loses no rows or columns."""
+    key: rows come in non-decreasing Morton order within every file, and
+    no rows or columns are lost."""
     from corintick_spark.storage import TickStore
 
     ev = (
@@ -67,10 +68,29 @@ def test_tickstore_compact_zorder(spark, sf_dir, tmp_path):
             "cast(user_id as string) AS uid", "ts", "value", "event_id"
         )
     )
+    # scattered, so no file is in Morton order before the compaction sorts
+    # it (a shuffle would drop an orderBy ahead of the store's own write)
+    ev.orderBy(F.xxhash64("event_id")).write.parquet(str(tmp_path / "scattered"))
     store = TickStore(spark, str(tmp_path / "store"))
-    store.write(ev)
+    store.write(spark.read.parquet(str(tmp_path / "scattered")))
     n = ev.count()
     store.compact(zorder_by=["event_id", "ts"])
     back = store.read()
     assert back.count() == n
     assert set(back.columns) >= {"uid", "ts", "value", "event_id"}
+    # the Morton key over the whole store, so the column ranges are the
+    # store-wide ones the compaction quantized with (per-file ranges differ)
+    z = (
+        Z.with_zvalue(
+            back.withColumn("_file", F.input_file_name()).withColumn(
+                "_row", F.monotonically_increasing_id()
+            ),
+            ["event_id", "ts"],
+        )
+        .select("_file", "_row", "_zvalue")
+        .toPandas()
+    )
+    assert z["_file"].nunique() > 1
+    for f, rows in z.groupby("_file"):
+        zs = rows.sort_values("_row")["_zvalue"].tolist()
+        assert zs == sorted(zs), f"{f} is not in Morton order"
