@@ -13,8 +13,9 @@ spec-derived parsers, rounds 5-10), not stubbed:
   gray+alpha, RGB(A), tRNS color-key, Adam7 interlace), BMP (24/32-bit,
   16-bit and arbitrary BI_BITFIELDS masks, 1/4/8-bit palette, RLE4/RLE8),
   GIF (LZW, interlace, animation frame compositing with disposal methods),
-  JPEG (baseline + progressive Huffman, restart markers, 4:4:4/4:2:0/
-  4:2:2/4:1:1 chroma subsampling).
+  JPEG (Huffman-coded sequential SOF0/SOF1 at 8 or 12 bits, progressive
+  SOF2 and lossless SOF3; restart markers; 4:4:4/4:2:0/4:2:2/4:1:1
+  chroma subsampling).
 - **Audio samples**: WAV PCM 8/16/24-bit, IEEE float32/float64, G.711
   mu/A-law, mono/stereo IMA and MS ADPCM (``decode_wav_pcm``), plus linear
   resampling and perceptual fingerprints over the decoded samples.
@@ -39,6 +40,7 @@ shuffle (id, signature) rows only — payload bytes never cross a shuffle.
 from __future__ import annotations
 
 import math
+import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -386,15 +388,12 @@ def sample_container_frames(
 
 # ---------------------------------------------------------------------------
 # REAL pixel decode — stdlib (+ numpy for the JPEG DCT). PNG (zlib
-# inflate + scanline un-filtering, PNG spec §9 "Filtering"), uncompressed
-# 24-bit BMP (bottom-up BGR rows, 4-byte padding), LZW GIF, and baseline
-# sequential JPEG (see decode_jpeg_pixels below) are fully real end to
-# end: header, stream, and pixel bytes, all normalized to top-down RGB.
-# Round 7 added progressive JPEG, chroma subsampling, palette PNG,
-# interlaced GIF; round 8 adds 16-bit PNG and animated-GIF compositing
-# (decode_gif_frames). Remaining unsupported sub-formats (sub-byte
-# palette depths, interlaced PNG, JPEG arithmetic/lossless/12-bit, BMP
-# 1/4/16-bit, ...) raise NotImplementedError naming the gap.
+# inflate + scanline un-filtering, PNG spec §9 "Filtering"), BMP, LZW GIF
+# (with animated-GIF compositing in decode_gif_frames) and JPEG (see
+# decode_jpeg_pixels below) are fully real end to end: header, stream,
+# and pixel bytes, all normalized to top-down gray or RGB. Unsupported
+# sub-formats raise NotImplementedError naming the gap (see the module
+# docstring).
 # ---------------------------------------------------------------------------
 
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # gray, rgb, gray+a, rgba
@@ -695,18 +694,40 @@ def _png_filter_segment(
     return out
 
 
+def _png_pack_rows(vals: bytes, width: int, height: int, depth: int) -> bytes:
+    """Pack one sub-byte sample per pixel MSB-first into scanlines padded
+    to whole bytes (PNG spec 7.2)."""
+    ppb = 8 // depth
+    rb = (width * depth + 7) // 8
+    out = bytearray(rb * height)
+    for y in range(height):
+        for x in range(width):
+            shift = (ppb - 1 - x % ppb) * depth
+            out[y * rb + x // ppb] |= vals[y * width + x] << shift
+    return bytes(out)
+
+
 def _png_filter_stream(
-    pixels: bytes, width: int, height: int, bypp: int, filter_for_row,
+    pixels: bytes, width: int, height: int, bits: int, filter_for_row,
     interlace: bool,
 ) -> bytes:
     """Filtered IDAT payload — sequential, or seven Adam7 passes each
-    filtered as an independent sub-image (spec §8.2)."""
-    if not interlace:
-        return bytes(
-            _png_filter_segment(
-                pixels, width * bypp, height, bypp, filter_for_row, 0
-            )
+    filtered as an independent sub-image (spec §8.2). ``bits`` is bits
+    per pixel. At 8 and above ``pixels`` holds bits // 8 bytes per pixel;
+    below 8 it holds one unpacked sample per pixel, and each (sub-)image
+    is packed before filtering with a one-byte filter offset (spec: bpp
+    rounds up to 1)."""
+    unit = max(1, bits // 8)  # input bytes per pixel = filter offset
+
+    def filtered(sub: bytes, wp: int, hp: int, row_off: int) -> bytearray:
+        if bits < 8:
+            sub = _png_pack_rows(sub, wp, hp, bits)
+        return _png_filter_segment(
+            sub, (wp * bits + 7) // 8, hp, unit, filter_for_row, row_off
         )
+
+    if not interlace:
+        return bytes(filtered(pixels, width, height, 0))
     out = bytearray()
     row_off = 0
     for x0, y0, dx, dy in _ADAM7:
@@ -714,19 +735,48 @@ def _png_filter_stream(
         hp = (height - y0 + dy - 1) // dy
         if wp <= 0 or hp <= 0:
             continue
-        sub = bytearray(wp * hp * bypp)
+        sub = bytearray(wp * hp * unit)
         for yy in range(hp):
             oy = y0 + yy * dy
             for xx in range(wp):
                 ox = x0 + xx * dx
-                s = (oy * width + ox) * bypp
-                d = (yy * wp + xx) * bypp
-                sub[d : d + bypp] = pixels[s : s + bypp]
-        out += _png_filter_segment(
-            bytes(sub), wp * bypp, hp, bypp, filter_for_row, row_off
-        )
+                s = (oy * width + ox) * unit
+                d = (yy * wp + xx) * unit
+                sub[d : d + unit] = pixels[s : s + unit]
+        out += filtered(bytes(sub), wp, hp, row_off)
         row_off += hp
     return bytes(out)
+
+
+def _png_chunk(ctype: bytes, body: bytes) -> bytes:
+    """length + type + body + CRC-32 over type and body (spec 5.3)."""
+    import zlib
+
+    return (
+        struct.pack(">I", len(body))
+        + ctype
+        + body
+        + struct.pack(">I", zlib.crc32(ctype + body))
+    )
+
+
+def _png_file(
+    width: int, height: int, depth: int, color: int, interlace: bool,
+    extra: bytes, filtered: bytes,
+) -> bytes:
+    """Signature, IHDR, ``extra`` chunks (PLTE/tRNS), one IDAT, IEND."""
+    import zlib
+
+    ihdr = struct.pack(
+        ">IIBBBBB", width, height, depth, color, 0, 0, 1 if interlace else 0
+    )
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + extra
+        + _png_chunk(b"IDAT", zlib.compress(filtered))
+        + _png_chunk(b"IEND", b"")
+    )
 
 
 def encode_png(
@@ -746,42 +796,20 @@ def encode_png(
     ``pixels`` is the big-endian sample byte stream (2 bytes per sample)
     and filters offset by channels*2 per the spec; ``interlace`` stores
     the seven Adam7 passes (``pixels`` stays the natural raster).
-    ``trns_key`` (round 8, gray/RGB only) writes a color-key tRNS chunk
-    — 1 or 3 sample values stored as 2-byte big-endian."""
-    import struct
-    import zlib
-
+    ``trns_key`` (gray/RGB only) writes a color-key tRNS chunk — 1 or 3
+    sample values stored as 2-byte big-endian."""
     color = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    bypp = channels * (depth // 8)
     if trns_key is not None and channels not in (1, 3):
         raise ValueError("color-key tRNS is valid on gray/RGB only")
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + ctype
-            + body
-            + struct.pack(">I", zlib.crc32(ctype + body))
-        )
-
     filtered = _png_filter_stream(
-        pixels, width, height, bypp, filter_for_row, interlace
-    )
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, depth, color, 0, 0, 1 if interlace else 0
+        pixels, width, height, channels * depth, filter_for_row, interlace
     )
     trns = (
         b""
         if trns_key is None
-        else chunk(b"tRNS", struct.pack(">" + "H" * channels, *trns_key))
+        else _png_chunk(b"tRNS", struct.pack(">" + "H" * channels, *trns_key))
     )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + trns
-        + chunk(b"IDAT", zlib.compress(filtered))
-        + chunk(b"IEND", b"")
-    )
+    return _png_file(width, height, depth, color, interlace, trns, filtered)
 
 
 def encode_png_palette(
@@ -802,9 +830,6 @@ def encode_png_palette(
     bytes-per-pixel 1). ``trns`` writes a tRNS chunk (alpha per palette
     entry, may be shorter than the palette); ``interlace`` stores the
     Adam7 passes."""
-    import struct
-    import zlib
-
     if depth not in (1, 2, 4, 8):
         raise ValueError("palette depth must be 1/2/4/8")
     idx = bytes(indices)
@@ -814,61 +839,13 @@ def encode_png_palette(
         raise ValueError("palette must be 3 bytes per entry")
     if max(idx) >= min(len(palette) // 3, 1 << depth):
         raise ValueError("palette index out of range")
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + ctype
-            + body
-            + struct.pack(">I", zlib.crc32(ctype + body))
-        )
-
-    def pack_rows(vals: bytes, wp: int, hp: int) -> bytes:
-        if depth == 8:
-            return vals
-        ppb = 8 // depth
-        rb = (wp * depth + 7) // 8
-        out = bytearray(rb * hp)
-        for y in range(hp):
-            for x in range(wp):
-                shift = (ppb - 1 - x % ppb) * depth
-                out[y * rb + x // ppb] |= vals[y * wp + x] << shift
-        return bytes(out)
-
-    if not interlace:
-        rb = (width * depth + 7) // 8
-        filtered = bytes(
-            _png_filter_segment(
-                pack_rows(idx, width, height), rb, height, 1,
-                filter_for_row, 0,
-            )
-        )
-    else:
-        parts = bytearray()
-        row_off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            wp = (width - x0 + dx - 1) // dx
-            hp = (height - y0 + dy - 1) // dy
-            if wp <= 0 or hp <= 0:
-                continue
-            sub = bytes(
-                idx[(y0 + yy * dy) * width + (x0 + xx * dx)]
-                for yy in range(hp)
-                for xx in range(wp)
-            )
-            rb = (wp * depth + 7) // 8
-            parts += _png_filter_segment(
-                pack_rows(sub, wp, hp), rb, hp, 1, filter_for_row, row_off
-            )
-            row_off += hp
-        filtered = bytes(parts)
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, depth, 3, 0, 0, 1 if interlace else 0
+    filtered = _png_filter_stream(
+        idx, width, height, depth, filter_for_row, interlace
     )
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"PLTE", palette)
+    extra = _png_chunk(b"PLTE", palette)
     if trns is not None:
-        out += chunk(b"tRNS", bytes(trns))
-    return out + chunk(b"IDAT", zlib.compress(filtered)) + chunk(b"IEND", b"")
+        extra += _png_chunk(b"tRNS", bytes(trns))
+    return _png_file(width, height, depth, 3, interlace, extra, filtered)
 
 
 def encode_png_gray_lowbit(
@@ -881,14 +858,11 @@ def encode_png_gray_lowbit(
     interlace: bool = False,
 ) -> bytes:
     """Minimal sub-byte GRAYSCALE PNG encoder (color type 0, depth
-    1/2/4 — round-8 synthesis/test helper, the inverse of
-    decode_png_pixels' sub-byte gray path). ``values`` is one raw sample
-    (< 2^depth) per pixel; samples pack MSB-first and filters run on the
-    packed stream (bytes-per-pixel 1 per spec). ``trns_key`` writes a
-    gray color-key tRNS chunk."""
-    import struct
-    import zlib
-
+    1/2/4 — synthesis/test helper, the inverse of decode_png_pixels'
+    sub-byte gray path). ``values`` is one raw sample (< 2^depth) per
+    pixel; samples pack MSB-first and filters run on the packed stream
+    (bytes-per-pixel 1 per spec). ``trns_key`` writes a gray color-key
+    tRNS chunk."""
     if depth not in (1, 2, 4):
         raise ValueError("sub-byte gray depth must be 1/2/4")
     vals = bytes(values)
@@ -896,59 +870,13 @@ def encode_png_gray_lowbit(
         raise ValueError("value buffer length mismatch")
     if max(vals) >= 1 << depth:
         raise ValueError("gray sample out of range for depth")
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + ctype
-            + body
-            + struct.pack(">I", zlib.crc32(ctype + body))
-        )
-
-    def pack_rows(v: bytes, wp: int, hp: int) -> bytes:
-        ppb = 8 // depth
-        rb = (wp * depth + 7) // 8
-        out = bytearray(rb * hp)
-        for y in range(hp):
-            for x in range(wp):
-                shift = (ppb - 1 - x % ppb) * depth
-                out[y * rb + x // ppb] |= v[y * wp + x] << shift
-        return bytes(out)
-
-    if not interlace:
-        rb = (width * depth + 7) // 8
-        filtered = bytes(
-            _png_filter_segment(
-                pack_rows(vals, width, height), rb, height, 1,
-                filter_for_row, 0,
-            )
-        )
-    else:
-        parts = bytearray()
-        row_off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            wp = (width - x0 + dx - 1) // dx
-            hp = (height - y0 + dy - 1) // dy
-            if wp <= 0 or hp <= 0:
-                continue
-            sub = bytes(
-                vals[(y0 + yy * dy) * width + (x0 + xx * dx)]
-                for yy in range(hp)
-                for xx in range(wp)
-            )
-            rb = (wp * depth + 7) // 8
-            parts += _png_filter_segment(
-                pack_rows(sub, wp, hp), rb, hp, 1, filter_for_row, row_off
-            )
-            row_off += hp
-        filtered = bytes(parts)
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, depth, 0, 0, 0, 1 if interlace else 0
+    filtered = _png_filter_stream(
+        vals, width, height, depth, filter_for_row, interlace
     )
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    if trns_key is not None:
-        out += chunk(b"tRNS", struct.pack(">H", trns_key))
-    return out + chunk(b"IDAT", zlib.compress(filtered)) + chunk(b"IEND", b"")
+    trns = b"" if trns_key is None else _png_chunk(
+        b"tRNS", struct.pack(">H", trns_key)
+    )
+    return _png_file(width, height, depth, 0, interlace, trns, filtered)
 
 
 def _bmp_mask_params(mask: int, bpp: int) -> tuple[int, int]:
@@ -2035,15 +1963,16 @@ def decode_gif_frames(
 
 
 # ---------------------------------------------------------------------------
-# REAL baseline JPEG pixel decode — stdlib + numpy only (ITU-T T.81
-# sequential DCT, Huffman-coded). Completes the codec tier's last honest
-# stub (verdict r05 item 5): marker walk, DQT/DHT parse, canonical Huffman
-# decode with byte-unstuffing and restart markers, DC prediction,
-# dequantize → un-zigzag → orthonormal IDCT → level shift → clamp, and
-# JFIF YCbCr→RGB. Supported subset (the honest-stub posture for the rest):
-# baseline SOF0, 8-bit samples, 1×1 sampling factors (no chroma
-# subsampling), 1 or 3 components. Progressive (SOF2), subsampled, or
-# 12-bit streams raise NotImplementedError naming the gap.
+# JPEG codec — stdlib + numpy only, after ITU-T T.81. One marker walk, one
+# entropy reader and one coefficient-grid reconstruction decode sequential
+# DCT (SOF0 baseline and SOF1 extended, 8- and 12-bit), progressive DCT
+# (SOF2: spectral selection and successive approximation) and lossless
+# (SOF3, predictive) streams, with sampling factors 1-4 and restart
+# intervals. The four encoders are synthesis/test helpers built from the
+# same parts: one bit writer, one header builder, one FDCT step and one
+# lossless predictor. Everything else raises NotImplementedError naming the
+# gap: arithmetic coding, hierarchical frames, 12-bit progressive,
+# multi-scan sequential, and lossless streams with restarts or subsampling.
 # ---------------------------------------------------------------------------
 
 
@@ -2112,17 +2041,40 @@ _JPEG_PROG_AC_VALS = (
 )
 _JPEG_PROG_AC_BITS = [0] * 7 + [len(_JPEG_PROG_AC_VALS)] + [0] * 8
 
+# Start-of-frame markers: C0-C3 are the Huffman processes decoded here;
+# C4 (DHT), C8 (JPG) and CC (DAC) are not frames.
+_JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
 
 def _huff_canonical(bits: "list[int]", vals: "list[int]"):
-    """Canonical code assignment (T.81 C.2): {(length, code): value}."""
-    table, code, k = {}, 0, 0
+    """Canonical code assignment (T.81 C.2): [(length, code, value)] in
+    code order. ``bits`` or ``vals`` shorter than the counts claim raise
+    IndexError."""
+    codes, code, k = [], 0, 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
+            codes.append((length, code, vals[k]))
             code += 1
             k += 1
         code <<= 1
-    return table
+    return codes
+
+
+def _huff_encoder(bits: "list[int]", vals: "list[int]") -> dict:
+    """{symbol: (length, code)}: the encoders' view of a table."""
+    return {v: (ln, code) for ln, code, v in _huff_canonical(bits, vals)}
+
+
+def _huff_decoder(bits: "list[int]", vals: "list[int]") -> dict:
+    """{(1 << length) | code: symbol}: the entropy reader's view. The
+    leading 1 keeps codes of different lengths apart; a code that
+    overflows its length (over-subscribed table) can never be read and
+    is left out."""
+    return {
+        (1 << ln) | code: v
+        for ln, code, v in _huff_canonical(bits, vals)
+        if code >> ln == 0
+    }
 
 
 def _dct_matrix():
@@ -2134,6 +2086,256 @@ def _dct_matrix():
         for x in range(8):
             m[u, x] = cu * math.cos((2 * x + 1) * u * math.pi / 16.0)
     return m
+
+
+def _jpeg_mcu_order(
+    mcus_x: int, mcus_y: int, grid: "list[tuple[int, int, int]]"
+) -> "list[list[tuple[int, int]]]":
+    """Data units of an interleaved scan, MCU by MCU (T.81 A.2.3).
+    ``grid`` gives (h, v, blocks across) per scan component; each MCU is
+    a list of (scan component, block index)."""
+    return [
+        [
+            (k, (my * vi + byi) * bw + mx * hi + bxi)
+            for k, (hi, vi, bw) in enumerate(grid)
+            for byi in range(vi)
+            for bxi in range(hi)
+        ]
+        for my in range(mcus_y)
+        for mx in range(mcus_x)
+    ]
+
+
+# -- encoding ---------------------------------------------------------------
+
+
+def _jpeg_magnitude(v: int) -> "tuple[int, int]":
+    """(SSSS category, extra bits) of a signed value (T.81 F.1.2.1)."""
+    size = v.bit_length() if v > 0 else (-v).bit_length()
+    return size, v if v >= 0 else v + (1 << size) - 1
+
+
+class _BitWriter:
+    """Entropy-coded segment writer (T.81 F.1.2.3): MSB-first bits with a
+    0x00 stuffed after every 0xFF byte. Padding to a byte boundary writes
+    1-bits through :meth:`put`, so an all-ones pad byte gets its stuffed
+    0x00 before a following RSTn marker."""
+
+    __slots__ = ("out", "acc", "nbits", "nrst")
+
+    def __init__(self) -> None:
+        self.out = bytearray()
+        self.acc = self.nbits = self.nrst = 0
+
+    def put(self, code: int, length: int) -> None:
+        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
+        self.nbits += length
+        while self.nbits >= 8:
+            self.nbits -= 8
+            byte = (self.acc >> self.nbits) & 0xFF
+            self.out.append(byte)
+            if byte == 0xFF:
+                self.out.append(0x00)
+        self.acc &= (1 << self.nbits) - 1
+
+    def huff(self, codes: dict, symbol: int, size: int = 0, bits: int = 0) -> None:
+        """A Huffman-coded symbol followed by ``size`` raw bits."""
+        length, code = codes[symbol]
+        self.put(code, length)
+        self.put(bits, size)
+
+    def restart(self) -> None:
+        """Pad, then emit the next RSTn marker (n cycles 0-7)."""
+        self.flush()
+        self.out += bytes([0xFF, 0xD0 + self.nrst % 8])
+        self.nrst += 1
+
+    def flush(self) -> bytes:
+        if self.nbits:
+            self.put((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
+        return bytes(self.out)
+
+
+def _jpeg_seg(marker: int, payload: bytes) -> bytes:
+    return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+
+
+def _jpeg_header(
+    sof: int,
+    precision: int,
+    width: int,
+    height: int,
+    samp: "list[tuple[int, int]]",
+    quant: "list[int] | None",
+    tables: "list[tuple[int, list[int], list[int]]]",
+    restart_interval: int,
+) -> bytes:
+    """SOI, DQT (8-bit entries at P=8, 16-bit above; none without
+    ``quant``), SOFn, one DHT carrying ``tables`` as (class, bits, vals)
+    in slot 0, and DRI when ``restart_interval`` is set. Every component
+    uses quant table 0."""
+    out = b"\xff\xd8"
+    if quant is not None:
+        out += _jpeg_seg(
+            0xDB,
+            b"\x00" + bytes(quant)
+            if precision == 8
+            else b"\x10" + struct.pack(">64H", *quant),
+        )
+    out += _jpeg_seg(
+        sof,
+        struct.pack(">BHHB", precision, height, width, len(samp))
+        + b"".join(
+            bytes([ci + 1, (hi << 4) | vi, 0]) for ci, (hi, vi) in enumerate(samp)
+        ),
+    )
+    out += _jpeg_seg(
+        0xC4,
+        b"".join(bytes([tc << 4] + bits + vals) for tc, bits, vals in tables),
+    )
+    if restart_interval:
+        out += _jpeg_seg(0xDD, struct.pack(">H", restart_interval))
+    return out
+
+
+def _jpeg_sos(comp_ids: "list[int]", ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS header; every component uses DC/AC table slot 0."""
+    body = bytes([len(comp_ids)]) + b"".join(bytes([c, 0]) for c in comp_ids)
+    return _jpeg_seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
+
+
+def _jpeg_planes(
+    fn: str,
+    width: int,
+    height: int,
+    pixels: bytes,
+    channels: int,
+    sampling: "list[tuple[int, int]] | None",
+):
+    """Validate an 8-bit DCT encoder's input, convert RGB to YCbCr (JFIF)
+    and box-mean downsample each component to its sampling grid.
+    Returns (planes, per-component (h, v) factors)."""
+    import numpy as np
+
+    if channels not in (1, 3):
+        raise ValueError("channels must be 1 or 3")
+    if len(pixels) != width * height * channels:
+        raise ValueError("pixel buffer length mismatch")
+    samp = list(sampling) if sampling is not None else [(1, 1)] * channels
+    if len(samp) != channels or any(
+        not (1 <= hi <= 4 and 1 <= vi <= 4) for hi, vi in samp
+    ):
+        raise ValueError("sampling must give (h, v) in 1..4 per component")
+    hmax = max(hi for hi, _ in samp)
+    vmax = max(vi for _, vi in samp)
+    if any(hmax % hi or vmax % vi for hi, vi in samp):
+        # the decoder handles non-divisible pairs; the box-mean
+        # downsample below does not — synthesis keeps to divisor sets
+        raise ValueError(
+            f"{fn} supports factor sets where every factor divides the maximum"
+        )
+    if width % (8 * hmax) or height % (8 * vmax):
+        raise ValueError(
+            f"{fn} requires dimensions divisible by the MCU tile "
+            f"({8 * hmax}x{8 * vmax} for this sampling)"
+        )
+    arr = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64)
+    arr = arr.reshape(height, width, channels)
+    if channels == 3:
+        r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
+        planes = [
+            0.299 * r + 0.587 * g + 0.114 * b,
+            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
+            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
+        ]
+    else:
+        planes = [arr[..., 0]]
+    for ci, (hi, vi) in enumerate(samp):
+        ry, rx = vmax // vi, hmax // hi
+        if ry > 1 or rx > 1:
+            p = planes[ci]
+            planes[ci] = p.reshape(
+                p.shape[0] // ry, ry, p.shape[1] // rx, rx
+            ).mean(axis=(1, 3))
+    return planes, samp
+
+
+def _jpeg_fdct(plane, quant: "list[int]", level: float) -> "list[list[int]]":
+    """Level shift -> FDCT -> quantize -> zigzag for every 8x8 block of
+    ``plane``, in raster order."""
+    import numpy as np
+
+    m = _dct_matrix()
+    zz = _JPEG_ZIGZAG
+    # quant is in zigzag order (as DQT stores it); qv is its block layout
+    qv = np.array(quant, dtype=np.float64)[np.argsort(zz)].reshape(8, 8)
+    seqs = []
+    for r0 in range(0, plane.shape[0], 8):
+        for c0 in range(0, plane.shape[1], 8):
+            block = plane[r0 : r0 + 8, c0 : c0 + 8] - level
+            quantized = np.rint((m @ block @ m.T) / qv).astype(np.int64)
+            seqs.append([int(quantized.flat[i]) for i in zz])
+    return seqs
+
+
+def _jpeg_encode_sequential(
+    sof: int,
+    precision: int,
+    width: int,
+    height: int,
+    planes: list,
+    samp: "list[tuple[int, int]]",
+    quant: "list[int]",
+    tables: "list[tuple[int, list[int], list[int]]]",
+    restart_interval: int,
+) -> bytes:
+    """Sequential DCT core of :func:`encode_jpeg` (SOF0) and
+    :func:`encode_jpeg12` (SOF1): one scan over every component,
+    MCU-interleaved, DC differences then run-length AC with ZRL/EOB
+    (T.81 F.1.2), with ``tables`` = [DC, AC] as (class, bits, vals)."""
+    dc = _huff_encoder(*tables[0][1:])
+    ac = _huff_encoder(*tables[1][1:])
+    seqs = [_jpeg_fdct(p, quant, float(1 << (precision - 1))) for p in planes]
+    hmax = max(hi for hi, _ in samp)
+    vmax = max(vi for _, vi in samp)
+    units = _jpeg_mcu_order(
+        width // (8 * hmax),
+        height // (8 * vmax),
+        [(hi, vi, p.shape[1] // 8) for p, (hi, vi) in zip(planes, samp)],
+    )
+    wr = _BitWriter()
+    preds = [0] * len(planes)
+    for mi, members in enumerate(units):
+        if restart_interval and mi and mi % restart_interval == 0:
+            wr.restart()
+            preds = [0] * len(planes)
+        for ci, bi in members:
+            seq = seqs[ci][bi]
+            size, bits = _jpeg_magnitude(seq[0] - preds[ci])
+            wr.huff(dc, size, size, bits)
+            preds[ci] = seq[0]
+            run = 0
+            for v in seq[1:]:
+                if v == 0:
+                    run += 1
+                    continue
+                while run >= 16:
+                    wr.huff(ac, 0xF0)  # ZRL
+                    run -= 16
+                size, bits = _jpeg_magnitude(v)
+                wr.huff(ac, (run << 4) | size, size, bits)
+                run = 0
+            if run:
+                wr.huff(ac, 0x00)  # EOB
+    ids = list(range(1, len(planes) + 1))
+    return (
+        _jpeg_header(
+            sof, precision, width, height, samp, quant, tables, restart_interval
+        )
+        + _jpeg_sos(ids, 0, 63, 0, 0)
+        + wr.flush()
+        + b"\xff\xd9"
+    )
 
 
 def encode_jpeg(
@@ -2160,176 +2362,14 @@ def encode_jpeg(
     FDCT and blocks are MCU-interleaved, matching the decoder's
     nearest-replication upsample (on constant blocks the round trip stays
     bit-exact: the box mean of a constant is the constant)."""
-    import struct
-
-    import numpy as np
-
-    if channels not in (1, 3):
-        raise ValueError("channels must be 1 or 3")
-    if len(pixels) != width * height * channels:
-        raise ValueError("pixel buffer length mismatch")
-    samp = list(sampling) if sampling is not None else [(1, 1)] * channels
-    if len(samp) != channels or any(
-        not (1 <= hi <= 4 and 1 <= vi <= 4) for hi, vi in samp
-    ):
-        raise ValueError("sampling must give (h, v) in 1..4 per component")
-    hmax = max(hi for hi, _ in samp)
-    vmax = max(vi for _, vi in samp)
-    if any(hmax % hi or vmax % vi for hi, vi in samp):
-        # the decoder handles non-divisible pairs; the box-mean
-        # downsample below does not — synthesis keeps to divisor sets
-        raise ValueError(
-            "encode_jpeg supports factor sets where every factor divides "
-            "the maximum"
-        )
-    if width % (8 * hmax) or height % (8 * vmax):
-        raise ValueError(
-            f"encode_jpeg requires dimensions divisible by the MCU tile "
-            f"({8 * hmax}x{8 * vmax} for this sampling)"
-        )
-    q = list(quant) if quant is not None else [1] * 64
-    m = _dct_matrix()
-
-    arr = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64)
-    arr = arr.reshape(height, width, channels)
-    if channels == 3:
-        r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
-        comps = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
-            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
-        ]
-    else:
-        comps = [arr[..., 0]]
-    # box-mean downsample each component to its sampling grid
-    for ci, (hi, vi) in enumerate(samp):
-        ry, rx = vmax // vi, hmax // hi
-        if ry > 1 or rx > 1:
-            p = comps[ci]
-            comps[ci] = p.reshape(
-                p.shape[0] // ry, ry, p.shape[1] // rx, rx
-            ).mean(axis=(1, 3))
-
-    dc_codes = {
-        v: (length, code)
-        for (length, code), v in _huff_canonical(
-            _JPEG_DC_BITS, _JPEG_DC_VALS
-        ).items()
-    }
-    ac_codes = {
-        v: (length, code)
-        for (length, code), v in _huff_canonical(
-            _JPEG_AC_BITS, _JPEG_AC_VALS
-        ).items()
-    }
-
-    out = bytearray()
-    bitbuf, nbits = 0, 0
-
-    def put(code: int, length: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << length) | (code & ((1 << length) - 1))
-        nbits += length
-        while nbits >= 8:
-            nbits -= 8
-            byte = (bitbuf >> nbits) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)  # byte stuffing
-
-    def flush() -> None:
-        nonlocal bitbuf, nbits
-        if nbits:
-            put((1 << (8 - nbits)) - 1, 8 - nbits)  # pad with 1s
-
-    def put_magnitude(v: int) -> tuple[int, int]:
-        size = int(v).bit_length() if v > 0 else int(-v).bit_length()
-        bits = v if v >= 0 else v + (1 << size) - 1
-        return size, bits
-
-    zz = _JPEG_ZIGZAG
-    qv = np.array(q, dtype=np.float64)[np.argsort(zz)].reshape(8, 8)
-    # qv above maps zigzag-ordered q back to row-major block layout
-    preds = [0] * channels
-    mcu_index = 0
-    body = out  # alias for clarity
-
-    def put_block(comp, r0: int, c0: int, ci: int) -> None:
-        block = comp[r0 : r0 + 8, c0 : c0 + 8] - 128.0
-        coeff = m @ block @ m.T
-        quantized = np.rint(coeff / qv).astype(np.int64)
-        seq = [int(quantized.flat[i]) for i in zz]
-        diff = seq[0] - preds[ci]
-        preds[ci] = seq[0]
-        if diff == 0:
-            ln, code = dc_codes[0]
-            put(code, ln)
-        else:
-            size, bits = put_magnitude(diff)
-            ln, code = dc_codes[size]
-            put(code, ln)
-            put(bits, size)
-        run = 0
-        for v in seq[1:]:
-            if v == 0:
-                run += 1
-                continue
-            while run >= 16:
-                ln, code = ac_codes[0xF0]  # ZRL
-                put(code, ln)
-                run -= 16
-            size, bits = put_magnitude(v)
-            ln, code = ac_codes[(run << 4) | size]
-            put(code, ln)
-            put(bits, size)
-            run = 0
-        if run:
-            ln, code = ac_codes[0x00]  # EOB
-            put(code, ln)
-
-    # MCU-interleaved block order, mirroring the decoder
-    mcus_x, mcus_y = width // (8 * hmax), height // (8 * vmax)
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_index and mcu_index % restart_interval == 0:
-                flush()
-                body += bytes([0xFF, 0xD0 + ((mcu_index // restart_interval - 1) % 8)])
-                preds = [0] * channels
-            for ci, comp in enumerate(comps):
-                hi, vi = samp[ci]
-                for byi in range(vi):
-                    for bxi in range(hi):
-                        put_block(
-                            comp, (my * vi + byi) * 8, (mx * hi + bxi) * 8, ci
-                        )
-            mcu_index += 1
-    flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    zz_q = bytes(q)  # DQT stores the table in zigzag order
-    dqt = seg(0xDB, b"\x00" + zz_q)
-    ncomp = channels
-    sof_comps = b"".join(
-        struct.pack(
-            ">BBB", ci + 1, (samp[ci][0] << 4) | samp[ci][1], 0
-        )
-        for ci in range(ncomp)
+    planes, samp = _jpeg_planes(
+        "encode_jpeg", width, height, pixels, channels, sampling
     )
-    sof = seg(0xC0, struct.pack(">BHHB", 8, height, width, ncomp) + sof_comps)
-    dht = seg(
-        0xC4,
-        b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + b"\x10" + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos_comps = b"".join(
-        struct.pack(">BB", ci + 1, 0x00) for ci in range(ncomp)
-    )
-    sos = seg(0xDA, bytes([ncomp]) + sos_comps + b"\x00\x3f\x00")
-    dri = seg(0xDD, struct.pack(">H", restart_interval)) if restart_interval else b""
-    return (
-        b"\xff\xd8" + dqt + sof + dht + dri + sos + bytes(body) + b"\xff\xd9"
+    return _jpeg_encode_sequential(
+        0xC0, 8, width, height, planes, samp,
+        list(quant) if quant is not None else [1] * 64,
+        [(0, _JPEG_DC_BITS, _JPEG_DC_VALS), (1, _JPEG_AC_BITS, _JPEG_AC_VALS)],
+        restart_interval,
     )
 
 
@@ -2341,7 +2381,7 @@ def encode_jpeg12(
     restart_interval: int = 0,
 ) -> bytes:
     """Minimal 12-bit EXTENDED SEQUENTIAL (SOF1) grayscale JPEG encoder
-    — round-8 synthesis/test helper, the inverse of the 12-bit path of
+    — synthesis/test helper, the inverse of the 12-bit path of
     :func:`decode_jpeg_pixels`. ``samples`` is one 12-bit value (0-4095)
     per pixel, row-major; width/height must be multiples of 8. The DQT
     stores 16-bit entries (Pq=1); the level shift is 2048. Because
@@ -2349,8 +2389,6 @@ def encode_jpeg12(
     carries CUSTOM Huffman tables built here: 16 DC categories at code
     length 5 and every (run, size) AC symbol at code length 8 — valid
     canonical tables that any conforming decoder accepts."""
-    import struct
-
     import numpy as np
 
     if width % 8 or height % 8:
@@ -2359,121 +2397,19 @@ def encode_jpeg12(
         raise ValueError("sample buffer length mismatch")
     if min(samples) < 0 or max(samples) > 4095:
         raise ValueError("12-bit samples must be 0-4095")
-    q = list(quant) if quant is not None else [1] * 64
-    m = _dct_matrix()
-
-    # custom canonical tables covering the 12-bit magnitude range
-    dc_bits = [0, 0, 0, 0, 16] + [0] * 11  # sizes 0..15, all length 5
-    dc_vals = list(range(16))
     ac_syms = [0x00, 0xF0] + [
         (run << 4) | size for run in range(16) for size in range(1, 15)
     ]
-    ac_bits = [0] * 16
-    ac_bits[7] = len(ac_syms)  # all length 8 (226 codes < 255)
-    dc_codes = {
-        v: (ln, code)
-        for (ln, code), v in _huff_canonical(dc_bits, dc_vals).items()
-    }
-    ac_codes = {
-        v: (ln, code)
-        for (ln, code), v in _huff_canonical(ac_bits, ac_syms).items()
-    }
-
-    out = bytearray()
-    bitbuf, nbits = 0, 0
-
-    def put(code: int, length: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << length) | (code & ((1 << length) - 1))
-        nbits += length
-        while nbits >= 8:
-            nbits -= 8
-            byte = (bitbuf >> nbits) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-
-    def flush() -> None:
-        nonlocal bitbuf, nbits
-        if nbits:
-            put((1 << (8 - nbits)) - 1, 8 - nbits)
-
-    def put_magnitude(v: int) -> tuple[int, int]:
-        size = int(v).bit_length() if v > 0 else int(-v).bit_length()
-        bits = v if v >= 0 else v + (1 << size) - 1
-        return size, bits
-
-    zz = _JPEG_ZIGZAG
-    qv = np.array(q, dtype=np.float64)[np.argsort(zz)].reshape(8, 8)
-    arr = np.array(samples, dtype=np.float64).reshape(height, width)
-    pred = 0
-    mcu_index = 0
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            if (
-                restart_interval
-                and mcu_index
-                and mcu_index % restart_interval == 0
-            ):
-                flush()
-                out.append(0xFF)
-                out.append(0xD0 + ((mcu_index // restart_interval - 1) % 8))
-                pred = 0
-            block = arr[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 2048.0
-            coeff = m @ block @ m.T
-            quantized = np.rint(coeff / qv).astype(np.int64)
-            seq = [int(quantized.flat[i]) for i in zz]
-            diff = seq[0] - pred
-            pred = seq[0]
-            if diff == 0:
-                ln, code = dc_codes[0]
-                put(code, ln)
-            else:
-                size, bits = put_magnitude(diff)
-                ln, code = dc_codes[size]
-                put(code, ln)
-                put(bits, size)
-            run = 0
-            for v in seq[1:]:
-                if v == 0:
-                    run += 1
-                    continue
-                while run >= 16:
-                    ln, code = ac_codes[0xF0]
-                    put(code, ln)
-                    run -= 16
-                size, bits = put_magnitude(v)
-                ln, code = ac_codes[(run << 4) | size]
-                put(code, ln)
-                put(bits, size)
-                run = 0
-            if run:
-                ln, code = ac_codes[0x00]
-                put(code, ln)
-            mcu_index += 1
-    flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    dqt = seg(0xDB, b"\x10" + struct.pack(">64H", *q))  # Pq=1: 16-bit
-    sof = seg(
-        0xC1,
-        struct.pack(">BHHB", 12, height, width, 1)
-        + struct.pack(">BBB", 1, 0x11, 0),
+    tables = [
+        (0, [0, 0, 0, 0, 16] + [0] * 11, list(range(16))),  # all length 5
+        (1, [0] * 7 + [len(ac_syms)] + [0] * 8, ac_syms),  # 226 of length 8
+    ]
+    plane = np.array(samples, dtype=np.float64).reshape(height, width)
+    return _jpeg_encode_sequential(
+        0xC1, 12, width, height, [plane], [(1, 1)],
+        list(quant) if quant is not None else [1] * 64,
+        tables, restart_interval,
     )
-    dht = seg(
-        0xC4,
-        b"\x00" + bytes(dc_bits) + bytes(dc_vals)
-        + b"\x10" + bytes(ac_bits) + bytes(ac_syms),
-    )
-    sos = seg(0xDA, b"\x01" + struct.pack(">BB", 1, 0x00) + b"\x00\x3f\x00")
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return b"\xff\xd8" + dqt + sof + dht + dri + sos + bytes(out) + b"\xff\xd9"
 
 
 def encode_jpeg_progressive(
@@ -2490,8 +2426,8 @@ def encode_jpeg_progressive(
     """Minimal PROGRESSIVE JPEG encoder (SOF2) — synthesis/test helper,
     the inverse of the progressive path of :func:`decode_jpeg_pixels`.
     ``restart_interval`` emits a DRI segment and RSTn markers every that
-    many MCUs inside EVERY scan (round 8) — bit buffer flushed with 1-pad,
-    DC predictors and EOB runs reset, marker counter cycling 0-7 per scan.
+    many MCUs inside EVERY scan — bit buffer flushed with 1-pad, DC
+    predictors and EOB runs reset, marker counter cycling 0-7 per scan.
 
     Emits the standard spectral-selection + successive-approximation
     progression:
@@ -2502,287 +2438,114 @@ def encode_jpeg_progressive(
        per component, walking Al back down to 0;
     3. one AC first scan per component (Ss=1, Se=63, Ah=0, Al=``ac_al``)
        with EOB-run coding across blocks (T.81 G.1.2.2);
-    4. ``ac_al`` AC REFINEMENT scans per component (Ah=Al+1, round 7 —
-       T.81 G.1.2.3): newly-significant coefficients as zero-history-run
+    4. ``ac_al`` AC REFINEMENT scans per component (Ah=Al+1, T.81
+       G.1.2.3): newly-significant coefficients as zero-history-run
        codes, correction bits interleaved exactly where the decoder's
        advance loops consume them.
 
     Same constraints as :func:`encode_jpeg`: gray or RGB, per-component
-    ``sampling`` factors in 1..4 forming a divisor set (round 8 —
-    box-mean chroma downsample before the FDCT, DC scans interleaved in
-    MCU order, AC scans per component over that component's own block
-    grid), dimensions divisible by the MCU tile."""
-    import struct
-
-    import numpy as np
-
-    if channels not in (1, 3):
-        raise ValueError("channels must be 1 or 3")
-    if len(pixels) != width * height * channels:
-        raise ValueError("pixel buffer length mismatch")
+    ``sampling`` factors in 1..4 forming a divisor set (box-mean chroma
+    downsample before the FDCT, DC scans interleaved in MCU order, AC
+    scans per component over that component's own block grid),
+    dimensions divisible by the MCU tile."""
     if not 0 <= dc_al <= 13:
         raise ValueError("dc_al out of range")
     if not 0 <= ac_al <= 13:
         raise ValueError("ac_al out of range")
-    samp = list(sampling) if sampling is not None else [(1, 1)] * channels
-    if len(samp) != channels or any(
-        not (1 <= hi <= 4 and 1 <= vi <= 4) for hi, vi in samp
-    ):
-        raise ValueError("sampling must give (h, v) in 1..4 per component")
+    planes, samp = _jpeg_planes(
+        "encode_jpeg_progressive", width, height, pixels, channels, sampling
+    )
+    q = list(quant) if quant is not None else [1] * 64
+    dc = _huff_encoder(_JPEG_DC_BITS, _JPEG_DC_VALS)
+    ac = _huff_encoder(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
+    seqs = [_jpeg_fdct(p, q, 128.0) for p in planes]
     hmax = max(hi for hi, _ in samp)
     vmax = max(vi for _, vi in samp)
-    if any(hmax % hi or vmax % vi for hi, vi in samp):
-        raise ValueError(
-            "encode_jpeg_progressive supports factor sets where every "
-            "factor divides the maximum"
-        )
-    if width % (8 * hmax) or height % (8 * vmax):
-        raise ValueError(
-            f"encode_jpeg_progressive requires dimensions divisible by "
-            f"the MCU tile ({8 * hmax}x{8 * vmax} for this sampling)"
-        )
-    q = list(quant) if quant is not None else [1] * 64
-    m = _dct_matrix()
+    units = _jpeg_mcu_order(
+        width // (8 * hmax),
+        height // (8 * vmax),
+        [(hi, vi, p.shape[1] // 8) for p, (hi, vi) in zip(planes, samp)],
+    )
 
-    arr = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64)
-    arr = arr.reshape(height, width, channels)
-    if channels == 3:
-        r, g, bch = arr[..., 0], arr[..., 1], arr[..., 2]
-        comps = [
-            0.299 * r + 0.587 * g + 0.114 * bch,
-            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * bch,
-            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * bch,
-        ]
-    else:
-        comps = [arr[..., 0]]
-    # box-mean downsample each component to its sampling grid (round 8)
-    for ci, (hi, vi) in enumerate(samp):
-        ry, rx = vmax // vi, hmax // hi
-        if ry > 1 or rx > 1:
-            p = comps[ci]
-            comps[ci] = p.reshape(
-                p.shape[0] // ry, ry, p.shape[1] // rx, rx
-            ).mean(axis=(1, 3))
-
-    dc_codes = {
-        v: (length, code)
-        for (length, code), v in _huff_canonical(
-            _JPEG_DC_BITS, _JPEG_DC_VALS
-        ).items()
-    }
-    ac_codes = {
-        v: (length, code)
-        for (length, code), v in _huff_canonical(
-            _JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS
-        ).items()
-    }
-
-    zz = _JPEG_ZIGZAG
-    qv = np.array(q, dtype=np.float64)[np.argsort(zz)].reshape(8, 8)
-
-    # quantized zigzag coefficient sequences, once per (component, block)
-    # — each component over its OWN block grid, raster order
-    seqs: "list[list[list[int]]]" = []  # [comp][block_index][64]
-    cbw: "list[int]" = []  # per-component blocks across
-    cbh: "list[int]" = []
-    for ci, comp in enumerate(comps):
-        bw, bh = comp.shape[1] // 8, comp.shape[0] // 8
-        cbw.append(bw)
-        cbh.append(bh)
-        cs = []
-        for by in range(bh):
-            for bx in range(bw):
-                block = comp[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-                quantized = np.rint((m @ block @ m.T) / qv).astype(np.int64)
-                cs.append([int(quantized.flat[i]) for i in zz])
-        seqs.append(cs)
-
-    # MCU traversal for interleaved DC scans: (comp, block_index) pairs
-    # per MCU in T.81 A.2.3 order
-    mcus_x, mcus_y = width // (8 * hmax), height // (8 * vmax)
-    mcu_members: "list[list[tuple[int, int]]]" = []
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            members = []
-            for ci in range(channels):
-                hi, vi = samp[ci]
-                for byi in range(vi):
-                    for bxi in range(hi):
-                        members.append(
-                            (ci, (my * vi + byi) * cbw[ci] + mx * hi + bxi)
-                        )
-            mcu_members.append(members)
-
-    class _Writer:
-        def __init__(self) -> None:
-            self.out = bytearray()
-            self.bitbuf = 0
-            self.nbits = 0
-
-        def put(self, code: int, length: int) -> None:
-            self.bitbuf = (self.bitbuf << length) | (code & ((1 << length) - 1))
-            self.nbits += length
-            while self.nbits >= 8:
-                self.nbits -= 8
-                byte = (self.bitbuf >> self.nbits) & 0xFF
-                self.out.append(byte)
-                if byte == 0xFF:
-                    self.out.append(0x00)
-
-        def flush(self) -> bytes:
-            if self.nbits:
-                self.put((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
-            return bytes(self.out)
-
-        def restart(self, idx: int) -> None:
-            """1-pad to the byte boundary and emit RSTn (round 8). The
-            pad goes through put(), so an all-ones flush byte gets its
-            stuffed 0x00 exactly as the decoder's consume_rst expects."""
-            if self.nbits:
-                self.put((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
-            self.out += bytes([0xFF, 0xD0 + idx % 8])
-
-    def magnitude(v: int) -> tuple[int, int]:
-        size = int(v).bit_length() if v > 0 else int(-v).bit_length()
-        bits = v if v >= 0 else v + (1 << size) - 1
-        return size, bits
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    def sos(comp_ids: "list[int]", ss: int, se: int, ah: int, al: int) -> bytes:
-        body = bytes([len(comp_ids)])
-        for cid in comp_ids:
-            body += struct.pack(">BB", cid, 0x00)  # DC/AC table slot 0
-        return seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
+    def passes(al: int) -> "list[tuple[int, int]]":
+        """(Ah, Al) of the first scan at point transform ``al`` and of
+        each refinement walking Al back down to 0."""
+        return [(0, al)] + [(a + 1, a) for a in range(al - 1, -1, -1)]
 
     scans = bytearray()
-
-    # scan 1: interleaved DC first (point transform is an ARITHMETIC
-    # right shift of the signed quantized coefficient — T.81 G.1.2.1)
-    wtr = _Writer()
-    preds = [0] * channels
-    rst = 0
-    for mi, members in enumerate(mcu_members):
-        if restart_interval and mi and mi % restart_interval == 0:
-            wtr.restart(rst)
-            rst += 1
-            preds = [0] * channels
-        for ci, bi in members:
-            scaled = seqs[ci][bi][0] >> dc_al
-            diff = scaled - preds[ci]
-            preds[ci] = scaled
-            if diff == 0:
-                ln, code = dc_codes[0]
-                wtr.put(code, ln)
-            else:
-                size, bits = magnitude(diff)
-                ln, code = dc_codes[size]
-                wtr.put(code, ln)
-                wtr.put(bits, size)
-    scans += sos(list(range(1, channels + 1)), 0, 0, 0, dc_al) + wtr.flush()
-
-    # DC refinement scans: one raw bit per block per component
-    for al in range(dc_al - 1, -1, -1):
-        wtr = _Writer()
-        rst = 0
-        for mi, members in enumerate(mcu_members):
+    # interleaved DC scans; the point transform is an ARITHMETIC right
+    # shift of the signed quantized coefficient (T.81 G.1.2.1)
+    for ah, al in passes(dc_al):
+        wr = _BitWriter()
+        preds = [0] * channels
+        for mi, members in enumerate(units):
             if restart_interval and mi and mi % restart_interval == 0:
-                wtr.restart(rst)
-                rst += 1
+                wr.restart()
+                preds = [0] * channels
             for ci, bi in members:
-                wtr.put((seqs[ci][bi][0] >> al) & 1, 1)
-        scans += sos(list(range(1, channels + 1)), 0, 0, al + 1, al) + wtr.flush()
-
-    # AC first scan per component (non-interleaved, EOB-run coding) at
-    # point transform Al=ac_al: codes sign(v) * (|v| >> ac_al). One EOBn
-    # code covers the whole accumulated run — EOBn encodes a run of
-    # (1 << n) + extra blocks, extra in n raw bits (T.81 G.1.2.2).
-    for ci in range(channels):
-        wtr = _Writer()
-        eobrun = 0
-
-        def flush_eobrun() -> None:
-            nonlocal eobrun
-            if eobrun > 0:
-                r = eobrun.bit_length() - 1
-                ln, code = ac_codes[r << 4]
-                wtr.put(code, ln)
-                if r:
-                    wtr.put(eobrun - (1 << r), r)
-                eobrun = 0
-
-        def pt(v: int) -> int:  # AC point transform: magnitude shift
-            return (abs(v) >> ac_al) * (1 if v > 0 else -1)
-
-        rst = 0
-        for bi in range(cbh[ci] * cbw[ci]):
-            if restart_interval and bi and bi % restart_interval == 0:
-                flush_eobrun()
-                wtr.restart(rst)
-                rst += 1
-            seq = seqs[ci][bi]
-            vals = [pt(seq[k]) for k in range(64)]
-            last_nz = max((k for k in range(1, 64) if vals[k]), default=0)
-            if last_nz == 0:
-                eobrun += 1
-                if eobrun == 0x7FFF:  # max representable EOB run
-                    flush_eobrun()
-                continue
-            flush_eobrun()
-            run = 0
-            for k in range(1, last_nz + 1):
-                if vals[k] == 0:
-                    run += 1
+                v = seqs[ci][bi][0] >> al
+                if ah:  # refinement: one raw bit per block
+                    wr.put(v & 1, 1)
                     continue
-                while run >= 16:
-                    ln, code = ac_codes[0xF0]  # ZRL
-                    wtr.put(code, ln)
-                    run -= 16
-                size, bits = magnitude(vals[k])
-                ln, code = ac_codes[(run << 4) | size]
-                wtr.put(code, ln)
-                wtr.put(bits, size)
-                run = 0
-            if last_nz < 63:
-                eobrun += 1
-        flush_eobrun()
-        scans += sos([ci + 1], 1, 63, 0, ac_al) + wtr.flush()
+                size, bits = _jpeg_magnitude(v - preds[ci])
+                wr.huff(dc, size, size, bits)
+                preds[ci] = v
+        scans += _jpeg_sos(list(range(1, channels + 1)), 0, 0, ah, al)
+        scans += wr.flush()
 
-        # AC refinement scans (T.81 G.1.2.3): walk Al back down to 0. One
-        # bit per coefficient per scan — newly-significant ones as
-        # (zero-history-run, 1) codes + sign, already-significant ones as
-        # correction bits buffered and emitted in the exact positions the
-        # decoder's advance loops consume them (after the terminating
-        # ZRL / RS / EOBn code of the run they sit in).
-        for al in range(ac_al - 1, -1, -1):
-            wtr = _Writer()
+    # AC scans per component (non-interleaved). One EOBn code covers a
+    # whole run of (1 << n) + extra empty blocks, extra in n raw bits
+    # (T.81 G.1.2.2). Refinement scans (G.1.2.3) code newly significant
+    # coefficients as (zero-history run, 1) + sign, and buffer the
+    # correction bits of already significant ones until the ZRL / RS /
+    # EOBn code the decoder reads them after.
+    for ci in range(channels):
+        for ah, al in passes(ac_al):
+            wr = _BitWriter()
             eobrun = 0
-            be_bits: "list[int]" = []  # corrections pending with the EOB run
+            pending: "list[int]" = []  # corrections riding on the EOB run
 
-            def flush_eobrun_r() -> None:
+            def flush_eobrun() -> None:
                 nonlocal eobrun
                 if eobrun > 0:
                     r = eobrun.bit_length() - 1
-                    ln, code = ac_codes[r << 4]
-                    wtr.put(code, ln)
-                    if r:
-                        wtr.put(eobrun - (1 << r), r)
+                    wr.huff(ac, r << 4, r, eobrun - (1 << r))
                     eobrun = 0
-                for bit in be_bits:
-                    wtr.put(bit, 1)
-                be_bits.clear()
+                for bit in pending:
+                    wr.put(bit, 1)
+                pending.clear()
 
-            rst = 0
-            for bi in range(cbh[ci] * cbw[ci]):
+            for bi, seq in enumerate(seqs[ci]):
                 if restart_interval and bi and bi % restart_interval == 0:
-                    flush_eobrun_r()
-                    wtr.restart(rst)
-                    rst += 1
-                seq = seqs[ci][bi]
+                    flush_eobrun()
+                    wr.restart()
+                if ah == 0:
+                    # first pass at point transform al: sign(v) * (|v| >> al)
+                    vals = [(abs(v) >> al) * (1 if v > 0 else -1) for v in seq]
+                    last_nz = max((k for k in range(1, 64) if vals[k]), default=0)
+                    if last_nz == 0:
+                        eobrun += 1
+                        if eobrun == 0x7FFF:  # max representable EOB run
+                            flush_eobrun()
+                        continue
+                    flush_eobrun()
+                    run = 0
+                    for k in range(1, last_nz + 1):
+                        if vals[k] == 0:
+                            run += 1
+                            continue
+                        while run >= 16:
+                            wr.huff(ac, 0xF0)  # ZRL
+                            run -= 16
+                        size, bits = _jpeg_magnitude(vals[k])
+                        wr.huff(ac, (run << 4) | size, size, bits)
+                        run = 0
+                    if last_nz < 63:
+                        eobrun += 1
+                    continue
                 # t[k]: magnitude at this bit plane; 0 = still zero,
                 # 1 = newly significant this scan, >1 = already significant
-                t = [abs(seq[k]) >> al for k in range(64)]
+                t = [abs(v) >> al for v in seq]
                 eob = max((k for k in range(1, 64) if t[k] == 1), default=0)
                 run = 0
                 br: "list[int]" = []  # corrections pending within the block
@@ -2791,608 +2554,64 @@ def encode_jpeg_progressive(
                         run += 1
                         continue
                     while run > 15 and k <= eob:
-                        flush_eobrun_r()
-                        ln, code = ac_codes[0xF0]  # ZRL
-                        wtr.put(code, ln)
+                        flush_eobrun()
+                        wr.huff(ac, 0xF0)  # ZRL
                         run -= 16
                         for bit in br:
-                            wtr.put(bit, 1)
+                            wr.put(bit, 1)
                         br.clear()
                     if t[k] > 1:  # already significant: one correction bit
                         br.append(t[k] & 1)
                         continue
-                    # newly significant (t[k] == 1)
-                    flush_eobrun_r()
-                    ln, code = ac_codes[(run << 4) | 1]
-                    wtr.put(code, ln)
-                    wtr.put(1 if seq[k] > 0 else 0, 1)
+                    flush_eobrun()
+                    wr.huff(ac, (run << 4) | 1, 1, 1 if seq[k] > 0 else 0)
                     run = 0
                     for bit in br:
-                        wtr.put(bit, 1)
+                        wr.put(bit, 1)
                     br.clear()
-                if run > 0 or br:  # trailing zeros/corrections → EOB run
+                if run > 0 or br:  # trailing zeros/corrections -> EOB run
                     eobrun += 1
-                    be_bits.extend(br)
+                    pending.extend(br)
                     if eobrun == 0x7FFF:
-                        flush_eobrun_r()
-            flush_eobrun_r()
-            scans += sos([ci + 1], 1, 63, al + 1, al) + wtr.flush()
+                        flush_eobrun()
+            flush_eobrun()
+            scans += _jpeg_sos([ci + 1], 1, 63, ah, al) + wr.flush()
 
-    zz_q = bytes(q)
-    dqt = seg(0xDB, b"\x00" + zz_q)
-    sof_comps = b"".join(
-        struct.pack(
-            ">BBB", ci + 1, (samp[ci][0] << 4) | samp[ci][1], 0
+    return (
+        _jpeg_header(
+            0xC2, 8, width, height, samp, q,
+            [(0, _JPEG_DC_BITS, _JPEG_DC_VALS),
+             (1, _JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)],
+            restart_interval,
         )
-        for ci in range(channels)
+        + bytes(scans)
+        + b"\xff\xd9"
     )
-    sof = seg(0xC2, struct.pack(">BHHB", 8, height, width, channels) + sof_comps)
-    dht = seg(
-        0xC4,
-        b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + b"\x10" + bytes(_JPEG_PROG_AC_BITS) + bytes(_JPEG_PROG_AC_VALS),
-    )
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return b"\xff\xd8" + dqt + sof + dht + dri + bytes(scans) + b"\xff\xd9"
 
 
-def _decode_jpeg_progressive(b: bytes) -> tuple[int, int, int, bytes] | None:
-    """Progressive-JPEG (SOF2) decode path of :func:`decode_jpeg_pixels`:
-    accumulate quantized coefficients across scans — DC first + DC
-    successive-approximation refinement, AC spectral-selection first
-    passes, and AC successive-approximation refinement (round 7, T.81
-    G.1.2.3: zero-history run codes + interleaved correction bits), all
-    with EOB-run handling — then dequantize → IDCT once.
-
-    Restart intervals inside progressive scans are REAL (round 8): the
-    entropy reader realigns at each RSTn, resetting DC predictors and
-    EOB runs. Chroma subsampling is REAL too (round 8): interleaved DC
-    scans cover the padded MCU grid, non-interleaved AC scans cover each
-    component's own block grid (T.81 A.2.2/A.2.3), and reconstruction
-    nearest-upsamples like the baseline path. Honest-stub boundaries
-    (NotImplementedError, naming the gap): arithmetic coding and 12-bit
-    precision in progressive streams."""
-    import struct
-
-    import numpy as np
-
-    pos = 2
-    qtables: dict[int, "list[int]"] = {}
-    htables: dict[tuple[int, int], dict] = {}
-    w = h = None
-    ncomp = 0
-    comp_info: "list[tuple[int, int]]" = []  # (component id, quant slot)
-    restart_interval = 0
-    coefs: "list[list[list[int]]] | None" = None  # [comp][block][64] zigzag
-
-    def huff_decode(table: dict) -> int:
-        nonlocal bitpos
-        length, code = 0, 0
-        while length < 16:
-            code = (code << 1) | read_bit()
-            length += 1
-            if (length, code) in table:
-                return table[(length, code)]
-        raise ValueError("invalid Huffman code in JPEG stream")
-
-    def read_bit() -> int:
-        nonlocal bitpos
-        i = bitpos >> 3
-        if i >= len(data):
-            raise ValueError("JPEG bitstream truncated")
-        byte = data[i]
-        if byte == 0xFF:
-            nxt = data[i + 1] if i + 1 < len(data) else None
-            if nxt != 0x00:
-                raise ValueError("unexpected marker inside entropy data")
-        bit = (byte >> (7 - (bitpos & 7))) & 1
-        bitpos += 1
-        if (bitpos & 7) == 0 and byte == 0xFF:
-            bitpos += 8  # skip the stuffed 0x00
-        return bit
-
-    def read_bits(n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | read_bit()
-        return v
-
-    def extend(v: int, size: int) -> int:
-        return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = b[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        (seglen,) = struct.unpack_from(">H", b, pos + 2)
-        body = b[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:
-            off = 0
-            while off < len(body):
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError(
-                        "decode_jpeg_pixels supports 8-bit quant tables only"
-                    )
-                qtables[tq] = list(body[off + 1 : off + 65])
-                off += 65
-        elif marker == 0xC4:
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                nvals = sum(bits)
-                vals = list(body[off + 17 : off + 17 + nvals])
-                htables[(tc, th)] = _huff_canonical(bits, vals)
-                off += 17 + nvals
-        elif marker == 0xC2:  # progressive SOF
-            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8:
-                raise NotImplementedError(
-                    "decode_jpeg_pixels supports 8-bit precision only"
-                )
-            if ncomp not in (1, 3):
-                raise NotImplementedError(
-                    "decode_jpeg_pixels supports 1 or 3 components only"
-                )
-            for ci in range(ncomp):
-                cid, samp, tq = struct.unpack_from(">BBB", body, 6 + ci * 3)
-                hi, vi = samp >> 4, samp & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(
-                        "JPEG sampling factors must be 1-4 (T.81 B.2.2) "
-                        f"— got {hi}x{vi}"
-                    )
-                if ncomp == 1:
-                    hi = vi = 1  # single-component: factors irrelevant
-                comp_info.append((cid, tq, hi, vi))
-            # per-component block grids (round 8, subsampled progressive):
-            # interleaved DC scans cover the PADDED MCU grid (bw_pad x
-            # bh_pad blocks); non-interleaved AC scans cover only the
-            # component's ACTUAL grid (cbw x cbh, T.81 A.2.2). Storage is
-            # the padded grid; AC block indices map into it.
-            hmax = max(c[2] for c in comp_info)
-            vmax = max(c[3] for c in comp_info)
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            bw_pad = [mcus_x * hi for (_, _, hi, _) in comp_info]
-            bh_pad = [mcus_y * vi for (_, _, _, vi) in comp_info]
-            cbw = [
-                ((w * hi + hmax - 1) // hmax + 7) // 8
-                for (_, _, hi, _) in comp_info
-            ]
-            cbh = [
-                ((h * vi + vmax - 1) // vmax + 7) // 8
-                for (_, _, _, vi) in comp_info
-            ]
-            coefs = [
-                [[0] * 64 for _ in range(bw_pad[ci] * bh_pad[ci])]
-                for ci in range(ncomp)
-            ]
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:  # one scan of the progression
-            if coefs is None:
-                raise ValueError("SOS before SOF in JPEG stream")
-            ns = body[0]
-            scan_comps: "list[int]" = []  # component indices
-            scan_tabs: "list[tuple[int, int]]" = []  # (dc slot, ac slot)
-            cid_to_ix = {cid: ix for ix, (cid, *_rest) in enumerate(comp_info)}
-            for si in range(ns):
-                cid, tt = body[1 + si * 2], body[2 + si * 2]
-                scan_comps.append(cid_to_ix[cid])
-                scan_tabs.append((tt >> 4, tt & 0x0F))
-            ss, se, ahl = body[1 + ns * 2], body[2 + ns * 2], body[3 + ns * 2]
-            ah, al = ahl >> 4, ahl & 0x0F
-
-            # entropy data: from after SOS to the next real marker —
-            # RSTn markers (round 8) belong to the scan's entropy data
-            data_start = pos + 2 + seglen
-            i = data_start
-            while i + 1 < len(b):
-                if b[i] == 0xFF and b[i + 1] != 0x00:
-                    if 0xD0 <= b[i + 1] <= 0xD7:
-                        i += 2
-                        continue
-                    break
-                i += 1
-            data = b[data_start:i]
-            bitpos = 0
-
-            def consume_rst() -> bool:
-                """Byte-align and step over an RSTn marker at the restart
-                cadence (round 8). Same stuffed-pad subtlety as the
-                baseline path: an all-ones flush byte is 0xFF and its
-                stuffed 0x00 sits at the boundary — entropy data, not
-                the marker."""
-                nonlocal bitpos
-                j = (bitpos + 7) >> 3
-                if (
-                    0 < j < len(data)
-                    and data[j] == 0x00
-                    and data[j - 1] == 0xFF
-                ):
-                    j += 1
-                if (
-                    j + 1 < len(data)
-                    and data[j] == 0xFF
-                    and 0xD0 <= data[j + 1] <= 0xD7
-                ):
-                    bitpos = (j + 2) << 3
-                    return True
-                return False
-
-            if ss == 0:  # DC scan
-                if se != 0:
-                    raise ValueError("DC scan with Se != 0")
-                preds = [0] * len(scan_comps)
-                if ns > 1:
-                    # interleaved: MCU order over the PADDED grid, restart
-                    # cadence per MCU (T.81 A.2.3)
-                    units = []
-                    for my in range(mcus_y):
-                        for mx in range(mcus_x):
-                            members = []
-                            for sci, ci in enumerate(scan_comps):
-                                _, _, hi, vi = comp_info[ci]
-                                for byi in range(vi):
-                                    for bxi in range(hi):
-                                        members.append((
-                                            sci, ci,
-                                            (my * vi + byi) * bw_pad[ci]
-                                            + mx * hi + bxi,
-                                        ))
-                            units.append(members)
-                else:
-                    # non-interleaved: the component's ACTUAL grid,
-                    # restart cadence per data unit (T.81 A.2.2)
-                    ci0 = scan_comps[0]
-                    units = [
-                        [(0, ci0, r * bw_pad[ci0] + c)]
-                        for r in range(cbh[ci0])
-                        for c in range(cbw[ci0])
-                    ]
-                for ui, members in enumerate(units):
-                    if restart_interval and ui and ui % restart_interval == 0:
-                        if consume_rst():
-                            preds = [0] * len(scan_comps)
-                    for sci, ci, bi in members:
-                        if ah == 0:  # first pass: diff of point-transformed DC
-                            tab = htables[(0, scan_tabs[sci][0])]
-                            size = huff_decode(tab)
-                            diff = extend(read_bits(size), size) if size else 0
-                            preds[sci] += diff
-                            coefs[ci][bi][0] = preds[sci] << al
-                        else:  # refinement: one raw bit per block
-                            coefs[ci][bi][0] |= read_bit() << al
-            else:  # AC scan — non-interleaved by construction
-                if ns != 1:
-                    raise ValueError("progressive AC scan must be single-component")
-                ci = scan_comps[0]
-                ac_tab = htables[(1, scan_tabs[0][1])]
-                eobrun = 0
-                # the component's ACTUAL grid mapped into padded storage
-                indices = [
-                    r * bw_pad[ci] + c
-                    for r in range(cbh[ci])
-                    for c in range(cbw[ci])
-                ]
-                nblocks = len(indices)
-                if ah != 0:
-                    # AC successive-approximation REFINEMENT (T.81
-                    # G.1.2.3): one bit of precision per coefficient —
-                    # newly-significant coefficients arrive as (run, 1)
-                    # codes counting ZERO-HISTORY positions, and every
-                    # already-nonzero coefficient passed on the way
-                    # (including inside ZRL skips and EOB runs) carries
-                    # one interleaved correction bit.
-                    p1 = 1 << al
-
-                    def correct(cf: "list[int]", k: int) -> None:
-                        if read_bit() and not (abs(cf[k]) & p1):
-                            cf[k] += p1 if cf[k] > 0 else -p1
-
-                    for bi in range(nblocks):
-                        if restart_interval and bi and bi % restart_interval == 0:
-                            if consume_rst():
-                                eobrun = 0
-                        cf = coefs[ci][indices[bi]]
-                        k = ss
-                        if eobrun > 0:
-                            eobrun -= 1
-                        else:
-                            while k <= se:
-                                rs = huff_decode(ac_tab)
-                                run, size = rs >> 4, rs & 0x0F
-                                newval = 0
-                                if size == 0:
-                                    if run < 15:  # EOBn
-                                        eobrun = (1 << run) - 1
-                                        if run:
-                                            eobrun += read_bits(run)
-                                        break
-                                    # ZRL: skip 16 zero-history positions
-                                else:
-                                    if size != 1:
-                                        raise ValueError(
-                                            "invalid size in AC refinement scan"
-                                        )
-                                    newval = p1 if read_bit() else -p1
-                                # advance over `run` zero-history positions,
-                                # correcting nonzero ones along the way
-                                while k <= se:
-                                    if cf[k] != 0:
-                                        correct(cf, k)
-                                    else:
-                                        if run == 0:
-                                            break
-                                        run -= 1
-                                    k += 1
-                                if newval and k <= se:
-                                    cf[k] = newval
-                                k += 1
-                        # remainder of an EOB-run member block: correction
-                        # bits for every already-nonzero coefficient
-                        while k <= se:
-                            if cf[k] != 0:
-                                correct(cf, k)
-                            k += 1
-                    pos = i
-                    continue
-                for bi in range(nblocks):
-                    if restart_interval and bi and bi % restart_interval == 0:
-                        if consume_rst():
-                            eobrun = 0
-                    if eobrun > 0:
-                        eobrun -= 1
-                        continue
-                    k = ss
-                    while k <= se:
-                        rs = huff_decode(ac_tab)
-                        run, size = rs >> 4, rs & 0x0F
-                        if size == 0:
-                            if run == 15:  # ZRL
-                                k += 16
-                                continue
-                            # EOBn: run of (1 << run) + bits blocks ends here
-                            eobrun = (1 << run) - 1
-                            if run:
-                                eobrun += read_bits(run)
-                            break
-                        k += run
-                        if k > se:
-                            raise ValueError("AC index overflow in JPEG stream")
-                        coefs[ci][indices[bi]][k] = extend(read_bits(size), size) << al
-                        k += 1
-            pos = i
-            continue
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("mixed SOF markers in progressive stream")
-        pos += 2 + seglen
-
-    if w is None or coefs is None:
-        return None
-
-    m = _dct_matrix()
-    zz = _JPEG_ZIGZAG
-    planes = []
-    for ci in range(ncomp):
-        qt = qtables[comp_info[ci][1]]
-        p = np.zeros((bh_pad[ci] * 8, bw_pad[ci] * 8))
-        for by in range(bh_pad[ci]):
-            for bx in range(bw_pad[ci]):
-                seq = coefs[ci][by * bw_pad[ci] + bx]
-                block = np.zeros(64)
-                for i2, rm in enumerate(zz):
-                    block[rm] = seq[i2] * qt[i2]
-                p[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    m.T @ block.reshape(8, 8) @ m + 128.0
-                )
-        planes.append(p)
-
-    # nearest-replication upsample of subsampled components (round 8 —
-    # same floor index mapping as the baseline path), then crop
-    full = []
-    for ci in range(ncomp):
-        _, _, hi, vi = comp_info[ci]
-        p = planes[ci]
-        if vi < vmax or hi < hmax:
-            ys = (np.arange(mcus_y * vmax * 8) * vi) // vmax
-            xs = (np.arange(mcus_x * hmax * 8) * hi) // hmax
-            p = p[np.ix_(ys, xs)]
-        full.append(p)
-    planes = [p[:h, :w] for p in full]
-    if ncomp == 3:
-        y, cb, cr = planes
-        r = y + 1.402 * (cr - 128.0)
-        g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-        bl = y + 1.772 * (cb - 128.0)
-        rgb = np.stack([r, g, bl], axis=-1)
-        px = np.clip(np.rint(rgb), 0, 255).astype(np.uint8).tobytes()
-        return w, h, 3, px
-    px = np.clip(np.rint(planes[0]), 0, 255).astype(np.uint8).tobytes()
-    return w, h, 1, px
-
-
-def _decode_jpeg_lossless(b: bytes) -> tuple[int, int, int, bytes] | None:
-    """Lossless JPEG (SOF3, round 8 — T.81 Annex H): predictive coding,
-    no DCT and no quantization. Per sample a DC-style Huffman code gives
-    the SSSS difference category (0-16; category 16 means diff = 32768
-    with no extra bits), the difference extends sign per F.2.2.1, and
-    reconstruction is (prediction + diff) mod 65536 (H.1.2.1). The
-    predictor is selected by the scan header's Ss field (1-7: a, b, c,
-    a+b-c, a+((b-c)>>1), b+((a-c)>>1), (a+b)>>1 with a = left, b =
-    above, c = above-left); the first sample predicts 2^(P-1-Pt), the
-    rest of the first line uses the left neighbor, the first column
-    uses the sample above (H.1.1). The point transform Pt shifts
-    decoded values back up by Pt bits. Components carry NO color
-    transform (lossless tooling convention — RGB stays RGB).
-
-    Supported subset: precision 8-16, 1-3 non-subsampled components,
-    single scan, no restart markers (named stubs otherwise). Canonical
-    output is 8-bit: samples downscale by >> (P - 8)."""
-    import struct
-
-    if b is None or len(b) < 4 or b[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    htables: dict[tuple[int, int], dict] = {}
-    w = h = None
-    ncomp = 0
-    precision = 8
-    comp_tables: "list[dict]" = []
-    predictor = 1
-    pt = 0
-    data_start = None
-
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack_from(">H", b, pos + 2)
-        body = b[pos + 4 : pos + 2 + seglen]
-        if marker == 0xC4:
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                nvals = sum(bits)
-                vals = list(body[off + 17 : off + 17 + nvals])
-                htables[(tc, th)] = _huff_canonical(bits, vals)
-                off += 17 + nvals
-        elif marker == 0xC3:
-            precision, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if not 8 <= precision <= 16:
-                raise NotImplementedError(
-                    "lossless JPEG decode supports precision 8-16 only "
-                    f"— got {precision}"
-                )
-            if ncomp not in (1, 2, 3):
-                raise NotImplementedError(
-                    "lossless JPEG decode supports 1-3 components only"
-                )
-            for ci in range(ncomp):
-                _cid, samp, _tq = struct.unpack_from(">BBB", body, 6 + ci * 3)
-                if samp != 0x11:
-                    raise NotImplementedError(
-                        "lossless JPEG decode supports non-subsampled "
-                        "components only"
-                    )
-        elif marker == 0xDD:
-            raise NotImplementedError(
-                "lossless JPEG decode does not support restart markers"
-            )
-        elif marker == 0xDA:
-            ns = body[0]
-            if ns != ncomp:
-                raise NotImplementedError(
-                    "lossless JPEG decode supports single-scan streams only"
-                )
-            for si in range(ns):
-                _cid, tt = body[1 + si * 2], body[2 + si * 2]
-                comp_tables.append(htables[(0, tt >> 4)])
-            predictor = body[1 + 2 * ns]  # Ss = predictor selector
-            pt = body[3 + 2 * ns] & 0x0F  # Al = point transform
-            if not 1 <= predictor <= 7:
-                raise ValueError("lossless predictor selector must be 1-7")
-            data_start = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-
-    if w is None or data_start is None:
-        return None
-
-    data = b[data_start:]
-    bitpos = 0
-
-    def read_bit() -> int:
-        nonlocal bitpos
-        i = bitpos >> 3
-        if i >= len(data):
-            raise ValueError("JPEG bitstream truncated")
-        byte = data[i]
-        if byte == 0xFF:
-            nxt = data[i + 1] if i + 1 < len(data) else None
-            if nxt != 0x00:
-                raise ValueError("unexpected marker inside entropy data")
-        bit = (byte >> (7 - (bitpos & 7))) & 1
-        bitpos += 1
-        if (bitpos & 7) == 0 and byte == 0xFF:
-            bitpos += 8
-        return bit
-
-    def read_bits(n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | read_bit()
-        return v
-
-    def huff_decode(table: dict) -> int:
-        length, code = 0, 0
-        while length < 16:
-            code = (code << 1) | read_bit()
-            length += 1
-            if (length, code) in table:
-                return table[(length, code)]
-        raise ValueError("invalid Huffman code in JPEG stream")
-
-    def extend(v: int, size: int) -> int:
-        return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-    default = 1 << (precision - 1 - pt)
-    planes = [[[0] * w for _ in range(h)] for _ in range(ncomp)]
-    for y in range(h):
-        for x in range(w):
-            for ci in range(ncomp):
-                size = huff_decode(comp_tables[ci])
-                if size == 16:
-                    diff = 32768  # category 16: no extra bits (H.1.2.2)
-                elif size:
-                    diff = extend(read_bits(size), size)
-                else:
-                    diff = 0
-                p = planes[ci]
-                if y == 0 and x == 0:
-                    pred = default
-                elif y == 0:
-                    pred = p[0][x - 1]
-                elif x == 0:
-                    pred = p[y - 1][0]
-                else:
-                    a, bb, c = p[y][x - 1], p[y - 1][x], p[y - 1][x - 1]
-                    if predictor == 1:
-                        pred = a
-                    elif predictor == 2:
-                        pred = bb
-                    elif predictor == 3:
-                        pred = c
-                    elif predictor == 4:
-                        pred = a + bb - c
-                    elif predictor == 5:
-                        pred = a + ((bb - c) >> 1)
-                    elif predictor == 6:
-                        pred = bb + ((a - c) >> 1)
-                    else:
-                        pred = (a + bb) >> 1
-                p[y][x] = (pred + diff) & 0xFFFF
-
-    shift = precision - 8
-    out = bytearray(w * h * ncomp)
-    for y in range(h):
-        for x in range(w):
-            for ci in range(ncomp):
-                s = (planes[ci][y][x] << pt) & 0xFFFF
-                out[(y * w + x) * ncomp + ci] = (s >> shift) & 0xFF
-    return w, h, ncomp, bytes(out)
+def _lossless_predict(p, x: int, y: int, sel: int, default: int) -> int:
+    """Lossless-JPEG prediction of sample (x, y) of plane ``p`` (T.81
+    H.1.1, Table H.1): ``default`` for the first sample, the left
+    neighbour along the first line, the one above down the first column,
+    and elsewhere selector 1-7 over a = left, b = above, c = above-left."""
+    if y == 0:
+        return default if x == 0 else p[0][x - 1]
+    if x == 0:
+        return p[y - 1][0]
+    a, b, c = p[y][x - 1], p[y - 1][x], p[y - 1][x - 1]
+    if sel == 1:
+        return a
+    if sel == 2:
+        return b
+    if sel == 3:
+        return c
+    if sel == 4:
+        return a + b - c
+    if sel == 5:
+        return a + ((b - c) >> 1)
+    if sel == 6:
+        return b + ((a - c) >> 1)
+    return (a + b) >> 1
 
 
 def encode_jpeg_lossless(
@@ -3404,14 +2623,12 @@ def encode_jpeg_lossless(
     pt: int = 0,
     channels: int = 1,
 ) -> bytes:
-    """Minimal lossless JPEG (SOF3) encoder — round-8 synthesis/test
-    helper, the exact inverse of :func:`_decode_jpeg_lossless`.
+    """Minimal lossless JPEG (SOF3) encoder — synthesis/test helper, the
+    exact inverse of the lossless path of :func:`decode_jpeg_pixels`.
     ``samples`` holds one value per pixel (``channels`` == 1) or one
     tuple per pixel, row-major, each value already point-transformed
     DOWN (i.e. the coded value; the decoder shifts back up by ``pt``).
     Carries a custom canonical DC table with all 17 SSSS categories."""
-    import struct
-
     if not 8 <= precision <= 16:
         raise ValueError("precision must be 8-16")
     if not 1 <= predictor <= 7:
@@ -3425,135 +2642,447 @@ def encode_jpeg_lossless(
         for y in range(height)
     ]
     maxv = (1 << (precision - pt)) - 1
-    for r in rows:
-        for tup in r:
-            for v in tup:
-                if not 0 <= v <= maxv:
-                    raise ValueError("sample out of coded range")
+    if any(not 0 <= v <= maxv for r in rows for tup in r for v in tup):
+        raise ValueError("sample out of coded range")
+    planes = [[[tup[ci] for tup in r] for r in rows] for ci in range(channels)]
 
     dc_bits = [0, 0, 0, 0, 0, 17] + [0] * 10  # 17 categories, length 6
     dc_vals = list(range(17))
-    dc_codes = {
-        v: (ln, code)
-        for (ln, code), v in _huff_canonical(dc_bits, dc_vals).items()
-    }
-
-    out = bytearray()
-    bitbuf, nbits = 0, 0
-
-    def put(code: int, length: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << length) | (code & ((1 << length) - 1))
-        nbits += length
-        while nbits >= 8:
-            nbits -= 8
-            byte = (bitbuf >> nbits) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-
+    dc = _huff_encoder(dc_bits, dc_vals)
+    wr = _BitWriter()
     default = 1 << (precision - 1 - pt)
     for y in range(height):
         for x in range(width):
-            for ci in range(channels):
-                if y == 0 and x == 0:
-                    pred = default
-                elif y == 0:
-                    pred = rows[0][x - 1][ci]
-                elif x == 0:
-                    pred = rows[y - 1][0][ci]
-                else:
-                    a = rows[y][x - 1][ci]
-                    bb = rows[y - 1][x][ci]
-                    c = rows[y - 1][x - 1][ci]
-                    if predictor == 1:
-                        pred = a
-                    elif predictor == 2:
-                        pred = bb
-                    elif predictor == 3:
-                        pred = c
-                    elif predictor == 4:
-                        pred = a + bb - c
-                    elif predictor == 5:
-                        pred = a + ((bb - c) >> 1)
-                    elif predictor == 6:
-                        pred = bb + ((a - c) >> 1)
-                    else:
-                        pred = (a + bb) >> 1
-                sdiff = ((rows[y][x][ci] - pred + 32768) & 0xFFFF) - 32768
+            for p in planes:
+                pred = _lossless_predict(p, x, y, predictor, default)
+                sdiff = ((p[y][x] - pred + 32768) & 0xFFFF) - 32768
                 if sdiff == -32768:
-                    ln, code = dc_codes[16]  # category 16, no extra bits
-                    put(code, ln)
-                elif sdiff == 0:
-                    ln, code = dc_codes[0]
-                    put(code, ln)
+                    wr.huff(dc, 16)  # category 16, no extra bits
                 else:
-                    size = (
-                        sdiff.bit_length() if sdiff > 0
-                        else (-sdiff).bit_length()
+                    size, bits = _jpeg_magnitude(sdiff)
+                    wr.huff(dc, size, size, bits)
+    return (
+        _jpeg_header(
+            0xC3, precision, width, height, [(1, 1)] * channels, None,
+            [(0, dc_bits, dc_vals)], 0,
+        )
+        + _jpeg_sos(list(range(1, channels + 1)), predictor, 0, 0, pt)
+        + wr.flush()
+        + b"\xff\xd9"
+    )
+
+
+# -- decoding ---------------------------------------------------------------
+
+
+class _EntropyReader:
+    """Bit reader over one entropy-coded segment ``b[pos:end]`` (T.81
+    F.2.2): Huffman decode, raw bits and sign extension. A byte is
+    checked when its first bit is needed: 0xFF must be followed by a
+    stuffed 0x00, which is skipped, and reading past ``end`` or into a
+    marker raises ValueError."""
+
+    __slots__ = ("b", "pos", "end", "acc", "nacc")
+
+    def __init__(self, b: bytes, pos: int, end: int) -> None:
+        self.b, self.pos, self.end = b, pos, end
+        self.acc = self.nacc = 0  # bits fetched but not yet consumed
+
+    def _byte(self) -> int:
+        pos = self.pos
+        if pos >= self.end:
+            raise ValueError("JPEG bitstream truncated")
+        byte = self.b[pos]
+        if byte == 0xFF:
+            if pos + 1 >= self.end or self.b[pos + 1] != 0x00:
+                raise ValueError("unexpected marker inside entropy data")
+            pos += 1
+        self.pos = pos + 1
+        return byte
+
+    def bits(self, n: int) -> int:
+        acc, nacc = self.acc, self.nacc
+        while nacc < n:
+            acc = (acc << 8) | self._byte()
+            nacc += 8
+        nacc -= n
+        self.acc, self.nacc = acc & ((1 << nacc) - 1), nacc
+        return acc >> nacc
+
+    def receive(self, size: int) -> int:
+        """``size`` raw bits, sign-extended (T.81 F.2.2.1 EXTEND)."""
+        if not size:
+            return 0
+        v = self.bits(size)
+        return v if v >= 1 << (size - 1) else v - (1 << size) + 1
+
+    def huff(self, table: dict) -> int:
+        """One symbol of a :func:`_huff_decoder` table."""
+        acc, nacc, code = self.acc, self.nacc, 1
+        for _ in range(16):
+            if not nacc:
+                acc, nacc = self._byte(), 8
+            nacc -= 1
+            code = (code << 1) | ((acc >> nacc) & 1)
+            if code in table:
+                self.acc, self.nacc = acc & ((1 << nacc) - 1), nacc
+                return table[code]
+        raise ValueError("invalid Huffman code in JPEG stream")
+
+    def restart(self) -> bool:
+        """At a restart boundary, drop the partial byte and step over the
+        RSTn marker if one comes next; without one, reading goes on
+        unaligned. When the pad byte before the marker is all ones, its
+        stuffed 0x00 is entropy data, not the marker, and ``pos`` is
+        already past it."""
+        b, pos = self.b, self.pos
+        if pos + 1 < self.end and b[pos] == 0xFF and 0xD0 <= b[pos + 1] <= 0xD7:
+            self.pos, self.acc, self.nacc = pos + 2, 0, 0
+            return True
+        return False
+
+
+class _JpegFrame:
+    """A parsed SOF0/1/2/3 header: precision, size and components as
+    (id, quant slot, h, v). A DCT frame also holds the coefficient grid
+    that every scan fills: per component, one zigzag-ordered list of 64
+    quantized coefficients per block over the MCU-padded block grid."""
+
+    def __init__(self, marker: int, body: bytes) -> None:
+        prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
+        if marker == 0xC3:
+            if not 8 <= prec <= 16:
+                raise NotImplementedError(
+                    "lossless JPEG decode supports precision 8-16 only "
+                    f"— got {prec}"
+                )
+            if ncomp not in (1, 2, 3):
+                raise NotImplementedError(
+                    "lossless JPEG decode supports 1-3 components only"
+                )
+        else:
+            if marker == 0xC0 and prec != 8:
+                raise ValueError("baseline JPEG (SOF0) is 8-bit by spec")
+            if marker == 0xC2 and prec != 8:
+                raise NotImplementedError(
+                    "decode_jpeg_pixels supports 8-bit precision only in "
+                    f"progressive streams — got {prec}"
+                )
+            if prec not in (8, 12):
+                raise NotImplementedError(
+                    "decode_jpeg_pixels supports 8- and 12-bit precision "
+                    f"only — got {prec}"
+                )
+            if ncomp not in (1, 3):
+                raise NotImplementedError(
+                    "decode_jpeg_pixels supports 1 or 3 components only"
+                )
+        comps = []
+        for ci in range(ncomp):
+            # component entries start at body byte 6 (after prec/h/w/n)
+            cid, samp, tq = struct.unpack_from(">BBB", body, 6 + ci * 3)
+            hi, vi = samp >> 4, samp & 0x0F
+            if marker == 0xC3:
+                if samp != 0x11:
+                    raise NotImplementedError(
+                        "lossless JPEG decode supports non-subsampled "
+                        "components only"
                     )
-                    bits = sdiff if sdiff >= 0 else sdiff + (1 << size) - 1
-                    ln, code = dc_codes[size]
-                    put(code, ln)
-                    put(bits, size)
-    if nbits:
-        put((1 << (8 - nbits)) - 1, 8 - nbits)
+            elif not (1 <= hi <= 4 and 1 <= vi <= 4):
+                raise ValueError(
+                    "JPEG sampling factors must be 1-4 (T.81 B.2.2) "
+                    f"— got {hi}x{vi}"
+                )
+            if ncomp == 1:
+                # single-component scans are NON-interleaved (T.81
+                # A.2.2): the MCU is one data unit, factors irrelevant
+                hi = vi = 1
+            comps.append((cid, tq, hi, vi))
+        self.precision, self.height, self.width = prec, h, w
+        self.comps = comps
+        if marker == 0xC3:
+            return
+        self.hmax = max(c[2] for c in comps)
+        self.vmax = max(c[3] for c in comps)
+        self.mcus_x = (w + 8 * self.hmax - 1) // (8 * self.hmax)
+        self.mcus_y = (h + 8 * self.vmax - 1) // (8 * self.vmax)
+        # interleaved scans cover the padded grid; a non-interleaved scan
+        # covers only the component's own grid (T.81 A.2.2), which maps
+        # into the padded storage
+        self.padded = [(self.mcus_x * hi, self.mcus_y * vi) for _, _, hi, vi in comps]
+        self.blocks = [
+            (
+                ((w * hi + self.hmax - 1) // self.hmax + 7) // 8,
+                ((h * vi + self.vmax - 1) // self.vmax + 7) // 8,
+            )
+            for _, _, hi, vi in comps
+        ]
+        self.coefs = [[[0] * 64 for _ in range(bw * bh)] for bw, bh in self.padded]
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
 
-    sof = seg(
-        0xC3,
-        struct.pack(">BHHB", precision, height, width, channels)
-        + b"".join(
-            struct.pack(">BBB", ci + 1, 0x11, 0) for ci in range(channels)
-        ),
-    )
-    dht = seg(0xC4, b"\x00" + bytes(dc_bits) + bytes(dc_vals))
-    sos = seg(
-        0xDA,
-        bytes([channels])
-        + b"".join(struct.pack(">BB", ci + 1, 0x00) for ci in range(channels))
-        + bytes([predictor, 0, pt]),
-    )
-    return b"\xff\xd8" + sof + dht + sos + bytes(out) + b"\xff\xd9"
+def _jpeg_ac_first(
+    rd: _EntropyReader, cf: "list[int]", tab: dict, k: int, se: int,
+    al: int, eobrun: int, eob_runs: bool,
+) -> int:
+    """Decode one block's AC band k..se: run-length codes with ZRL and
+    EOB (T.81 F.2.2.2), and in progressive scans EOBn runs that end this
+    block and the next (1 << n) - 1 + extra (G.1.2.2). Returns the EOB
+    run still to skip."""
+    if eobrun:
+        return eobrun - 1
+    while k <= se:
+        rs = rd.huff(tab)
+        run, size = rs >> 4, rs & 0x0F
+        if size == 0:
+            if run == 15:  # ZRL
+                k += 16
+                continue
+            return (1 << run) - 1 + rd.bits(run) if eob_runs else 0
+        k += run
+        if k > se:
+            raise ValueError("AC index overflow in JPEG stream")
+        cf[k] = rd.receive(size) << al
+        k += 1
+    return 0
+
+
+def _jpeg_ac_refine(
+    rd: _EntropyReader, cf: "list[int]", tab: dict, k: int, se: int,
+    al: int, eobrun: int,
+) -> int:
+    """One block of an AC successive-approximation refinement scan
+    (T.81 G.1.2.3): newly significant coefficients arrive as (run, 1)
+    codes counting ZERO-HISTORY positions, and every already nonzero
+    coefficient passed on the way (including inside ZRL skips and EOB
+    runs) carries one correction bit. Returns the EOB run still to
+    skip."""
+    p1 = 1 << al
+
+    def correct(k: int) -> None:
+        if rd.bits(1) and not (abs(cf[k]) & p1):
+            cf[k] += p1 if cf[k] > 0 else -p1
+
+    if eobrun:
+        eobrun -= 1
+    else:
+        while k <= se:
+            rs = rd.huff(tab)
+            run, size = rs >> 4, rs & 0x0F
+            newval = 0
+            if size == 0:
+                if run < 15:  # EOBn; ZRL skips 16 zero-history positions
+                    eobrun = (1 << run) - 1 + rd.bits(run)
+                    break
+            elif size != 1:
+                raise ValueError("invalid size in AC refinement scan")
+            else:
+                newval = p1 if rd.bits(1) else -p1
+            # advance over `run` zero-history positions, correcting
+            # nonzero ones along the way
+            while k <= se:
+                if cf[k]:
+                    correct(k)
+                elif run == 0:
+                    break
+                else:
+                    run -= 1
+                k += 1
+            if newval and k <= se:
+                cf[k] = newval
+            k += 1
+    # the rest of the block (all of it inside an EOB run): corrections
+    while k <= se:
+        if cf[k]:
+            correct(k)
+        k += 1
+    return eobrun
+
+
+def _jpeg_scan(
+    rd: _EntropyReader,
+    frame: _JpegFrame,
+    comps: "list[int]",
+    dc_tabs: "list[dict] | None",
+    ac_tabs: "list[dict] | None",
+    ss: int,
+    se: int,
+    ah: int,
+    al: int,
+    restart_interval: int,
+    progressive: bool,
+) -> None:
+    """Decode one scan into ``frame.coefs``. A sequential scan is the
+    special case Ss=0, Se=63, Ah=Al=0 over every component: DC and AC
+    of each block in one pass. Interleaved scans walk the padded MCU
+    grid (T.81 A.2.3), single-component scans the component's own grid
+    (A.2.2); the restart cadence counts those units."""
+    if len(comps) > 1:
+        grid = [
+            (frame.comps[ci][2], frame.comps[ci][3], frame.padded[ci][0])
+            for ci in comps
+        ]
+        units = [
+            [(k, comps[k], bi) for k, bi in mcu]
+            for mcu in _jpeg_mcu_order(frame.mcus_x, frame.mcus_y, grid)
+        ]
+    else:
+        ci = comps[0]
+        bw = frame.padded[ci][0]
+        cbw, cbh = frame.blocks[ci]
+        units = [[(0, ci, r * bw + c)] for r in range(cbh) for c in range(cbw)]
+    preds = [0] * len(comps)
+    eobrun = 0
+    k0 = max(ss, 1)
+    for ui, members in enumerate(units):
+        if restart_interval and ui and ui % restart_interval == 0:
+            if rd.restart():
+                preds = [0] * len(comps)
+                eobrun = 0
+        for k, ci, bi in members:
+            cf = frame.coefs[ci][bi]
+            if ss == 0:
+                if ah == 0:  # DC difference of the point-transformed value
+                    preds[k] += rd.receive(rd.huff(dc_tabs[k]))
+                    cf[0] = preds[k] << al
+                else:  # DC refinement: one raw bit per block
+                    cf[0] |= rd.bits(1) << al
+            if se:
+                if ah == 0:
+                    eobrun = _jpeg_ac_first(
+                        rd, cf, ac_tabs[k], k0, se, al, eobrun, progressive
+                    )
+                else:
+                    eobrun = _jpeg_ac_refine(rd, cf, ac_tabs[k], k0, se, al, eobrun)
+
+
+def _jpeg_quant(frame: _JpegFrame, qtables: dict) -> "list[list[int]]":
+    """Each component's quant table: KeyError when it is missing,
+    IndexError when it has fewer than 64 entries."""
+    qts = [qtables[tq] for _, tq, _, _ in frame.comps]
+    if any(len(qt) < 64 for qt in qts):
+        raise IndexError("JPEG quant table shorter than 64 entries")
+    return qts
+
+
+def _jpeg_pixels(
+    frame: _JpegFrame, qts: "list[list[int]]"
+) -> tuple[int, int, int, bytes]:
+    """Coefficient grid -> canonical pixels: dequantize -> un-zigzag ->
+    orthonormal IDCT -> level shift, nearest-replication upsample, crop,
+    JFIF YCbCr->RGB, clamp at full precision, then >> (P - 8) to bytes
+    (the deterministic truncating reduction viewers use)."""
+    import numpy as np
+
+    m = _dct_matrix()
+    zz = _JPEG_ZIGZAG
+    w, h = frame.width, frame.height
+    level = float(1 << (frame.precision - 1))  # +128 at 8-bit, +2048 at 12
+    planes = []
+    for (_, _, hi, vi), (bw, bh), blocks, qt in zip(
+        frame.comps, frame.padded, frame.coefs, qts
+    ):
+        p = np.zeros((bh * 8, bw * 8))
+        for bi, seq in enumerate(blocks):
+            block = np.zeros(64)
+            for i, rm in enumerate(zz):
+                block[rm] = seq[i] * qt[i]
+            r0, c0 = (bi // bw) * 8, (bi % bw) * 8
+            p[r0 : r0 + 8, c0 : c0 + 8] = m.T @ block.reshape(8, 8) @ m + level
+        if vi < frame.vmax or hi < frame.hmax:
+            # index mapping (x*hi)//hmax rather than np.repeat, so
+            # NON-divisible factor pairs (3 vs 4, legal per T.81) map by
+            # floor-nearest too — identical to repeat when they divide
+            ys = (np.arange(frame.mcus_y * frame.vmax * 8) * vi) // frame.vmax
+            xs = (np.arange(frame.mcus_x * frame.hmax * 8) * hi) // frame.hmax
+            p = p[np.ix_(ys, xs)]
+        planes.append(p[:h, :w])
+    maxval = (1 << frame.precision) - 1
+    if len(planes) == 3:
+        y, cb, cr = planes
+        r = y + 1.402 * (cr - level)
+        g = y - 0.344136 * (cb - level) - 0.714136 * (cr - level)
+        bl = y + 1.772 * (cb - level)
+        full = np.stack([r, g, bl], axis=-1)
+    else:
+        full = planes[0]
+    px = np.clip(np.rint(full), 0, maxval).astype(np.int64)
+    return w, h, len(planes), (px >> (frame.precision - 8)).astype(np.uint8).tobytes()
+
+
+def _jpeg_lossless(
+    b: bytes, start: int, frame: _JpegFrame, sos: bytes, htables: dict
+) -> tuple[int, int, int, bytes]:
+    """Lossless scan (T.81 Annex H): per sample a DC-style code gives the
+    difference category 0-16 (16 means 32768 with no extra bits,
+    H.1.2.2), reconstruction is (prediction + difference) mod 65536, and
+    the point transform shifts values back up by Pt. Components carry
+    no colour transform (RGB stays RGB); output bytes are >> (P - 8)."""
+    ns = sos[0]
+    if ns != len(frame.comps):
+        raise NotImplementedError(
+            "lossless JPEG decode supports single-scan streams only"
+        )
+    tabs = []
+    for si in range(ns):
+        _cid, tt = sos[1 + si * 2], sos[2 + si * 2]
+        tabs.append(htables[(0, tt >> 4)])
+    predictor = sos[1 + 2 * ns]  # Ss = predictor selector
+    pt = sos[3 + 2 * ns] & 0x0F  # Al = point transform
+    if not 1 <= predictor <= 7:
+        raise ValueError("lossless predictor selector must be 1-7")
+    w, h, ncomp = frame.width, frame.height, ns
+    rd = _EntropyReader(b, start, len(b))
+    default = 1 << (frame.precision - 1 - pt)
+    planes = [[[0] * w for _ in range(h)] for _ in range(ncomp)]
+    for y in range(h):
+        for x in range(w):
+            for p, tab in zip(planes, tabs):
+                size = rd.huff(tab)
+                diff = 32768 if size == 16 else rd.receive(size)
+                pred = _lossless_predict(p, x, y, predictor, default)
+                p[y][x] = (pred + diff) & 0xFFFF
+    shift = frame.precision - 8
+    out = bytearray(w * h * ncomp)
+    for y in range(h):
+        for x in range(w):
+            for ci in range(ncomp):
+                s = (planes[ci][y][x] << pt) & 0xFFFF
+                out[(y * w + x) * ncomp + ci] = (s >> shift) & 0xFF
+    return w, h, ncomp, bytes(out)
 
 
 def decode_jpeg_pixels(b: bytes | None) -> tuple[int, int, int, bytes] | None:
-    """Decode a baseline sequential JPEG (SOF0, 8-bit, 1 or 3 components,
-    sampling factors 1-4 incl. 4:2:0/4:2:2 (round 7) and 4:1:1 (round 8)
-    chroma subsampling
-    to raw pixels: (width, height, channels, pixels) with ``pixels``
-    row-major gray or RGB bytes — the same canonical layout as the
-    PNG/BMP/GIF decoders. Progressive (SOF2) streams route to the
-    dedicated multi-scan path (:func:`_decode_jpeg_progressive`).
+    """Decode a JPEG to raw pixels: (width, height, channels, pixels) with
+    ``pixels`` row-major gray or RGB bytes — the same canonical layout as
+    the PNG/BMP/GIF decoders.
 
-    Real codec machinery: marker walk, multi-slot DQT/DHT, canonical
-    Huffman decode (T.81 C.2) with 0xFF00 byte-unstuffing and RSTn
-    restart handling (byte-align + DC-predictor reset), DC difference
-    decoding, run-length AC with ZRL/EOB, MCU-interleaved block order
-    with per-component sampling factors, dequantize → un-zigzag →
-    orthonormal IDCT → +128 level shift, nearest-replication chroma
-    upsample, clamp, JFIF YCbCr→RGB. Returns None for non-JPEG bytes;
-    raises NotImplementedError for arithmetic/lossless/hierarchical,
-    12-bit, or factor-4 sampling streams — the honest-stub posture for
-    the unsupported subset."""
-    import struct
+    Supported (ITU-T T.81, Huffman coding): sequential DCT, SOF0 baseline
+    and SOF1 extended at 8 or 12 bits with 8- or 16-bit quant tables;
+    progressive DCT (SOF2, 8-bit) with spectral selection, successive
+    approximation and EOB runs; lossless (SOF3, precision 8-16, 1-3
+    components, predictors 1-7). DCT streams take 1 or 3 components with
+    sampling factors 1-4 (4:2:0, 4:2:2, 4:1:1, ...) and restart
+    intervals in every scan.
 
-    import numpy as np
-
+    One marker walk and one entropy reader serve every process. A
+    sequential stream is a single scan (Ss=0, Se=63, Ah=Al=0) into the
+    same coefficient grid that progressive scans fill, and one
+    reconstruction (:func:`_jpeg_pixels`) turns the grid into pixels.
+    Returns None for non-JPEG bytes; raises NotImplementedError, naming
+    the gap, for arithmetic coding, hierarchical frames, 12-bit
+    progressive, multi-scan sequential, and lossless streams with
+    restarts or subsampled components."""
     if b is None or len(b) < 4 or b[:2] != b"\xff\xd8":
         return None
     pos = 2
     qtables: dict[int, "list[int]"] = {}
-    htables: dict[tuple[int, int], dict] = {}  # (class, slot) -> canonical
-    w = h = None
-    ncomp = 0
-    precision = 8
-    comp_info: "list[tuple[int, int]]" = []  # (component id, quant slot)
-    scan_tables: "list[tuple[dict, dict]]" = []
+    htables: dict[tuple[int, int], dict] = {}  # (class, slot) -> decoder
+    frame: "_JpegFrame | None" = None
+    kind = None  # 0xC0 sequential (SOF0/SOF1), 0xC2 progressive, 0xC3 lossless
     restart_interval = 0
-    data_start = None
+    dri_seen = False  # a DRI anywhere before SOF3 rejects a lossless stream
+    # the first segment a progressive stream may not carry before its SOF2
+    not_progressive: "Exception | None" = None
 
     while pos + 4 <= len(b):
         if b[pos] != 0xFF:
@@ -3563,238 +3092,128 @@ def decode_jpeg_pixels(b: bytes | None) -> tuple[int, int, int, bytes] | None:
             break
         (seglen,) = struct.unpack_from(">H", b, pos + 2)
         body = b[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:  # DQT — possibly several tables per segment
-            off = 0
-            while off < len(body):
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                if pq == 0:
-                    qtables[tq] = list(body[off + 1 : off + 65])
-                    off += 65
-                else:  # 16-bit table entries (round 8; 12-bit streams)
-                    qtables[tq] = list(
-                        struct.unpack_from(">64H", body, off + 1)
-                    )
-                    off += 129
-        elif marker == 0xC4:  # DHT — possibly several tables per segment
+        after = pos + 2 + seglen  # next segment, or a scan's entropy data
+        if marker == 0xC4:  # DHT — possibly several tables per segment
             off = 0
             while off < len(body):
                 tc, th = body[off] >> 4, body[off] & 0x0F
                 bits = list(body[off + 1 : off + 17])
                 nvals = sum(bits)
                 vals = list(body[off + 17 : off + 17 + nvals])
-                htables[(tc, th)] = _huff_canonical(bits, vals)
+                htables[(tc, th)] = _huff_decoder(bits, vals)
                 off += 17 + nvals
-        elif marker == 0xC0 or marker == 0xC1:  # baseline / ext sequential
-            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if marker == 0xC0 and prec != 8:
-                raise ValueError("baseline JPEG (SOF0) is 8-bit by spec")
-            if prec not in (8, 12):
+        elif kind == 0xC3:  # lossless reads only DHT, SOF3, DRI and SOS
+            if marker == 0xC3:
+                frame = _JpegFrame(marker, body)
+            elif marker == 0xDD:
                 raise NotImplementedError(
-                    "decode_jpeg_pixels supports 8- and 12-bit precision "
-                    f"only — got {prec}"
+                    "lossless JPEG decode does not support restart markers"
                 )
-            precision = prec
-            if ncomp not in (1, 3):
-                raise NotImplementedError(
-                    "decode_jpeg_pixels supports 1 or 3 components only"
+            elif marker == 0xDA:
+                return _jpeg_lossless(b, after, frame, body, htables)
+        elif marker == 0xDB:  # DQT — possibly several tables per segment
+            off = 0
+            while off < len(body):
+                pq, tq = body[off] >> 4, body[off] & 0x0F
+                if pq == 0:
+                    qtables[tq] = list(body[off + 1 : off + 65])
+                    off += 65
+                    continue
+                err = NotImplementedError(
+                    "decode_jpeg_pixels supports 8-bit quant tables only "
+                    "in progressive streams"
                 )
-            for ci in range(ncomp):
-                # component entries start at body byte 6 (after prec/h/w/n)
-                cid, samp, tq = struct.unpack_from(">BBB", body, 6 + ci * 3)
-                hi, vi = samp >> 4, samp & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(
-                        "JPEG sampling factors must be 1-4 (T.81 B.2.2) "
-                        f"— got {hi}x{vi}"
-                    )
-                if ncomp == 1:
-                    # single-component scans are NON-interleaved (T.81
-                    # A.2.2): the MCU is one data unit, factors irrelevant
-                    hi = vi = 1
-                comp_info.append((cid, tq, hi, vi))
-        elif marker == 0xC2:  # progressive — dedicated multi-scan path
-            return _decode_jpeg_progressive(b)
-        elif marker == 0xC3:  # lossless — dedicated predictive path
-            return _decode_jpeg_lossless(b)
-        elif marker in (0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                "decode_jpeg_pixels supports baseline sequential (SOF0/"
-                f"SOF1), progressive (SOF2), and lossless (SOF3) only — "
-                f"got SOF marker 0x{marker:02X} (arithmetic/hierarchical "
-                "need a full codec)"
-            )
+                if kind == 0xC2:
+                    raise err
+                qtables[tq] = list(struct.unpack_from(">64H", body, off + 1))
+                off += 129
+                not_progressive = not_progressive or err
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:  # SOS
-            ns = body[0]
-            if ns != ncomp:
+            dri_seen = True
+        elif marker in _JPEG_SOF:
+            if kind == 0xC2 and marker != 0xC2:
+                raise ValueError("mixed SOF markers in progressive stream")
+            if marker == 0xC2 and kind != 0xC2 and not_progressive:
+                raise not_progressive
+            if marker == 0xC3 and dri_seen:
                 raise NotImplementedError(
-                    "decode_jpeg_pixels supports single-scan streams only"
+                    "lossless JPEG decode does not support restart markers"
                 )
+            if marker > 0xC3:
+                raise NotImplementedError(
+                    "decode_jpeg_pixels supports baseline sequential (SOF0/"
+                    f"SOF1), progressive (SOF2), and lossless (SOF3) only — "
+                    f"got SOF marker 0x{marker:02X} (arithmetic/hierarchical "
+                    "need a full codec)"
+                )
+            frame = _JpegFrame(marker, body)
+            kind = 0xC0 if marker == 0xC1 else marker
+            if kind == 0xC0:
+                not_progressive = not_progressive or ValueError(
+                    "mixed SOF markers in progressive stream"
+                )
+        elif marker == 0xDA and kind != 0xC2:  # the one sequential scan
+            ns = body[0]
+            if ns != (len(frame.comps) if frame else 0):
+                raise NotImplementedError(
+                    "decode_jpeg_pixels supports single-scan sequential "
+                    "streams only (every component in one scan)"
+                )
+            if frame is None:
+                return None
+            # components in frame order, whatever ids the scan names
+            dc_tabs, ac_tabs = [], []
             for si in range(ns):
                 _cid, tt = body[1 + si * 2], body[2 + si * 2]
-                scan_tables.append(
-                    (htables[(0, tt >> 4)], htables[(1, tt & 0x0F)])
-                )
-            data_start = pos + 2 + seglen
-            break
-        pos += 2 + seglen
+                dc_tabs.append(htables[(0, tt >> 4)])
+                ac_tabs.append(htables[(1, tt & 0x0F)])
+            qts = _jpeg_quant(frame, qtables)  # fails before the scan
+            _jpeg_scan(
+                _EntropyReader(b, after, len(b)), frame, list(range(ns)),
+                dc_tabs, ac_tabs, 0, 63, 0, 0, restart_interval, False,
+            )
+            return _jpeg_pixels(frame, qts)
+        elif marker == 0xDA:  # one scan of a progression
+            ns = body[0]
+            index = {c[0]: ix for ix, c in enumerate(frame.comps)}
+            comps, sel = [], []
+            for si in range(ns):
+                cid, tt = body[1 + si * 2], body[2 + si * 2]
+                comps.append(index[cid])
+                sel.append(tt)
+            ss, se, ahl = body[1 + ns * 2], body[2 + ns * 2], body[3 + ns * 2]
+            # the scan's entropy data runs to the next marker that is not
+            # RSTn; with no such marker it stops short of the last byte
+            end = after
+            while end + 1 < len(b):
+                if b[end] == 0xFF and b[end + 1] != 0x00:
+                    if 0xD0 <= b[end + 1] <= 0xD7:
+                        end += 2
+                        continue
+                    break
+                end += 1
+            dc_tabs = ac_tabs = None
+            if ss == 0:
+                if se != 0:
+                    raise ValueError("DC scan with Se != 0")
+                if ahl >> 4 == 0:
+                    dc_tabs = [htables[(0, t >> 4)] for t in sel]
+            else:
+                if ns != 1:
+                    raise ValueError("progressive AC scan must be single-component")
+                ac_tabs = [htables[(1, sel[0] & 0x0F)]]
+            _jpeg_scan(
+                _EntropyReader(b, after, end), frame, comps, dc_tabs, ac_tabs,
+                ss, se, ahl >> 4, ahl & 0x0F, restart_interval, True,
+            )
+            pos = end
+            continue
+        pos = after
 
-    if w is None or data_start is None:
-        return None
-
-    # -- entropy-coded segment ------------------------------------------------
-    data = b[data_start:]
-    bitpos = 0  # bit cursor; byte index = bitpos >> 3
-
-    def aligned_marker() -> "tuple[int, int] | None":
-        """The marker byte at the current byte-aligned position, with the
-        bit cursor just past it — or None if none sits there. When the
-        encoder's pre-restart flush byte is 0xFF, its stuffed 0x00 lands
-        exactly at the boundary (the pad bits are 1s, completing 0xFF);
-        that 0x00 belongs to the entropy data, so step past it before
-        looking for the 0xFF of the marker (ADVICE r6: valid baseline
-        streams otherwise die with 'unexpected marker inside entropy
-        data' whenever a restart follows an all-ones flush byte)."""
-        i = (bitpos + 7) >> 3
-        if i > 0 and i < len(data) and data[i] == 0x00 and data[i - 1] == 0xFF:
-            i += 1  # stuffed pad byte — entropy data, not the marker
-        if i + 1 < len(data) and data[i] == 0xFF and data[i + 1] != 0x00:
-            return data[i + 1], (i + 2) << 3
-        return None
-
-    def read_bit() -> int:
-        nonlocal bitpos
-        i = bitpos >> 3
-        if i >= len(data):
-            raise ValueError("JPEG bitstream truncated")
-        byte = data[i]
-        if byte == 0xFF:
-            nxt = data[i + 1] if i + 1 < len(data) else None
-            if nxt != 0x00:
-                raise ValueError("unexpected marker inside entropy data")
-        bit = (byte >> (7 - (bitpos & 7))) & 1
-        bitpos += 1
-        if (bitpos & 7) == 0 and byte == 0xFF:
-            bitpos += 8  # skip the stuffed 0x00
-        return bit
-
-    def read_bits(n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | read_bit()
-        return v
-
-    def huff_decode(table: dict) -> int:
-        length, code = 0, 0
-        while length < 16:
-            code = (code << 1) | read_bit()
-            length += 1
-            if (length, code) in table:
-                return table[(length, code)]
-        raise ValueError("invalid Huffman code in JPEG stream")
-
-    def extend(v: int, size: int) -> int:
-        return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-    m = _dct_matrix()
-    zz = _JPEG_ZIGZAG
-    level = float(1 << (precision - 1))  # +128 at 8-bit, +2048 at 12-bit
-    maxval = (1 << precision) - 1
-
-    def decode_block(ci: int) -> "np.ndarray":
-        """One entropy-decoded, dequantized, IDCT'd 8x8 block of
-        component ci (updates that component's DC predictor)."""
-        dc_tab, ac_tab = scan_tables[ci]
-        qt = qtables[comp_info[ci][1]]
-        seq = [0] * 64
-        size = huff_decode(dc_tab)
-        diff = extend(read_bits(size), size) if size else 0
-        preds[ci] += diff
-        seq[0] = preds[ci]
-        k = 1
-        while k < 64:
-            rs = huff_decode(ac_tab)
-            run, size = rs >> 4, rs & 0x0F
-            if size == 0:
-                if run == 15:  # ZRL
-                    k += 16
-                    continue
-                break  # EOB
-            k += run
-            if k > 63:
-                raise ValueError("AC index overflow in JPEG stream")
-            seq[k] = extend(read_bits(size), size)
-            k += 1
-        block = np.zeros(64)
-        for i, rm in enumerate(zz):
-            block[rm] = seq[i] * qt[i]
-        return m.T @ block.reshape(8, 8) @ m + level
-
-    # MCU-interleaved loop (T.81 A.2.3): with 1x1 factors everywhere the
-    # MCU is one block per component (the pre-round-7 shape, identical
-    # restart cadence); with chroma subsampling each MCU carries
-    # h_i*v_i blocks per component over a (8*Hmax)x(8*Vmax) pixel tile.
-    hmax = max(c[2] for c in comp_info)
-    vmax = max(c[3] for c in comp_info)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mcus_y * vi * 8, mcus_x * hi * 8))
-        for (_, _, hi, vi) in comp_info
-    ]
-    preds = [0] * ncomp
-    mcu_index = 0
-
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_index and mcu_index % restart_interval == 0:
-                mk = aligned_marker()
-                if mk is not None and 0xD0 <= mk[0] <= 0xD7:
-                    bitpos = mk[1]  # skip (stuffed pad +) RSTn
-                    preds = [0] * ncomp
-            for ci in range(ncomp):
-                _, _, hi, vi = comp_info[ci]
-                for byi in range(vi):
-                    for bxi in range(hi):
-                        spatial = decode_block(ci)
-                        r0 = (my * vi + byi) * 8
-                        c0 = (mx * hi + bxi) * 8
-                        planes[ci][r0 : r0 + 8, c0 : c0 + 8] = spatial
-            mcu_index += 1
-
-    # nearest-replication upsample of subsampled components to the full
-    # padded grid, then crop to the image. Index mapping (x*hi)//hmax
-    # rather than np.repeat so NON-divisible factor pairs (3 vs 4,
-    # legal per T.81) map by floor-nearest too — identical to repeat
-    # when the ratio divides.
-    full = []
-    for ci in range(ncomp):
-        _, _, hi, vi = comp_info[ci]
-        p = planes[ci]
-        if vi < vmax or hi < hmax:
-            ys = (np.arange(mcus_y * vmax * 8) * vi) // vmax
-            xs = (np.arange(mcus_x * hmax * 8) * hi) // hmax
-            p = p[np.ix_(ys, xs)]
-        full.append(p)
-    planes = [p[:h, :w] for p in full]
-    # canonical output is 8-bit bytes: 12-bit samples clamp at full
-    # precision first, then downscale by >> 4 (the deterministic
-    # truncating reduction viewers use)
-    shift = precision - 8
-    if ncomp == 3:
-        y, cb, cr = planes
-        r = y + 1.402 * (cr - level)
-        g = y - 0.344136 * (cb - level) - 0.714136 * (cr - level)
-        bl = y + 1.772 * (cb - level)
-        rgb = np.stack([r, g, bl], axis=-1)
-        full_px = np.clip(np.rint(rgb), 0, maxval).astype(np.int64)
-        px = (full_px >> shift).astype(np.uint8).tobytes()
-        return w, h, 3, px
-    full_px = np.clip(np.rint(planes[0]), 0, maxval).astype(np.int64)
-    px = (full_px >> shift).astype(np.uint8).tobytes()
-    return w, h, 1, px
+    if kind != 0xC2:
+        return None  # no scan reached
+    return _jpeg_pixels(frame, _jpeg_quant(frame, qtables))
 
 
 PIXEL_SCHEMA = (
@@ -3859,7 +3278,7 @@ def decode_image_pixels(
 ) -> DataFrame:
     """Per-document pixel statistics from REAL pixel decoding — PNG
     (:func:`decode_png_pixels`), 24-bit BMP (:func:`decode_bmp_pixels`),
-    LZW GIF (:func:`decode_gif_pixels`), and baseline JPEG
+    LZW GIF (:func:`decode_gif_pixels`), and JPEG
     (:func:`decode_jpeg_pixels`) dispatched on magic bytes, all
     emitting the same canonical top-down RGB layout: (width, height,
     channels, px_sum, px_wsum, px_mean).

@@ -843,7 +843,8 @@ def multimodal_decode_jpg(spark, sf_dir):
 
 
 # PROGRESSIVE JPEG pixel decode (operators/multimodal.py::
-# _decode_jpeg_progressive, round 7 — verdict r06 item 7): same planted
+# decode_jpeg_pixels, whose progressive scans fill the same coefficient
+# grid as a sequential scan): same planted
 # constant-gray-block content as multimodal_decode_jpg, but the payloads
 # are SOF2 progressive streams synthesized by encode_jpeg_progressive —
 # a DC first scan, doc_id%3 successive-approximation refinement scans

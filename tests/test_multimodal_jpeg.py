@@ -2017,3 +2017,69 @@ def test_audio_fp_words_invariances():
     assert audio_fp_words(inter, channels=2, words=2) == w2
 
     assert audio_fp_words(list(range(128)), words=2) is None
+
+
+def test_jpeg_named_stubs_12bit_progressive_and_multiscan_sequential():
+    """Two stubs the shared DCT decoder keeps: a progressive frame at 12-bit
+    precision, and a 3-component sequential stream whose scan names only
+    one component (a multi-scan sequential stream). A merged scan loop
+    would otherwise accept the second one and decode one plane silently.
+    The ingest classifier reports both as 'stub', not 'corrupt'."""
+    from corintick_spark.operators.multimodal import _classify_image_payload
+
+    px = _const_block_image(16, 16, 10)
+    b = bytearray(M.encode_jpeg_progressive(16, 16, px, channels=1))
+    i = bytes(b).find(b"\xff\xc2")
+    b[i + 4] = 12  # SOF2 sample precision P
+    with pytest.raises(NotImplementedError, match="precision"):
+        M.decode_jpeg_pixels(bytes(b))
+    assert _classify_image_payload(bytes(b)) == (None, "stub")
+
+    rgb = bytes(v for g in px for v in (g, g, g))
+    b = M.encode_jpeg(16, 16, rgb, channels=3)
+    i = b.find(b"\xff\xda")
+    seglen = int.from_bytes(b[i + 2 : i + 4], "big")
+    # Ns=1: component 1 with table slots 0/0, Ss=0, Se=63, Ah=Al=0
+    sos = b"\xff\xda" + (8).to_bytes(2, "big") + bytes([1, 1, 0x00, 0, 63, 0])
+    b = b[:i] + sos + b[i + 2 + seglen :]
+    with pytest.raises(NotImplementedError, match="single-scan"):
+        M.decode_jpeg_pixels(b)
+    assert _classify_image_payload(b) == (None, "stub")
+
+
+def test_jpeg_mutations_raise_only_decode_errors():
+    """Truncated and byte-overwritten streams of every JPEG process must
+    decode or raise one of _decode_errors() — the classes the corpus scan
+    turns into a null row. Anything else would abort a scan task.
+    Covers baseline gray with restarts, baseline 4:2:0, progressive gray
+    with restarts and both refinements, progressive RGB, 12-bit and
+    lossless; truncation points are thinned to keep the test fast."""
+    import random
+
+    rng = np.random.RandomState(4)
+    gray = rng.randint(0, 256, size=(16, 16)).astype(np.uint8).tobytes()
+    rgb = rng.randint(0, 256, size=(16, 16, 3)).astype(np.uint8).tobytes()
+    streams = [
+        M.encode_jpeg(16, 16, gray, 1, restart_interval=1),
+        M.encode_jpeg(16, 16, rgb, 3, sampling=[(2, 2), (1, 1), (1, 1)]),
+        M.encode_jpeg_progressive(16, 16, gray, 1, dc_al=1, ac_al=1,
+                                  restart_interval=1),
+        M.encode_jpeg_progressive(16, 16, rgb, 3, dc_al=1, ac_al=1),
+        M.encode_jpeg12(16, 16, [(v * 16 + 5) % 4096 for v in gray]),
+        M.encode_jpeg_lossless(8, 8, list(gray[:64]), 8, predictor=4),
+    ]
+    errors = M._decode_errors()
+    for si, b in enumerate(streams):
+        assert M.decode_jpeg_pixels(b) is not None, si
+        cuts = range(0, len(b), 3)
+        rnd = random.Random(si)
+        overwrites = []
+        for _ in range(200):
+            bb = bytearray(b)
+            bb[rnd.randrange(len(b))] = rnd.randrange(256)
+            overwrites.append(bytes(bb))
+        for bb in [b[:t] for t in cuts] + overwrites:
+            try:
+                M.decode_jpeg_pixels(bb)
+            except errors:
+                pass
