@@ -61,6 +61,100 @@ class ConcurrentCommitError(RuntimeError):
     """Another writer committed this version first — retry on latest."""
 
 
+# epoch-micros multiplier of the INT64 timestamp units footer bounds are
+# recorded in (nanos are left out: Spark does not read them as timestamps)
+_TS_UNIT_MICROS = {"milliseconds": 1000, "microseconds": 1}
+
+
+def footer_entries(root: str, paths: list[str], ts_col: str | None = None) -> list[dict]:
+    """Manifest entries for the parquet files ``paths``: root-relative path,
+    row count and per-column ``[min, max]`` read from the footer with
+    pyarrow — no Spark job. Iceberg keeps the same per-file bounds in its
+    manifests; ``SnapshotStore.merge`` and ``TickStore.read`` prune files
+    on them.
+
+    A column gets bounds only when every row group holding a non-null
+    value of it carries exact statistics; otherwise its bounds are unknown
+    and pruning keeps the file. With ``ts_col``, only that column is
+    recorded, as epoch micros, and only where it is an INT64 instant
+    (``TIMESTAMP(MILLIS|MICROS, isAdjustedToUTC=true)``) in a file written
+    without Spark's legacy calendar rebase: INT96 carries no statistics,
+    and rebased values differ from the ones Spark reads back.
+    """
+    import pyarrow.parquet as pq
+
+    entries = []
+    for path in paths:
+        meta = pq.ParquetFile(path).metadata
+        rebased = b"org.apache.spark.legacyDateTime" in (meta.metadata or {})
+        stats: dict[str, list] = {}
+        unknown: set[str] = set()
+        for rg in range(meta.num_row_groups):
+            row_group = meta.row_group(rg)
+            for ci in range(row_group.num_columns):
+                col = row_group.column(ci)
+                name = col.path_in_schema
+                if "." in name or ts_col not in (None, name):
+                    continue  # top-level primitives only
+                st = col.statistics
+                if (
+                    st is not None
+                    and not st.has_min_max
+                    and st.has_null_count
+                    and st.null_count == col.num_values
+                ):
+                    continue  # all NULL: nothing to bound
+                bounds = None if ts_col and rebased else _exact_bounds(col, bool(ts_col))
+                if bounds is None:
+                    unknown.add(name)
+                    continue
+                prev = stats.get(name)
+                stats[name] = (
+                    bounds
+                    if prev is None
+                    else [min(prev[0], bounds[0]), max(prev[1], bounds[1])]
+                )
+        entries.append(
+            {
+                "path": os.path.relpath(path, root),
+                "rows": meta.num_rows,
+                "stats": {k: v for k, v in stats.items() if k not in unknown},
+            }
+        )
+    return entries
+
+
+def _exact_bounds(col, micros: bool) -> list | None:
+    """``[min, max]`` of one column chunk when its statistics are exact
+    JSON scalars — epoch micros of an instant timestamp when ``micros`` —
+    else None."""
+    st = col.statistics
+    if st is None or not st.has_min_max:
+        return None
+    if micros:
+        lt = json.loads(st.logical_type.to_json())
+        scale = _TS_UNIT_MICROS.get(lt.get("timeUnit"))
+        instant = (lt.get("Type"), lt.get("isAdjustedToUTC")) == ("Timestamp", True)
+        if col.physical_type != "INT64" or not instant or not scale:
+            return None
+        return [st.min_raw * scale, st.max_raw * scale]
+    lo, hi = st.min, st.max
+    if not isinstance(lo, (int, float, str, bool)):
+        return None  # JSON-encodable scalars only
+    # Exactness guard: some parquet writers TRUNCATE long binary/string
+    # statistics, and a truncated max can be a prefix that compares LESS
+    # than the true max — pruning on it would wrongly mark an overlapping
+    # file disjoint (lost updates / incomplete reads). This pyarrow (16.x)
+    # does not expose is_{min,max}_value_exact, so cap instead: parquet-mr
+    # and pyarrow both DROP stats above ~4096B (parquet-mr truncates WITH a
+    # last-byte increment below that, which stays a valid bound), so values
+    # at/above 1024 chars are in nobody's exact-by-construction regime —
+    # record nothing and let pruning conservatively keep the file.
+    if isinstance(lo, str) and (len(lo) >= 1024 or len(hi) >= 1024):
+        return None
+    return [lo, hi]
+
+
 @dataclass
 class SnapshotStore:
     spark: SparkSession
@@ -201,63 +295,16 @@ class SnapshotStore:
         return self._dir_entries(out_dir)
 
     def _dir_entries(self, out_dir: str) -> list[dict]:
-        """Manifest entries (rows + column min/max from the parquet footer —
-        no Spark job) for every parquet file directly under ``out_dir``."""
-        entries = []
-        for name in sorted(os.listdir(out_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            path = os.path.join(out_dir, name)
-            # per-file row count + column min/max from the parquet footer —
-            # no Spark job; the stats are what merge() prunes files on
-            # (Iceberg keeps the same per-file bounds in its manifests)
-            import pyarrow.parquet as pq
-
-            meta = pq.ParquetFile(path).metadata
-            stats: dict[str, list] = {}
-            for rg in range(meta.num_row_groups):
-                row_group = meta.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    col = row_group.column(ci)
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    lo, hi = st.min, st.max
-                    if not isinstance(lo, (int, float, str, bool)):
-                        continue  # JSON-encodable scalars only
-                    # Exactness guard: some parquet writers TRUNCATE long
-                    # binary/string statistics, and a truncated max can be
-                    # a prefix that compares LESS than the true max —
-                    # pruning on it would wrongly mark an overlapping file
-                    # disjoint (lost updates / incomplete reads). This
-                    # pyarrow (16.x) does not expose is_{min,max}_value_
-                    # exact, so cap instead: parquet-mr and pyarrow both
-                    # DROP stats above ~4096B (parquet-mr truncates WITH a
-                    # last-byte increment below that, which stays a valid
-                    # bound), so values at/above 1024 chars are in
-                    # nobody's exact-by-construction regime — record
-                    # nothing and let pruning conservatively keep the file.
-                    if isinstance(lo, str) and (
-                        len(lo) >= 1024 or len(hi) >= 1024
-                    ):
-                        continue
-                    name_ = col.path_in_schema
-                    if "." in name_:
-                        continue  # top-level primitives only
-                    prev = stats.get(name_)
-                    stats[name_] = (
-                        [lo, hi]
-                        if prev is None
-                        else [min(prev[0], lo), max(prev[1], hi)]
-                    )
-            entries.append(
-                {
-                    "path": os.path.relpath(path, self.root),
-                    "rows": meta.num_rows,
-                    "stats": stats,
-                }
-            )
-        return entries
+        """Manifest entries for every parquet file directly under ``out_dir``
+        (see :func:`footer_entries`)."""
+        return footer_entries(
+            self.root,
+            [
+                os.path.join(out_dir, name)
+                for name in sorted(os.listdir(out_dir))
+                if name.endswith(".parquet")
+            ],
+        )
 
     def _commit(
         self,

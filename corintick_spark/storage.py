@@ -10,19 +10,39 @@ corintick's API surface (all †, per SURVEY.md §0 convention):
 
 Spark-first re-expression: one partitioned Parquet dataset per "collection".
 Chunking, per-column compression, and min/max chunk stats are Parquet-native
-(row groups + zstd + stats); the (uid, start, end) B-tree becomes Hive
-partition pruning on ``uid`` plus row-group stat skipping on ``ts``.
+(row groups + zstd + stats); the (uid, start, end) chunk index becomes the
+store's manifest (below) over Hive partitions on ``uid``.
 
 Scale design: data is written ``partitionBy(uid)``, one file per partition
 directory per write, each file sorted by the partition columns then ``ts``,
-so that (a) a single-uid range read prunes to one partition directory and
-then skips row groups by ts stats, and (b) full scans stream in time order
-per uid without a sort. A write's cost is per file, so it shuffles into
+with ``ts`` as ``TIMESTAMP_MICROS`` so every footer carries its min/max:
+(a) a single-uid range read opens only that uid's files whose ts bounds
+overlap the range, and Spark skips row groups inside them on the same
+statistics, and (b) full scans stream in time order per uid without a sort.
+A write's cost is per file, so it shuffles into
 ``spark.sql.shuffle.partitions`` tasks (a fixed count AQE does not coalesce
 into one task) and those write the files in parallel. For very high uid
 cardinality (100 TB, millions of uids) use ``bucket_uids=N`` to hash uids
 into N directories instead of one-dir-per-uid (avoids small-file explosion
 while keeping pruning ~N-fold effective).
+
+Chunk index: every mutation commits ``_manifest.json`` with one atomic
+replace. It holds one entry per data file: its root-relative path, its uid
+(typed by the sidecar, from the plain layout's escaped ``uid=`` directory;
+bucketed files record none), its row count, and its ``ts`` min and max as
+epoch micros, read with pyarrow from the footers of the files the mutation
+added. ``read`` opens only the files the manifest selects and ``list_uids``
+aggregates the entries without opening a file. A store without a manifest
+(written before it existed, or by a plain ``partitionBy`` write) gets one on
+first use; files whose footers carry no ``ts`` statistics (INT96) get exact
+bounds once, from one Spark aggregation over only those files, and
+``compact`` rewrites them as micros. Every committed Spark write into
+``data/`` replaces ``data/_SUCCESS``; a manifest records that marker, so a
+write whose Spark job committed but whose manifest commit never ran (a
+crash between the two, or a write from outside TickStore) is adopted by the
+next open. A Spark job that fails aborts its task output, so its files
+never reach ``data/``; a rewrite that crashes leaves its files in
+``data.<tag>_tmp``, which no read lists.
 
 Schema of record: every writer (``write``, ``upsert``, ``append_stream``)
 records the written columns and types in a ``_schema.json`` sidecar before
@@ -39,9 +59,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from dataclasses import dataclass
 from datetime import datetime
+from urllib.parse import unquote, urlparse
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 from pyspark.sql.types import (
@@ -54,6 +77,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 # (narrow, wide) type pairs Spark's parquet reader widens on read: a column
@@ -85,6 +109,38 @@ def _evolve_schema(prior: StructType, new: StructType) -> StructType:
                 f"of {b.simpleString()} is not a widening the parquet reader applies"
             )
     return StructType(fields + list(incoming.values()))
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips: a leading ``.``, or a leading ``_``
+    that is not a partition directory such as ``_date=...``."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _path_uid(path: str, kind):
+    """The uid of a plain-layout file, from its escaped ``uid=`` directory:
+    None for Spark's null partition, int for an integral uid, else the
+    unescaped text."""
+    value = path.split(os.sep)[1].partition("=")[2]
+    if value == "__HIVE_DEFAULT_PARTITION__":
+        return None
+    value = unquote(value)
+    return int(value) if kind is int else value
+
+
+def _overlaps(entry: dict, lo: int | None, hi: int | None) -> bool:
+    """Whether a manifest entry may hold a ``ts`` in ``[lo, hi]`` (epoch
+    micros, None for an open side). An entry without recorded bounds is
+    kept; one whose ``ts`` is all NULL matches no bounded range."""
+    if (lo is None and hi is None) or "lo" not in entry:
+        return True
+    if entry["lo"] is None:
+        return False
+    return (lo is None or entry["hi"] >= lo) and (hi is None or entry["lo"] <= hi)
+
+
+def _extent(a, b, pick):
+    return b if a is None else a if b is None else pick(a, b)
 
 
 @dataclass
@@ -121,6 +177,7 @@ class TickStore:
                 )
         self._record_schema(df.schema, replace=mode == "overwrite")
         self._write_files(df, self._data_dir(), mode)
+        self._commit_manifest()
         if metadata:
             self.put_metadata(metadata)
             self._log_write_metadata(df, metadata)
@@ -136,7 +193,13 @@ class TickStore:
         one file per directory. Rows are sorted by the partition columns,
         then ``ts`` (or the Morton key of ``zorder_by``): that meets the
         planned write's required ordering, so Spark adds no sort of its own
-        and the time order reaches the files."""
+        and the time order reaches the files.
+
+        Timestamps are written as ``TIMESTAMP_MICROS``, whose footers carry
+        min/max (INT96, Spark's default, carries none). A write option does
+        not reach the parquet writer, so the session conf is set around the
+        write and restored after it — on the frame's own session, which for
+        a streaming micro-batch is the stream's, not the store's."""
         out, part_cols = self._partitioned(df)
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         out = out.repartition(n, *part_cols)
@@ -150,7 +213,17 @@ class TickStore:
             )
         else:
             out = out.sortWithinPartitions(*part_cols, self.ts_col)
-        out.write.mode(mode).partitionBy(*part_cols).parquet(path)
+        conf = out.sparkSession.conf
+        key = "spark.sql.parquet.outputTimestampType"
+        prior = conf.get(key, None)
+        conf.set(key, "TIMESTAMP_MICROS")
+        try:
+            out.write.mode(mode).partitionBy(*part_cols).parquet(path)
+        finally:
+            if prior is None:
+                conf.unset(key)
+            else:
+                conf.set(key, prior)
 
     def _partitioned(self, df: DataFrame) -> tuple[DataFrame, list[str]]:
         """Apply the store's configured partition layout (plain uid, hashed
@@ -182,19 +255,20 @@ class TickStore:
         columns: list[str] | None = None,
         merge_schema: bool = False,
     ) -> DataFrame:
-        """read(uid, start, end, columns): partition pruning on uid, pushed
-        ts range filter (row-group stats do the chunk-level prune), column
-        pruning — each the Catalyst analogue of the reference's index seek,
-        interval filter, and Mongo projection (api.py::Corintick.read †).
-        Range semantics inclusive of both ends, like DataFrame.loc[start:end].
+        """read(uid, start, end, columns): the manifest's file selection on
+        uid and ts bounds, pushed ts range filter (row-group stats skip
+        inside the opened files), column pruning — each the Catalyst
+        analogue of the reference's index seek, interval filter, and Mongo
+        projection (api.py::Corintick.read †). Range semantics inclusive of
+        both ends, like DataFrame.loc[start:end].
 
         The ``_schema.json`` sidecar is the schema of record: every column
         any write recorded comes back with its recorded type (columns absent
-        from older appends read as NULL), with no footer read. On the plain
-        uid layout a read of string or integral uids opens only the
-        requested ``uid=<value>`` directories, so planning runs no Spark job;
-        when none of them exists the result is an empty frame with the same
-        columns.
+        from older appends read as NULL), with no footer read. A read with
+        uids or bounds opens only the files the manifest selects (see
+        :meth:`_scan_paths`), so a point read plans without a Spark job;
+        when no file is selected the result is an empty frame with the same
+        columns. A read with neither lists the data directory.
 
         ``merge_schema=True`` applies only to stores without a sidecar: it
         unions the schemas of every data file instead of inferring from one
@@ -202,6 +276,7 @@ class TickStore:
         column sets (SURVEY §1.1 †). It stays off by default because it
         reads a footer per file.
         """
+        uids = None if uids is None else list(uids)
         schema = self._schema()
         data_dir = self._data_dir()
         if schema is None:
@@ -210,21 +285,24 @@ class TickStore:
                 reader = reader.option("mergeSchema", "true")
             df = reader.parquet(data_dir)
         else:
-            dirs = self._uid_dirs(uids, schema)
-            if dirs is None:
+            paths = self._scan_paths(schema, uids, start, end)
+            if paths is None:
                 df = self.spark.read.schema(schema).parquet(data_dir)
-            elif dirs:
+            elif paths:
                 df = (
                     self.spark.read.schema(schema)
                     .option("basePath", data_dir)
-                    .parquet(*dirs)
+                    .parquet(*paths)
                 )
             else:
-                # the scan's columns: data columns, then uid, all nullable;
-                # limit(0) lets the optimizer see the frame is empty, so a
-                # collect runs no job either
-                order = [f for f in schema.fields if f.name != self.uid_col]
-                order.append(schema[self.uid_col])
+                # the scan's columns: data columns, then a partition uid,
+                # all nullable; limit(0) lets the optimizer see the frame is
+                # empty, so a collect runs no job either
+                order = [
+                    f for f in schema.fields if self.bucket_uids or f.name != self.uid_col
+                ]
+                if not self.bucket_uids:
+                    order.append(schema[self.uid_col])
                 df = self.spark.createDataFrame(
                     [], StructType([StructField(f.name, f.dataType) for f in order])
                 ).limit(0)
@@ -244,7 +322,7 @@ class TickStore:
                 df = df.filter(F.col("_date") <= F.lit(end).cast("date"))
             df = df.drop("_date")
         if uids is not None:
-            df = df.filter(F.col(self.uid_col).isin(list(uids)))
+            df = df.filter(F.col(self.uid_col).isin(uids))
         if start is not None:
             df = df.filter(F.col(self.ts_col) >= F.lit(start).cast("timestamp"))
         if end is not None:
@@ -289,6 +367,7 @@ class TickStore:
                 return
             self._record_schema(batch_df.schema)
             self._write_files(batch_df, self._data_dir(), "append")
+            self._commit_manifest()
 
         writer = (
             stream_df.writeStream.foreachBatch(_write_batch)
@@ -308,12 +387,49 @@ class TickStore:
 
     # -- catalog: api.py::Corintick.list_uids † -----------------------------
     def list_uids(self) -> DataFrame:
-        """Per-uid doc-count/first/last — the $group pipeline, distributed."""
-        df = self.read()
-        return df.groupBy(self.uid_col).agg(
-            F.count("*").alias("n_rows"),
-            F.min(self.ts_col).alias("start"),
-            F.max(self.ts_col).alias("end"),
+        """Per-uid doc-count/first/last — corintick's $group over chunk
+        metadata. On the plain and date layouts it sums the manifest's
+        per-file rows and takes its ts bounds per uid, on the driver, into
+        a local relation: no file is opened, and collecting it runs no
+        Spark job. Bucketed stores, whose files mix uids, and stores the
+        manifest cannot type (no sidecar, a ts that is not a timestamp, a
+        uid neither string nor integral) run the $group over the ticks."""
+        schema = self._schema()
+        kind = self._uid_kind(schema)
+        if not (kind and self._timed(schema)):
+            return self.read().groupBy(self.uid_col).agg(
+                F.count("*").alias("n_rows"),
+                F.min(self.ts_col).alias("start"),
+                F.max(self.ts_col).alias("end"),
+            )
+        import pyarrow as pa
+
+        per_uid: dict = {}
+        for e in self._manifest():
+            if e["rows"]:
+                n, lo, hi = per_uid.get(e["uid"], (0, None, None))
+                per_uid[e["uid"]] = (
+                    n + e["rows"], _extent(lo, e["lo"], min), _extent(hi, e["hi"], max)
+                )
+        ts = pa.timestamp("us", tz="UTC")
+        cols = list(zip(*[(u, *v) for u, v in per_uid.items()])) or [()] * 4
+        table = pa.table(
+            [
+                pa.array(cols[0], pa.string() if kind is str else pa.int64()),
+                pa.array(cols[1], pa.int64()),
+                pa.array(cols[2], ts),
+                pa.array(cols[3], ts),
+            ],
+            names=[self.uid_col, "n_rows", "start", "end"],
+        )
+        return self.spark.createDataFrame(
+            table,
+            StructType([
+                StructField(self.uid_col, schema[self.uid_col].dataType),
+                StructField("n_rows", LongType(), False),
+                StructField("start", TimestampType()),
+                StructField("end", TimestampType()),
+            ]),
         )
 
     # -- overlap detection: api.py::Corintick.write † validation ------------
@@ -423,8 +539,7 @@ class TickStore:
         """
         # merge_schema: heterogeneous appends must not lose columns in the
         # rewrite (the writer keeps the store's configured layout)
-        self._swap_in(self.read(merge_schema=True), "compact", zorder_by)
-        return self._count_files()
+        return len(self._swap_in(self.read(merge_schema=True), "compact", zorder_by))
 
     def upsert(self, df: DataFrame, keys: list[str] | None = None) -> None:
         """MERGE semantics on the store: rows of ``df`` REPLACE existing
@@ -483,6 +598,7 @@ class TickStore:
             if not os.path.exists(part):
                 return False
             shutil.rmtree(part)
+            self._commit_manifest()
             return True
         existing = self.read(merge_schema=True)
         if existing.filter(F.col(self.uid_col) == F.lit(uid)).limit(1).count() == 0:
@@ -524,38 +640,222 @@ class TickStore:
                     if part_date < cutoff:
                         shutil.rmtree(os.path.join(root, d))
                         removed += 1
+            self._commit_manifest()
             return removed
-        before_files = self._count_files()
-        self._swap_in(
+        before_files = len(self._data_files())
+        kept = self._swap_in(
             self.read(merge_schema=True).filter(
                 F.col(self.ts_col).cast("date") >= F.lit(cutoff.isoformat()).cast("date")
             ),
             "vacuum",
         )
-        return max(0, before_files - self._count_files())
+        return max(0, before_files - len(kept))
 
     # -- helpers -------------------------------------------------------------
     def _swap_in(
         self, df: DataFrame, tag: str, zorder_by: list[str] | None = None
-    ) -> None:
+    ) -> list[dict]:
         """Replace the store's data with ``df``: write it to the sibling
         ``data.<tag>_tmp``, rename ``data`` to ``data.<tag>_old`` and the new
-        files into place, then remove the old ones. Local-FS renames; on a
-        real cluster the same pattern runs through the Hadoop FileSystem API
-        (or table-format compaction)."""
+        files into place, remove the old ones and commit the manifest,
+        whose entries it returns. Local-FS renames; on a real cluster the
+        same pattern runs through the Hadoop FileSystem API (or table-format
+        compaction)."""
         data_dir = self._data_dir()
         tmp_dir, old_dir = f"{data_dir}.{tag}_tmp", f"{data_dir}.{tag}_old"
         self._write_files(df, tmp_dir, "overwrite", zorder_by)
         os.rename(data_dir, old_dir)
         os.rename(tmp_dir, data_dir)
         shutil.rmtree(old_dir)
+        return self._commit_manifest()
 
-    def _count_files(self) -> int:
-        return sum(
-            1
-            for _, _, files in os.walk(self._data_dir())
-            for f in files
-            if f.endswith(".parquet")
+    # -- chunk index ---------------------------------------------------------
+    def _manifest_path(self) -> str:
+        return os.path.join(self.root, "_manifest.json")
+
+    def _load_manifest(self) -> dict | None:
+        """The committed manifest; None when there is none or it does not
+        parse (it holds only what the footers hold, so it is rebuilt)."""
+        try:
+            with open(self._manifest_path()) as fh:
+                return json.load(fh)
+        except (FileNotFoundError, ValueError):
+            return None
+
+    def _manifest(self) -> list[dict]:
+        """The data files' manifest entries, rebuilt first when there is no
+        manifest or ``data/_SUCCESS`` changed since it was committed (a
+        Spark write into ``data/`` that it does not cover)."""
+        m = self._load_manifest()
+        if m is None or m["success"] != self._success_stamp():
+            return self._commit_manifest()
+        return m["files"]
+
+    def _commit_manifest(self) -> list[dict]:
+        """Bring the manifest in line with the data files on disk and
+        commit it with one atomic replace; returns its entries. Entries of
+        files it already lists are kept (Spark names every file it writes
+        by a fresh job id, so a path is never rewritten); added files get
+        rows and ts bounds from their footers; files without usable ts
+        statistics get exact bounds from one Spark aggregation over only
+        those files. Uids are re-typed from the current sidecar."""
+        # imported here: without cached bytecode, compiling snapshots.py
+        # would add ~10 ms to every session's set-up
+        from corintick_spark.snapshots import footer_entries
+
+        stamp = self._success_stamp()
+        schema = self._schema()
+        known = {e["path"]: e for e in (self._load_manifest() or {"files": []})["files"]}
+        paths = self._data_files()
+        fresh = {
+            e["path"]: e
+            for e in footer_entries(
+                self.root,
+                [os.path.join(self.root, p) for p in paths if p not in known],
+                self.ts_col,
+            )
+        }
+        for e in fresh.values():
+            bounds = e.pop("stats").get(self.ts_col)
+            if bounds is not None:
+                e["lo"], e["hi"] = bounds
+        entries = [known.get(p) or fresh[p] for p in paths]
+        if self._timed(schema):
+            self._scan_bounds(schema, [e for e in entries if "lo" not in e])
+        kind = self._uid_kind(schema)
+        for e in entries:
+            e.pop("uid", None)
+            if not self.bucket_uids:
+                e["uid"] = _path_uid(e["path"], kind)
+        tmp = f"{self._manifest_path()}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as fh:
+            json.dump({"success": stamp, "files": entries}, fh)
+        os.replace(tmp, self._manifest_path())
+        return entries
+
+    def _scan_bounds(self, schema: StructType, entries: list[dict]) -> None:
+        """Set the exact ts bounds (epoch micros, None when every ts is
+        NULL) of ``entries`` from one Spark aggregation over their files."""
+        if not entries:
+            return
+        micros = F.unix_micros(F.col(self.ts_col))
+        rows = (
+            self.spark.read.schema(schema)
+            .option("basePath", self._data_dir())
+            .parquet(*[os.path.join(self.root, e["path"]) for e in entries])
+            .groupBy(F.col("_metadata.file_path").alias("f"))
+            .agg(F.min(micros).alias("lo"), F.max(micros).alias("hi"))
+            .collect()
+        )
+        root = os.path.abspath(self.root)
+        got = {
+            os.path.relpath(unquote(urlparse(r["f"]).path), root): (r["lo"], r["hi"])
+            for r in rows
+        }
+        for e in entries:
+            e["lo"], e["hi"] = got.get(e["path"], (None, None))
+
+    def _data_files(self) -> list[str]:
+        """Root-relative paths of the ``.parquet`` files a read of ``data/``
+        scans, skipping the names Spark's file index hides."""
+        out = []
+        for d, dirs, files in os.walk(self._data_dir()):
+            dirs[:] = [x for x in dirs if not _hidden(x)]
+            out += [
+                os.path.relpath(os.path.join(d, f), self.root)
+                for f in files
+                if f.endswith(".parquet") and not _hidden(f)
+            ]
+        return sorted(out)
+
+    def _success_stamp(self) -> list[int] | None:
+        """(inode, mtime) of ``data/_SUCCESS``, which every committed Spark
+        write into ``data/`` replaces."""
+        try:
+            st = os.stat(os.path.join(self._data_dir(), "_SUCCESS"))
+        except FileNotFoundError:
+            return None
+        return [st.st_ino, st.st_mtime_ns]
+
+    def _scan_paths(
+        self, schema: StructType, uids: list | None, start, end
+    ) -> list[str] | None:
+        """The data files a read opens: the manifest's files of the
+        requested uids whose ts bounds overlap ``[start, end]``. More paths
+        than Spark's parallel-listing threshold
+        (``spark.sql.sources.parallelPartitionDiscovery.threshold``) would
+        start a listing job, so past it the top-level partition directories
+        holding those files are passed instead (a read spanning more such
+        directories than the threshold still pays that job). None when the
+        read lists the whole data directory: no uids and no bounds, or
+        nothing the manifest can select on — uids that are not Python
+        values of the recorded uid type (the ``isin`` filter would coerce
+        them) or a bucketed layout, and no bounds on a timestamp ``ts``."""
+        kind = self._uid_kind(schema)
+        by_uid = (
+            kind is not None
+            and uids is not None
+            and all(isinstance(u, kind) and not isinstance(u, bool) for u in uids)
+        )
+        timed = self._timed(schema)
+        lo = self._bound_micros(start) if timed and start is not None else None
+        hi = self._bound_micros(end) if timed and end is not None else None
+        if not by_uid and lo is None and hi is None:
+            return None
+        wanted = set(uids) if by_uid else None
+        files = [
+            e["path"]
+            for e in self._manifest()
+            if (wanted is None or e["uid"] in wanted) and _overlaps(e, lo, hi)
+        ]
+        threshold = self.spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        )
+        if len(files) > int(threshold):
+            files = sorted({os.path.join(*p.split(os.sep)[:2]) for p in files})
+        return [os.path.join(self.root, p) for p in files]
+
+    def _bound_micros(self, value) -> int | None:
+        """The epoch micros the read's ``F.lit(value).cast("timestamp")``
+        filter compares with, computed on the driver by the conversions
+        that filter uses: a string is parsed in the session time zone, a
+        ``datetime`` goes through PySpark's literal converter (a naive one
+        in the Python process's local time). None for any other value or
+        one that does not convert, which keeps every file on that side."""
+        jvm = self.spark._jvm
+        utils = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils
+        try:
+            if isinstance(value, str):
+                zone = utils.getZoneId(self.spark.conf.get("spark.sql.session.timeZone"))
+                parsed = utils.stringToTimestamp(
+                    jvm.org.apache.spark.unsafe.types.UTF8String.fromString(value), zone
+                )
+                return parsed.get() if parsed.isDefined() else None
+            if isinstance(value, datetime):
+                return utils.fromJavaTimestamp(value)
+        except Py4JError:  # e.g. a naive datetime becomes TIMESTAMP_NTZ
+            return None
+        return None
+
+    def _uid_kind(self, schema: StructType | None):
+        """The Python type of a plain-layout uid (str or int) by the
+        recorded uid type; None for a bucketed layout or any other type."""
+        if schema is None or self.bucket_uids or self.uid_col not in schema.fieldNames():
+            return None
+        dtype = schema[self.uid_col].dataType
+        if isinstance(dtype, StringType):
+            return str
+        if isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
+            return int
+        return None
+
+    def _timed(self, schema: StructType | None) -> bool:
+        """Whether the recorded ``ts`` is a timestamp, the type the
+        manifest's epoch-micros bounds describe."""
+        return (
+            schema is not None
+            and self.ts_col in schema.fieldNames()
+            and isinstance(schema[self.ts_col].dataType, TimestampType)
         )
 
     def _data_dir(self) -> str:
@@ -601,26 +901,6 @@ class TickStore:
         os.makedirs(self.root, exist_ok=True)
         with open(self._schema_path(), "w") as fh:
             fh.write(schema.json())
-
-    def _uid_dirs(self, uids: list | None, schema: StructType) -> list[str] | None:
-        """The existing ``uid=<value>`` directories of the requested uids, or
-        None when the read must list the whole store: no uid list, a
-        bucketed layout, or uids that are not Python values of the recorded
-        uid type (str for a string uid, int for an integral one) — the
-        ``isin`` filter would coerce those, so only a full listing is safe."""
-        if uids is None or self.bucket_uids:
-            return None
-        dtype = schema[self.uid_col].dataType
-        if isinstance(dtype, StringType):
-            kind = str
-        elif isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
-            kind = int
-        else:
-            return None
-        if not all(isinstance(u, kind) and not isinstance(u, bool) for u in uids):
-            return None
-        dirs = [self._uid_dir(u) for u in dict.fromkeys(uids)]
-        return [d for d in dirs if os.path.isdir(d)]
 
     def _uid_dir(self, uid) -> str:
         """The plain layout's ``uid=<value>`` directory, escaped the way

@@ -66,6 +66,12 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_append_split_equals_sequential_appends",
         "test_append_split_empty_value_is_plain_append",
         "test_append_split_enforces_constraints",
+        # footer bounds: _dir_entries now reads them through footer_entries,
+        # shared with the TickStore manifest
+        "test_merge_upserts_and_prunes_disjoint_files",
+        "test_read_where_prunes_and_is_exact",
+        "test_read_where_empty_range_and_no_stats",
+        "test_stage_files_skip_giant_string_stats",
     },
     "test_ckpt_release.py": {
         # the scope contracts and the 20-run sf0.001 long session; the
