@@ -10,6 +10,11 @@ specific → rows-only per the driver contract).
 
 from __future__ import annotations
 
+import functools
+import struct
+import zlib
+
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
@@ -20,6 +25,43 @@ from corintick_spark.operators.spread import spread_input
 from corintick_spark.operators import similarity as S
 from corintick_spark.operators import text as T
 from corintick_spark.registry import query
+
+
+def _per_doc(d, fn, schema: str):
+    """``fn(doc_id)`` rows for every doc_id of ``d`` (a tuple, or a list of
+    tuples for 0..n rows), mapped through the same per-payload helper as
+    the multimodal operators."""
+    return M._map_payloads(d, fn, schema, "doc_id", "doc_id")
+
+
+def _planted(d, payload):
+    """(doc_id, payload) for every doc_id of ``d``, the bytes coming from
+    ``payload(doc_id)``: a planted corpus is only its per-document bytes."""
+    return _per_doc(d, lambda i: (payload(i),), "doc_id long, payload binary")
+
+
+def _stereo_rows(samples: "list[int]") -> "list[tuple[int, int, int]]":
+    """(channel, frame, sample) rows of an interleaved stereo stream."""
+    return [
+        (ch, fi, samples[2 * fi + ch])
+        for fi in range(len(samples) // 2)
+        for ch in range(2)
+    ]
+
+
+def _wav(tag, channels, rate, byte_rate, block_align, bits, data) -> bytes:
+    """RIFF/WAVE bytes: one ``fmt `` chunk with the given fields, then one
+    ``data`` chunk, padded to an even length."""
+    fmt = struct.pack(
+        "<HHIIHH", tag, channels, rate, byte_rate, block_align, bits
+    )
+    body = (
+        b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+        + (b"\x00" if len(data) % 2 else b"")
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 # T-B48 — exact dedup by content hash.
@@ -689,30 +731,17 @@ def multimodal_decode(spark, sf_dir):
 def multimodal_decode_png(spark, sf_dir):
     """Real PNG header decode over synthesized payloads (width/height are a
     known function of doc_id; operators/multimodal.py::parse_image_header)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
+    def payload(i: int) -> bytes:
+        ihdr = struct.pack(">II5B", i % 640 + 1, i % 480 + 1, 8, 2, 0, 0, 0)
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + struct.pack(">I", 13) + b"IHDR" + ihdr
+            + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr))
+        )
 
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                ihdr = struct.pack(">II5B", i % 640 + 1, i % 480 + 1, 8, 2, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + struct.pack(">I", 13) + b"IHDR" + ihdr
-                    + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr))
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_meta(with_png, fake=False)
+    return M.decode_image_meta(_planted(d, payload), fake=False)
 
 
 # The REAL pixel decoder (stdlib zlib inflate + all-five-filter scanline
@@ -745,28 +774,16 @@ def multimodal_decode_png(spark, sf_dir):
 def multimodal_decode_px(spark, sf_dir):
     """Real PNG PIXEL decode over synthesized payloads: per-doc pixel sum/
     mean from zlib-inflated, un-filtered scanlines (all 5 PNG filters)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h = int(i) % 5 + 2, int(i) % 3 + 2
-                px = bytes((int(i) * 7 + k) % 256 for k in range(w * h * 3))
-                payloads.append(
-                    M.encode_png(
-                        w, h, px, 3, filter_for_row=lambda y, i=int(i): (i + y) % 5
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 5 + 2, i % 3 + 2
+        px = bytes((i * 7 + k) % 256 for k in range(w * h * 3))
+        return M.encode_png(
+            w, h, px, 3, filter_for_row=lambda y: (i + y) % 5
+        )
 
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_png)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # REAL baseline JPEG pixel decode (operators/multimodal.py::
@@ -812,34 +829,21 @@ def multimodal_decode_jpg(spark, sf_dir):
     """Real baseline-JPEG pixel decode over synthesized constant-block
     payloads: Huffman + DC prediction + RST + IDCT + YCbCr→RGB, through
     the same format-dispatched decode_image_pixels path as PNG/BMP/GIF."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = (i % 3 + 1) * 8, (i % 2 + 1) * 8
-                bw = w // 8
-                px = bytearray()
-                for p in range(w * h):
-                    x, y = p % w, p // w
-                    v = (i * 13 + ((y // 8) * bw + x // 8) * 17) % 256
-                    px += bytes((v, v, v))
-                payloads.append(
-                    M.encode_jpeg(
-                        w, h, bytes(px), channels=3, restart_interval=i % 3
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = (i % 3 + 1) * 8, (i % 2 + 1) * 8
+        bw = w // 8
+        px = bytearray()
+        for p in range(w * h):
+            x, y = p % w, p // w
+            v = (i * 13 + ((y // 8) * bw + x // 8) * 17) % 256
+            px += bytes((v, v, v))
+        return M.encode_jpeg(
+            w, h, bytes(px), channels=3, restart_interval=i % 3
+        )
 
-    with_jpg = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_jpg)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # PROGRESSIVE JPEG pixel decode (operators/multimodal.py::
@@ -886,39 +890,26 @@ def multimodal_decode_jpg_prog(spark, sf_dir):
     payloads: DC first + successive-approximation refinement + EOB-run AC
     scans accumulated across the progression, then one IDCT — through the
     same format-dispatched decode_image_pixels path as baseline JPEG."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = (i % 3 + 1) * 8, (i % 2 + 1) * 8
-                bw = w // 8
-                px = bytearray()
-                for p in range(w * h):
-                    x, y = p % w, p // w
-                    v = (i * 13 + ((y // 8) * bw + x // 8) * 17) % 256
-                    px += bytes((v, v, v))
-                payloads.append(
-                    M.encode_jpeg_progressive(
-                        w, h, bytes(px), channels=3,
-                        dc_al=i % 3, ac_al=i % 2,
-                        # round 8: restart markers inside every scan on
-                        # 2 of 5 docs (interval rotates 1-2 MCUs) — the
-                        # decoder realigns + resets DC/EOB state at each
-                        restart_interval=(i % 5) if i % 5 < 3 else 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = (i % 3 + 1) * 8, (i % 2 + 1) * 8
+        bw = w // 8
+        px = bytearray()
+        for p in range(w * h):
+            x, y = p % w, p // w
+            v = (i * 13 + ((y // 8) * bw + x // 8) * 17) % 256
+            px += bytes((v, v, v))
+        return M.encode_jpeg_progressive(
+            w, h, bytes(px), channels=3,
+            dc_al=i % 3, ac_al=i % 2,
+            # restart markers inside every scan on 2 of 5 docs (interval
+            # rotates 1-2 MCUs) — the decoder realigns + resets DC/EOB
+            # state at each
+            restart_interval=(i % 5) if i % 5 < 3 else 0,
+        )
 
-    with_jpg = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_jpg)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # CHROMA-SUBSAMPLED (4:2:0) baseline JPEG decode (round 7): the decoder's
@@ -963,36 +954,23 @@ def multimodal_decode_jpg_420(spark, sf_dir):
     constant-tile payloads: MCU-interleaved Huffman decode, box/nearest
     chroma round trip, per-MCU restarts — through the format-dispatched
     decode_image_pixels path."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = (i % 2 + 1) * 16, 16
-                tw = w // 16
-                px = bytearray()
-                for p in range(w * h):
-                    x, y = p % w, p // w
-                    v = (i * 53 + ((y // 16) * tw + x // 16) * 29) % 256
-                    px += bytes((v, v, v))
-                payloads.append(
-                    M.encode_jpeg(
-                        w, h, bytes(px), channels=3,
-                        sampling=[(2, 2), (1, 1), (1, 1)],
-                        restart_interval=i % 2,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = (i % 2 + 1) * 16, 16
+        tw = w // 16
+        px = bytearray()
+        for p in range(w * h):
+            x, y = p % w, p // w
+            v = (i * 53 + ((y // 16) * tw + x // 16) * 29) % 256
+            px += bytes((v, v, v))
+        return M.encode_jpeg(
+            w, h, bytes(px), channels=3,
+            sampling=[(2, 2), (1, 1), (1, 1)],
+            restart_interval=i % 2,
+        )
 
-    with_jpg = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_jpg)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # REAL BMP pixel decode (operators/multimodal.py::decode_bmp_pixels):
@@ -1028,24 +1006,14 @@ def multimodal_decode_bmp(spark, sf_dir):
     """Real BMP pixel decode over synthesized bottom-up 24-bit payloads:
     per-doc pixel sum / position-weighted sum / mean through the same
     format-dispatched decode_image_pixels path as PNG."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h = int(i) % 6 + 2, int(i) % 4 + 2
-                px = bytes((int(i) * 11 + k * 5) % 256 for k in range(w * h * 3))
-                payloads.append(M.encode_bmp(w, h, px, top_down=False))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 2, i % 4 + 2
+        px = bytes((i * 11 + k * 5) % 256 for k in range(w * h * 3))
+        return M.encode_bmp(w, h, px, top_down=False)
 
-    with_bmp = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_bmp)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # 32-bit BMP decode (round 7 — BGRA, both BI_RGB and BI_BITFIELDS with
@@ -1078,30 +1046,17 @@ def multimodal_decode_bmp(spark, sf_dir):
 def multimodal_decode_bmp32(spark, sf_dir):
     """32-bit BGRA BMP decode (BI_RGB / standard-mask BI_BITFIELDS,
     bottom-up and top-down) through decode_image_pixels."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 2, i % 4 + 2
-                px = bytes((i * 11 + k * 5) % 256 for k in range(w * h * 4))
-                payloads.append(
-                    M.encode_bmp32(
-                        w, h, px, top_down=(i % 3 == 0),
-                        bitfields=(i % 2 == 0),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 2, i % 4 + 2
+        px = bytes((i * 11 + k * 5) % 256 for k in range(w * h * 4))
+        return M.encode_bmp32(
+            w, h, px, top_down=(i % 3 == 0),
+            bitfields=(i % 2 == 0),
+        )
 
-    with_bmp = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_bmp)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # RLE8 BMP decode (round 7): palette index of pixel p is
@@ -1137,33 +1092,20 @@ def multimodal_decode_bmp32(spark, sf_dir):
 def multimodal_decode_bmp_rle8(spark, sf_dir):
     """RLE8 palette BMP decode (encoded runs + absolute-mode rows,
     end-of-line/bitmap escapes) through decode_image_pixels."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
     palette = bytes(
         (j * 19 + c * 19) % 256 for j in range(16) for c in range(3)
     )
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 5 + 4, i % 3 + 2
-                idx = bytes((i * 7 + p // 3) % 16 for p in range(w * h))
-                absolute = (
-                    set(range(0, h, 2)) if i % 2 == 0 else None
-                )
-                payloads.append(
-                    M.encode_bmp_rle8(w, h, idx, palette, absolute_rows=absolute)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 5 + 4, i % 3 + 2
+        idx = bytes((i * 7 + p // 3) % 16 for p in range(w * h))
+        absolute = (
+            set(range(0, h, 2)) if i % 2 == 0 else None
+        )
+        return M.encode_bmp_rle8(w, h, idx, palette, absolute_rows=absolute)
 
-    with_bmp = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_bmp)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # REAL GIF pixel decode (operators/multimodal.py::decode_gif_pixels):
@@ -1200,25 +1142,15 @@ def multimodal_decode_gif(spark, sf_dir):
     """Real GIF LZW pixel decode over synthesized payloads: per-doc pixel
     sum / position-weighted sum / mean through the format-dispatched
     decode_image_pixels path (PNG/BMP/GIF)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
     palette = bytes(j * 30 + c for j in range(8) for c in range(3))
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h = int(i) % 5 + 3, int(i) % 3 + 2
-                idx = [(int(i) * 3 + m) % 8 for m in range(w * h)]
-                payloads.append(M.encode_gif(w, h, idx, palette))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 5 + 3, i % 3 + 2
+        idx = [(i * 3 + m) % 8 for m in range(w * h)]
+        return M.encode_gif(w, h, idx, palette)
 
-    with_gif = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_gif)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # INTERLACED GIF decode (round 7 — operators/multimodal.py::
@@ -1253,25 +1185,15 @@ def multimodal_decode_gif(spark, sf_dir):
 def multimodal_decode_gif_interlaced(spark, sf_dir):
     """Interlaced-GIF pixel decode: 4-pass row reordering on top of the
     LZW machinery, adjudicated against the raster-order symbolic oracle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
     palette = bytes(j * 30 + c for j in range(8) for c in range(3))
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h = int(i) % 5 + 3, int(i) % 3 + 2
-                idx = [(int(i) * 3 + m) % 8 for m in range(w * h)]
-                payloads.append(M.encode_gif(w, h, idx, palette, interlace=True))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 5 + 3, i % 3 + 2
+        idx = [(i * 3 + m) % 8 for m in range(w * h)]
+        return M.encode_gif(w, h, idx, palette, interlace=True)
 
-    with_gif = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_gif)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # PALETTE PNG decode (round 7 — color type 3): indices filter as a
@@ -1314,33 +1236,20 @@ def multimodal_decode_gif_interlaced(spark, sf_dir):
 def multimodal_decode_png_palette(spark, sf_dir):
     """Palette-PNG pixel decode (color type 3, all five filters rotating
     per scanline) through the format-dispatched decode_image_pixels path."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
     palette = bytes(
         v for j in range(16)
         for v in ((j * 17) % 256, (j * 31) % 256, (j * 53) % 256)
     )
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 4, i % 4 + 3
-                idx = bytes((i * 7 + p * 3) % 16 for p in range(w * h))
-                payloads.append(
-                    M.encode_png_palette(
-                        w, h, idx, palette, filter_for_row=lambda y: y % 5
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 4, i % 4 + 3
+        idx = bytes((i * 7 + p * 3) % 16 for p in range(w * h))
+        return M.encode_png_palette(
+            w, h, idx, palette, filter_for_row=lambda y: y % 5
+        )
 
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_png)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # REAL WAV PCM sample decode (operators/multimodal.py::decode_wav_pcm) —
@@ -1380,41 +1289,21 @@ def multimodal_decode_pcm(spark, sf_dir):
     """Real WAV PCM sample decode over synthesized 16-bit payloads: per-doc
     sample sum/mean, peak amplitude, and RMS (the loudness/clipping screen
     of an audio-curation pass) via decode_audio_samples."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
+    rates = [8000, 16000, 32000, 40000]
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def payload(i: int) -> bytes:
+        rate, channels = rates[i % 4], i % 2 + 1
+        n = (i % 50 + 1) * channels
+        data = struct.pack(
+            f"<{n}h",
+            *((i * 31 + k * 7) % 65536 - 32768 for k in range(n)),
+        )
+        return _wav(
+            1, channels, rate, rate * 2 * channels, 2 * channels, 16, data
+        )
 
-        rates = [8000, 16000, 32000, 40000]
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                rate, channels = rates[i % 4], i % 2 + 1
-                n = (i % 50 + 1) * channels
-                data = struct.pack(
-                    f"<{n}h",
-                    *((i * 31 + k * 7) % 65536 - 32768 for k in range(n)),
-                )
-                fmt = struct.pack(
-                    "<HHIIHH", 1, channels, rate, rate * 2 * channels,
-                    2 * channels, 16,
-                )
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_wav = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_audio_samples(with_wav)
+    return M.decode_audio_samples(_planted(d, payload))
 
 
 # 24-bit PCM + IEEE float32 WAV decode (round 7 — the two studio/DSP
@@ -1473,53 +1362,24 @@ def multimodal_decode_pcm24f(spark, sf_dir):
     """24-bit PCM (even docs) and IEEE float32 (odd docs) WAV decode:
     same loudness-screen stats as multimodal_decode_pcm, through
     decode_audio_samples."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def payload(i: int) -> bytes:
+        rate, channels = 16000, i % 2 + 1
+        n = (i % 40 + 1) * channels
+        if i % 2 == 0:  # 24-bit PCM
+            vals = [(i * 31 + k * 7919) % (1 << 24) - (1 << 23) for k in range(n)]
+            data = b"".join((v & 0xFFFFFF).to_bytes(3, "little") for v in vals)
+            return _wav(
+                1, channels, rate, rate * 3 * channels, 3 * channels, 24, data
+            )
+        xs = [((i * 13 + k * 37) % 2001 - 1000) / 1000.0 for k in range(n)]
+        return _wav(  # IEEE float32
+            3, channels, rate, rate * 4 * channels, 4 * channels, 32,
+            struct.pack(f"<{n}f", *xs),
+        )
 
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                rate, channels = 16000, i % 2 + 1
-                n = (i % 40 + 1) * channels
-                if i % 2 == 0:  # 24-bit PCM
-                    data = bytearray()
-                    for k in range(n):
-                        v = (i * 31 + k * 7919) % (1 << 24) - (1 << 23)
-                        data += int(v & 0xFFFFFF).to_bytes(3, "little")
-                    data = bytes(data)
-                    fmt = struct.pack(
-                        "<HHIIHH", 1, channels, rate,
-                        rate * 3 * channels, 3 * channels, 24,
-                    )
-                else:  # IEEE float32
-                    xs = [
-                        ((i * 13 + k * 37) % 2001 - 1000) / 1000.0
-                        for k in range(n)
-                    ]
-                    data = struct.pack(f"<{n}f", *xs)
-                    fmt = struct.pack(
-                        "<HHIIHH", 3, channels, rate,
-                        rate * 4 * channels, 4 * channels, 32,
-                    )
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                    + (b"\x00" if len(data) % 2 else b"")
-                )
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_wav = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_audio_samples(with_wav)
+    return M.decode_audio_samples(_planted(d, payload))
 
 
 # Embedding-cosine near-dup (north_star list) — blocked by label (IVF-style:
@@ -2524,38 +2384,18 @@ def shuffle_shards(spark, sf_dir):
 def multimodal_decode_wav(spark, sf_dir):
     """Real WAV header decode over synthesized PCM payloads (rate/channels/
     frames are known functions of doc_id)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
+    rates = [8000, 16000, 32000, 40000]
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def payload(i: int) -> bytes:
+        rate = rates[i % 4]
+        channels = i % 2 + 1
+        frames = i % 100 + 1
+        block = 2 * channels  # 16-bit PCM
+        data = b"\x00" * (frames * block)
+        return _wav(1, channels, rate, rate * block, block, 16, data)
 
-        rates = [8000, 16000, 32000, 40000]
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                rate = rates[i % 4]
-                channels = i % 2 + 1
-                frames = i % 100 + 1
-                block = 2 * channels  # 16-bit PCM
-                data = b"\x00" * (frames * block)
-                fmt = struct.pack(
-                    "<HHIIHH", 1, channels, rate, rate * block, block, 16
-                )
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_wav = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_audio_meta(with_wav)
+    return M.decode_audio_meta(_planted(d, payload))
 
 
 # IVF + PQ composed (rows-only — both stages are iterative-float trained).
@@ -2693,30 +2533,18 @@ def text_perplexity(spark, sf_dir):
 def multimodal_frames(spark, sf_dir):
     """Every-2nd-frame sample over synthesized FRMS containers
     (n_frames = doc_id%7+2, frame_bytes = 64+doc_id%32)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def payload(i: int) -> bytes:
+        n = i % 7 + 2
+        fb = 64 + i % 32
+        return (
+            b"FRMS"
+            + struct.pack("<IHHI", n, 320, 240, fb)
+            + b"\x00" * (n * fb)
+        )
 
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                n = i % 7 + 2
-                fb = 64 + i % 32
-                payloads.append(
-                    b"FRMS"
-                    + struct.pack("<IHHI", n, 320, 240, fb)
-                    + b"\x00" * (n * fb)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_frms = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.sample_container_frames(with_frms, every_n=2)
+    return M.sample_container_frames(_planted(d, payload), every_n=2)
 
 
 # The GRAND composition — a full pretraining-data pipeline as ONE
@@ -3116,28 +2944,16 @@ def text_bm25(spark, sf_dir):
 )
 def multimodal_resize(spark, sf_dir):
     """Real nearest-neighbor 4x4 resize of decoded PNG pixels."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h = int(i) % 5 + 2, int(i) % 3 + 2
-                px = bytes((int(i) * 7 + k) % 256 for k in range(w * h * 3))
-                payloads.append(
-                    M.encode_png(
-                        w, h, px, 3, filter_for_row=lambda y, i=int(i): (i + y) % 5
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 5 + 2, i % 3 + 2
+        px = bytes((i * 7 + k) % 256 for k in range(w * h * 3))
+        return M.encode_png(
+            w, h, px, 3, filter_for_row=lambda y: (i + y) % 5
+        )
 
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.resize_images(with_png, out_w=4, out_h=4)
+    return M.resize_images(_planted(d, payload), out_w=4, out_h=4)
 
 
 # Exact duplicated-substring detection (Lee et al. 2022's training-data
@@ -3310,37 +3126,15 @@ def dedup_substring_auto(spark, sf_dir):
 def multimodal_decode_g711(spark, sf_dir):
     """Real G.711 mu-law/A-law expansion over synthesized telephony WAVs
     (format tags 7/6), per-doc loudness features via decode_audio_samples."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def payload(i: int) -> bytes:
+        n = i % 40 + 1
+        tag = 7 if i % 2 == 1 else 6  # mu-law odd, A-law even
+        data = bytes((i * 13 + k * 11) % 256 for k in range(n))
+        return _wav(tag, 1, 8000, 8000, 1, 8, data)
 
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 40 + 1
-                tag = 7 if i % 2 == 1 else 6  # mu-law odd, A-law even
-                data = bytes((i * 13 + k * 11) % 256 for k in range(n))
-                fmt = struct.pack("<HHIIHH", tag, 1, 8000, 8000, 1, 8)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                    + (b"\x00" if len(data) % 2 else b"")
-                )
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_wav = d.mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
-    )
-    return M.decode_audio_samples(with_wav)
+    return M.decode_audio_samples(_planted(d, payload))
 
 
 # Winnowing anchors — the documented shuffle-divider tier of substring
@@ -3450,33 +3244,20 @@ def dedup_substring_winnow(spark, sf_dir):
 def multimodal_decode_png16(spark, sf_dir):
     """16-bit grayscale PNG decode (full precision, big-endian sample
     stream) through the format-dispatched decode_image_pixels path."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 5 + 3, i % 3 + 2
-                be = b"".join(
-                    ((i * 257 + p * 1031) % 65536).to_bytes(2, "big")
-                    for p in range(w * h)
-                )
-                payloads.append(
-                    M.encode_png(
-                        w, h, be, channels=1,
-                        filter_for_row=lambda y: y % 5, depth=16,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 5 + 3, i % 3 + 2
+        be = b"".join(
+            ((i * 257 + p * 1031) % 65536).to_bytes(2, "big")
+            for p in range(w * h)
+        )
+        return M.encode_png(
+            w, h, be, channels=1,
+            filter_for_row=lambda y: y % 5, depth=16,
+        )
 
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_png)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # ANIMATED GIF decode (round 8 — the round-7 codec tier's highest-
@@ -3555,40 +3336,27 @@ def multimodal_decode_png16(spark, sf_dir):
 def multimodal_decode_gif_anim(spark, sf_dir):
     """Animated-GIF multi-frame compositing (transparency + disposal),
     adjudicated against a symbolic replay of every composited canvas."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
     palette = bytes(j * 30 + c for j in range(8) for c in range(3))
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 5 + 4, i % 4 + 3
-                f0 = dict(
-                    left=0, top=0, iw=w, ih=h, disposal=1, transparent=None,
-                    indices=[(i + p) % 8 for p in range(w * h)],
-                )
-                f1 = dict(
-                    left=1, top=1, iw=w - 2, ih=h - 2, disposal=2,
-                    transparent=i % 8,
-                    indices=[(i * 5 + q) % 8 for q in range((w - 2) * (h - 2))],
-                )
-                f2 = dict(
-                    left=0, top=0, iw=w, ih=2, disposal=0, transparent=None,
-                    indices=[(i * 11 + r) % 8 for r in range(w * 2)],
-                )
-                payloads.append(
-                    M.encode_gif_anim(w, h, [f0, f1, f2], palette, bg=0)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 5 + 4, i % 4 + 3
+        f0 = dict(
+            left=0, top=0, iw=w, ih=h, disposal=1, transparent=None,
+            indices=[(i + p) % 8 for p in range(w * h)],
+        )
+        f1 = dict(
+            left=1, top=1, iw=w - 2, ih=h - 2, disposal=2,
+            transparent=i % 8,
+            indices=[(i * 5 + q) % 8 for q in range((w - 2) * (h - 2))],
+        )
+        f2 = dict(
+            left=0, top=0, iw=w, ih=2, disposal=0, transparent=None,
+            indices=[(i * 11 + r) % 8 for r in range(w * 2)],
+        )
+        return M.encode_gif_anim(w, h, [f0, f1, f2], palette, bg=0)
 
-    with_gif = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_gif_anim_stats(with_gif)
+    return M.decode_gif_anim_stats(_planted(d, payload))
 
 
 # Adam7 interlaced PNG (round 8): seven independently-filtered passes
@@ -3624,30 +3392,17 @@ def multimodal_decode_gif_anim(spark, sf_dir):
 def multimodal_decode_png_adam7(spark, sf_dir):
     """Adam7 interlaced RGB PNG decode (filter rotation across all seven
     passes) through the format-dispatched decode_image_pixels path."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 3, i % 5 + 2
-                px = bytes((i * 7 + k * 13) % 256 for k in range(w * h * 3))
-                payloads.append(
-                    M.encode_png(
-                        w, h, px, channels=3,
-                        filter_for_row=lambda y: y % 5, interlace=True,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 3, i % 5 + 2
+        px = bytes((i * 7 + k * 13) % 256 for k in range(w * h * 3))
+        return M.encode_png(
+            w, h, px, channels=3,
+            filter_for_row=lambda y: y % 5, interlace=True,
+        )
 
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_png)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # Palette transparency (round 8): a tRNS chunk turns palette expansion
@@ -3689,10 +3444,6 @@ def multimodal_decode_png_adam7(spark, sf_dir):
 def multimodal_decode_png_trns(spark, sf_dir):
     """Palette-PNG with tRNS transparency: RGBA expansion with default-
     opaque entries past the chunk length, filters rotating."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
     palette = bytes(
         v for j in range(8)
@@ -3700,24 +3451,15 @@ def multimodal_decode_png_trns(spark, sf_dir):
     )
     trns = bytes((j * 37) % 256 for j in range(6))
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 4, i % 4 + 3
-                idx = bytes((i * 7 + p * 3) % 8 for p in range(w * h))
-                payloads.append(
-                    M.encode_png_palette(
-                        w, h, idx, palette,
-                        filter_for_row=lambda y: y % 5, trns=trns,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 4, i % 4 + 3
+        idx = bytes((i * 7 + p * 3) % 8 for p in range(w * h))
+        return M.encode_png_palette(
+            w, h, idx, palette,
+            filter_for_row=lambda y: y % 5, trns=trns,
+        )
 
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_png)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # 16-bit BMP (round 8): X1R5G5B5 (BI_RGB) on even docs, R5G6B5
@@ -3769,31 +3511,20 @@ def multimodal_decode_png_trns(spark, sf_dir):
 def multimodal_decode_bmp16(spark, sf_dir):
     """16-bit BMP decode, both standard layouts (555 BI_RGB / 565
     BI_BITFIELDS) with bit-replication upscaling."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 5 + 3, i % 3 + 2
-                vals = [
-                    (i * 257 + p * 1031) % 65536 for p in range(w * h)
-                ]
-                if i % 2 == 0:
-                    vals = [v & 0x7FFF for v in vals]
-                    payloads.append(M.encode_bmp16(w, h, vals, "555"))
-                else:
-                    payloads.append(M.encode_bmp16(w, h, vals, "565"))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 5 + 3, i % 3 + 2
+        vals = [
+            (i * 257 + p * 1031) % 65536 for p in range(w * h)
+        ]
+        if i % 2 == 0:
+            vals = [v & 0x7FFF for v in vals]
+            return M.encode_bmp16(w, h, vals, "555")
+        else:
+            return M.encode_bmp16(w, h, vals, "565")
 
-    with_bmp = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_bmp)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # 1/4-bit palette BMPs (round 8): MSB-first sub-byte packing with 32-bit
@@ -3827,34 +3558,22 @@ def multimodal_decode_bmp16(spark, sf_dir):
 def multimodal_decode_bmp_lowbit(spark, sf_dir):
     """1-bit and 4-bit palette BMP decode (MSB-first packing, aligned
     rows), alternating by doc parity."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 7 + 3, i % 3 + 2
-                bpp = 1 if i % 2 == 1 else 4
-                ncol = 2 if bpp == 1 else 16
-                pal = bytes(
-                    (j * 19 + c * 7) % 256
-                    for j in range(ncol) for c in range(3)
-                )
-                idx = bytes((i + p) % ncol for p in range(w * h))
-                payloads.append(
-                    M.encode_bmp_lowbit(w, h, idx, pal, bpp,
-                                        top_down=bool(i % 3 == 0))
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 7 + 3, i % 3 + 2
+        bpp = 1 if i % 2 == 1 else 4
+        ncol = 2 if bpp == 1 else 16
+        pal = bytes(
+            (j * 19 + c * 7) % 256
+            for j in range(ncol) for c in range(3)
+        )
+        idx = bytes((i + p) % ncol for p in range(w * h))
+        return M.encode_bmp_lowbit(
+            w, h, idx, pal, bpp, top_down=bool(i % 3 == 0)
+        )
 
-    with_bmp = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_bmp)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # RLE4 BMP (round 8): alternating-nibble encoded runs plus word-aligned
@@ -3886,30 +3605,16 @@ def multimodal_decode_bmp_lowbit(spark, sf_dir):
 def multimodal_decode_bmp_rle4(spark, sf_dir):
     """RLE4 BMP decode (nibble runs + absolute escapes) through the
     format-dispatched decode_image_pixels path."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
     palette = bytes((j * 19) % 256 for j in range(16 * 3))
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 4, i % 4 + 3
-                idx = bytes((i + p // 2) % 16 for p in range(w * h))
-                absrows = {y for y in range(h) if (i + y) % 2 == 0}
-                payloads.append(
-                    M.encode_bmp_rle4(w, h, idx, palette,
-                                      absolute_rows=absrows)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 4, i % 4 + 3
+        idx = bytes((i + p // 2) % 16 for p in range(w * h))
+        absrows = {y for y in range(h) if (i + y) % 2 == 0}
+        return M.encode_bmp_rle4(w, h, idx, palette, absolute_rows=absrows)
 
-    with_bmp = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_bmp)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # Sub-byte palette PNG (round 8): depths 1/2/4 rotate by doc (with
@@ -3948,37 +3653,24 @@ def multimodal_decode_bmp_rle4(spark, sf_dir):
 def multimodal_decode_png_lowbit(spark, sf_dir):
     """Sub-byte palette PNG decode (1/2/4-bit packed index scanlines,
     sequential and Adam7 alternating)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
     pal16 = bytes(
         v for j in range(16)
         for v in ((j * 17) % 256, (j * 31) % 256, (j * 53) % 256)
     )
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 4, i % 4 + 3
-                depth = {0: 1, 1: 2, 2: 4}[i % 3]
-                ncol = 1 << depth
-                idx = bytes((i + p) % ncol for p in range(w * h))
-                payloads.append(
-                    M.encode_png_palette(
-                        w, h, idx, pal16[: 3 * ncol],
-                        filter_for_row=lambda y: y % 5,
-                        interlace=bool(i % 2), depth=depth,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 4, i % 4 + 3
+        depth = {0: 1, 1: 2, 2: 4}[i % 3]
+        ncol = 1 << depth
+        idx = bytes((i + p) % ncol for p in range(w * h))
+        return M.encode_png_palette(
+            w, h, idx, pal16[: 3 * ncol],
+            filter_for_row=lambda y: y % 5,
+            interlace=bool(i % 2), depth=depth,
+        )
 
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_png)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # IMA ADPCM decode (round 8, WAV format tag 17): the quantizer is a
@@ -4039,40 +3731,16 @@ def multimodal_decode_adpcm(spark, sf_dir):
     """Mono IMA ADPCM WAV decode, one output row per sample (header
     predictor = sample 0), adjudicated against a recursive-CTE replay of
     the quantizer state machine."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def samples(i: int):
+        nbytes = i % 12 + 3
+        data = struct.pack("<hBB", (i * 73) % 4096 - 2048, i % 89, 0)
+        data += bytes((i * 13 + k * 7) % 256 for k in range(nbytes))
+        wav = _wav(0x11, 1, 8000, 8000, 4 + nbytes, 4, data)
+        return list(enumerate(M.decode_wav_pcm(wav)[2]))
 
-        from corintick_spark.operators.multimodal import decode_wav_pcm
-
-        for pdf in it:
-            out = {"doc_id": [], "pos": [], "sample": []}
-            for i in pdf["doc_id"].astype("int64"):
-                i = int(i)
-                nbytes = i % 12 + 3
-                ba = 4 + nbytes
-                data = struct.pack("<hBB", (i * 73) % 4096 - 2048, i % 89, 0)
-                data += bytes((i * 13 + k * 7) % 256 for k in range(nbytes))
-                fmt = struct.pack("<HHIIHH", 0x11, 1, 8000, 8000, ba, 4)
-                body = (
-                    b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                    + (b"\x00" if len(data) % 2 else b"")
-                )
-                wav = b"RIFF" + struct.pack("<I", len(body)) + body
-                _, _, samples = decode_wav_pcm(wav)
-                for p, v in enumerate(samples):
-                    out["doc_id"].append(i)
-                    out["pos"].append(p)
-                    out["sample"].append(v)
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(decode, schema="doc_id long, pos long, sample long")
+    return _per_doc(d, samples, "doc_id long, pos long, sample long")
 
 
 # IEEE float64 WAV decode (round 8): dyadic planted values (m/256 with
@@ -4110,50 +3778,21 @@ def multimodal_decode_adpcm(spark, sf_dir):
 def multimodal_decode_f64(spark, sf_dir):
     """IEEE float64 WAV decode (exact dyadic planted values), position-
     weighted sample stats."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def stats(i: int):
+        n = i % 30 + 2
+        xs = [((i * 13 + k * 7) % 2047 - 1023) / 256.0 for k in range(n)]
+        wav = _wav(3, 1, 8000, 64000, 8, 64, struct.pack(f"<{n}d", *xs))
+        rate, ch, samples = M.decode_wav_pcm(wav)
+        return (
+            rate, ch, len(samples), sum(samples),
+            sum(k * v for k, v in enumerate(samples)),
+        )
 
-        from corintick_spark.operators.multimodal import decode_wav_pcm
-
-        for pdf in it:
-            out = {
-                "doc_id": [], "sample_rate": [], "channels": [],
-                "n_samples": [], "sample_sum": [], "sample_wsum": [],
-            }
-            for i in pdf["doc_id"].astype("int64"):
-                i = int(i)
-                n = i % 30 + 2
-                xs = [
-                    ((i * 13 + k * 7) % 2047 - 1023) / 256.0
-                    for k in range(n)
-                ]
-                data = struct.pack(f"<{n}d", *xs)
-                fmt = struct.pack("<HHIIHH", 3, 1, 8000, 64000, 8, 64)
-                body = (
-                    b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                wav = b"RIFF" + struct.pack("<I", len(body)) + body
-                rate, ch, samples = decode_wav_pcm(wav)
-                out["doc_id"].append(i)
-                out["sample_rate"].append(rate)
-                out["channels"].append(ch)
-                out["n_samples"].append(len(samples))
-                out["sample_sum"].append(sum(samples))
-                out["sample_wsum"].append(
-                    sum(k * v for k, v in enumerate(samples))
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(
-        decode,
-        schema="doc_id long, sample_rate long, channels long,"
+    return _per_doc(
+        d, stats,
+        "doc_id long, sample_rate long, channels long,"
         " n_samples long, sample_sum long, sample_wsum long",
     )
 
@@ -4208,52 +3847,39 @@ def multimodal_decode_f64(spark, sf_dir):
 def multimodal_decode_png_ckey(spark, sf_dir):
     """Color-key tRNS PNG decode (gray8 / RGB8 / gray16 rotating; the
     planted key pixel is the only transparent one by construction)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 4, i % 4 + 3
+        n = w * h
+        p0 = i % n
+        cls = i % 3
+        if cls == 0:
+            px = bytes((i + 3 * p) % 256 for p in range(n))
+            return M.encode_png(
+                w, h, px, 1, filter_for_row=lambda y: y % 5,
+                trns_key=((i + 3 * p0) % 256,),
+            )
+        elif cls == 1:
+            px = bytes(
+                v for p in range(n)
+                for v in ((i + 5 * p) % 256,
+                          (i * 2 + 7 * p) % 256,
+                          (i * 3 + 11 * p) % 256)
+            )
+            return M.encode_png(
+                w, h, px, 3, filter_for_row=lambda y: (y + 1) % 5,
+                trns_key=tuple(px[3 * p0 : 3 * p0 + 3]),
+            )
+        else:
+            vals = [(i * 257 + 1031 * p) % 65536 for p in range(n)]
+            px = b"".join(struct.pack(">H", v) for v in vals)
+            return M.encode_png(
+                w, h, px, 1, depth=16, interlace=bool(i % 2),
+                trns_key=(vals[p0],),
+            )
 
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 4, i % 4 + 3
-                n = w * h
-                p0 = i % n
-                cls = i % 3
-                if cls == 0:
-                    px = bytes((i + 3 * p) % 256 for p in range(n))
-                    payloads.append(M.encode_png(
-                        w, h, px, 1, filter_for_row=lambda y: y % 5,
-                        trns_key=((i + 3 * p0) % 256,),
-                    ))
-                elif cls == 1:
-                    px = bytes(
-                        v for p in range(n)
-                        for v in ((i + 5 * p) % 256,
-                                  (i * 2 + 7 * p) % 256,
-                                  (i * 3 + 11 * p) % 256)
-                    )
-                    payloads.append(M.encode_png(
-                        w, h, px, 3, filter_for_row=lambda y: (y + 1) % 5,
-                        trns_key=tuple(px[3 * p0 : 3 * p0 + 3]),
-                    ))
-                else:
-                    vals = [(i * 257 + 1031 * p) % 65536 for p in range(n)]
-                    px = b"".join(struct.pack(">H", v) for v in vals)
-                    payloads.append(M.encode_png(
-                        w, h, px, 1, depth=16, interlace=bool(i % 2),
-                        trns_key=(vals[p0],),
-                    ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_png)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # Exotic BMP bitfield masks (round 8): the general BI_BITFIELDS path —
@@ -4314,10 +3940,6 @@ def multimodal_decode_png_ckey(spark, sf_dir):
 def multimodal_decode_bmp_masks(spark, sf_dir):
     """Exotic BMP bitfield masks via the general BI_BITFIELDS decode
     path (swapped 565, A4R4G4B4, A2R10G10B10, reversed RGBX rotating)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     # (bpp, (r, g, b) masks, alpha mask, per-channel widths)
     layouts = [
         (16, (0x001F, 0x07E0, 0xF800), 0, (5, 6, 5)),
@@ -4329,31 +3951,24 @@ def multimodal_decode_bmp_masks(spark, sf_dir):
 
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 4, i % 4 + 3
-                bpp, masks, am, widths = layouts[i % 4]
-                shifts = [
-                    (m & -m).bit_length() - 1
-                    for m in list(masks) + ([am] if am else [])
-                ]
-                vals = []
-                for p in range(w * h):
-                    v = 0
-                    for c, (s, wd) in enumerate(zip(shifts, widths)):
-                        v |= ((i + 3 * p + 7 * c) % (1 << wd)) << s
-                    vals.append(v)
-                payloads.append(M.encode_bmp_masks(
-                    w, h, vals, bpp, masks, am, top_down=bool(i % 2)
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 4, i % 4 + 3
+        bpp, masks, am, widths = layouts[i % 4]
+        shifts = [
+            (m & -m).bit_length() - 1
+            for m in list(masks) + ([am] if am else [])
+        ]
+        vals = []
+        for p in range(w * h):
+            v = 0
+            for c, (s, wd) in enumerate(zip(shifts, widths)):
+                v |= ((i + 3 * p + 7 * c) % (1 << wd)) << s
+            vals.append(v)
+        return M.encode_bmp_masks(
+            w, h, vals, bpp, masks, am, top_down=bool(i % 2)
+        )
 
-    with_bmp = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_bmp)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # MS-ADPCM decode (round 8, WAV format tag 2): like the IMA query, the
@@ -4416,43 +4031,19 @@ def multimodal_decode_msadpcm(spark, sf_dir):
     """Mono MS-ADPCM WAV decode, one output row per sample (header
     sample2/sample1 = samples 0/1), adjudicated against a recursive-CTE
     replay of the predictor + delta-adaptation state machine."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def samples(i: int):
+        nbytes = i % 12 + 3
+        data = struct.pack(
+            "<Bhhh", i % 7, i % 500 + 16,
+            (i * 37) % 4096 - 2048, (i * 91) % 4096 - 2048,
+        )
+        data += bytes((i * 13 + k * 7) % 256 for k in range(nbytes))
+        wav = _wav(2, 1, 8000, 4000, 7 + nbytes, 4, data)
+        return list(enumerate(M.decode_wav_pcm(wav)[2]))
 
-        from corintick_spark.operators.multimodal import decode_wav_pcm
-
-        for pdf in it:
-            out = {"doc_id": [], "pos": [], "sample": []}
-            for i in pdf["doc_id"].astype("int64"):
-                i = int(i)
-                nbytes = i % 12 + 3
-                ba = 7 + nbytes
-                data = struct.pack(
-                    "<Bhhh", i % 7, i % 500 + 16,
-                    (i * 37) % 4096 - 2048, (i * 91) % 4096 - 2048,
-                )
-                data += bytes((i * 13 + k * 7) % 256 for k in range(nbytes))
-                fmt = struct.pack("<HHIIHH", 2, 1, 8000, 4000, ba, 4)
-                body = (
-                    b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                    + (b"\x00" if len(data) % 2 else b"")
-                )
-                wav = b"RIFF" + struct.pack("<I", len(body)) + body
-                _, _, samples = decode_wav_pcm(wav)
-                for p, v in enumerate(samples):
-                    out["doc_id"].append(i)
-                    out["pos"].append(p)
-                    out["sample"].append(v)
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(decode, schema="doc_id long, pos long, sample long")
+    return _per_doc(d, samples, "doc_id long, pos long, sample long")
 
 
 # 12-bit extended-sequential JPEG decode (round 8, SOF1 + 16-bit DQT
@@ -4490,33 +4081,22 @@ def multimodal_decode_msadpcm(spark, sf_dir):
 def multimodal_decode_jpg12(spark, sf_dir):
     """12-bit extended-sequential JPEG decode (SOF1, Pq=1 quant tables,
     2048 level shift, rotating restart intervals)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = (i % 3 + 1) * 8, (i % 2 + 1) * 8
-                nbx = w // 8
-                samples = [
-                    (i * 97 + ((y // 8) * nbx + x // 8) * 251) % 4096
-                    for y in range(h) for x in range(w)
-                ]
-                q = [8] + [1] * 63
-                q[1] = 300  # 16-bit table entry on an always-zero AC slot
-                payloads.append(M.encode_jpeg12(
-                    w, h, samples, quant=q, restart_interval=i % 3
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = (i % 3 + 1) * 8, (i % 2 + 1) * 8
+        nbx = w // 8
+        samples = [
+            (i * 97 + ((y // 8) * nbx + x // 8) * 251) % 4096
+            for y in range(h) for x in range(w)
+        ]
+        q = [8] + [1] * 63
+        q[1] = 300  # 16-bit table entry on an always-zero AC slot
+        return M.encode_jpeg12(
+            w, h, samples, quant=q, restart_interval=i % 3
+        )
 
-    with_jpg = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_jpg)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # Factor-4 (and factor-3) chroma sampling (round 8): 4:1:1 — four luma
@@ -4558,10 +4138,6 @@ def multimodal_decode_jpg12(spark, sf_dir):
 def multimodal_decode_jpg_411(spark, sf_dir):
     """4:1:1 / 4:4 / 3:1 chroma-sampled JPEG decode on grid-constant
     gray-valued tiles (bit-exact through the lossy pipeline)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     # (w, h, tile_w, tile_h, sampling)
     layouts = [
         (64, 8, 32, 8, [(4, 1), (1, 1), (1, 1)]),
@@ -4571,26 +4147,19 @@ def multimodal_decode_jpg_411(spark, sf_dir):
 
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h, tw, th, samp = layouts[i % 3]
-                px = bytearray()
-                for p in range(w * h):
-                    x, y = p % w, p // w
-                    v = (i * 31 + ((y // th) * (w // tw) + x // tw) * 53) % 256
-                    px += bytes((v, v, v))
-                payloads.append(M.encode_jpeg(
-                    w, h, bytes(px), 3, sampling=samp,
-                    restart_interval=i % 2,
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h, tw, th, samp = layouts[i % 3]
+        px = bytearray()
+        for p in range(w * h):
+            x, y = p % w, p // w
+            v = (i * 31 + ((y // th) * (w // tw) + x // tw) * 53) % 256
+            px += bytes((v, v, v))
+        return M.encode_jpeg(
+            w, h, bytes(px), 3, sampling=samp,
+            restart_interval=i % 2,
+        )
 
-    with_jpg = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_jpg)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # Lossless JPEG decode (round 8, SOF3 — T.81 Annex H): predictive
@@ -4628,30 +4197,19 @@ def multimodal_decode_jpg_411(spark, sf_dir):
 def multimodal_decode_jpg_lossless(spark, sf_dir):
     """Lossless JPEG decode (SOF3, predictors 1-7 rotating, precision
     8/12/16, point transform 0/1) — exact predictive reconstruction."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 4, i % 4 + 3
-                p = {0: 8, 1: 12, 2: 16}[i % 3]
-                pt = i % 2
-                modv = 1 << (p - pt)
-                samples = [(i * 7 + k * 13) % modv for k in range(w * h)]
-                payloads.append(M.encode_jpeg_lossless(
-                    w, h, samples, p, predictor=i % 7 + 1, pt=pt
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 4, i % 4 + 3
+        p = {0: 8, 1: 12, 2: 16}[i % 3]
+        pt = i % 2
+        modv = 1 << (p - pt)
+        samples = [(i * 7 + k * 13) % modv for k in range(w * h)]
+        return M.encode_jpeg_lossless(
+            w, h, samples, p, predictor=i % 7 + 1, pt=pt
+        )
 
-    with_jpg = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_jpg)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # Progressive JPEG with chroma subsampling (round 8): interleaved DC
@@ -4695,10 +4253,6 @@ def multimodal_decode_jpg_prog420(spark, sf_dir):
     """Chroma-subsampled progressive JPEG decode (4:2:0 / 4:2:2 / 4:1:1
     rotating, grid-constant gray-valued tiles, rotating DC refinement
     depth and restart cadence)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     # (w, h, tile_w, tile_h, sampling) — tiles span the MCU grid so the
     # lossy pipeline is bit-exact on them
     layouts = [
@@ -4709,26 +4263,19 @@ def multimodal_decode_jpg_prog420(spark, sf_dir):
 
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h, tw, th, samp = layouts[i % 3]
-                px = bytearray()
-                for p in range(w * h):
-                    x, y = p % w, p // w
-                    v = (i * 29 + ((y // th) * (w // tw) + x // tw) * 47) % 256
-                    px += bytes((v, v, v))
-                payloads.append(M.encode_jpeg_progressive(
-                    w, h, bytes(px), 3, dc_al=i % 3, ac_al=i % 2,
-                    restart_interval=i % 2, sampling=samp,
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h, tw, th, samp = layouts[i % 3]
+        px = bytearray()
+        for p in range(w * h):
+            x, y = p % w, p // w
+            v = (i * 29 + ((y // th) * (w // tw) + x // tw) * 47) % 256
+            px += bytes((v, v, v))
+        return M.encode_jpeg_progressive(
+            w, h, bytes(px), 3, dc_al=i % 3, ac_al=i % 2,
+            restart_interval=i % 2, sampling=samp,
+        )
 
-    with_jpg = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_jpg)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # Sub-byte grayscale PNG decode (round 8, color type 0, depths 1/2/4):
@@ -4772,32 +4319,21 @@ def multimodal_decode_jpg_prog420(spark, sf_dir):
 def multimodal_decode_png_gray_lowbit(spark, sf_dir):
     """Sub-byte grayscale PNG decode (1/2/4-bit packed, bit-replicated
     upscale, sequential/Adam7 alternating, rotating color-key tRNS)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 4, i % 4 + 3
-                depth = {0: 1, 1: 2, 2: 4}[i % 3]
-                ncol = 1 << depth
-                vals = bytes((i + p) % ncol for p in range(w * h))
-                payloads.append(M.encode_png_gray_lowbit(
-                    w, h, vals, depth,
-                    filter_for_row=lambda y: y % 5,
-                    interlace=bool(i % 2),
-                    trns_key=(i % ncol) if i % 3 == 0 else None,
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        w, h = i % 6 + 4, i % 4 + 3
+        depth = {0: 1, 1: 2, 2: 4}[i % 3]
+        ncol = 1 << depth
+        vals = bytes((i + p) % ncol for p in range(w * h))
+        return M.encode_png_gray_lowbit(
+            w, h, vals, depth,
+            filter_for_row=lambda y: y % 5,
+            interlace=bool(i % 2),
+            trns_key=(i % ncol) if i % 3 == 0 else None,
+        )
 
-    with_png = d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
-    return M.decode_image_pixels(with_png)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # Stereo IMA ADPCM decode (round 8): per-channel 4-byte headers and
@@ -4859,58 +4395,28 @@ def multimodal_decode_adpcm_stereo(spark, sf_dir):
     """Stereo IMA ADPCM WAV decode, one output row per (channel,
     sample), adjudicated against a recursive-CTE replay of both
     channels' quantizer state machines."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def samples(i: int):
+        headers = b"".join(
+            struct.pack(
+                "<hBB",
+                ((i + ch * 7) * 73) % 4096 - 2048,
+                (i + ch * 31) % 89, 0,
+            )
+            for ch in range(2)
+        )
+        inter = bytes(
+            (i * 13 + ch * 17 + (g * 4 + bb) * 7) % 256
+            for g in range(i % 3 + 1)
+            for ch in range(2)
+            for bb in range(4)
+        )
+        data = headers + inter
+        wav = _wav(0x11, 2, 8000, 8000, len(data), 4, data)
+        return _stereo_rows(M.decode_wav_pcm(wav)[2])
 
-        from corintick_spark.operators.multimodal import decode_wav_pcm
-
-        for pdf in it:
-            out = {"doc_id": [], "ch": [], "pos": [], "sample": []}
-            for i in pdf["doc_id"].astype("int64"):
-                i = int(i)
-                ngroups = i % 3 + 1
-                headers = b"".join(
-                    struct.pack(
-                        "<hBB",
-                        ((i + ch * 7) * 73) % 4096 - 2048,
-                        (i + ch * 31) % 89, 0,
-                    )
-                    for ch in range(2)
-                )
-                inter = bytearray()
-                for g in range(ngroups):
-                    for ch in range(2):
-                        inter += bytes(
-                            (i * 13 + ch * 17 + (g * 4 + bb) * 7) % 256
-                            for bb in range(4)
-                        )
-                data = headers + bytes(inter)
-                ba = len(data)
-                fmt = struct.pack("<HHIIHH", 0x11, 2, 8000, 8000, ba, 4)
-                body = (
-                    b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                    + (b"\x00" if len(data) % 2 else b"")
-                )
-                wav = b"RIFF" + struct.pack("<I", len(body)) + body
-                _, nch, samples = decode_wav_pcm(wav)
-                for fi in range(len(samples) // 2):
-                    for ch in range(2):
-                        out["doc_id"].append(i)
-                        out["ch"].append(ch)
-                        out["pos"].append(fi)
-                        out["sample"].append(samples[2 * fi + ch])
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(
-        decode, schema="doc_id long, ch long, pos long, sample long"
-    )
+    return _per_doc(d, samples, "doc_id long, ch long, pos long, sample long")
 
 
 # Stereo MS-ADPCM decode (round 8): interleaved header fields, every
@@ -4963,56 +4469,27 @@ def multimodal_decode_adpcm_stereo(spark, sf_dir):
 def multimodal_decode_msadpcm_stereo(spark, sf_dir):
     """Stereo MS-ADPCM WAV decode, one output row per (channel,
     sample), adjudicated against a per-channel recursive-CTE replay."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def samples(i: int):
+        ips = bytes(((i + ch) % 7) for ch in range(2))
+        deltas = struct.pack(
+            "<2h", *((i + ch * 13) % 500 + 16 for ch in range(2))
+        )
+        s1s = struct.pack(
+            "<2h",
+            *(((i + ch * 5) * 37) % 4096 - 2048 for ch in range(2)),
+        )
+        s2s = struct.pack(
+            "<2h",
+            *(((i + ch * 3) * 91) % 4096 - 2048 for ch in range(2)),
+        )
+        nibbles = bytes((i * 13 + j * 7) % 256 for j in range(i % 10 + 2))
+        data = ips + deltas + s1s + s2s + nibbles
+        wav = _wav(2, 2, 8000, 4000, len(data), 4, data)
+        return _stereo_rows(M.decode_wav_pcm(wav)[2])
 
-        from corintick_spark.operators.multimodal import decode_wav_pcm
-
-        for pdf in it:
-            out = {"doc_id": [], "ch": [], "pos": [], "sample": []}
-            for i in pdf["doc_id"].astype("int64"):
-                i = int(i)
-                nbytes = i % 10 + 2
-                ips = bytes(((i + ch) % 7) for ch in range(2))
-                deltas = struct.pack(
-                    "<2h", *((i + ch * 13) % 500 + 16 for ch in range(2))
-                )
-                s1s = struct.pack(
-                    "<2h",
-                    *(((i + ch * 5) * 37) % 4096 - 2048 for ch in range(2)),
-                )
-                s2s = struct.pack(
-                    "<2h",
-                    *(((i + ch * 3) * 91) % 4096 - 2048 for ch in range(2)),
-                )
-                payload = bytes((i * 13 + j * 7) % 256 for j in range(nbytes))
-                data = ips + deltas + s1s + s2s + payload
-                ba = len(data)
-                fmt = struct.pack("<HHIIHH", 2, 2, 8000, 4000, ba, 4)
-                body = (
-                    b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                    + (b"\x00" if len(data) % 2 else b"")
-                )
-                wav = b"RIFF" + struct.pack("<I", len(body)) + body
-                _, _, samples = decode_wav_pcm(wav)
-                for fi in range(len(samples) // 2):
-                    for ch in range(2):
-                        out["doc_id"].append(i)
-                        out["ch"].append(ch)
-                        out["pos"].append(fi)
-                        out["sample"].append(samples[2 * fi + ch])
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(
-        decode, schema="doc_id long, ch long, pos long, sample long"
-    )
+    return _per_doc(d, samples, "doc_id long, ch long, pos long, sample long")
 
 
 # Mixed-format corpus scan (round 8): the realistic 100 TB ingest shape
@@ -5070,59 +4547,42 @@ def multimodal_decode_mixed(spark, sf_dir):
     """Mixed-format binary-column scan: PNG/BMP/GIF/JPEG/non-image
     payloads rotating per doc through one magic-byte-dispatching decode
     pass; non-image rows null-propagate (corpus-scan posture)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
     pal8 = bytes(
         v for j in range(8)
         for v in ((j * 17) % 256, (j * 31) % 256, (j * 53) % 256)
     )
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                cls = i % 5
-                if cls == 3:
-                    w, h = (i % 2 + 1) * 8, 8
-                else:
-                    w, h = i % 6 + 4, i % 4 + 3
-                if cls == 0:
-                    px = bytes((i + 3 * p) % 256 for p in range(w * h))
-                    payloads.append(M.encode_png(
-                        w, h, px, 1, filter_for_row=lambda y: y % 5
-                    ))
-                elif cls == 1:
-                    px = bytes((i + 2 * k) % 256 for k in range(w * h * 3))
-                    payloads.append(M.encode_bmp(w, h, px,
-                                                 top_down=bool(i % 2)))
-                elif cls == 2:
-                    idx = [(i + p) % 8 for p in range(w * h)]
-                    payloads.append(M.encode_gif(w, h, idx, pal8,
-                                                 interlace=bool(i % 2)))
-                elif cls == 3:
-                    nbx = w // 8
-                    px = bytes(
-                        (i * 97 + ((y // 8) * nbx + x // 8) * 251) % 256
-                        for y in range(h) for x in range(w)
-                    )
-                    payloads.append(M.encode_jpeg(
-                        w, h, px, 1, restart_interval=i % 3
-                    ))
-                else:  # non-image bytes: the scan must null-propagate
-                    payloads.append(
-                        (f"plain text payload {i} " * 3).encode()
-                    )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        cls = i % 5
+        if cls == 3:
+            w, h = (i % 2 + 1) * 8, 8
+        else:
+            w, h = i % 6 + 4, i % 4 + 3
+        if cls == 0:
+            px = bytes((i + 3 * p) % 256 for p in range(w * h))
+            return M.encode_png(
+                w, h, px, 1, filter_for_row=lambda y: y % 5
+            )
+        elif cls == 1:
+            px = bytes((i + 2 * k) % 256 for k in range(w * h * 3))
+            return M.encode_bmp(w, h, px, top_down=bool(i % 2))
+        elif cls == 2:
+            idx = [(i + p) % 8 for p in range(w * h)]
+            return M.encode_gif(w, h, idx, pal8, interlace=bool(i % 2))
+        elif cls == 3:
+            nbx = w // 8
+            px = bytes(
+                (i * 97 + ((y // 8) * nbx + x // 8) * 251) % 256
+                for y in range(h) for x in range(w)
+            )
+            return M.encode_jpeg(
+                w, h, px, 1, restart_interval=i % 3
+            )
+        else:  # non-image bytes: the scan must null-propagate
+            return (f"plain text payload {i} " * 3).encode()
 
-    with_mixed = d.mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
-    )
-    return M.decode_image_pixels(with_mixed)
+    return M.decode_image_pixels(_planted(d, payload))
 
 
 # Mixed-format audio scan (round 8): WAV payloads rotating PCM16 /
@@ -5199,64 +4659,28 @@ def multimodal_audio_mixed(spark, sf_dir):
     """Mixed-format audio scan: PCM16/PCM8/mu-law/float32/non-audio
     payloads rotating per doc through one decode pass; non-audio rows
     null-propagate (corpus-scan posture)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def payload(i: int) -> bytes:
+        cls = i % 5
+        if cls == 0:
+            n = i % 20 + 2
+            vals = [(i * 13 + k * 7) % 4096 - 2048 for k in range(n)]
+            return _wav(1, 1, 16000, 32000, 2, 16, struct.pack(f"<{n}h", *vals))
+        elif cls == 1:
+            raw = bytes(((i + k) % 256) for k in range(i % 30 + 3))
+            return _wav(1, 1, 8000, 8000, 1, 8, raw)
+        elif cls == 2:
+            raw = bytes((i + 3 * k) % 256 for k in range(i % 40 + 1))
+            return _wav(7, 1, 8000, 8000, 1, 8, raw)
+        elif cls == 3:
+            n = i % 30 + 2
+            xs = [((i * 13 + k * 7) % 2047 - 1023) / 256.0 for k in range(n)]
+            return _wav(3, 1, 44100, 176400, 4, 32, struct.pack(f"<{n}f", *xs))
+        else:  # non-audio bytes: the scan must null-propagate
+            return f"not a wav payload {i}".encode()
 
-        def wav(fmt_tag, rate, bits, data):
-            block = max(1, bits // 8)
-            fmt = struct.pack(
-                "<HHIIHH", fmt_tag, 1, rate, rate * block, block, bits
-            )
-            body = (
-                b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-                + (b"\x00" if len(data) % 2 else b"")
-            )
-            return b"RIFF" + struct.pack("<I", len(body)) + body
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                cls = i % 5
-                if cls == 0:
-                    n = i % 20 + 2
-                    vals = [(i * 13 + k * 7) % 4096 - 2048 for k in range(n)]
-                    payloads.append(
-                        wav(1, 16000, 16, struct.pack(f"<{n}h", *vals))
-                    )
-                elif cls == 1:
-                    n = i % 30 + 3
-                    raw = bytes(((i + k) % 256) for k in range(n))
-                    payloads.append(wav(1, 8000, 8, raw))
-                elif cls == 2:
-                    n = i % 40 + 1
-                    raw = bytes((i + 3 * k) % 256 for k in range(n))
-                    payloads.append(wav(7, 8000, 8, raw))
-                elif cls == 3:
-                    n = i % 30 + 2
-                    xs = [
-                        ((i * 13 + k * 7) % 2047 - 1023) / 256.0
-                        for k in range(n)
-                    ]
-                    payloads.append(
-                        wav(3, 44100, 32, struct.pack(f"<{n}f", *xs))
-                    )
-                else:  # non-audio bytes: the scan must null-propagate
-                    payloads.append(f"not a wav payload {i}".encode())
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_audio = d.mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
-    )
-    return M.decode_audio_samples(with_audio)
+    return M.decode_audio_samples(_planted(d, payload))
 
 
 # Audio sample-rate normalization (round 8): nearest-neighbor resample
@@ -5299,43 +4723,9 @@ def multimodal_audio_mixed(spark, sf_dir):
 def multimodal_audio_resample(spark, sf_dir):
     """Nearest-neighbor audio resample to 8 kHz (16k/8k/4k inputs
     rotating, mono/stereo alternating), stats of the resampled stream."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
-
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                in_rate = {0: 16000, 1: 8000, 2: 4000}[i % 3]
-                nf = i % 20 + 4
-                ch = i % 2 + 1
-                vals = [
-                    (i * 13 + k * 7) % 4096 - 2048 for k in range(nf * ch)
-                ]
-                data = struct.pack(f"<{len(vals)}h", *vals)
-                block = ch * 2
-                fmt = struct.pack(
-                    "<HHIIHH", 1, ch, in_rate, in_rate * block, block, 16
-                )
-                body = (
-                    b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                payloads.append(
-                    b"RIFF" + struct.pack("<I", len(body)) + body
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_audio = d.mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
-    )
+    rates = (16000, 8000, 4000)
+    with_audio = _planted(d, lambda i: _resample_input(i, rates[i % 3]))
     return M.resample_audio_nearest(with_audio, 8000)
 
 
@@ -5388,44 +4778,19 @@ def multimodal_audio_resample(spark, sf_dir):
 def multimodal_audio_resample_linear(spark, sf_dir):
     """Linear-interpolation audio resample to 8 kHz (12k/8k/3k inputs
     rotating, mono/stereo alternating), stats of the resampled stream."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
-
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                in_rate = {0: 12000, 1: 8000, 2: 3000}[i % 3]
-                nf = i % 20 + 4
-                ch = i % 2 + 1
-                vals = [
-                    (i * 13 + k * 7) % 4096 - 2048 for k in range(nf * ch)
-                ]
-                data = struct.pack(f"<{len(vals)}h", *vals)
-                block = ch * 2
-                fmt = struct.pack(
-                    "<HHIIHH", 1, ch, in_rate, in_rate * block, block, 16
-                )
-                body = (
-                    b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                payloads.append(
-                    b"RIFF" + struct.pack("<I", len(body)) + body
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_audio = d.mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
-    )
+    rates = (12000, 8000, 3000)
+    with_audio = _planted(d, lambda i: _resample_input(i, rates[i % 3]))
     return M.resample_audio_linear(with_audio, 8000)
+
+
+def _resample_input(i: int, in_rate: int) -> bytes:
+    """16-bit PCM input of the resample queries: doc_id%20+4 frames,
+    mono/stereo by doc parity, sample k = (doc_id*13 + k*7) % 4096 - 2048."""
+    nf, ch = i % 20 + 4, i % 2 + 1
+    vals = [(i * 13 + k * 7) % 4096 - 2048 for k in range(nf * ch)]
+    data = struct.pack(f"<{len(vals)}h", *vals)
+    return _wav(1, ch, in_rate, in_rate * 2 * ch, 2 * ch, 16, data)
 
 
 # Perceptual image dedup, EXACT tier (round 9, verdict r8 item 3): dHash
@@ -5461,45 +4826,33 @@ def dedup_image_dhash(spark, sf_dir):
     """Exact image dedup via dHash: per-doc planted images (re-encoded
     PNG/BMP, integer-upscaled) -> 64-bit difference hash -> duplicate
     group sizes by hash equality; hash values adjudicated bit-exact."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = spread_input(
         table(spark, sf_dir, "documents").select("doc_id")
     )
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                m, s = i % 40, i % 3 + 1
-                grid = []
-                for r in range(8):
-                    row = [128]
-                    for c in range(8):
-                        k = r * 8 + c
-                        bit = (
-                            0 if k == 63
-                            else ((m * 2654435761 + k * 40503) >> 5) & 1
-                        )
-                        row.append(row[-1] - 7 if bit else row[-1] + 7)
-                    grid.append(row)
-                w, h = 9 * s, 8 * s
-                px = bytearray()
-                for y in range(h):
-                    for x in range(w):
-                        v = grid[y // s][x // s]
-                        px += bytes((v, v, v))
-                enc = M.encode_png if i % 2 == 0 else M.encode_bmp
-                payloads.append(enc(w, h, bytes(px)))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        m, s = i % 40, i % 3 + 1
+        grid = []
+        for r in range(8):
+            row = [128]
+            for c in range(8):
+                k = r * 8 + c
+                bit = (
+                    0 if k == 63
+                    else ((m * 2654435761 + k * 40503) >> 5) & 1
+                )
+                row.append(row[-1] - 7 if bit else row[-1] + 7)
+            grid.append(row)
+        w, h = 9 * s, 8 * s
+        px = bytearray()
+        for y in range(h):
+            for x in range(w):
+                v = grid[y // s][x // s]
+                px += bytes((v, v, v))
+        enc = M.encode_png if i % 2 == 0 else M.encode_bmp
+        return enc(w, h, bytes(px))
 
-    with_img = d.mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
-    )
+    with_img = _planted(d, payload)
     hset = M.dhash_images(with_img)
     return hset.withColumn(
         "n_copies", F.count(F.lit(1)).over(Window.partitionBy("dhash"))
@@ -5530,68 +4883,66 @@ def _planted_phash_corpus(spark, sf_dir):
     DCT are the CPU-bound stage, and a single-file local scan would
     otherwise run them on one partition (a well-partitioned cluster
     scan skips the shuffle)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = spread_input(table(spark, sf_dir, "documents").select("doc_id"))
+    return _planted(d, lambda i: _dct_png(i, 3))
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        W = H = 32
-        cx = np.array(
-            [[np.cos(np.pi * (2 * x + 1) * u / (2 * W)) for x in range(W)]
-             for u in range(8)]
-        )
-        cy = np.array(
-            [[np.cos(np.pi * (2 * y + 1) * p / (2 * H)) for y in range(H)]
-             for p in range(8)]
-        )
-        cache: dict = {}
+def _dct_png(i: int, lo: int, hi: "int | None" = None) -> bytes:
+    """PNG-gray member i % 4 of group i // 4 of a planted pHash corpus
+    (see :func:`_dct_member`)."""
+    g, r = divmod(i, 4)
+    return M.encode_png(32, 32, _dct_member(g, g, r, 0, lo, hi).tobytes(), channels=1)
 
-        def base(g: int):
-            im = cache.get(g)
-            if im is None:
-                v = (g * 2654435761 + 97) % (2**31)
-                amps = np.zeros((8, 8))
-                for u in range(8):
-                    for p in range(8):
-                        if u == 0 and p == 0:
-                            continue
-                        v = (v * 1103515245 + 12345) % (2**31)
-                        t = v % 11 - 5
-                        if t >= 0:
-                            t += 1
-                        amps[u, p] = 3 * t
-                img = 128.0 + cy.T @ amps.T @ cx
-                im = np.clip(np.rint(img), 0, 255).astype(np.uint8)
-                if len(cache) > 512:
-                    cache.clear()
-                cache[g] = im
-            return im
 
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                g, r = divmod(i, 4)
-                im = base(g)
-                if r:
-                    b = im.flatten().astype(int)
-                    for t in range(16):
-                        idx = (g * 9973 + t * 613 + r * 331) % 1024
-                        b[idx] = min(
-                            255, max(0, int(b[idx]) + (5 if (t + r) % 2 else -5))
-                        )
-                    pxb = bytes(b.astype(np.uint8))
-                else:
-                    pxb = im.tobytes()
-                payloads.append(M.encode_png(W, H, pxb, channels=1))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+@functools.lru_cache(maxsize=64)
+def _dct_cos(n: int) -> "np.ndarray":
+    """cos(pi*(2x+1)*u/64) for u < n, x < 32: the inverse-DCT rows the
+    planted 32x32 images are built from."""
+    return np.array(
+        [[np.cos(np.pi * (2 * x + 1) * u / (2 * 32)) for x in range(32)]
+         for u in range(n)]
+    )
 
-    return d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
+
+@functools.lru_cache(maxsize=1024)
+def _dct_base(seed: int, lo: int, hi: "int | None") -> "np.ndarray":
+    """Smooth 32x32 uint8 base image of a planted pHash corpus: 128 plus
+    the inverse DCT of an LCG-drawn amplitude block, nonzero in every
+    low-frequency slot but DC. Slot (u horizontal, p vertical < 8) gets
+    lo x {±1..6} for u < 8; ``hi`` extends the block to u < 16 at
+    hi x {±1..6} (the right half only the 128-bit hash sees)."""
+    cols = 8 if hi is None else 16
+    v = (seed * 2654435761 + 97) % (2**31)
+    amps = np.zeros((cols, 8))  # [horizontal u, vertical p]
+    for u in range(cols):
+        for p in range(8):
+            if u == 0 and p == 0:
+                continue
+            v = (v * 1103515245 + 12345) % (2**31)
+            t = v % 11 - 5
+            if t >= 0:
+                t += 1
+            amps[u, p] = (lo if u < 8 else hi) * t
+    img = 128.0 + _dct_cos(8).T @ amps.T @ _dct_cos(cols)
+    im = np.clip(np.rint(img), 0, 255).astype(np.uint8)
+    im.setflags(write=False)  # cached: shared by every caller
+    return im
+
+
+def _dct_member(
+    seed: int, g: int, r: int, f: int, lo: int, hi: "int | None" = None
+) -> "np.ndarray":
+    """Flat pixels of member r of planted group g (frame f of a clip):
+    member 0 is the base image of ``seed``, members r > 0 move 16 pixels
+    (positions keyed by g, f and r) by ±5, clamped to 0..255."""
+    b = _dct_base(seed, lo, hi).ravel()
+    if not r:
+        return b
+    b = b.astype(int)
+    for t in range(16):
+        idx = (g * 9973 + f * 127 + t * 613 + r * 331) % 1024
+        b[idx] = min(255, max(0, int(b[idx]) + (5 if (t + r) % 2 else -5)))
+    return b.astype(np.uint8)
 
 
 @query("dedup_image_phash", sql=None)
@@ -5770,49 +5121,35 @@ def dedup_image_survivors(spark, sf_dir):
 def multimodal_scan_errors(spark, sf_dir):
     """Ingest-audit scan: per-payload decode status (ok / corrupt / stub
     / not_image) + stats for decodable rows, planted per doc_id class."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = spread_input(
         table(spark, sf_dir, "documents").select("doc_id")
     )
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        stub_jpg = (
-            b"\xff\xd8\xff\xc9" + (9).to_bytes(2, "big")
-            + bytes([8]) + (8).to_bytes(2, "big") * 2 + bytes([1])
-        )
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                cls = i % 6
-                if cls <= 1:
-                    px = bytes((i * 7 + k * 13) % 256 for k in range(18))
-                    enc = M.encode_png if cls == 0 else M.encode_bmp
-                    payloads.append(enc(3, 2, px))
-                elif cls == 2:
-                    px = bytes((i * 7 + k * 13) % 256 for k in range(18))
-                    payloads.append(M.encode_png(3, 2, px)[:20])
-                elif cls == 3:
-                    px = bytes((i * 7 + k * 13) % 256 for k in range(18))
-                    b = bytearray(M.encode_png(3, 2, px))
-                    b[20:24] = struct.pack(">I", 200)  # inflate IHDR height
-                    payloads.append(bytes(b))
-                elif cls == 4:
-                    payloads.append(stub_jpg)  # arithmetic SOF9: named stub
-                else:
-                    payloads.append(f"not an image {i}".encode())
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_img = d.mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
+    stub_jpg = (
+        b"\xff\xd8\xff\xc9" + (9).to_bytes(2, "big")
+        + bytes([8]) + (8).to_bytes(2, "big") * 2 + bytes([1])
     )
-    return M.scan_images(with_img)
+
+    def payload(i: int) -> bytes:
+        cls = i % 6
+        if cls <= 1:
+            px = bytes((i * 7 + k * 13) % 256 for k in range(18))
+            enc = M.encode_png if cls == 0 else M.encode_bmp
+            return enc(3, 2, px)
+        elif cls == 2:
+            px = bytes((i * 7 + k * 13) % 256 for k in range(18))
+            return M.encode_png(3, 2, px)[:20]
+        elif cls == 3:
+            px = bytes((i * 7 + k * 13) % 256 for k in range(18))
+            b = bytearray(M.encode_png(3, 2, px))
+            b[20:24] = struct.pack(">I", 200)  # inflate IHDR height
+            return bytes(b)
+        elif cls == 4:
+            return stub_jpg  # arithmetic SOF9: named stub
+        else:
+            return f"not an image {i}".encode()
+
+    return M.scan_images(_planted(d, payload))
 
 
 # Video (animated-sequence) near-dup (round 9): per-frame pHash joined
@@ -5832,84 +5169,30 @@ VIDEO_N_FRAMES = 4
 
 def video_gif_payloads(d):
     """Planted animated-GIF corpus for the video tier: doc_id frame ->
-    (doc_id, payload) via mapInPandas. Factored out of
-    ``dedup_video_phash`` (round 10, verdict r9 item 4) so
+    (doc_id, payload). Frame f of group g = doc_id div 3 is the pHash
+    image generator at seed g*VIDEO_N_FRAMES+f, members 1-2 perturbing
+    16 pixels per frame. Factored out of ``dedup_video_phash`` so
     scripts/measure_video_scale.py can MATERIALIZE the corpus to
     parquet once and measure the operator from payload inputs — the
     in-query synthesis (Python LZW encode per doc) otherwise dominates
     the SCALING row, misgrading a map-shaped operator."""
-    from collections.abc import Iterator
+    return _planted(d, lambda i: _dct_gif(i, 3))
 
-    import pandas as pd
 
-    N_FRAMES = VIDEO_N_FRAMES
+_GRAY_PALETTE = bytes(v for v in range(256) for _ in range(3))
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        W = H = 32
-        cx = np.array(
-            [[np.cos(np.pi * (2 * x + 1) * u / (2 * W)) for x in range(W)]
-             for u in range(8)]
-        )
-        cy = np.array(
-            [[np.cos(np.pi * (2 * y + 1) * p / (2 * H)) for y in range(H)]
-             for p in range(8)]
-        )
-        palette = bytes(v for v in range(256) for _ in range(3))
-        cache: dict = {}
-
-        def base(seed: int):
-            im = cache.get(seed)
-            if im is None:
-                v = (seed * 2654435761 + 97) % (2**31)
-                amps = np.zeros((8, 8))
-                for u in range(8):
-                    for p in range(8):
-                        if u == 0 and p == 0:
-                            continue
-                        v = (v * 1103515245 + 12345) % (2**31)
-                        t = v % 11 - 5
-                        if t >= 0:
-                            t += 1
-                        amps[u, p] = 3 * t
-                img = 128.0 + cy.T @ amps.T @ cx
-                im = np.clip(np.rint(img), 0, 255).astype(np.uint8)
-                if len(cache) > 1024:
-                    cache.clear()
-                cache[seed] = im
-            return im
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                g, r = divmod(i, 3)
-                frames = []
-                for f in range(N_FRAMES):
-                    im = base(g * N_FRAMES + f)
-                    if r:
-                        b = im.flatten().astype(int)
-                        for t in range(16):
-                            idx = (g * 9973 + f * 127 + t * 613
-                                   + r * 331) % 1024
-                            b[idx] = min(
-                                255,
-                                max(0, int(b[idx]) + (5 if (t + r) % 2 else -5)),
-                            )
-                        indices = list(b.astype(np.uint8))
-                    else:
-                        indices = list(im.flatten())
-                    frames.append(
-                        {"left": 0, "top": 0, "iw": 32, "ih": 32,
-                         "indices": indices, "disposal": 0,
-                         "transparent": None}
-                    )
-                payloads.append(M.encode_gif_anim(32, 32, frames, palette))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
+def _dct_gif(i: int, lo: int, hi: "int | None" = None) -> bytes:
+    """Animated 32x32 gray GIF of VIDEO_N_FRAMES planted frames: member
+    i % 3 of clip group i // 3 (see :func:`_dct_member`)."""
+    g, r = divmod(i, 3)
+    frames = [
+        {"left": 0, "top": 0, "iw": 32, "ih": 32, "disposal": 0,
+         "transparent": None,
+         "indices": list(_dct_member(g * VIDEO_N_FRAMES + f, g, r, f, lo, hi))}
+        for f in range(VIDEO_N_FRAMES)
+    ]
+    return M.encode_gif_anim(32, 32, frames, _GRAY_PALETTE)
 
 
 @query("dedup_video_phash", sql=None)
@@ -5971,86 +5254,14 @@ def dedup_video_phash(spark, sf_dir):
 
 
 def video_gif_hybrid_payloads(d):
-    """Planted animated-GIF corpus for the 128-bit video tier (round
-    10): frame f of group g is the HYBRID-amplitude generator (the
-    image tier's — 3x{±1..6} in the 8x8 DCT block, 2x{±1..6} in the
-    right half only the 128-bit hash sees) at seed g*4+f, groups of
-    three with members 1-2 perturbing 16 pixels by ±5 per frame.
-    Per-seed statistics are the image hybrid corpus's (128-bit intra
-    <= 3, inter >= 43 over 400 seeds), so d=6 keeps per-frame planted
-    recall 1 / precision 1."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    N_FRAMES = VIDEO_N_FRAMES
-
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        W = H = 32
-        cx16 = np.array(
-            [[np.cos(np.pi * (2 * x + 1) * u / (2 * W)) for x in range(W)]
-             for u in range(16)]
-        )
-        cy8 = np.array(
-            [[np.cos(np.pi * (2 * y + 1) * p / (2 * H)) for y in range(H)]
-             for p in range(8)]
-        )
-        palette = bytes(v for v in range(256) for _ in range(3))
-        cache: dict = {}
-
-        def base(seed: int):
-            im = cache.get(seed)
-            if im is None:
-                v = (seed * 2654435761 + 97) % (2**31)
-                amps = np.zeros((16, 8))  # [horizontal u, vertical p]
-                for u in range(16):
-                    for p in range(8):
-                        if u == 0 and p == 0:
-                            continue
-                        v = (v * 1103515245 + 12345) % (2**31)
-                        t = v % 11 - 5
-                        if t >= 0:
-                            t += 1
-                        amps[u, p] = (3 if u < 8 else 2) * t
-                img = 128.0 + cy8.T @ amps.T @ cx16
-                im = np.clip(np.rint(img), 0, 255).astype(np.uint8)
-                if len(cache) > 1024:
-                    cache.clear()
-                cache[seed] = im
-            return im
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                g, r = divmod(i, 3)
-                frames = []
-                for f in range(N_FRAMES):
-                    im = base(g * N_FRAMES + f)
-                    if r:
-                        b = im.flatten().astype(int)
-                        for t in range(16):
-                            idx = (g * 9973 + f * 127 + t * 613
-                                   + r * 331) % 1024
-                            b[idx] = min(
-                                255,
-                                max(0, int(b[idx]) + (5 if (t + r) % 2 else -5)),
-                            )
-                        indices = list(b.astype(np.uint8))
-                    else:
-                        indices = list(im.flatten())
-                    frames.append(
-                        {"left": 0, "top": 0, "iw": 32, "ih": 32,
-                         "indices": indices, "disposal": 0,
-                         "transparent": None}
-                    )
-                payloads.append(M.encode_gif_anim(32, 32, frames, palette))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
+    """Planted animated-GIF corpus for the 128-bit video tier: frame f
+    of group g is the HYBRID-amplitude generator (the image tier's —
+    3x{±1..6} in the 8x8 DCT block, 2x{±1..6} in the right half only
+    the 128-bit hash sees) at seed g*4+f, groups of three with members
+    1-2 perturbing 16 pixels by ±5 per frame. Per-seed statistics are
+    the image hybrid corpus's (128-bit intra <= 3, inter >= 43 over 400
+    seeds), so d=6 keeps per-frame planted recall 1 / precision 1."""
+    return _planted(d, lambda i: _dct_gif(i, 3, 2))
 
 
 # 128-bit video near-dup (round 10): the longer-signature scale path
@@ -6215,71 +5426,8 @@ def dedup_video_phash_auto(spark, sf_dir):
 def dedup_image_phash128(spark, sf_dir):
     """Near-dup image pairs via 128-bit pHash (two bigint words) +
     multi-word Hamming banding; planted-recall/precision invariants."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = spread_input(table(spark, sf_dir, "documents").select("doc_id"))
-
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        W = H = 32
-        cx16 = np.array(
-            [[np.cos(np.pi * (2 * x + 1) * u / (2 * W)) for x in range(W)]
-             for u in range(16)]
-        )
-        cy8 = np.array(
-            [[np.cos(np.pi * (2 * y + 1) * p / (2 * H)) for y in range(H)]
-             for p in range(8)]
-        )
-        cache: dict = {}
-
-        def base(g: int):
-            im = cache.get(g)
-            if im is None:
-                v = (g * 2654435761 + 97) % (2**31)
-                amps = np.zeros((16, 8))  # [horizontal u, vertical p]
-                for u in range(16):
-                    for p in range(8):
-                        if u == 0 and p == 0:
-                            continue
-                        v = (v * 1103515245 + 12345) % (2**31)
-                        t = v % 11 - 5
-                        if t >= 0:
-                            t += 1
-                        amps[u, p] = 2 * t
-                img = 128.0 + cy8.T @ amps.T @ cx16
-                im = np.clip(np.rint(img), 0, 255).astype(np.uint8)
-                if len(cache) > 512:
-                    cache.clear()
-                cache[g] = im
-            return im
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                g, r = divmod(i, 4)
-                im = base(g)
-                if r:
-                    b = im.flatten().astype(int)
-                    for t in range(16):
-                        idx = (g * 9973 + t * 613 + r * 331) % 1024
-                        b[idx] = min(
-                            255,
-                            max(0, int(b[idx]) + (5 if (t + r) % 2 else -5)),
-                        )
-                    pxb = bytes(b.astype(np.uint8))
-                else:
-                    pxb = im.tobytes()
-                payloads.append(M.encode_png(W, H, pxb, channels=1))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_img = d.mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
-    )
+    with_img = _planted(d, lambda i: _dct_png(i, 2, 2))
     sigs = M.phash128_images(with_img)
     pairs = D.hamming_pairs(
         sigs, sig_col=["phash0", "phash1"], max_hamming=6
@@ -6343,69 +5491,8 @@ def _planted_phash_hybrid_corpus(spark, sf_dir):
     u=8..15 (the 8x16 block's right half), members 1-3 perturbing 16
     pixels by ±5, PNG-gray encoded. Shared by dedup_image_phash_auto
     and the incremental image tier."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = spread_input(table(spark, sf_dir, "documents").select("doc_id"))
-
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        W = H = 32
-        cx16 = np.array(
-            [[np.cos(np.pi * (2 * x + 1) * u / (2 * W)) for x in range(W)]
-             for u in range(16)]
-        )
-        cy8 = np.array(
-            [[np.cos(np.pi * (2 * y + 1) * p / (2 * H)) for y in range(H)]
-             for p in range(8)]
-        )
-        cache: dict = {}
-
-        def base(g: int):
-            im = cache.get(g)
-            if im is None:
-                v = (g * 2654435761 + 97) % (2**31)
-                amps = np.zeros((16, 8))  # [horizontal u, vertical p]
-                for u in range(16):
-                    for p in range(8):
-                        if u == 0 and p == 0:
-                            continue
-                        v = (v * 1103515245 + 12345) % (2**31)
-                        t = v % 11 - 5
-                        if t >= 0:
-                            t += 1
-                        amps[u, p] = (3 if u < 8 else 2) * t
-                img = 128.0 + cy8.T @ amps.T @ cx16
-                im = np.clip(np.rint(img), 0, 255).astype(np.uint8)
-                if len(cache) > 512:
-                    cache.clear()
-                cache[g] = im
-            return im
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                g, r = divmod(i, 4)
-                im = base(g)
-                if r:
-                    b = im.flatten().astype(int)
-                    for t in range(16):
-                        idx = (g * 9973 + t * 613 + r * 331) % 1024
-                        b[idx] = min(
-                            255,
-                            max(0, int(b[idx]) + (5 if (t + r) % 2 else -5)),
-                        )
-                    pxb = bytes(b.astype(np.uint8))
-                else:
-                    pxb = im.tobytes()
-                payloads.append(M.encode_png(W, H, pxb, channels=1))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
+    return _planted(d, lambda i: _dct_png(i, 3, 2))
 
 
 @query("dedup_image_phash_auto", sql=None)
@@ -6532,58 +5619,27 @@ def dedup_image_incremental(spark, sf_dir):
 def multimodal_scan_audio_errors(spark, sf_dir):
     """Audio ingest-audit scan: per-payload decode status (ok / corrupt
     / stub / not_audio) + sample stats for decodable rows."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = spread_input(table(spark, sf_dir, "documents").select("doc_id"))
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def payload(i: int) -> bytes:
+        cls, n = i % 6, i % 20 + 2
+        if cls == 0:
+            vals = [(i * 13 + k * 7) % 4096 - 2048 for k in range(n)]
+            return _wav(1, 1, 16000, 32000, 2, 16, struct.pack(f"<{n}h", *vals))
+        elif cls == 1:
+            raw = bytes((i + k) % 256 for k in range(n))
+            return _wav(1, 1, 8000, 8000, 1, 8, raw)
+        elif cls == 2:  # MS-ADPCM predictor index 7: spec-malformed
+            bad = struct.pack("<Bhhh", 7, 16, 0, 0) + bytes(2)
+            return _wav(2, 1, 8000, 8000, 9, 4, bad)
+        elif cls == 3:  # MP3-in-WAV: documented stub
+            return _wav(85, 1, 8000, 8000, 1, 0, bytes(8))
+        elif cls == 4:  # 3-channel ADPCM: documented stub
+            return _wav(0x11, 3, 8000, 24000, 16, 4, bytes(16))
+        else:
+            return f"not audio {i}".encode()
 
-        def wav(tag, ch, rate, bits, data, ba):
-            fmt = struct.pack(
-                "<HHIIHH", tag, ch, rate,
-                rate * max(1, bits // 8) * max(1, ch), ba, bits,
-            )
-            body = (
-                b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-                + (b"\x00" if len(data) % 2 else b"")
-            )
-            return b"RIFF" + struct.pack("<I", len(body)) + body
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                cls, n = i % 6, i % 20 + 2
-                if cls == 0:
-                    vals = [(i * 13 + k * 7) % 4096 - 2048 for k in range(n)]
-                    payloads.append(
-                        wav(1, 1, 16000, 16, struct.pack(f"<{n}h", *vals), 2)
-                    )
-                elif cls == 1:
-                    payloads.append(
-                        wav(1, 1, 8000, 8,
-                            bytes((i + k) % 256 for k in range(n)), 1)
-                    )
-                elif cls == 2:  # MS-ADPCM predictor index 7: spec-malformed
-                    bad = struct.pack("<Bhhh", 7, 16, 0, 0) + bytes(2)
-                    payloads.append(wav(2, 1, 8000, 4, bad, 9))
-                elif cls == 3:  # MP3-in-WAV: documented stub
-                    payloads.append(wav(85, 1, 8000, 0, bytes(8), 1))
-                elif cls == 4:  # 3-channel ADPCM: documented stub
-                    payloads.append(wav(0x11, 3, 8000, 4, bytes(16), 16))
-                else:
-                    payloads.append(f"not audio {i}".encode())
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_audio = d.mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
-    )
-    return M.scan_audio(with_audio)
+    return M.scan_audio(_planted(d, payload))
 
 
 def _audio_plant_bit(m: int, k: int) -> int:
@@ -6625,42 +5681,30 @@ def _planted_audio_fp_corpus(d, content_key=None, bit_fn=None):
     size, so pair volume stays linear in the corpus — a modular key
     grows group sizes with the corpus and made the round-10 sf10
     SCALING row quadratic by construction)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     key = content_key or (lambda i: i % 40)
     bit_of = bit_fn or _audio_plant_bit
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                m, s = key(i), i % 3 + 1
-                a, amps = 2048, []
-                for k in range(65):
-                    amps.append(a)
-                    bit = 0 if k == 63 else bit_of(m, k)
-                    a += 16 if bit else -16
-                vals = []
-                for av in amps:
-                    vals += [av * s] * 4  # 65 frames x 4 samples = 260
-                if i % 2 == 0:
-                    payloads.append(M.encode_wav_pcm(16000, 1, vals, 16))
-                else:  # 24-bit transcode: exact x256 energy scale
-                    payloads.append(
-                        M.encode_wav_pcm(16000, 1, [v * 256 for v in vals], 24)
-                    )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        m, s = key(i), i % 3 + 1
+        a, amps = 2048, []
+        for k in range(65):
+            amps.append(a)
+            bit = 0 if k == 63 else bit_of(m, k)
+            a += 16 if bit else -16
+        vals = []
+        for av in amps:
+            vals += [av * s] * 4  # 65 frames x 4 samples = 260
+        if i % 2 == 0:
+            return M.encode_wav_pcm(16000, 1, vals, 16)
+        else:  # 24-bit transcode: exact x256 energy scale
+            return M.encode_wav_pcm(16000, 1, [v * 256 for v in vals], 24)
 
-    return d.mapInPandas(make_payloads, schema="doc_id long, payload binary")
+    return _planted(d, payload)
 
 
 # Perceptual AUDIO dedup, EXACT tier (round 10, verdict r9 item 3): the
 # audio analogue of dedup_image_dhash — energy-delta fingerprint
-# (operators/multimodal.py::audio_fp64, Haitsma-Kalker family) over
+# (operators/multimodal.py::audio_fp_words, Haitsma-Kalker family) over
 # planted piecewise-stationary PCM, where the planted amplitude-walk
 # comparison pattern IS the fingerprint. Duplicates are TRANSCODED
 # copies: amplitude scale x(doc_id%3+1) and alternating 16-bit /
@@ -6712,54 +5756,19 @@ def dedup_audio_near(spark, sf_dir):
     """Near-dup audio pairs via energy-delta fingerprint + Hamming
     banding over planted resampled/float-transcoded duplicates;
     planted-recall/precision invariants in inv_ok."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def base_samples(g: int) -> "list[int]":
-            v = (g * 2654435761 + 97) % (2**31)
-            a, x = 2048, []
-            for _ in range(65):
-                x += [a] * 40
-                v = (v * 1103515245 + 12345) % (2**31)
-                a += 16 if (v >> 16) & 1 else -16
-            return x
+    def base_samples(g: int) -> "list[int]":
+        v = (g * 2654435761 + 97) % (2**31)
+        a, x = 2048, []
+        for _ in range(65):
+            x += [a] * 40
+            v = (v * 1103515245 + 12345) % (2**31)
+            a += 16 if (v >> 16) & 1 else -16
+        return x
 
-        def resample(x, in_rate, out_rate):
-            nf = len(x)
-            out = []
-            for j in range((nf * out_rate) // in_rate):
-                pos = j * in_rate
-                p, rem = pos // out_rate, pos % out_rate
-                p1 = min(p + 1, nf - 1)
-                num = x[p] * (out_rate - rem) + x[p1] * rem
-                out.append(
-                    num // out_rate if num >= 0 else -((-num) // out_rate)
-                )
-            return out
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                g, r = divmod(i, 3)
-                x = base_samples(g)
-                if r == 0:
-                    payloads.append(M.encode_wav_pcm(12000, 1, x, 16))
-                elif r == 1:
-                    payloads.append(
-                        M.encode_wav_pcm(8000, 1, resample(x, 12000, 8000), 16)
-                    )
-                else:
-                    payloads.append(M.encode_wav_pcm(12000, 1, x, 32))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_audio = spread_input(d).mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
+    with_audio = _planted(
+        spread_input(d), lambda i: _near_audio(base_samples(i // 3), i % 3)
     )
     sigs = M.fingerprint_audio(with_audio)
     pairs = D.hamming_pairs(sigs, sig_col="afp", max_hamming=4)
@@ -6860,6 +5869,17 @@ def dedup_audio_incremental(spark, sf_dir):
     return pairs.select("new_id", "corpus_id")
 
 
+def _near_audio(x: "list[int]", r: int) -> bytes:
+    """Member r of a planted near-dup audio group over the 12 kHz base
+    samples ``x``: 0 is s16 as is, 1 is linear-resampled to 8 kHz (the
+    integer math of resample_audio_linear), 2 is float32 re-encoded."""
+    if r == 0:
+        return M.encode_wav_pcm(12000, 1, x, 16)
+    if r == 1:
+        return M.encode_wav_pcm(8000, 1, M.resample_linear(x, 1, 12000, 8000), 16)
+    return M.encode_wav_pcm(12000, 1, x, 32)
+
+
 def _audio_129_base(g: int) -> "list[int]":
     """129-plateau amplitude walk (40 samples each, splitmix bits —
     full-entropy in g, see _audio_plant_bit_mix) — the planted content
@@ -6886,45 +5906,9 @@ def dedup_audio_near128(spark, sf_dir):
     """Near-dup audio pairs via the 128-bit (two-word) energy-delta
     fingerprint + multi-word Hamming banding over planted resampled /
     float-transcoded duplicates; planted invariants in inv_ok."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
-
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def resample(x, in_rate, out_rate):
-            nf = len(x)
-            out = []
-            for j in range((nf * out_rate) // in_rate):
-                pos = j * in_rate
-                p, rem = pos // out_rate, pos % out_rate
-                p1 = min(p + 1, nf - 1)
-                num = x[p] * (out_rate - rem) + x[p1] * rem
-                out.append(
-                    num // out_rate if num >= 0 else -((-num) // out_rate)
-                )
-            return out
-
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                g, r = divmod(i, 3)
-                x = _audio_129_base(g)
-                if r == 0:
-                    payloads.append(M.encode_wav_pcm(12000, 1, x, 16))
-                elif r == 1:
-                    payloads.append(
-                        M.encode_wav_pcm(8000, 1, resample(x, 12000, 8000), 16)
-                    )
-                else:
-                    payloads.append(M.encode_wav_pcm(12000, 1, x, 32))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    with_audio = spread_input(d).mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
+    with_audio = _planted(
+        spread_input(d), lambda i: _near_audio(_audio_129_base(i // 3), i % 3)
     )
     sigs = M.fingerprint_audio_multi(with_audio)
     pairs = D.hamming_pairs(sigs, sig_col=["afp0", "afp1"], max_hamming=4)
@@ -6984,35 +5968,19 @@ def dedup_audio_auto(spark, sf_dir):
     """Width-routed audio dedup: one metadata count routes 64-bit vs
     128-bit fingerprints over planted transcoded duplicates (exactly
     invariant under both widths); planted invariants in inv_ok."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def make_payloads(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                g, r = divmod(i, 3)
-                x = _audio_129_base(g)
-                if r == 0:
-                    payloads.append(M.encode_wav_pcm(12000, 1, x, 16))
-                elif r == 1:  # amplitude x3: energies x9, exact invariance
-                    payloads.append(
-                        M.encode_wav_pcm(12000, 1, [3 * v for v in x], 16)
-                    )
-                else:  # 24-bit transcode: x256, exact invariance
-                    payloads.append(
-                        M.encode_wav_pcm(12000, 1, [256 * v for v in x], 24)
-                    )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def payload(i: int) -> bytes:
+        g, r = divmod(i, 3)
+        x = _audio_129_base(g)
+        if r == 0:
+            return M.encode_wav_pcm(12000, 1, x, 16)
+        elif r == 1:  # amplitude x3: energies x9, exact invariance
+            return M.encode_wav_pcm(12000, 1, [3 * v for v in x], 16)
+        else:  # 24-bit transcode: x256, exact invariance
+            return M.encode_wav_pcm(12000, 1, [256 * v for v in x], 24)
 
-    with_audio = spread_input(d).mapInPandas(
-        make_payloads, schema="doc_id long, payload binary"
-    )
+    with_audio = _planted(spread_input(d), payload)
     pairs = M.audio_pairs_auto(with_audio, n_hint=d.count())
     found = pairs.withColumn(
         "same_grp", F.expr("(a_id div 3) = (b_id div 3)")

@@ -60,6 +60,15 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_tickstore_upsert_and_delete",
         "test_tickstore_streaming_merge_ingestion",
         "test_tickstore_full_lifecycle_integration",
+        # the payload operators: every one now maps its payloads through
+        # the single per-payload row map (multimodal._map_payloads)
+        "test_multimodal_stub_contract",
+        "test_decode_image_meta_real_headers",
+        "test_wav_header_parse_and_decode",
+        "test_resize_images_null_propagates",
+        "test_phash_pairs_auto_routes_both_widths",
+        "test_video_pairs_auto_routes_both_widths",
+        "test_audio_pairs_auto_routes_both_widths",
     },
     "test_snapshots.py": {
         # append_split landed this round (stream_cdf_partitioned path)
