@@ -18,6 +18,10 @@ Everything is built from JVM-side higher-order functions (split/transform/
 aggregate/xxhash64); no Python in the hot path. At 100 TB the only shuffles
 are groupBy(hash) and the band-bucket self-joins, each keyed well-distributed
 by construction.
+
+The MinHash and Hamming tiers share one band join (:func:`_band_join`), run
+as a self-join over one corpus or bipartite between a new batch and a stored
+signature table, with one measured build-side choice (:func:`_sized_build`).
 """
 
 from __future__ import annotations
@@ -94,6 +98,181 @@ def minhash_signature(
     )
 
 
+# Build sides whose MEASURED size stays under this many bytes keep
+# Catalyst's (locally faster) broadcast plan, or are broadcast on request.
+_BROADCAST_MAX_BYTES = 48 * 1024 * 1024
+
+
+def _exchange_parts(d: DataFrame, nbytes: float) -> int:
+    """Partition count that gives ~32 MiB of build side per partition: a
+    shuffle-hash relation must fit in one task's execution memory."""
+    return max(
+        d.sparkSession.sparkContext.defaultParallelism,
+        int(nbytes // (32 * 1024 * 1024)) + 1,
+    )
+
+
+def _sized_build(
+    build: DataFrame, keys: "list[str]", nbytes: float, broadcast: bool = False
+) -> "tuple[DataFrame, int | None]":
+    """The measured broadcast-or-sized-shuffle choice of a join's build side.
+
+    A localCheckpointed frame INHERITS the originating plan's size estimate
+    (for the text tier: the compressed parquet bytes of the documents scan),
+    which undercounts exploded shingle arrays and banded rows by orders of
+    magnitude, so Catalyst cannot be trusted with the broadcast decision:
+    at sf30 it broadcast the shingle-bearing verification side off that
+    estimate and the driver collect blew spark.driver.maxResultSize (1.2
+    GiB of task results). Callers pass ``nbytes`` measured with one
+    aggregate over the materialized checkpoint. At or under the threshold
+    the side is left to Catalyst, or broadcast when ``broadcast``. Past it
+    the side is pinned to shuffle_hash over a partition count sized from
+    those bytes: at the session default of 32 partitions the sf30 shingle
+    side needed ~134 MB builds and aborted, while sort-merge (which
+    spills) measured 6x slower at sf10 because it sorts the full array
+    payloads. Returns the side and the partition count (None when small).
+    """
+    if nbytes <= _BROADCAST_MAX_BYTES:
+        return (F.broadcast(build) if broadcast else build), None
+    n = _exchange_parts(build, nbytes)
+    return build.repartition(n, *keys).hint("shuffle_hash"), n
+
+
+def _band_join(
+    a: DataFrame,
+    b: DataFrame,
+    keys: "list[str]",
+    nbytes: float,
+    bipartite: bool = False,
+    within: "list[str]" = (),
+) -> DataFrame:
+    """The near-dup band join: rows of ``a`` (``a_id``, payload, ``keys``)
+    and ``b`` (``b_id``, payload, ``keys``) that share a band key, as one
+    (*within, a_id, b_id, *a payload, *b payload) row per pair. Only
+    same-bucket rows ever meet — no crossJoin anywhere.
+
+    Self-join (``a`` and ``b`` band the same rows): keeps a_id < b_id and
+    ``b`` is the build side. Bipartite (``a`` a new batch, ``b`` the
+    corpus): keeps a_id != b_id and the NEW batch is the build side —
+    broadcast while small (zero corpus shuffle); past the threshold the
+    partition count is sized from the new batch's bytes, so per-partition
+    builds are ~32 MiB by construction, and the corpus streams as the
+    probe side. Making the corpus the build side instead would scale each
+    build with corpus/batch, which in the incremental regime (corpus >>
+    batch) can exceed task execution memory. ``nbytes``: the measured
+    bytes of the build side (see :func:`_sized_build`).
+    """
+    if bipartite:
+        a, n = _sized_build(a, keys, nbytes, broadcast=True)
+        if n is not None:
+            b = b.repartition(n, *keys)
+        keep = F.col("a_id") != F.col("b_id")
+    else:
+        b, _ = _sized_build(b, keys, nbytes)
+        keep = F.col("a_id") < F.col("b_id")
+    a_pay = [c for c in a.columns if c != "a_id" and c not in keys]
+    b_pay = [c for c in b.columns if c != "b_id" and c not in keys]
+    return (
+        a.join(b, keys)
+        .filter(keep)
+        .select(*within, "a_id", "b_id", *a_pay, *b_pay)
+        .dropDuplicates([*within, "a_id", "b_id"])
+    )
+
+
+def _jaccard(a: str, b: str, na=None, nb=None):
+    """Jaccard of two distinct-element arrays as |A∩B| / (|A| + |B| -
+    |A∩B|): O(1) size lookups instead of materializing a union array per
+    candidate pair — identical integer operands, identical double. ``na``
+    and ``nb`` are precomputed set sizes (default: the array sizes).
+    nullif: two empty sets give a 0-size union, which ANSI mode would
+    abort on; NULL drops the pair, mirroring DuckDB."""
+    inter = F.size(F.array_intersect(a, b))
+    union = (F.size(a) if na is None else na) + (F.size(b) if nb is None else nb)
+    return inter / F.nullif(union - inter, F.lit(0))
+
+
+def _minhash_bands(
+    sig: DataFrame, id_col: str, alias: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """(alias, band_id, band_hash) rows from a ``sig`` column: band b
+    hashes signature slots [b*rows, (b+1)*rows) — pure arithmetic over
+    the fixed-width signature, no text access."""
+    rows = num_hashes // bands
+    return sig.select(
+        F.col(id_col).alias(alias),
+        F.posexplode(
+            F.expr(
+                f"""transform(sequence(0, {bands - 1}),
+                              b -> xxhash64(concat_ws(',',
+                                   transform(slice(sig, b * {rows} + 1, {rows}),
+                                             x -> CAST(x AS STRING)))))"""
+            )
+        ).alias("band_id", "band_hash"),
+    )
+
+
+def _minhash_pairs(
+    sig: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    corpus: "DataFrame | None" = None,
+) -> DataFrame:
+    """MinHash pairs from an already materialized (id, shingles, sig)
+    frame: LSH banding, then true shingle Jaccard on the candidates only.
+
+    Without ``corpus`` this is the self-join, returning (a_id, b_id,
+    jaccard) with a_id < b_id. With ``corpus`` (a stored signature table
+    of the same layout and band parameters) it is the bipartite join,
+    returning (new_id, corpus_id, jaccard). ``sig`` feeds the band join
+    AND the verification join-back, so it must be checkpointed (or
+    otherwise materialized) by the caller.
+
+    Candidate generation is ID-ONLY: shingle arrays never ride through the
+    band join or the pair-dedup exchange (at 100 TB that exchange would
+    otherwise carry two full shingle arrays per pre-dedup candidate row).
+    Verification joins shingle sets back on the deduplicated id pairs
+    only. One aggregate over ``sig`` measures the real bytes (count +
+    total shingle elements, ~24 B each) for every build-side choice; the
+    corpus side of the bipartite join is a parquet scan whose estimate
+    Catalyst can use as is.
+    """
+    st = sig.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.size("shingles")).alias("el"),
+    ).first()
+    nbytes = (st["el"] or 0) * 24 + (st["n"] or 0) * 16
+    bipartite = corpus is not None
+    other = corpus if bipartite else sig
+    cand = _band_join(
+        _minhash_bands(sig, id_col, "a_id", num_hashes, bands),
+        _minhash_bands(other, id_col, "b_id", num_hashes, bands),
+        ["band_id", "band_hash"],
+        nbytes,
+        bipartite=bipartite,
+    )
+
+    def shingle_side(d: DataFrame, side: str, measured: bool) -> DataFrame:
+        s = d.select(
+            F.col(id_col).alias(f"{side}_id"), F.col("shingles").alias(f"{side}_sh")
+        )
+        return _sized_build(s, [f"{side}_id"], nbytes)[0] if measured else s
+
+    jac = (
+        cand.join(shingle_side(sig, "a", True), "a_id")
+        .join(shingle_side(other, "b", not bipartite), "b_id")
+        .withColumn("jaccard", _jaccard("a_sh", "b_sh"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+    if bipartite:
+        return jac.select(
+            F.col("a_id").alias("new_id"), F.col("b_id").alias("corpus_id"), "jaccard"
+        )
+    return jac.select("a_id", "b_id", "jaccard")
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -113,17 +292,12 @@ def minhash_lsh_pairs(
     joins shingle sets back on the candidate ids only. No crossJoin anywhere.
     Returns (a_id, b_id, jaccard) with a_id < b_id, jaccard >= threshold.
 
-    ``return_sig`` (round 11, guide §2.4 — share the materialized stage):
-    also return the eagerly checkpointed (id, shingles, sig) frame as a
-    second element, so callers needing another shingle-derived pass (e.g.
-    dedup_minhash's identical-shingle-set invariant subset) read the
-    checkpoint instead of re-tokenizing and re-hashing the corpus text.
+    ``return_sig``: also return the eagerly checkpointed (id, shingles,
+    sig) frame as a second element, so callers needing another
+    shingle-derived pass (e.g. dedup_minhash's identical-shingle-set
+    invariant subset) read the checkpoint instead of re-tokenizing and
+    re-hashing the corpus text.
     """
-    rows = num_hashes // bands
-    # Signature hashing is CPU-bound — spread a narrow local scan across all
-    # cores first; on a well-partitioned cluster input spread_input is a
-    # no-op (see operators/spread.py).
-    src = spread_input(df)
     # Materialize the shingle+signature stage ONCE (eager localCheckpoint:
     # runs a job now, truncates lineage). It feeds FOUR consumers — both
     # sides of the banded self-join and both sides of the verification
@@ -131,102 +305,10 @@ def minhash_lsh_pairs(
     # per consumer (measured 11s vs 3s at sf0.1). At 100 TB write the
     # signature table to durable storage instead: localCheckpoint blocks
     # live on executors and cannot survive executor loss.
-    sig = minhash_signature(shingles(src, text, k), "shingles", num_hashes)
-    sig = sig.localCheckpoint(eager=True)
-    # Candidate generation is ID-ONLY: shingle arrays never ride through the
-    # band join or the pair-dedup exchange (at 100 TB that exchange would
-    # otherwise carry two full shingle arrays per pre-dedup candidate row).
-    banded = sig.select(
-        F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"""transform(sequence(0, {bands - 1}),
-                              b -> xxhash64(concat_ws(',',
-                                   transform(slice(sig, b * {rows} + 1, {rows}),
-                                             x -> CAST(x AS STRING)))))"""
-            )
-        ).alias("band_id", "band_hash"),
+    sig = minhash_signature_table(df, id_col, text, k, num_hashes).localCheckpoint(
+        eager=True
     )
-    # Every build side below scales WITH THE CORPUS — but a
-    # localCheckpointed frame INHERITS the originating plan's size
-    # estimate (here: the compressed parquet bytes of the documents
-    # scan), which undercounts the exploded shingle arrays by orders of
-    # magnitude, so Catalyst CANNOT be trusted with the broadcast
-    # decision. At sf30 it broadcast the shingle-bearing verification
-    # side off that estimate and the driver collect blew
-    # spark.driver.maxResultSize (1.2 GiB of task results — caught by
-    # the round-9 sf30 scale run). The guard below measures the REAL
-    # size with one aggregate over the already-materialized checkpoint
-    # (count + total shingle elements, ~24 B each) and, once the true
-    # bytes approach the broadcast threshold, pins shuffle_hash with a
-    # partition count SIZED FROM THOSE BYTES (~32 MB of build side per
-    # partition): a shuffle-hash relation must fit in one task's
-    # execution memory — at the session default of 32 partitions the
-    # sf30 shingle side needed ~134 MB builds and aborted, while
-    # sort-merge (which spills) measured 6x slower at sf10 because it
-    # sorts the full array payloads. Sizing the exchange to the data is
-    # the fix, not changing the algorithm. Small corpora keep
-    # Catalyst's (locally faster) broadcast plan.
-    st = sig.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size("shingles")).alias("el"),
-    ).first()
-    real_bytes = (st["el"] or 0) * 24 + (st["n"] or 0) * 16
-    big = real_bytes > 48 * 1024 * 1024
-    if big:
-        nparts = max(
-            df.sparkSession.sparkContext.defaultParallelism,
-            int(real_bytes // (32 * 1024 * 1024)) + 1,
-        )
-
-        def pin(d: DataFrame, *keys: str) -> DataFrame:
-            return d.repartition(nparts, *keys).hint("shuffle_hash")
-
-    else:
-
-        def pin(d: DataFrame, *keys: str) -> DataFrame:
-            return d
-
-    a = banded.select(F.col(id_col).alias("a_id"), "band_id", "band_hash")
-    b = banded.select(F.col(id_col).alias("b_id"), "band_id", "band_hash")
-    cand = (
-        a.join(pin(b, "band_id", "band_hash"), ["band_id", "band_hash"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    # Verification joins shingle sets back on the deduped id pairs only —
-    # two hash joins keyed by fixed-width ids, reading the checkpointed
-    # signature table (no recompute).
-    sh = sig.select(F.col(id_col), F.col("shingles"))
-    jac = (
-        cand.join(
-            pin(sh.select(F.col(id_col).alias("a_id"),
-                          F.col("shingles").alias("a_sh")), "a_id"),
-            "a_id",
-        )
-        .join(
-            pin(sh.select(F.col(id_col).alias("b_id"),
-                          F.col("shingles").alias("b_sh")), "b_id"),
-            "b_id",
-        )
-        .withColumn(
-            # nullif: two token-less docs give a 0-size union — ANSI mode
-            # would abort the job; NULL drops the pair, mirroring DuckDB.
-            # |A∪B| = |A| + |B| - |A∩B| (distinct shingle sets, round 11):
-            # O(1) length lookups instead of materializing a union array
-            # per candidate pair — identical integer operands, identical
-            # double.
-            "jaccard",
-            F.size(F.array_intersect("a_sh", "b_sh"))
-            / F.nullif(
-                F.size("a_sh") + F.size("b_sh")
-                - F.size(F.array_intersect("a_sh", "b_sh")),
-                F.lit(0),
-            ),
-        )
-    )
-    out = jac.filter(F.col("jaccard") >= threshold).select("a_id", "b_id", "jaccard")
+    out = _minhash_pairs(sig, id_col, num_hashes, bands, threshold)
     if return_sig:
         return out, sig.select(F.col(id_col).alias("doc_id"), "shingles", "sig")
     return out
@@ -247,27 +329,13 @@ def minhash_signature_table(
     the ``minhash_lsh_pairs`` docstring promises at 100 TB, where the
     corpus signature scan is a fraction of the corpus text scan and the
     hashing CPU is paid exactly once per document ever ingested.
+    Signature hashing is CPU-bound, so a narrow local scan is spread
+    across all cores first (a no-op on a well-partitioned cluster input;
+    see operators/spread.py).
     """
     return minhash_signature(
         shingles(spread_input(df), text, k), "shingles", num_hashes
     ).select(F.col(id_col), "shingles", "sig")
-
-
-def _band_explode(df: DataFrame, id_alias: str, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band_id, band_hash) rows derived from a stored ``sig`` column —
-    pure arithmetic over the fixed-width signature, no text access."""
-    rows = num_hashes // bands
-    return df.select(
-        F.col("doc_id").alias(id_alias),
-        F.posexplode(
-            F.expr(
-                f"""transform(sequence(0, {bands - 1}),
-                              b -> xxhash64(concat_ws(',',
-                                   transform(slice(sig, b * {rows} + 1, {rows}),
-                                             x -> CAST(x AS STRING)))))"""
-            )
-        ).alias("band_id", "band_hash"),
-    )
 
 
 def incremental_neardup(
@@ -282,12 +350,12 @@ def incremental_neardup(
     bands: int = 8,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """THE incremental near-dup entry point (round 11, verdict r10 item
-    6) — one documented shape for the posture every daily-ingest tier
-    shares: the corpus persists its signatures ONCE; a new batch signs
-    only its own payloads and joins against the parquet signature table.
-    Corpus text/bytes are never re-read on the incremental pass
-    (plan-asserted in tests/test_plans.py for all three bindings).
+    """THE incremental near-dup entry point — one documented shape for the
+    posture every daily-ingest tier shares: the corpus persists its
+    signatures ONCE; a new batch signs only its own payloads and joins
+    against the parquet signature table. Corpus text/bytes are never
+    re-read on the incremental pass (plan-asserted in tests/test_plans.py
+    for all three bindings).
 
     ``signer``: DataFrame -> signature frame, applied to the NEW batch
     only (``minhash_signature_table``, ``multimodal.phash128_images``,
@@ -295,13 +363,13 @@ def incremental_neardup(
     ``signature_table`` — typically ``spark.read.parquet(...)`` over the
     table a previous run of the same signer wrote.
 
-    Two verification families, picked by which parameter is passed:
+    Two verification families, picked by which parameter is passed; both
+    are the bipartite form of their tier's band join:
 
     - **Hamming tiers** (image pHash, audio fingerprint, SimHash): pass
       ``sig_col`` (one or more bigint signature words) + ``max_hamming``
-      -> :func:`hamming_join` (bipartite pigeonhole banding; d=0 is an
-      exact-match band join — the transcode-dedup operator). Returns
-      (new_id, corpus_id, hamming).
+      -> :func:`hamming_join` (d=0 is an exact-match band join — the
+      transcode-dedup operator). Returns (new_id, corpus_id, hamming).
     - **MinHash/Jaccard text tier**: pass ``threshold`` -> banded
       signature equi-join + true-Jaccard verification over the STORED
       shingle arrays (band params must match the ones the table was
@@ -318,45 +386,9 @@ def incremental_neardup(
             new_sigs, signature_table,
             id_col=id_col, sig_col=sig_col, max_hamming=max_hamming,
         )
-    # MinHash/Jaccard path — feeds the band join AND the verification
-    # join-back; materialize once
-    new_sig = new_sigs.localCheckpoint(eager=True)
-    nb = _band_explode(new_sig.withColumnRenamed(id_col, "doc_id"), "new_id", num_hashes, bands)
-    cb = _band_explode(
-        signature_table.withColumnRenamed(id_col, "doc_id"), "corpus_id", num_hashes, bands
-    )
-    cand = (
-        nb.join(cb, ["band_id", "band_hash"])
-        .filter(F.col("new_id") != F.col("corpus_id"))
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    jac = (
-        cand.join(
-            new_sig.select(F.col(id_col).alias("new_id"), F.col("shingles").alias("n_sh")),
-            "new_id",
-        )
-        .join(
-            signature_table.select(
-                F.col(id_col).alias("corpus_id"), F.col("shingles").alias("c_sh")
-            ),
-            "corpus_id",
-        )
-        .withColumn(
-            # |A∪B| via sizes (round 11) — shingle columns are distinct
-            # sets by the shingles() construction both here and in the
-            # persisted signature table; identical doubles
-            "jaccard",
-            F.size(F.array_intersect("n_sh", "c_sh"))
-            / F.nullif(
-                F.size("n_sh") + F.size("c_sh")
-                - F.size(F.array_intersect("n_sh", "c_sh")),
-                F.lit(0),
-            ),
-        )
-    )
-    return jac.filter(F.col("jaccard") >= threshold).select(
-        "new_id", "corpus_id", "jaccard"
+    return _minhash_pairs(
+        new_sigs.localCheckpoint(eager=True), id_col, num_hashes, bands,
+        threshold, corpus=signature_table,
     )
 
 
@@ -408,16 +440,22 @@ def simhash(df: DataFrame, text: str = "text", out: str = "simhash") -> DataFram
     toks = tokenize(df, text, "_toks").withColumn(
         "_th", F.expr("transform(_toks, t -> xxhash64(t))")
     )
-    bits = F.expr(
-        """aggregate(
+    return toks.withColumn(out, _simhash_lane("_th")).drop("_toks", "_th")
+
+
+def _simhash_lane(th: str):
+    """One 64-bit Charikar lane over the token-hash array column ``th``:
+    bit k is set iff 2 * (hashes with bit k set) > (number of hashes),
+    each bit an independent primitive long fold over the hash array."""
+    return F.expr(
+        f"""aggregate(
                transform(sequence(0, 63),
-                         k -> IF(2 * aggregate(_th, 0L,
+                         k -> IF(2 * aggregate({th}, 0L,
                                                (a, h) -> a + (shiftright(h, k) & 1L))
-                                     > size(_th),
+                                     > size({th}),
                                  shiftleft(1L, k), 0L)),
                0L, (a, x) -> a | x)"""
     )
-    return toks.withColumn(out, bits).drop("_toks", "_th")
 
 
 def simhash_pairs(
@@ -442,7 +480,7 @@ def simhash_words(
     df: DataFrame, text: str = "text", words: int = 2,
     prefix: str = "simhash",
 ) -> DataFrame:
-    """Multi-word SimHash (round 10, verdict r9 item 6): ``words``
+    """Multi-word SimHash: ``words``
     independent 64-bit Charikar lanes, lane w voting over the salted
     token hashes xxhash64(token, w+1) — independent hash families, so
     the concatenation is a true 64*W-bit SimHash. Same primitive-long
@@ -460,24 +498,13 @@ def simhash_words(
     maps to 128-bit d=10, giving 128//11 = 11-bit chunks where 64-bit
     d=6 gives 9 — ~4x fewer chance band collisions at ≫10^6 docs,
     with a tighter (lower-false-positive) candidate set."""
-    toks = tokenize(df, text, "_toks")
-    lanes = {}
+    out = tokenize(df, text, "_toks")
     for w in range(words):
-        toks = toks.withColumn(
+        out = out.withColumn(
             f"_th{w}", F.expr(f"transform(_toks, t -> xxhash64(t, {w + 1}))")
         )
-        lanes[f"{prefix}{w}"] = F.expr(
-            f"""aggregate(
-                   transform(sequence(0, 63),
-                             k -> IF(2 * aggregate(_th{w}, 0L,
-                                                   (a, h) -> a + (shiftright(h, k) & 1L))
-                                         > size(_th{w}),
-                                     shiftleft(1L, k), 0L)),
-                   0L, (a, x) -> a | x)"""
-        )
-    out = toks
-    for name, expr in lanes.items():
-        out = out.withColumn(name, expr)
+    for w in range(words):
+        out = out.withColumn(f"{prefix}{w}", _simhash_lane(f"_th{w}"))
     return out.drop("_toks", *[f"_th{w}" for w in range(words)])
 
 
@@ -502,6 +529,43 @@ def simhash_pairs_multi(
     )
 
 
+def _span_expr(cols: "list[str]", s0: int, w_bits: int) -> str:
+    """The Hamming band-key extractor: bits [s0, s0 + w_bits) of a
+    64*W-bit signature stored as the bigint words ``cols`` (word i
+    carries bits [64*i, 64*i+64), LSB-first). A span may straddle word
+    boundaries; extraction composes the words with shift/mask
+    expressions, all JVM-side."""
+    parts = []
+    for w, c in enumerate(cols):
+        lo, hi = max(s0, w * 64), min(s0 + w_bits, (w + 1) * 64)
+        if lo >= hi:
+            continue
+        mask = (1 << (hi - lo)) - 1
+        part = f"(shiftright({c}, {lo - w * 64}) & {mask}L)"
+        if lo - s0:
+            part = f"shiftleft({part}, {lo - s0})"
+        parts.append(part)
+    return "(" + " | ".join(parts) + ")"
+
+
+def _sig_notnull(cols: "list[str]"):
+    """Every signature word present: null signatures (undecodable payloads
+    upstream) are dropped, not joined."""
+    cond = F.lit(True)
+    for c in cols:
+        cond = cond & F.col(c).isNotNull()
+    return cond
+
+
+def _hamming(a_cols: "list[str]", b_cols: "list[str]"):
+    """Hamming distance between two signatures stored as bigint words."""
+    dist = None
+    for a, b in zip(a_cols, b_cols):
+        term = F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
+        dist = term if dist is None else dist + term
+    return dist
+
+
 def hamming_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -511,68 +575,111 @@ def hamming_pairs(
     scheme: str = "auto",
 ) -> DataFrame:
     """Generic Hamming-ball self-join over a 64*W-bit signature stored
-    as W bigint columns (round 9: factored out of :func:`simhash_pairs`
-    so the perceptual image hashes — dHash/pHash,
-    operators/multimodal.py — reuse the same scale shape). Pigeonhole
-    banding: split the signature into max_hamming+1 chunks; any pair
-    within distance d agrees exactly on >= 1 chunk, so candidates are
-    an equi-join on (chunk_id, chunk_val) — never a crossJoin, and at
-    100 TB the shuffle carries only (id, signature) rows fanned out d+1
-    ways. Null signatures (undecodable payloads upstream) are dropped,
-    not joined. The (id, sig) projection is localCheckpointed first:
-    the self-join reads it from BOTH sides, and the upstream is
-    typically a full binary decode (pHash over a 100 TB image corpus)
-    that must run once, not twice — the checkpoint holds ~16-24
-    bytes/row (measured on the image tier: pairs stage 8.1s -> 2.3s at
-    sf0.01).
+    as W bigint columns — the scale shape shared by SimHash
+    (:func:`simhash_pairs`) and the perceptual image/audio hashes
+    (operators/multimodal.py). Pigeonhole banding: split the signature
+    into max_hamming+1 chunks; any pair within distance d agrees exactly
+    on >= 1 chunk, so candidates are an equi-join on (chunk_id,
+    chunk_val) — never a crossJoin, and at 100 TB the shuffle carries
+    only (id, signature) rows fanned out d+1 ways. Null signatures
+    (undecodable payloads upstream) are dropped, not joined. The (id,
+    sig) projection is localCheckpointed first: the self-join reads it
+    from BOTH sides, and the upstream is typically a full binary decode
+    (pHash over a 100 TB image corpus) that must run once, not twice —
+    the checkpoint holds ~16-24 bytes/row (measured on the image tier:
+    pairs stage 8.1s -> 2.3s at sf0.01).
 
     ``sig_col`` may be a LIST of bigint columns forming one long
     signature (column i carries bits [64*i, 64*i+64), LSB-first within
     each word) — the scale answer when chance bucket collisions bite:
     band width is 64*W // (d+1), so a 128-bit signature at d=4 gives
     25-bit bands (33M buckets) where 64-bit gives 12-bit ones (4k).
-    Chunks may straddle word boundaries; extraction composes the words
-    with shift/mask expressions, all JVM-side.
 
     ``within``: optional extra equality columns added to the band join
     key — only rows agreeing on ALL of them can pair (aligned video
     frame index, language shard, tenant). Returned alongside the pair.
     Returns (*within, a_id, b_id, hamming).
 
-    ``scheme`` (round 10/11): ``"chunk"`` is the d+1-chunk pigeonhole
-    above; ``"pair"`` is COMBINATION banding (Manku/Jain/Sarma, WWW
-    2007 — public knowledge): split into b = d+2 blocks — any pair
-    within d differs in <= d blocks, so >= 2 blocks agree — and key on
-    every PAIR of blocks: C(d+2, 2) tables of DOUBLE-width keys. For
-    estimator-type signatures (SimHash), the Hamming cut d scales with
-    the bit count, so chunk width 64W//(d+1) is ~constant no matter
-    how long the signature — combination banding is the fix there:
-    64-bit d=6 goes from 9-bit chunks (512 buckets — measured 2.19
-    BILLION candidates over 500k real-text docs at sf10, aborting on
-    70 GB of spill) to 16-bit pair keys (65k buckets, ~40x fewer
-    candidates) for a 4x explode-factor cost.
+    ``scheme``: ``"chunk"`` is the d+1-chunk pigeonhole above;
+    ``"pair"`` is COMBINATION banding (Manku/Jain/Sarma, WWW 2007 —
+    public knowledge): split into b = d+2 blocks — any pair within d
+    differs in <= d blocks, so >= 2 blocks agree — and key on every PAIR
+    of blocks: C(d+2, 2) tables of DOUBLE-width keys. For estimator-type
+    signatures (SimHash), the Hamming cut d scales with the bit count, so
+    chunk width 64W//(d+1) is ~constant no matter how long the signature
+    — combination banding is the fix there: 64-bit d=6 goes from 9-bit
+    chunks (512 buckets — measured 2.19 BILLION candidates over 500k
+    real-text docs at sf10, aborting on 70 GB of spill) to 16-bit pair
+    keys (65k buckets, ~40x fewer candidates) for a 4x explode-factor
+    cost.
 
-    ``"triple"`` (round 11, verdict r10 item 2) is the next rung of the
-    same family: b = d+3 blocks — any pair within d agrees on >= 3
-    blocks — keyed on every TRIPLE of blocks: C(d+3, 3) tables of
-    TRIPLE-width keys. The chance-candidate term drops from
-    n^2*C(d+2,2)/2^(2w) to n^2*C(d+3,3)/2^(3w') (128-bit d=10: 66
-    tables of 20-bit keys -> 286 tables of 27-bit keys, ~30x fewer
-    chance collisions) for a ~4.3x explode-factor cost — the trade
-    that wins only once n^2 dominates, which is exactly when the
-    measured probe escalates (SCALING.md sf30: the pair scheme went
-    superlinear at 1.5M docs, 426-570s). Because the explode factor is
-    large, the triple path bands (id, key) rows ONLY and joins the
-    signature words back onto the deduplicated candidate set — banded
-    rows carry no signature payload.
+    ``"triple"`` is the next rung of the same family: b = d+3 blocks —
+    any pair within d agrees on >= 3 blocks — keyed on every TRIPLE of
+    blocks: C(d+3, 3) tables of TRIPLE-width keys. The chance-candidate
+    term drops from n^2*C(d+2,2)/2^(2w) to n^2*C(d+3,3)/2^(3w') (128-bit
+    d=10: 66 tables of 20-bit keys -> 286 tables of 27-bit keys, ~30x
+    fewer chance collisions) for a ~4.3x explode-factor cost — the trade
+    that wins only once n^2 dominates, which is exactly when the measured
+    probe escalates (SCALING.md sf30: the pair scheme went superlinear at
+    1.5M docs, 426-570s). Because the explode factor is large, the triple
+    path bands (id, key) rows ONLY and joins the signature words back
+    onto the deduplicated candidate set — banded rows carry no signature
+    payload.
 
     ``"auto"`` picks chunk when chunks are wide (width >= 14) or d < 3
     — the image/audio tiers at fixed small d keep the cheapest explode
     factor — else combination banding, escalating pair -> triple when
     the MEASURED row count puts the expected chance-candidate volume
     past ~50M pairs (the same measured-probe posture as the broadcast
-    guard below; estimates, like the width routers', come from a
-    column-pruned count, never from inherited plan stats)."""
+    guard; estimates, like the width routers', come from a column-pruned
+    count, never from inherited plan stats)."""
+    return _hamming_band_join(sigs, None, id_col, sig_col, max_hamming, within, scheme)
+
+
+def hamming_join(
+    new_sigs: DataFrame,
+    corpus_sigs: DataFrame,
+    id_col: str = "doc_id",
+    sig_col: "str | list[str]" = "sig",
+    max_hamming: int = 3,
+) -> DataFrame:
+    """Bipartite Hamming-ball join: pairs of a NEW batch against an
+    EXISTING signature table within ``max_hamming`` — the incremental
+    twin of :func:`hamming_pairs`, mirroring
+    ``incremental_minhash_dedup``. Both sides carry the same
+    W-bigint-word signature layout; only the new batch was decoded this
+    run — the corpus side reads the persisted (id, signature words)
+    parquet, so a daily 100 TB ingest never re-decodes a corpus byte
+    (plan-asserted in tests/test_plans.py).
+
+    Same pigeonhole banding as the self-join (d+1 chunks; a pair within
+    distance d agrees on >= 1 chunk) over the bipartite form of the same
+    band join: the new side is typically a fresh mapInPandas decode
+    whose checkpointed frame inherits origin-plan size estimates
+    (SCALING.md round 9), so the broadcast decision uses a MEASURED
+    count over the checkpoint — small batches broadcast their banded
+    rows against the corpus scan (zero corpus shuffle), large ones pin
+    a sized shuffle_hash. Returns (new_id, corpus_id, hamming)."""
+    return _hamming_band_join(
+        new_sigs, corpus_sigs, id_col, sig_col, max_hamming, None, "chunk"
+    ).select(
+        F.col("a_id").alias("new_id"), F.col("b_id").alias("corpus_id"), "hamming"
+    )
+
+
+def _hamming_band_join(
+    sigs: DataFrame,
+    corpus: "DataFrame | None",
+    id_col: str,
+    sig_col: "str | list[str]",
+    max_hamming: int,
+    within: "list[str] | None",
+    scheme: str,
+) -> DataFrame:
+    """The body of :func:`hamming_pairs` (``corpus`` None: the self-join)
+    and :func:`hamming_join` (``corpus`` a stored signature table: the
+    bipartite join, chunk scheme only). Returns (*within, a_id, b_id,
+    hamming) with a_id = the ``sigs`` side."""
     cols = [sig_col] if isinstance(sig_col, str) else list(sig_col)
     chunks = max_hamming + 1
     # band width; cap at 63 so a chunk value fits a signed bigint (any
@@ -580,17 +687,17 @@ def hamming_pairs(
     # d differing bits leave >= 1 of the d+1 DISJOINT chunks clean)
     width = min(63, (64 * len(cols)) // chunks)
     within = list(within or [])
-    notnull = F.lit(True)
-    for c in cols:
-        notnull = notnull & F.col(c).isNotNull()
-    # Checkpoint FIRST, filter the (rare) null signatures after (round 11,
-    # guide §4.4's duplicate-evaluation trap in its JVM-expression form):
-    # a filter on a computed signature column pushes below the defining
-    # projection and replaceAlias INLINES the full signature expression
-    # into the predicate — for the 64*W-lane SimHash folds that re-hashes
-    # every token once per lane, measured 0.9s -> 11-19s on the sf0.1
-    # corpus. Filtering the eagerly materialized checkpoint costs one
-    # in-memory pass and keeps every downstream row identical.
+    notnull = _sig_notnull(cols)
+    # Checkpoint FIRST, filter the (rare) null signatures after (the
+    # JVM-expression form of the duplicate-evaluation trap): a filter on
+    # a computed signature column pushes below the defining projection
+    # and replaceAlias INLINES the full signature expression into the
+    # predicate — for the 64*W-lane SimHash folds that re-hashes every
+    # token once per lane, measured 0.9s -> 11-19s on the sf0.1 corpus.
+    # Filtering the eagerly materialized checkpoint costs one in-memory
+    # pass and keeps every downstream row identical. A stored corpus
+    # table is filtered FIRST instead, so the predicate pushes into its
+    # parquet scan.
     _ckpt = sigs.select(id_col, *cols, *within).localCheckpoint(eager=True)
     sigs = _ckpt.filter(notnull)
     # One count over the materialized checkpoint feeds BOTH the scheme
@@ -609,39 +716,21 @@ def hamming_pairs(
             )
             scheme = "triple" if est_pair_cands > 50e6 else "pair"
     if scheme == "pair":
-        n_blocks = max_hamming + 2
-        block_w = min(31, (64 * len(cols)) // n_blocks)
-    elif scheme == "triple":
-        n_blocks = max_hamming + 3
-        # 3 blocks compose one signed-bigint key -> <= 21 bits each
-        block_w = min(21, (64 * len(cols)) // n_blocks)
-
-    def span_expr(s0: int, w_bits: int) -> str:
-        # bits [s0, s0 + w_bits) across the word columns
-        parts = []
-        for w, c in enumerate(cols):
-            lo, hi = max(s0, w * 64), min(s0 + w_bits, (w + 1) * 64)
-            if lo >= hi:
-                continue
-            mask = (1 << (hi - lo)) - 1
-            part = f"(shiftright({c}, {lo - w * 64}) & {mask}L)"
-            if lo - s0:
-                part = f"shiftleft({part}, {lo - s0})"
-            parts.append(part)
-        return "(" + " | ".join(parts) + ")"
-
-    if scheme == "pair":
         from itertools import combinations
 
-        blocks = [span_expr(bi * block_w, block_w) for bi in range(n_blocks)]
+        n_blocks = max_hamming + 2
+        block_w = min(31, (64 * len(cols)) // n_blocks)
+        blocks = [_span_expr(cols, bi * block_w, block_w) for bi in range(n_blocks)]
         entries = [
             f"(shiftleft({blocks[i]}, {block_w}) | {blocks[j]})"
             for i, j in combinations(range(n_blocks), 2)
         ]
-        n_bands = len(entries)
     elif scheme == "triple":
         from itertools import combinations
 
+        n_blocks = max_hamming + 3
+        # 3 blocks compose one signed-bigint key -> <= 21 bits each
+        block_w = min(21, (64 * len(cols)) // n_blocks)
         # Materialize the b block values as columns FIRST: each block
         # appears in C(b-1,2) of the C(b,3) keys, and inlining the full
         # shift/mask extraction into every key (the pair scheme's layout)
@@ -655,7 +744,7 @@ def hamming_pairs(
         sigs = sigs.select(
             "*",
             *[
-                F.expr(span_expr(bi * block_w, block_w)).alias(f"_blk{bi}")
+                F.expr(_span_expr(cols, bi * block_w, block_w)).alias(f"_blk{bi}")
                 for bi in range(n_blocks)
             ],
         )
@@ -664,10 +753,8 @@ def hamming_pairs(
             f" | shiftleft(_blk{j}, {block_w}) | _blk{k})"
             for i, j, k in combinations(range(n_blocks), 3)
         ]
-        n_bands = len(entries)
     else:
-        entries = [span_expr(ci * width, width) for ci in range(chunks)]
-        n_bands = chunks
+        entries = [_span_expr(cols, ci * width, width) for ci in range(chunks)]
     chunk_array = "array(" + ", ".join(entries) + ")"
     sig_aliases = [f"_sig{w}" for w in range(len(cols))]
     # The triple scheme's explode factor is large (C(d+3,3)); banding
@@ -676,39 +763,46 @@ def hamming_pairs(
     # and the candidate dedup payload-free. Chunk/pair keep carrying the
     # signature words (their explode factors are small enough that one
     # join beats two).
-    carry_sigs = scheme != "triple"
-    banded = sigs.select(
-        F.col(id_col),
-        *([F.col(c).alias(al) for c, al in zip(cols, sig_aliases)]
-          if carry_sigs else []),
-        *within,
-        F.posexplode(F.expr(chunk_array)).alias("chunk_id", "chunk_val"),
-    )
-    keys = ["chunk_id", "chunk_val", *within]
-    if scheme == "triple":
-        # Single-shuffle bucket pairing (round 11, measured at sf30 —
-        # 1.5M docs, 286 tables, 429M banded rows): a groupBy over the
-        # band key shuffles the banded rows ONCE and pairs stream out of
-        # each bucket via posexplode + slice over the sorted id list
-        # (a_id < b_id by construction; a bucket of m ids materializes m
-        # slices, never an m^2 array). Two join-shaped alternatives were
-        # measured and REJECTED at this scale: the a/b self-join
-        # formulations (project-before or project-after a shared
-        # repartition) land at the same ~400s full-query time with a
-        # second exchange or no better, and MATERIALIZING the banded
-        # frame once via localCheckpoint to force single-scan reuse OOMs
-        # the JVM heap outright (429M rows in the block manager). The
-        # sort-based aggregation this groupBy falls back to (collect_list
-        # over mostly-unique keys) spills gracefully — the safest shape
-        # at ≫10^6 docs. Skew profile matches the hash join's: a
-        # mega-bucket lands in one task either way.
-        banded_bytes = n_sigs * n_bands * 16
-        nparts = max(
-            sigs.sparkSession.sparkContext.defaultParallelism,
-            int(banded_bytes // (32 * 1024 * 1024)) + 1,
+    carried = sig_aliases if scheme != "triple" else []
+
+    def banded(d: DataFrame) -> DataFrame:
+        return d.select(
+            F.col(id_col),
+            *[F.col(c).alias(al) for c, al in zip(cols, carried)],
+            *within,
+            F.posexplode(F.expr(chunk_array)).alias("chunk_id", "chunk_val"),
         )
+
+    keys = ["chunk_id", "chunk_val", *within]
+
+    def side(d: DataFrame, s: str) -> DataFrame:
+        return d.select(
+            F.col(id_col).alias(f"{s}_id"),
+            *[F.col(al).alias(f"{s}{al}") for al in carried],
+            *keys,
+        )
+
+    banded_bytes = n_sigs * len(entries) * (16 + 8 * len(carried))
+    if scheme == "triple":
+        # Single-shuffle bucket pairing (measured at sf30 — 1.5M docs, 286
+        # tables, 429M banded rows): a groupBy over the band key shuffles
+        # the banded rows ONCE and pairs stream out of each bucket via
+        # posexplode + slice over the sorted id list (a_id < b_id by
+        # construction; a bucket of m ids materializes m slices, never an
+        # m^2 array). Two join-shaped alternatives were measured and
+        # REJECTED at this scale: the a/b self-join formulations
+        # (project-before or project-after a shared repartition) land at
+        # the same ~400s full-query time with a second exchange or no
+        # better, and MATERIALIZING the banded frame once via
+        # localCheckpoint to force single-scan reuse OOMs the JVM heap
+        # outright (429M rows in the block manager). The sort-based
+        # aggregation this groupBy falls back to (collect_list over
+        # mostly-unique keys) spills gracefully — the safest shape at
+        # ≫10^6 docs. Skew profile matches the hash join's: a mega-bucket
+        # lands in one task either way.
         cand = (
-            banded.repartition(nparts, *keys)
+            banded(sigs)
+            .repartition(_exchange_parts(sigs, banded_bytes), *keys)
             .groupBy(*keys)
             .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
             .filter(F.size("_ids") >= 2)
@@ -724,189 +818,36 @@ def hamming_pairs(
             )
             .dropDuplicates([*within, "a_id", "b_id"])
         )
-    else:
-        a = banded.select(
-            F.col(id_col).alias("a_id"),
-            *([F.col(al).alias(f"a{al}") for al in sig_aliases]
-              if carry_sigs else []),
-            *keys,
-        )
-        b = banded.select(
-            F.col(id_col).alias("b_id"),
-            *([F.col(al).alias(f"b{al}") for al in sig_aliases]
-              if carry_sigs else []),
-            *keys,
-        )
-        # Measured broadcast guard (see minhash_lsh_pairs): the build side
-        # is the banded CORPUS and the checkpointed frame's inherited size
-        # estimate cannot be trusted; the count over the materialized
-        # checkpoint (above) decides. Banded bytes ~ rows * bands * rowsz.
-        rowsz = 16 + (8 * len(cols) if carry_sigs else 0)
-        banded_bytes = n_sigs * n_bands * rowsz
-        if banded_bytes > 48 * 1024 * 1024:
-            # size the exchange to the data (~32 MB of build per partition)
-            # and pin shuffle_hash — see minhash_lsh_pairs for the rationale
-            nparts = max(
-                sigs.sparkSession.sparkContext.defaultParallelism,
-                int(banded_bytes // (32 * 1024 * 1024)) + 1,
-            )
-            b = b.repartition(nparts, *keys).hint("shuffle_hash")
-        cand = (
-            a.join(b, keys)
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select(
-                *within, "a_id", "b_id",
-                *([f"a{al}" for al in sig_aliases] if carry_sigs else []),
-                *([f"b{al}" for al in sig_aliases] if carry_sigs else []),
-            )
-            .dropDuplicates([*within, "a_id", "b_id"])
-        )
-    if not carry_sigs:
         # join the signature words back onto the candidate pairs; the
         # sig frame is n_sigs rows of (id, W words) — broadcast it when
         # the measured count says it fits, else it's an equi-join on id
         # against a candidate set the banding already made small
         sig_bytes = n_sigs * (8 + 8 * len(cols)) * 3  # x3 overhead
-        for side in ("a", "b"):
+        for s in ("a", "b"):
             frame = sigs.select(
-                F.col(id_col).alias(f"{side}_id"),
-                *[F.col(c).alias(f"{side}_sig{w}")
-                  for w, c in enumerate(cols)],
+                F.col(id_col).alias(f"{s}_id"),
+                *[F.col(c).alias(f"{s}{al}") for c, al in zip(cols, sig_aliases)],
             )
-            if sig_bytes <= 48 * 1024 * 1024:
+            if sig_bytes <= _BROADCAST_MAX_BYTES:
                 frame = F.broadcast(frame)
-            cand = cand.join(frame, f"{side}_id")
-        dist = None
-        for w in range(len(cols)):
-            term = F.bit_count(
-                F.col(f"a_sig{w}").bitwiseXOR(F.col(f"b_sig{w}"))
-            )
-            dist = term if dist is None else dist + term
+            cand = cand.join(frame, f"{s}_id")
     else:
-        dist = None
-        for al in sig_aliases:
-            term = F.bit_count(F.col(f"a{al}").bitwiseXOR(F.col(f"b{al}")))
-            dist = term if dist is None else dist + term
-    ham = cand.withColumn("hamming", dist)
-    return ham.filter(F.col("hamming") <= max_hamming).select(
-        *within, "a_id", "b_id", "hamming"
-    )
-
-
-def hamming_join(
-    new_sigs: DataFrame,
-    corpus_sigs: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: "str | list[str]" = "sig",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Bipartite Hamming-ball join (round 10, verdict r9 item 5): pairs
-    of a NEW batch against an EXISTING signature table within
-    ``max_hamming`` — the incremental twin of :func:`hamming_pairs`,
-    mirroring ``incremental_minhash_dedup``. Both sides carry the same
-    W-bigint-word signature layout; only the new batch was decoded this
-    run — the corpus side reads the persisted (id, signature words)
-    parquet, so a daily 100 TB ingest never re-decodes a corpus byte
-    (plan-asserted in tests/test_plans.py).
-
-    Same pigeonhole banding as the self-join (d+1 chunks; a pair within
-    distance d agrees on >= 1 chunk) over an equi-join on (chunk_id,
-    chunk_val). The new side is typically a fresh mapInPandas decode
-    whose checkpointed frame inherits origin-plan size estimates
-    (SCALING.md round 9) — so the broadcast decision uses a MEASURED
-    count over the checkpoint: small batches broadcast their banded
-    rows against the corpus scan (zero corpus shuffle), large ones pin
-    a sized shuffle_hash. Returns (new_id, corpus_id, hamming)."""
-    cols = [sig_col] if isinstance(sig_col, str) else list(sig_col)
-    chunks = max_hamming + 1
-    width = min(63, (64 * len(cols)) // chunks)
-
-    def notnull(d: DataFrame) -> DataFrame:
-        cond = F.lit(True)
-        for c in cols:
-            cond = cond & F.col(c).isNotNull()
-        return d.filter(cond)
-
-    # New side: checkpoint BEFORE the null filter (round 11 — same
-    # duplicate-evaluation trap as hamming_pairs: a filter on computed
-    # signature columns is pushed below the defining projection and
-    # re-inlines the whole signature expression into the predicate).
-    # Corpus side: filter FIRST — it reads a persisted signature table,
-    # so the notnull predicate pushes into the parquet scan instead.
-    _ckpt = new_sigs.select(id_col, *cols).localCheckpoint(eager=True)
-    new = notnull(_ckpt)
-    corpus = notnull(corpus_sigs).select(id_col, *cols)
-
-    def chunk_expr(ci: int) -> str:
-        s0 = ci * width
-        parts = []
-        for w, c in enumerate(cols):
-            lo, hi = max(s0, w * 64), min(s0 + width, (w + 1) * 64)
-            if lo >= hi:
-                continue
-            mask = (1 << (hi - lo)) - 1
-            part = f"(shiftright({c}, {lo - w * 64}) & {mask}L)"
-            if lo - s0:
-                part = f"shiftleft({part}, {lo - s0})"
-            parts.append(part)
-        return "(" + " | ".join(parts) + ")"
-
-    chunk_array = "array(" + ", ".join(
-        chunk_expr(ci) for ci in range(chunks)
-    ) + ")"
-    sig_aliases = [f"_sig{w}" for w in range(len(cols))]
-
-    def banded(d: DataFrame, role: str) -> DataFrame:
-        return d.select(
-            F.col(id_col).alias(f"{role}_id"),
-            *[F.col(c).alias(f"{role}{al}")
-              for c, al in zip(cols, sig_aliases)],
-            F.posexplode(F.expr(chunk_array)).alias("chunk_id", "chunk_val"),
+        rows = banded(sigs)
+        if corpus is not None:
+            corpus = banded(corpus.filter(notnull).select(id_col, *cols))
+        cand = _band_join(
+            side(rows, "a"),
+            side(rows if corpus is None else corpus, "b"),
+            keys,
+            banded_bytes,
+            bipartite=corpus is not None,
+            within=within,
         )
-
-    a = banded(new, "new")
-    b = banded(corpus, "corpus")
-    n_new = new.count()
-    banded_bytes = n_new * chunks * (16 + 8 * len(cols))
-    if banded_bytes <= 48 * 1024 * 1024:
-        a = F.broadcast(a)  # measured, not inherited-estimate, decision
-    else:
-        nparts = max(
-            new.sparkSession.sparkContext.defaultParallelism,
-            int(banded_bytes // (32 * 1024 * 1024)) + 1,
-        )
-        # Hash-BUILD side must be the NEW batch (ADVICE r10 medium):
-        # nparts is sized from the new batch's measured banded bytes, so
-        # per-partition builds are ~32 MB by construction. Hinting the
-        # corpus side instead would make the arbitrarily large corpus
-        # the build side — in the incremental regime (corpus >> batch)
-        # a per-partition corpus build is ~32 MB * (corpus/batch) and
-        # can exceed task execution memory. The corpus streams as the
-        # probe side.
-        a = a.repartition(nparts, "chunk_id", "chunk_val").hint(
-            "shuffle_hash"
-        )
-        b = b.repartition(nparts, "chunk_id", "chunk_val")
-    cand = (
-        a.join(b, ["chunk_id", "chunk_val"])
-        .filter(F.col("new_id") != F.col("corpus_id"))
-        .select(
-            "new_id", "corpus_id",
-            *[f"new{al}" for al in sig_aliases],
-            *[f"corpus{al}" for al in sig_aliases],
-        )
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    dist = None
-    for al in sig_aliases:
-        term = F.bit_count(
-            F.col(f"new{al}").bitwiseXOR(F.col(f"corpus{al}"))
-        )
-        dist = term if dist is None else dist + term
+    dist = _hamming([f"a{al}" for al in sig_aliases], [f"b{al}" for al in sig_aliases])
     return (
         cand.withColumn("hamming", dist)
         .filter(F.col("hamming") <= max_hamming)
-        .select("new_id", "corpus_id", "hamming")
+        .select(*within, "a_id", "b_id", "hamming")
     )
 
 
@@ -991,11 +932,7 @@ def ngram_jaccard_pairs(
         F.col(id_col).alias("_id"),
         F.array_distinct("words").alias("wset"),
     ).withColumn(
-        # set size once per DOC (round 11): |A∪B| = |A| + |B| - |A∩B| for
-        # distinct sets, so the per-PAIR array_union materialization (as
-        # expensive as the intersect itself) is replaced by integer
-        # arithmetic — identical doubles, the division operands are the
-        # same integers
+        # set size once per DOC, for the size-based Jaccard (_jaccard)
         "_n", F.size("wset")
     )
     # one physical pass feeds df-counting, prefix build, and verification
@@ -1013,11 +950,8 @@ def ngram_jaccard_pairs(
             F.col("_n").alias("b_n"),
         )
         pairs = a.join(b, "_blk").filter(F.col("a_id") < F.col("b_id"))
-        isz = F.size(F.array_intersect("a_w", "b_w"))
         jac = pairs.withColumn(
-            "jaccard",
-            # nullif: empty-doc pairs (0-size union) must drop, not divide
-            isz / F.nullif(F.col("a_n") + F.col("b_n") - isz, F.lit(0)),
+            "jaccard", _jaccard("a_w", "b_w", F.col("a_n"), F.col("b_n"))
         )
         return jac.filter(F.col("jaccard") >= threshold).select(
             "a_id", "b_id", "jaccard"
@@ -1145,7 +1079,6 @@ def ngram_jaccard_pairs(
             F.least("a_id", "b_id").alias("a_id"),
             F.greatest("a_id", "b_id").alias("b_id"),
         ).distinct()
-    isz = F.size(F.array_intersect("a_w", "b_w"))
     jac = (
         cand.join(
             words.select(
@@ -1161,12 +1094,7 @@ def ngram_jaccard_pairs(
             ),
             "b_id",
         )
-        .withColumn(
-            # nullif: empty-doc pairs (0-size union) must drop, not ANSI-abort;
-            # |A∪B| via sizes (round 11) — same integers, same double
-            "jaccard",
-            isz / F.nullif(F.col("a_n") + F.col("b_n") - isz, F.lit(0)),
-        )
+        .withColumn("jaccard", _jaccard("a_w", "b_w", F.col("a_n"), F.col("b_n")))
     )
     return jac.filter(F.col("jaccard") >= threshold).select("a_id", "b_id", "jaccard")
 

@@ -4123,7 +4123,7 @@ def audio_pairs_auto(
     max_sigs_64: int = PHASH64_MAX_SIGS,
     n_hint: "int | None" = None,
 ) -> DataFrame:
-    """Width-routed audio near-dup (round 10): the
+    """Width-routed audio near-dup: the
     :func:`phash_pairs_auto` pattern for the audio fingerprint — the
     64-bit tier's 12-bit bands measured a ~14x-per-10x candidate tail
     at 50k clips (SCALING.md round 10), so past ``max_sigs_64`` clips
@@ -4131,23 +4131,40 @@ def audio_pairs_auto(
     buckets; measured resample ball 0 keeps the same threshold).
     Probe is one column-pruned count (``n_hint`` for builder frames —
     see phash_pairs_auto). Returns (a_id, b_id, hamming, sig_bits)."""
-    import pyspark.sql.functions as F
+    return _width_routed_pairs(
+        df, id_col, payload, n_hint, max_sigs_64,
+        (fingerprint_audio, "afp", max_hamming64),
+        (fingerprint_audio_multi, ["afp0", "afp1"], max_hamming128),
+    )
 
+
+def _width_routed_pairs(
+    df: DataFrame,
+    id_col: str,
+    payload: str,
+    n_hint: "int | None",
+    max_sigs_64: int,
+    narrow: tuple,
+    wide: tuple,
+    within: "list[str] | None" = None,
+) -> DataFrame:
+    """The one signature-width router behind :func:`phash_pairs_auto`,
+    :func:`video_pairs_auto` and :func:`audio_pairs_auto`: count the ids
+    (or take ``n_hint``), then sign and band with ``narrow`` — a
+    (signer, sig_col, max_hamming) triple for the 64-bit tier — up to
+    ``max_sigs_64`` signatures, and with the 128-bit ``wide`` triple past
+    it. Adds ``sig_bits`` naming the route taken."""
     from corintick_spark.operators.dedup import hamming_pairs
 
     n = int(n_hint) if n_hint is not None else df.select(id_col).count()
-    if n <= int(max_sigs_64):
-        sigs = fingerprint_audio(df, id_col, payload)
-        pairs = hamming_pairs(
-            sigs, id_col=id_col, sig_col="afp", max_hamming=max_hamming64
-        )
-        return pairs.withColumn("sig_bits", F.lit(64))
-    sigs = fingerprint_audio_multi(df, id_col, payload, words=2)
-    pairs = hamming_pairs(
-        sigs, id_col=id_col, sig_col=["afp0", "afp1"],
-        max_hamming=max_hamming128,
+    (signer, sig_col, max_hamming), bits = (
+        (narrow, 64) if n <= int(max_sigs_64) else (wide, 128)
     )
-    return pairs.withColumn("sig_bits", F.lit(128))
+    pairs = hamming_pairs(
+        signer(df, id_col, payload), id_col=id_col, sig_col=sig_col,
+        max_hamming=max_hamming, within=within,
+    )
+    return pairs.withColumn("sig_bits", F.lit(bits))
 
 
 def encode_wav_pcm(
@@ -4213,25 +4230,11 @@ def phash_pairs_auto(
     Returns (a_id, b_id, hamming, sig_bits) — ``sig_bits`` names the
     route taken so downstream thresholds can interpret the Hamming
     scale."""
-    import pyspark.sql.functions as F
-
-    from corintick_spark.operators.dedup import hamming_pairs
-
-    n = int(n_hint) if n_hint is not None else df.select(id_col).count()
-    if n <= int(max_sigs_64):
-        sigs = phash_images(df, id_col, payload)
-        pairs = hamming_pairs(
-            sigs, id_col=id_col, sig_col="phash", max_hamming=max_hamming64
-        )
-        return pairs.withColumn("sig_bits", F.lit(64))
-    sigs = phash128_images(df, id_col, payload)
-    pairs = hamming_pairs(
-        sigs,
-        id_col=id_col,
-        sig_col=["phash0", "phash1"],
-        max_hamming=max_hamming128,
+    return _width_routed_pairs(
+        df, id_col, payload, n_hint, max_sigs_64,
+        (phash_images, "phash", max_hamming64),
+        (phash128_images, ["phash0", "phash1"], max_hamming128),
     )
-    return pairs.withColumn("sig_bits", F.lit(128))
 
 
 def video_pairs_auto(
@@ -4243,7 +4246,7 @@ def video_pairs_auto(
     max_sigs_64: int = PHASH64_MAX_SIGS,
     n_hint: "int | None" = None,
 ) -> DataFrame:
-    """Width-routed per-frame video near-dup (round 10): the
+    """Width-routed per-frame video near-dup: the
     :func:`phash_pairs_auto` pattern applied to the video tier. The
     collision regime is per FRAME SLOT — n_clips signatures band
     within each frame_idx — so the probe counts CLIPS (one
@@ -4255,24 +4258,12 @@ def video_pairs_auto(
     per-frame pairs (a_id, b_id, frame_idx, hamming, sig_bits) —
     callers aggregate to clip-level votes exactly as with the
     fixed-width scans."""
-    import pyspark.sql.functions as F
-
-    from corintick_spark.operators.dedup import hamming_pairs
-
-    n = int(n_hint) if n_hint is not None else df.select(id_col).count()
-    if n <= int(max_sigs_64):
-        sigs = phash_video_frames(df, id_col, payload)
-        pairs = hamming_pairs(
-            sigs, id_col=id_col, sig_col="phash",
-            max_hamming=max_hamming64, within=["frame_idx"],
-        )
-        return pairs.withColumn("sig_bits", F.lit(64))
-    sigs = phash128_video_frames(df, id_col, payload)
-    pairs = hamming_pairs(
-        sigs, id_col=id_col, sig_col=["phash0", "phash1"],
-        max_hamming=max_hamming128, within=["frame_idx"],
+    return _width_routed_pairs(
+        df, id_col, payload, n_hint, max_sigs_64,
+        (phash_video_frames, "phash", max_hamming64),
+        (phash128_video_frames, ["phash0", "phash1"], max_hamming128),
+        within=["frame_idx"],
     )
-    return pairs.withColumn("sig_bits", F.lit(128))
 
 
 IMAGE_SCAN_SCHEMA = (

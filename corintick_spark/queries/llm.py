@@ -64,6 +64,49 @@ def _wav(tag, channels, rate, byte_rate, block_align, bits, data) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+def _planted_recall(d, pairs, div: int, preds, cols):
+    """The planted-group invariants of a rows-only near-dup query.
+
+    Planted groups are ``doc_id div <div>`` over the ids of ``d``; each
+    row of ``pairs`` (a_id, b_id, ...) gets ``same_grp``. ``inv_recall``
+    is the POOLED planted recall — found same-group pairs over the
+    C(size, 2) pairs the groups hold — computed in-plan from two 1-row
+    aggregates broadcast onto every row. ``inv_ok`` is same_grp AND every
+    per-row predicate in ``preds`` AND inv_recall >= 0.999. Returns
+    ``cols``, inv_recall rounded to 6 places, and inv_ok."""
+    found = pairs.withColumn(
+        "same_grp", F.expr(f"(a_id div {div}) = (b_id div {div})")
+    )
+    expected = (
+        d.select(F.expr(f"doc_id div {div}").alias("_g"))
+        .groupBy("_g")
+        .count()
+        .agg(
+            F.sum(F.expr("count * (count - 1) div 2"))
+            .cast("long")
+            .alias("expected_pairs")
+        )
+    )
+    pooled = found.agg(
+        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
+        .cast("long")
+        .alias("found_same")
+    )
+    ok = F.col("same_grp")
+    for p in preds:
+        ok = ok & p
+    return (
+        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
+        .crossJoin(F.broadcast(pooled))
+        .withColumn(
+            "inv_recall",
+            F.col("found_same").cast("double") / F.col("expected_pairs"),
+        )
+        .withColumn("inv_ok", ok & (F.col("inv_recall") >= F.lit(0.999)))
+        .select(*cols, F.round("inv_recall", 6).alias("inv_recall"), "inv_ok")
+    )
+
+
 # T-B48 — exact dedup by content hash.
 @query(
     "dedup_exact",
@@ -4965,41 +5008,10 @@ def dedup_image_phash(spark, sf_dir):
     with_img = _planted_phash_corpus(spark, sf_dir)
     sigs = M.phash_images(with_img)
     pairs = D.hamming_pairs(sigs, sig_col="phash", max_hamming=4)
-    found = pairs.withColumn(
-        "same_grp", F.expr("(a_id div 4) = (b_id div 4)")
-    )
-    expected = (
-        d.select(F.expr("doc_id div 4").alias("_g"))
-        .groupBy("_g")
-        .count()
-        .agg(
-            F.sum(F.expr("count * (count - 1) div 2"))
-            .cast("long")
-            .alias("expected_pairs")
-        )
-    )
-    pooled = found.agg(
-        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
-        .cast("long")
-        .alias("found_same")
-    )
-    return (
-        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
-        .crossJoin(F.broadcast(pooled))
-        .withColumn(
-            "inv_recall",
-            F.col("found_same").cast("double") / F.col("expected_pairs"),
-        )
-        .withColumn(
-            "inv_ok",
-            F.col("same_grp")
-            & (F.col("hamming") <= F.lit(4))
-            & (F.col("inv_recall") >= F.lit(0.999)),
-        )
-        .select(
-            "a_id", "b_id", "hamming", "same_grp",
-            F.round("inv_recall", 6).alias("inv_recall"), "inv_ok",
-        )
+    return _planted_recall(
+        d, pairs, 4,
+        [F.col("hamming") <= F.lit(4)],
+        ["a_id", "b_id", "hamming", "same_grp"],
     )
 
 
@@ -5214,42 +5226,13 @@ def dedup_video_phash(spark, sf_dir):
         F.max("hamming").alias("max_hamming"),
     )
     near = votes.filter(F.col("matched_frames") * 4 >= F.lit(3 * N_FRAMES))
-    found = near.withColumn(
-        "same_grp", F.expr("(a_id div 3) = (b_id div 3)")
-    )
-    expected = (
-        d.select(F.expr("doc_id div 3").alias("_g"))
-        .groupBy("_g")
-        .count()
-        .agg(
-            F.sum(F.expr("count * (count - 1) div 2"))
-            .cast("long")
-            .alias("expected_pairs")
-        )
-    )
-    pooled = found.agg(
-        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
-        .cast("long")
-        .alias("found_same")
-    )
-    return (
-        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
-        .crossJoin(F.broadcast(pooled))
-        .withColumn(
-            "inv_recall",
-            F.col("found_same").cast("double") / F.col("expected_pairs"),
-        )
-        .withColumn(
-            "inv_ok",
-            F.col("same_grp")
-            & (F.col("matched_frames") == F.lit(N_FRAMES))
-            & (F.col("max_hamming") <= F.lit(4))
-            & (F.col("inv_recall") >= F.lit(0.999)),
-        )
-        .select(
-            "a_id", "b_id", "matched_frames", "max_hamming", "same_grp",
-            F.round("inv_recall", 6).alias("inv_recall"), "inv_ok",
-        )
+    return _planted_recall(
+        d, near, 3,
+        [
+            F.col("matched_frames") == F.lit(N_FRAMES),
+            F.col("max_hamming") <= F.lit(4),
+        ],
+        ["a_id", "b_id", "matched_frames", "max_hamming", "same_grp"],
     )
 
 
@@ -5298,42 +5281,13 @@ def dedup_video_phash128(spark, sf_dir):
         F.max("hamming").alias("max_hamming"),
     )
     near = votes.filter(F.col("matched_frames") * 4 >= F.lit(3 * N_FRAMES))
-    found = near.withColumn(
-        "same_grp", F.expr("(a_id div 3) = (b_id div 3)")
-    )
-    expected = (
-        d.select(F.expr("doc_id div 3").alias("_g"))
-        .groupBy("_g")
-        .count()
-        .agg(
-            F.sum(F.expr("count * (count - 1) div 2"))
-            .cast("long")
-            .alias("expected_pairs")
-        )
-    )
-    pooled = found.agg(
-        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
-        .cast("long")
-        .alias("found_same")
-    )
-    return (
-        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
-        .crossJoin(F.broadcast(pooled))
-        .withColumn(
-            "inv_recall",
-            F.col("found_same").cast("double") / F.col("expected_pairs"),
-        )
-        .withColumn(
-            "inv_ok",
-            F.col("same_grp")
-            & (F.col("matched_frames") == F.lit(N_FRAMES))
-            & (F.col("max_hamming") <= F.lit(6))
-            & (F.col("inv_recall") >= F.lit(0.999)),
-        )
-        .select(
-            "a_id", "b_id", "matched_frames", "max_hamming", "same_grp",
-            F.round("inv_recall", 6).alias("inv_recall"), "inv_ok",
-        )
+    return _planted_recall(
+        d, near, 3,
+        [
+            F.col("matched_frames") == F.lit(N_FRAMES),
+            F.col("max_hamming") <= F.lit(6),
+        ],
+        ["a_id", "b_id", "matched_frames", "max_hamming", "same_grp"],
     )
 
 
@@ -5368,46 +5322,14 @@ def dedup_video_phash_auto(spark, sf_dir):
         F.max("hamming").alias("max_hamming"),
     )
     near = votes.filter(F.col("matched_frames") * 4 >= F.lit(3 * N_FRAMES))
-    found = near.withColumn(
-        "same_grp", F.expr("(a_id div 3) = (b_id div 3)")
-    )
-    expected = (
-        d.select(F.expr("doc_id div 3").alias("_g"))
-        .groupBy("_g")
-        .count()
-        .agg(
-            F.sum(F.expr("count * (count - 1) div 2"))
-            .cast("long")
-            .alias("expected_pairs")
-        )
-    )
-    pooled = found.agg(
-        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
-        .cast("long")
-        .alias("found_same")
-    )
-    return (
-        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
-        .crossJoin(F.broadcast(pooled))
-        .withColumn(
-            "inv_recall",
-            F.col("found_same").cast("double") / F.col("expected_pairs"),
-        )
-        .withColumn(
-            "inv_ok",
-            F.col("same_grp")
-            & (F.col("matched_frames") == F.lit(N_FRAMES))
-            & (
-                F.col("max_hamming")
-                <= F.when(F.col("sig_bits") == 64, F.lit(4)).otherwise(F.lit(6))
-            )
-            & (F.col("inv_recall") >= F.lit(0.999)),
-        )
-        .select(
-            "a_id", "b_id", "matched_frames", "max_hamming", "sig_bits",
-            "same_grp", F.round("inv_recall", 6).alias("inv_recall"),
-            "inv_ok",
-        )
+    return _planted_recall(
+        d, near, 3,
+        [
+            F.col("matched_frames") == F.lit(N_FRAMES),
+            F.col("max_hamming")
+            <= F.when(F.col("sig_bits") == 64, F.lit(4)).otherwise(F.lit(6)),
+        ],
+        ["a_id", "b_id", "matched_frames", "max_hamming", "sig_bits", "same_grp"],
     )
 
 
@@ -5432,41 +5354,10 @@ def dedup_image_phash128(spark, sf_dir):
     pairs = D.hamming_pairs(
         sigs, sig_col=["phash0", "phash1"], max_hamming=6
     )
-    found = pairs.withColumn(
-        "same_grp", F.expr("(a_id div 4) = (b_id div 4)")
-    )
-    expected = (
-        d.select(F.expr("doc_id div 4").alias("_g"))
-        .groupBy("_g")
-        .count()
-        .agg(
-            F.sum(F.expr("count * (count - 1) div 2"))
-            .cast("long")
-            .alias("expected_pairs")
-        )
-    )
-    pooled = found.agg(
-        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
-        .cast("long")
-        .alias("found_same")
-    )
-    return (
-        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
-        .crossJoin(F.broadcast(pooled))
-        .withColumn(
-            "inv_recall",
-            F.col("found_same").cast("double") / F.col("expected_pairs"),
-        )
-        .withColumn(
-            "inv_ok",
-            F.col("same_grp")
-            & (F.col("hamming") <= F.lit(6))
-            & (F.col("inv_recall") >= F.lit(0.999)),
-        )
-        .select(
-            "a_id", "b_id", "hamming", "same_grp",
-            F.round("inv_recall", 6).alias("inv_recall"), "inv_ok",
-        )
+    return _planted_recall(
+        d, pairs, 4,
+        [F.col("hamming") <= F.lit(6)],
+        ["a_id", "b_id", "hamming", "same_grp"],
     )
 
 
@@ -5505,44 +5396,13 @@ def dedup_image_phash_auto(spark, sf_dir):
     # the probe through the payload BUILDER would re-run synthesis;
     # the source table answers the same count from parquet metadata
     pairs = M.phash_pairs_auto(with_img, n_hint=d.count())
-    found = pairs.withColumn(
-        "same_grp", F.expr("(a_id div 4) = (b_id div 4)")
-    )
-    expected = (
-        d.select(F.expr("doc_id div 4").alias("_g"))
-        .groupBy("_g")
-        .count()
-        .agg(
-            F.sum(F.expr("count * (count - 1) div 2"))
-            .cast("long")
-            .alias("expected_pairs")
-        )
-    )
-    pooled = found.agg(
-        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
-        .cast("long")
-        .alias("found_same")
-    )
-    return (
-        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
-        .crossJoin(F.broadcast(pooled))
-        .withColumn(
-            "inv_recall",
-            F.col("found_same").cast("double") / F.col("expected_pairs"),
-        )
-        .withColumn(
-            "inv_ok",
-            F.col("same_grp")
-            & (
-                F.col("hamming")
-                <= F.when(F.col("sig_bits") == 64, F.lit(4)).otherwise(F.lit(6))
-            )
-            & (F.col("inv_recall") >= F.lit(0.999)),
-        )
-        .select(
-            "a_id", "b_id", "hamming", "sig_bits", "same_grp",
-            F.round("inv_recall", 6).alias("inv_recall"), "inv_ok",
-        )
+    return _planted_recall(
+        d, pairs, 4,
+        [
+            F.col("hamming")
+            <= F.when(F.col("sig_bits") == 64, F.lit(4)).otherwise(F.lit(6)),
+        ],
+        ["a_id", "b_id", "hamming", "sig_bits", "same_grp"],
     )
 
 
@@ -5772,41 +5632,10 @@ def dedup_audio_near(spark, sf_dir):
     )
     sigs = M.fingerprint_audio(with_audio)
     pairs = D.hamming_pairs(sigs, sig_col="afp", max_hamming=4)
-    found = pairs.withColumn(
-        "same_grp", F.expr("(a_id div 3) = (b_id div 3)")
-    )
-    expected = (
-        d.select(F.expr("doc_id div 3").alias("_g"))
-        .groupBy("_g")
-        .count()
-        .agg(
-            F.sum(F.expr("count * (count - 1) div 2"))
-            .cast("long")
-            .alias("expected_pairs")
-        )
-    )
-    pooled = found.agg(
-        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
-        .cast("long")
-        .alias("found_same")
-    )
-    return (
-        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
-        .crossJoin(F.broadcast(pooled))
-        .withColumn(
-            "inv_recall",
-            F.col("found_same").cast("double") / F.col("expected_pairs"),
-        )
-        .withColumn(
-            "inv_ok",
-            F.col("same_grp")
-            & (F.col("hamming") <= F.lit(4))
-            & (F.col("inv_recall") >= F.lit(0.999)),
-        )
-        .select(
-            "a_id", "b_id", "hamming", "same_grp",
-            F.round("inv_recall", 6).alias("inv_recall"), "inv_ok",
-        )
+    return _planted_recall(
+        d, pairs, 3,
+        [F.col("hamming") <= F.lit(4)],
+        ["a_id", "b_id", "hamming", "same_grp"],
     )
 
 
@@ -5912,41 +5741,10 @@ def dedup_audio_near128(spark, sf_dir):
     )
     sigs = M.fingerprint_audio_multi(with_audio)
     pairs = D.hamming_pairs(sigs, sig_col=["afp0", "afp1"], max_hamming=4)
-    found = pairs.withColumn(
-        "same_grp", F.expr("(a_id div 3) = (b_id div 3)")
-    )
-    expected = (
-        d.select(F.expr("doc_id div 3").alias("_g"))
-        .groupBy("_g")
-        .count()
-        .agg(
-            F.sum(F.expr("count * (count - 1) div 2"))
-            .cast("long")
-            .alias("expected_pairs")
-        )
-    )
-    pooled = found.agg(
-        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
-        .cast("long")
-        .alias("found_same")
-    )
-    return (
-        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
-        .crossJoin(F.broadcast(pooled))
-        .withColumn(
-            "inv_recall",
-            F.col("found_same").cast("double") / F.col("expected_pairs"),
-        )
-        .withColumn(
-            "inv_ok",
-            F.col("same_grp")
-            & (F.col("hamming") <= F.lit(4))
-            & (F.col("inv_recall") >= F.lit(0.999)),
-        )
-        .select(
-            "a_id", "b_id", "hamming", "same_grp",
-            F.round("inv_recall", 6).alias("inv_recall"), "inv_ok",
-        )
+    return _planted_recall(
+        d, pairs, 3,
+        [F.col("hamming") <= F.lit(4)],
+        ["a_id", "b_id", "hamming", "same_grp"],
     )
 
 
@@ -5982,39 +5780,8 @@ def dedup_audio_auto(spark, sf_dir):
 
     with_audio = _planted(spread_input(d), payload)
     pairs = M.audio_pairs_auto(with_audio, n_hint=d.count())
-    found = pairs.withColumn(
-        "same_grp", F.expr("(a_id div 3) = (b_id div 3)")
-    )
-    expected = (
-        d.select(F.expr("doc_id div 3").alias("_g"))
-        .groupBy("_g")
-        .count()
-        .agg(
-            F.sum(F.expr("count * (count - 1) div 2"))
-            .cast("long")
-            .alias("expected_pairs")
-        )
-    )
-    pooled = found.agg(
-        F.sum(F.when(F.col("same_grp"), 1).otherwise(0))
-        .cast("long")
-        .alias("found_same")
-    )
-    return (
-        found.crossJoin(F.broadcast(expected))  # 1-row invariant aggregates
-        .crossJoin(F.broadcast(pooled))
-        .withColumn(
-            "inv_recall",
-            F.col("found_same").cast("double") / F.col("expected_pairs"),
-        )
-        .withColumn(
-            "inv_ok",
-            F.col("same_grp")
-            & (F.col("hamming") == F.lit(0))
-            & (F.col("inv_recall") >= F.lit(0.999)),
-        )
-        .select(
-            "a_id", "b_id", "hamming", "sig_bits", "same_grp",
-            F.round("inv_recall", 6).alias("inv_recall"), "inv_ok",
-        )
+    return _planted_recall(
+        d, pairs, 3,
+        [F.col("hamming") == F.lit(0)],
+        ["a_id", "b_id", "hamming", "sig_bits", "same_grp"],
     )

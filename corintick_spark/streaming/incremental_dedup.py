@@ -134,66 +134,55 @@ def _store_epoch_paths(store_path: str, batch_id: int) -> "list[str]":
     return out
 
 
-def make_batch_processor(
+
+
+def _fold_processor(
     spark: SparkSession,
     store_path: str,
     decisions_path: str,
-    id_col: str = "doc_id",
-    text: str = "text",
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    policy: str = "min_id",
+    id_col: str,
+    sign,
+    match_store,
+    intra_pairs,
+    longest_col: "str | None" = None,
 ):
-    """Build the foreachBatch fold callback. Module-level (not a closure
-    of the stream runner) so tests can drive it directly with repeated
-    batch_ids — the retry-idempotency contract is part of the API.
+    """The one foreachBatch fold body; a tier supplies only its signer and
+    its two matchers.
 
-    ``policy`` picks the INTRA-BATCH cluster survivor (verdict r06 item 8
-    — one knob shared with the batch tier): ``"min_id"`` keeps the
-    smallest id per duplicate cluster (dedup_clusters' keeper) and
-    ``"longest_text"`` keeps the longest text, id breaking ties
-    (dedup_survivors' curation policy). ACROSS batches the stored
-    survivor always wins regardless of policy — a stream cannot retract
-    an already-emitted survivor when a longer duplicate arrives later;
-    the stream≡batch parity test therefore feeds one batch."""
-    if policy not in ("min_id", "longest_text"):
-        raise ValueError(f"unknown survivorship policy: {policy!r}")
+    ``sign(batch)`` -> the batch's signature frame keyed by ``id_col`` (the
+    rows the store keeps); ``match_store(sig, store)`` -> (new_id,
+    corpus_id, ...) pairs of the signed batch against the store;
+    ``intra_pairs(sig)`` -> (a_id, b_id, ...) pairs within the batch.
+    ``longest_col``: keep the longest value of this column per intra-batch
+    cluster (id breaking ties) instead of the cluster minimum.
 
-    def _store_paths(batch_id: int) -> list[str]:
-        return _store_epoch_paths(store_path, batch_id)
+    Per micro-batch: sign the batch once, match it against the store,
+    cluster the intra-batch pairs, apply survivorship, then write
+    survivors and decisions to their epoch directories and release the
+    checkpoints."""
+    from corintick_spark.operators.dup_clusters import connected_components
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # one physical pass over the batch feeds signature build, the
-        # store join, and the intra-batch join
-        sig = D.minhash_signature_table(
-            batch_df, id_col, text, k, num_hashes
-        ).localCheckpoint(eager=True)
+        # the one signing pass: the checkpoint feeds the store match, the
+        # intra-batch pairs and the survivor write
+        sig = sign(batch_df).localCheckpoint(eager=True)
 
         # vs the store (earlier batches + any warm-start corpus)
-        prior = _store_paths(batch_id)
+        prior = _store_epoch_paths(store_path, batch_id)
         if prior:
-            store = spark.read.parquet(*prior)
-            vs_store = D.incremental_minhash_dedup(
-                batch_df, store, id_col, text, k, num_hashes, bands, threshold
-            ).select("new_id", F.col("corpus_id").alias("matched_id"))
+            vs_store = match_store(sig, spark.read.parquet(*prior)).select(
+                "new_id", F.col("corpus_id").alias("matched_id")
+            )
         else:
             vs_store = None
 
         # intra-batch duplicate clusters: transitive closure of the batch's
-        # pair graph; the cluster survivor follows `policy` and every
-        # other member is a dup matched to it
-        from corintick_spark.operators.dup_clusters import connected_components
-
-        intra_pairs = D.minhash_lsh_pairs(
-            batch_df, id_col, text, k, num_hashes, bands, threshold
-        )
-        labels = connected_components(intra_pairs)
-        if policy == "longest_text":
+        # pair graph; every non-keeper member is a dup matched to its keeper
+        labels = connected_components(intra_pairs(sig))
+        if longest_col is not None:
             stats = batch_df.select(
                 F.col(id_col).alias("node"),
-                F.coalesce(F.length(text), F.lit(-1)).alias("_len"),
+                F.coalesce(F.length(longest_col), F.lit(-1)).alias("_len"),
             )
             keepers = (
                 labels.join(stats, "node")
@@ -204,19 +193,13 @@ def make_batch_processor(
                     ).alias("_keeper")
                 )
             )
-            intra = (
-                labels.join(keepers, "comp")
-                .filter(F.col("node") != F.col("_keeper"))
-                .select(
-                    F.col("_keeper").alias("matched_id"),
-                    F.col("node").alias("new_id"),
-                )
+            labels = labels.join(keepers, "comp").select(
+                "node", F.col("_keeper").alias("comp")
             )
-        else:  # min_id — the CC root IS the cluster minimum
-            intra = (
-                labels.filter(F.col("node") != F.col("comp"))
-                .select(F.col("comp").alias("matched_id"), F.col("node").alias("new_id"))
-            )
+        # min_id: the CC root IS the cluster minimum
+        intra = labels.filter(F.col("node") != F.col("comp")).select(
+            F.col("comp").alias("matched_id"), F.col("node").alias("new_id")
+        )
         matches = intra if vs_store is None else vs_store.unionByName(intra)
         dup = matches.groupBy("new_id").agg(F.min("matched_id").alias("matched_id"))
 
@@ -257,6 +240,64 @@ def make_batch_processor(
     return _process
 
 
+def _run_fold(
+    stream: DataFrame, process, work: str, decisions_path: str, name: str
+) -> DataFrame:
+    """Run ``stream`` to quiescence through ``process`` and read back the
+    decisions frame (doc_id, is_dup, matched_id)."""
+    q = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+        .queryName(name + uuid.uuid4().hex[:8])
+        .start()
+    )
+    q.awaitTermination()
+    return stream.sparkSession.read.option("recursiveFileLookup", "true").parquet(
+        decisions_path
+    )
+
+
+def make_batch_processor(
+    spark: SparkSession,
+    store_path: str,
+    decisions_path: str,
+    id_col: str = "doc_id",
+    text: str = "text",
+    k: int = 3,
+    num_hashes: int = 32,
+    bands: int = 8,
+    threshold: float = 0.5,
+    policy: str = "min_id",
+):
+    """Build the MinHash-tier foreachBatch fold callback. Module-level (not
+    a closure of the stream runner) so tests can drive it directly with
+    repeated batch_ids — the retry-idempotency contract is part of the
+    API. The batch is shingled and signed once; the store match is the
+    bipartite and the intra-batch pairs the self form of the MinHash band
+    join (operators/dedup.py), both over that one signature checkpoint.
+
+    ``policy`` picks the INTRA-BATCH cluster survivor (one knob shared
+    with the batch tier): ``"min_id"`` keeps the smallest id per duplicate
+    cluster (dedup_clusters' keeper) and ``"longest_text"`` keeps the
+    longest text, id breaking ties (dedup_survivors' curation policy).
+    ACROSS batches the stored survivor always wins regardless of policy —
+    a stream cannot retract an already-emitted survivor when a longer
+    duplicate arrives later; the stream≡batch parity test therefore feeds
+    one batch."""
+    if policy not in ("min_id", "longest_text"):
+        raise ValueError(f"unknown survivorship policy: {policy!r}")
+    return _fold_processor(
+        spark, store_path, decisions_path, id_col,
+        lambda b: D.minhash_signature_table(b, id_col, text, k, num_hashes),
+        lambda sig, store: D._minhash_pairs(
+            sig, id_col, num_hashes, bands, threshold, corpus=store
+        ),
+        lambda sig: D._minhash_pairs(sig, id_col, num_hashes, bands, threshold),
+        longest_col=text if policy == "longest_text" else None,
+    )
+
+
 def streaming_incremental_dedup(
     spark: SparkSession,
     doc_stream: DataFrame,
@@ -282,23 +323,11 @@ def streaming_incremental_dedup(
     if store_path is None:
         store_path = os.path.join(work, "store")
     decisions_path = os.path.join(work, "decisions")
-    _process = make_batch_processor(
+    process = make_batch_processor(
         spark, store_path, decisions_path,
         id_col, text, k, num_hashes, bands, threshold, policy,
     )
-
-    ckpt = os.path.join(work, "ckpt")
-    q = (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName("incdedup_" + uuid.uuid4().hex[:8])
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        decisions_path
-    )
+    return _run_fold(doc_stream, process, work, decisions_path, "incdedup_")
 
 
 def make_hamming_batch_processor(
@@ -310,74 +339,28 @@ def make_hamming_batch_processor(
     max_hamming: int = 0,
     id_col: str = "doc_id",
 ):
-    """The PERCEPTUAL-tier twin of :func:`make_batch_processor` (round
-    11, verdict r10 item 7): the same epoch-keyed signature-store fold,
-    with Hamming-signature matching in place of MinHash/Jaccard — the
-    operator a live image/audio ingest actually runs. ``signer`` maps a
-    payload micro-batch to its signature frame (``phash128_images``,
-    ``fingerprint_audio`` ...; applied to the BATCH only — the store
-    carries (id, signature words) and corpus payload bytes are never
-    re-decoded). Cross-batch matching is the bipartite
+    """The PERCEPTUAL-tier binding of the same fold as
+    :func:`make_batch_processor`, with Hamming-signature matching in place
+    of MinHash/Jaccard — the operator a live image/audio ingest actually
+    runs. ``signer`` maps a payload micro-batch to its signature frame
+    (``phash128_images``, ``fingerprint_audio`` ...; applied to the BATCH
+    only — the store carries (id, signature words) and corpus payload
+    bytes are never re-decoded). Cross-batch matching is the bipartite
     :func:`corintick_spark.operators.dedup.hamming_join`; intra-batch
     clusters come from :func:`...dedup.hamming_pairs` + connected
-    components with min-id survivorship (the batch tiers' policy).
-    Same retry-idempotency contract: epoch-keyed OVERWRITE commits, the
-    store read excludes the current epoch."""
+    components with min-id survivorship (the batch tiers' policy). Same
+    retry-idempotency contract: epoch-keyed OVERWRITE commits, the store
+    read excludes the current epoch."""
     cols = [sig_col] if isinstance(sig_col, str) else list(sig_col)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # one signing pass feeds the store join, the intra-batch join,
-        # and the survivor write
-        sig = signer(batch_df).localCheckpoint(eager=True)
-
-        prior = _store_epoch_paths(store_path, batch_id)
-        if prior:
-            store = spark.read.parquet(*prior)
-            vs_store = D.hamming_join(
-                sig, store, id_col=id_col, sig_col=cols,
-                max_hamming=max_hamming,
-            ).select("new_id", F.col("corpus_id").alias("matched_id"))
-        else:
-            vs_store = None
-
-        from corintick_spark.operators.dup_clusters import connected_components
-
-        intra_pairs = D.hamming_pairs(
+    return _fold_processor(
+        spark, store_path, decisions_path, id_col, signer,
+        lambda sig, store: D.hamming_join(
+            sig, store, id_col=id_col, sig_col=cols, max_hamming=max_hamming
+        ),
+        lambda sig: D.hamming_pairs(
             sig, id_col=id_col, sig_col=cols, max_hamming=max_hamming
-        )
-        labels = connected_components(intra_pairs)
-        intra = (
-            labels.filter(F.col("node") != F.col("comp"))
-            .select(F.col("comp").alias("matched_id"), F.col("node").alias("new_id"))
-        )
-        matches = intra if vs_store is None else vs_store.unionByName(intra)
-        dup = matches.groupBy("new_id").agg(F.min("matched_id").alias("matched_id"))
-
-        decisions = (
-            batch_df.select(F.col(id_col))
-            .join(dup, F.col(id_col) == F.col("new_id"), "left")
-            .select(
-                id_col,
-                F.col("matched_id").isNotNull().alias("is_dup"),
-                "matched_id",
-            )
-            .localCheckpoint(eager=True)
-        )
-        survivors = sig.join(
-            decisions.filter("is_dup").select(F.col(id_col).alias("_d")),
-            sig[id_col] == F.col("_d"),
-            "left_anti",
-        )
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(store_path, f"b{batch_id}")
-        )
-        decisions.write.mode("overwrite").parquet(
-            os.path.join(decisions_path, f"b{batch_id}")
-        )
-        release_local_checkpoint(sig)
-        release_local_checkpoint(decisions)
-
-    return _process
+        ),
+    )
 
 
 def streaming_incremental_neardup(
@@ -402,20 +385,8 @@ def streaming_incremental_neardup(
     if store_path is None:
         store_path = os.path.join(work, "store")
     decisions_path = os.path.join(work, "decisions")
-    _process = make_hamming_batch_processor(
+    process = make_hamming_batch_processor(
         spark, store_path, decisions_path, signer, sig_col,
         max_hamming, id_col,
     )
-
-    ckpt = os.path.join(work, "ckpt")
-    q = (
-        payload_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName("incneardup_" + uuid.uuid4().hex[:8])
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        decisions_path
-    )
+    return _run_fold(payload_stream, process, work, decisions_path, "incneardup_")

@@ -28,8 +28,18 @@ _SLOW_FILES: dict[str, set[str]] = {
     "test_graph_pq.py": set(),            # PQ/IVF recall fits
     "test_fit_sampling.py": set(),        # sampled-fit recall batteries
     "test_fuzz_expressions.py": set(),    # randomized expression battery
-    "test_streaming_incremental.py": set(),
-    "test_streaming_incremental_perceptual.py": set(),
+    "test_streaming_incremental.py": {
+        # the one fold body: store match, intra-batch pairs, survivorship
+        "test_cross_batch_planted_dup",
+        "test_batch_retry_is_exactly_once",
+        "test_longest_text_policy_intra_batch",
+        "test_fold_signs_batch_once",
+    },
+    "test_streaming_incremental_perceptual.py": {
+        "test_cross_batch_planted_dup_hamming",
+        "test_batch_retry_is_exactly_once_hamming",
+        "test_fold_signs_batch_once_hamming",
+    },
     "test_streaming_heavyhitters.py": set(),
     "test_streaming_recovery.py": set(),
     "test_streaming_late.py": set(),
@@ -69,6 +79,15 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_phash_pairs_auto_routes_both_widths",
         "test_video_pairs_auto_routes_both_widths",
         "test_audio_pairs_auto_routes_both_widths",
+        # the near-dup band join: shared band keys, exchange sizing and
+        # verification behind the MinHash and Hamming tiers
+        "test_minhash_lsh_finds_planted_near_duplicates",
+        "test_incremental_minhash_dedup",
+        "test_hamming_pairs_multiword_signature",
+        "test_hamming_join_bipartite_differential",
+        "test_hamming_pairs_combination_banding_differential",
+        "test_simhash_flags_identical_and_near",
+        "test_simhash_words_lanes_and_pairs",
     },
     "test_snapshots.py": {
         # append_split landed this round (stream_cdf_partitioned path)

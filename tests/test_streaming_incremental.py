@@ -257,3 +257,39 @@ def test_unknown_policy_raises(spark):
 
     with pytest.raises(ValueError, match="policy"):
         make_batch_processor(spark, "/tmp/x", "/tmp/y", policy="newest")
+
+
+def test_fold_signs_batch_once(spark, monkeypatch):
+    """Folding a batch against a non-empty store builds the MinHash
+    signature plan ONCE: the store match and the intra-batch pairs both
+    read the fold's own signature checkpoint instead of re-shingling and
+    re-hashing the batch text."""
+    from corintick_spark.streaming.incremental_dedup import make_batch_processor
+
+    work = tempfile.mkdtemp(prefix="incsign_")
+    try:
+        dec = os.path.join(work, "dec")
+        proc = make_batch_processor(
+            spark, os.path.join(work, "store"), dec, threshold=0.5
+        )
+        proc(spark.createDataFrame(
+            [(1, BASE), (2, OTHER)], "doc_id long, text string"), 0)
+        calls = []
+        real = D.minhash_signature
+
+        def counting(*a, **kw):
+            calls.append(1)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(D, "minhash_signature", counting)
+        proc(spark.createDataFrame(
+            [(3, BASE + " extra"), (4, THIRD), (5, THIRD + " tail")],
+            "doc_id long, text string",
+        ), 1)
+        assert len(calls) == 1
+        out = spark.read.option("recursiveFileLookup", "true").parquet(dec)
+        rows = {r.doc_id: (r.is_dup, r.matched_id) for r in out.collect()}
+        assert rows[3] == (True, 1)  # store match
+        assert rows[4] == (False, None) and rows[5] == (True, 4)  # intra-batch
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

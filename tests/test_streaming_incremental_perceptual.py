@@ -181,3 +181,35 @@ def test_determinism_two_runs(spark):
     for i in sorted(a):
         keeper = (i // 3) * 3
         assert a[i] == ((i != keeper), keeper if i != keeper else None)
+
+
+def test_fold_signs_batch_once_hamming(spark):
+    """Folding a batch against a non-empty store calls the signer once:
+    the store match, the intra-batch pairs and the survivor write share
+    its checkpoint."""
+    work = tempfile.mkdtemp(prefix="incneardup_sign_")
+    calls = []
+
+    def signer(df):
+        calls.append(1)
+        return _identity_signer(df)
+
+    try:
+        dec = os.path.join(work, "decisions")
+        proc = make_hamming_batch_processor(
+            spark, os.path.join(work, "store"), dec, signer, "sig",
+            max_hamming=0,
+        )
+        proc(spark.createDataFrame([(1, 9)], "doc_id long, sig long"), 0)
+        calls.clear()
+        proc(spark.createDataFrame(
+            [(10, 9), (11, 5), (12, 5)], "doc_id long, sig long"), 1)
+        assert calls == [1]
+        out = spark.read.option("recursiveFileLookup", "true").parquet(dec)
+        rows = {
+            int(r.doc_id): (bool(r.is_dup), r.matched_id) for r in out.collect()
+        }
+        assert rows[10] == (True, 1)
+        assert rows[11] == (False, None) and rows[12] == (True, 11)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
