@@ -1,4 +1,4 @@
-"""Lifetime of eagerly localCheckpointed (and otherwise persisted) results.
+"""Materializing, measuring and releasing eagerly localCheckpointed frames.
 
 ``Dataset.unpersist()`` is a silent NO-OP on a localCheckpointed frame:
 the checkpoint's blocks are owned by the underlying RDD (the Dataset was
@@ -6,8 +6,17 @@ never registered with the CacheManager), so they are reclaimed only when
 the ContextCleaner notices the RDD is garbage — which, through the py4j
 reference chain, can lag Python GC by a long time.
 
-The contract has one mechanism and one fallback:
+There is one step for materializing and measuring, and one scope for
+lifetime:
 
+* ``materialize(df, *release, **stats)`` — eagerly checkpoint ``df`` and
+  read ``stats`` (aggregate columns: a loop's convergence count or hash,
+  a build side's size) from the SAME job, through ``df.observe``; then
+  release the frames the new one supersedes. An iterative operator frees
+  each round's superseded checkpoint this way inside its own loop, which
+  bounds peak memory within ONE query (connected components, PageRank,
+  BFS), independent of any scope. No second action re-reads a checkpoint
+  for a count.
 * ``with scope(spark): ...`` — on exit, every RDD persisted since entry
   is unpersisted, and nothing that was persisted before entry. Run a
   query AND consume its result (collect, toPandas, a sink write) inside
@@ -20,18 +29,16 @@ The contract has one mechanism and one fallback:
   with it.
 * Outside any scope nothing is released early: results ride Spark's
   ContextCleaner, which frees blocks once the JVM collects their RDD.
-
-Separately, an iterative operator frees each round's superseded
-checkpoint inside its own loop with ``release_local_checkpoint`` — that
-bounds peak memory within ONE query (connected components, PageRank,
-BFS), independent of any scope.
 """
 
 from __future__ import annotations
 
+import uuid
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+
+from corintick_spark.operators.observe import observe_metrics
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -47,6 +54,29 @@ def release_local_checkpoint(df: DataFrame) -> None:
             plan.rdd().unpersist(False)
     except Exception:
         pass  # py4j internals — the ContextCleaner remains the fallback
+
+
+def materialize(
+    df: DataFrame, *release: DataFrame, **stats: Column
+) -> "tuple[DataFrame, dict]":
+    """Eagerly localCheckpoint ``df`` and return (checkpointed frame,
+    ``{name: value}`` of ``stats``), then release every frame in
+    ``release``.
+
+    ``stats`` are aggregate columns over ``df``'s output, attached at the
+    top of its plan with ``observe`` — so the checkpoint job computes them
+    and no second job reads the frame back. The values equal an ``agg``
+    over the checkpoint: an empty frame counts 0 and sums NULL. Spark
+    rejects DISTINCT aggregates in ``observe``; measure those with a
+    separate action. ``release`` frames are freed only AFTER the new frame
+    has materialized, so ``df`` may read them (see
+    :func:`release_local_checkpoint`)."""
+    if stats:
+        df, obs = observe_metrics(df, f"ckpt_{uuid.uuid4().hex}", **stats)
+    frame = df.localCheckpoint(eager=True)
+    for old in release:
+        release_local_checkpoint(old)
+    return frame, obs.get if stats else {}
 
 
 def _persistent_rdds(spark) -> dict:

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+from corintick_spark.operators.ckpt import materialize
 from corintick_spark.operators.spread import spread_input
 
 
@@ -123,8 +124,8 @@ def _sized_build(
     magnitude, so Catalyst cannot be trusted with the broadcast decision:
     at sf30 it broadcast the shingle-bearing verification side off that
     estimate and the driver collect blew spark.driver.maxResultSize (1.2
-    GiB of task results). Callers pass ``nbytes`` measured with one
-    aggregate over the materialized checkpoint. At or under the threshold
+    GiB of task results). Callers pass ``nbytes`` measured by the
+    checkpoint job that materialized the side. At or under the threshold
     the side is left to Catalyst, or broadcast when ``broadcast``. Past it
     the side is pinned to shuffle_hash over a partition count sized from
     those bytes: at the session default of 32 partitions the sf30 shingle
@@ -212,8 +213,17 @@ def _minhash_bands(
     )
 
 
+def _minhash_sigs(sig: DataFrame) -> "tuple[DataFrame, int]":
+    """Checkpoint an (id, shingles, sig) frame and measure its bytes in
+    the same job: count + total shingle elements (~24 B each), the size
+    every build-side choice of :func:`_minhash_pairs` reads."""
+    sig, st = materialize(sig, n=F.count(F.lit(1)), el=F.sum(F.size("shingles")))
+    return sig, (st["el"] or 0) * 24 + (st["n"] or 0) * 16
+
+
 def _minhash_pairs(
     sig: DataFrame,
+    nbytes: int,
     id_col: str,
     num_hashes: int,
     bands: int,
@@ -227,23 +237,18 @@ def _minhash_pairs(
     jaccard) with a_id < b_id. With ``corpus`` (a stored signature table
     of the same layout and band parameters) it is the bipartite join,
     returning (new_id, corpus_id, jaccard). ``sig`` feeds the band join
-    AND the verification join-back, so it must be checkpointed (or
-    otherwise materialized) by the caller.
+    AND the verification join-back, so it must be materialized by the
+    caller; ``sig`` and its measured ``nbytes`` come from
+    :func:`_minhash_sigs`, and this function runs no action of its own.
 
     Candidate generation is ID-ONLY: shingle arrays never ride through the
     band join or the pair-dedup exchange (at 100 TB that exchange would
     otherwise carry two full shingle arrays per pre-dedup candidate row).
     Verification joins shingle sets back on the deduplicated id pairs
-    only. One aggregate over ``sig`` measures the real bytes (count +
-    total shingle elements, ~24 B each) for every build-side choice; the
-    corpus side of the bipartite join is a parquet scan whose estimate
-    Catalyst can use as is.
+    only. ``nbytes`` sizes every build-side choice; the corpus side of the
+    bipartite join is a parquet scan whose estimate Catalyst can use as
+    is.
     """
-    st = sig.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size("shingles")).alias("el"),
-    ).first()
-    nbytes = (st["el"] or 0) * 24 + (st["n"] or 0) * 16
     bipartite = corpus is not None
     other = corpus if bipartite else sig
     cand = _band_join(
@@ -299,16 +304,17 @@ def minhash_lsh_pairs(
     re-hashing the corpus text.
     """
     # Materialize the shingle+signature stage ONCE (eager localCheckpoint:
-    # runs a job now, truncates lineage). It feeds FOUR consumers — both
-    # sides of the banded self-join and both sides of the verification
-    # join-back — and Spark would otherwise recompute the hashing pipeline
-    # per consumer (measured 11s vs 3s at sf0.1). At 100 TB write the
-    # signature table to durable storage instead: localCheckpoint blocks
-    # live on executors and cannot survive executor loss.
-    sig = minhash_signature_table(df, id_col, text, k, num_hashes).localCheckpoint(
-        eager=True
+    # runs a job now, truncates lineage, measures the build-side bytes).
+    # It feeds FOUR consumers — both sides of the banded self-join and
+    # both sides of the verification join-back — and Spark would otherwise
+    # recompute the hashing pipeline per consumer (measured 11s vs 3s at
+    # sf0.1). At 100 TB write the signature table to durable storage
+    # instead: localCheckpoint blocks live on executors and cannot survive
+    # executor loss.
+    sig, nbytes = _minhash_sigs(
+        minhash_signature_table(df, id_col, text, k, num_hashes)
     )
-    out = _minhash_pairs(sig, id_col, num_hashes, bands, threshold)
+    out = _minhash_pairs(sig, nbytes, id_col, num_hashes, bands, threshold)
     if return_sig:
         return out, sig.select(F.col(id_col).alias("doc_id"), "shingles", "sig")
     return out
@@ -387,8 +393,8 @@ def incremental_neardup(
             id_col=id_col, sig_col=sig_col, max_hamming=max_hamming,
         )
     return _minhash_pairs(
-        new_sigs.localCheckpoint(eager=True), id_col, num_hashes, bands,
-        threshold, corpus=signature_table,
+        *_minhash_sigs(new_sigs), id_col, num_hashes, bands, threshold,
+        corpus=signature_table,
     )
 
 
@@ -656,15 +662,27 @@ def hamming_join(
     distance d agrees on >= 1 chunk) over the bipartite form of the same
     band join: the new side is typically a fresh mapInPandas decode
     whose checkpointed frame inherits origin-plan size estimates
-    (SCALING.md round 9), so the broadcast decision uses a MEASURED
+    (SCALING.md), so the broadcast decision uses a MEASURED
     count over the checkpoint — small batches broadcast their banded
     rows against the corpus scan (zero corpus shuffle), large ones pin
     a sized shuffle_hash. Returns (new_id, corpus_id, hamming)."""
     return _hamming_band_join(
         new_sigs, corpus_sigs, id_col, sig_col, max_hamming, None, "chunk"
-    ).select(
-        F.col("a_id").alias("new_id"), F.col("b_id").alias("corpus_id"), "hamming"
     )
+
+
+def _words(sig_col: "str | list[str]") -> "list[str]":
+    """The bigint signature word columns of a Hamming signature."""
+    return [sig_col] if isinstance(sig_col, str) else list(sig_col)
+
+
+def _hamming_sigs(sigs: DataFrame, sig_col) -> "tuple[DataFrame, int]":
+    """Checkpoint a signature frame and count its non-null signatures in
+    the same job. The count feeds BOTH the scheme escalation and the
+    exchange sizing of :func:`_hamming_band_join` (inherited plan
+    estimates are untrustworthy on checkpointed frames, SCALING.md)."""
+    sigs, st = materialize(sigs, n=F.count(F.when(_sig_notnull(_words(sig_col)), 1)))
+    return sigs, st["n"]
 
 
 def _hamming_band_join(
@@ -675,18 +693,25 @@ def _hamming_band_join(
     max_hamming: int,
     within: "list[str] | None",
     scheme: str,
+    n_sigs: "int | None" = None,
 ) -> DataFrame:
-    """The body of :func:`hamming_pairs` (``corpus`` None: the self-join)
-    and :func:`hamming_join` (``corpus`` a stored signature table: the
-    bipartite join, chunk scheme only). Returns (*within, a_id, b_id,
-    hamming) with a_id = the ``sigs`` side."""
-    cols = [sig_col] if isinstance(sig_col, str) else list(sig_col)
+    """The body of :func:`hamming_pairs` (``corpus`` None: the self-join,
+    returning (*within, a_id, b_id, hamming)) and :func:`hamming_join`
+    (``corpus`` a stored signature table: the bipartite join, chunk scheme
+    only, returning (new_id, corpus_id, hamming)); the ``sigs`` side is
+    a_id / new_id. Without ``n_sigs`` the (id, signature words, *within)
+    projection of ``sigs`` is materialized and measured here; with it,
+    ``sigs`` and ``n_sigs`` already come from :func:`_hamming_sigs` (the
+    streaming fold's one signature checkpoint)."""
+    cols = _words(sig_col)
     chunks = max_hamming + 1
     # band width; cap at 63 so a chunk value fits a signed bigint (any
     # bits past chunks*width stay uncovered — pigeonhole still holds:
     # d differing bits leave >= 1 of the d+1 DISJOINT chunks clean)
     width = min(63, (64 * len(cols)) // chunks)
     within = list(within or [])
+    if n_sigs is None:
+        sigs, n_sigs = _hamming_sigs(sigs.select(id_col, *cols, *within), cols)
     notnull = _sig_notnull(cols)
     # Checkpoint FIRST, filter the (rare) null signatures after (the
     # JVM-expression form of the duplicate-evaluation trap): a filter on
@@ -698,12 +723,7 @@ def _hamming_band_join(
     # pass and keeps every downstream row identical. A stored corpus
     # table is filtered FIRST instead, so the predicate pushes into its
     # parquet scan.
-    _ckpt = sigs.select(id_col, *cols, *within).localCheckpoint(eager=True)
-    sigs = _ckpt.filter(notnull)
-    # One count over the materialized checkpoint feeds BOTH the scheme
-    # escalation and the exchange sizing (inherited plan estimates are
-    # untrustworthy on checkpointed frames — SCALING.md round 9).
-    n_sigs = sigs.count()
+    sigs = sigs.select(id_col, *cols, *within).filter(notnull)
     if scheme == "auto":
         if width >= 14 or max_hamming < 3:
             scheme = "chunk"
@@ -844,11 +864,12 @@ def _hamming_band_join(
             within=within,
         )
     dist = _hamming([f"a{al}" for al in sig_aliases], [f"b{al}" for al in sig_aliases])
-    return (
-        cand.withColumn("hamming", dist)
-        .filter(F.col("hamming") <= max_hamming)
-        .select(*within, "a_id", "b_id", "hamming")
-    )
+    out = cand.withColumn("hamming", dist).filter(F.col("hamming") <= max_hamming)
+    if corpus is not None:
+        return out.select(
+            F.col("a_id").alias("new_id"), F.col("b_id").alias("corpus_id"), "hamming"
+        )
+    return out.select(*within, "a_id", "b_id", "hamming")
 
 
 def ngram_jaccard_pairs(

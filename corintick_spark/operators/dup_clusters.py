@@ -12,13 +12,13 @@ the path-graph unit test in tests/test_operators.py).
 
 Scale discipline for the driver loop:
 - every iteration's edge frame is eagerly ``localCheckpoint``-ed and the
-  previous one unpersisted: the convergence probe and the next round read
-  the materialized blocks, and the logical plan is truncated each round
-  (it otherwise doubles per round — by round ~10 Catalyst spends longer
-  stringifying the plan than executing it);
-- convergence is detected from a single tiny aggregate per round
-  (edge count + order-independent xxhash64 fold), not a join against the
-  previous labels.
+  previous one released: the next round reads the materialized blocks,
+  and the logical plan is truncated each round (it otherwise doubles per
+  round — by round ~10 Catalyst spends longer stringifying the plan than
+  executing it);
+- convergence is detected from the edge count + an order-independent
+  xxhash64 fold, computed by the round's checkpoint job itself
+  (``ckpt.materialize``), not by a join against the previous labels.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.operators.ckpt import materialize
 
 
 def _large_star(sym: DataFrame, bcast: bool) -> DataFrame:
@@ -72,15 +72,17 @@ def connected_components(
 
     edges: undirected pair list (each edge once, any orientation). Node ids
     must be totally ordered (numeric or string). Converges in O(log n)
-    alternating-star rounds; ``max_iter`` is a safety cap far above that,
-    and exhausting it without reaching the fixpoint raises RuntimeError.
+    alternating-star rounds; ``max_iter`` is a fixpoint guard far above
+    that, not a budget: exhausting it without reaching the fixpoint raises
+    RuntimeError.
 
     ``broadcast_nodes_max``: when the node count is at or below this, each
     star round's per-center minimum table (≤ |nodes| rows) is broadcast
     into its edge join instead of shuffled — AQE cannot infer that from a
     localCheckpointed frame (no size statistics). Above the threshold the
     shuffle path is the correct plan. The node count costs one aggregate
-    over the already-checkpointed edge list, paid once before the loop.
+    over the already-checkpointed edge list, paid once before the loop
+    (a separate action: ``observe`` rejects DISTINCT aggregates).
     """
     raw = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).filter(
         F.col("u") != F.col("v")
@@ -94,13 +96,10 @@ def connected_components(
     ).localCheckpoint(eager=True)
     # ONE aggregate over the materialized edge list feeds both the
     # broadcast decision (exact node count) and the first round's
-    # checkpoint sizing (edge count). Round 12 (guide §1.2 — don't compute
-    # things you throw away): the old shape ALSO built and eagerly
-    # checkpointed a distinct node table here just so the label join after
-    # the loop could read it — but the fixpoint star forest contains
-    # exactly the original node set (every non-root as a child `u`, every
-    # root as a `v`), so labels can be read straight off the final tiny
-    # forest and the full-size node distinct+checkpoint disappears.
+    # checkpoint sizing (edge count). No node table is built: the fixpoint
+    # star forest contains exactly the original node set (every non-root
+    # as a child `u`, every root as a `v`), so labels are read straight
+    # off the final tiny forest.
     head = e.select(F.explode(F.array("u", "v")).alias("n")).agg(
         F.countDistinct("n").alias("nn"), F.count(F.lit(1)).alias("e2")
     ).first()
@@ -112,9 +111,9 @@ def connected_components(
         # each round's checkpoint to its INPUT row count (conservative
         # upper bound on the output) keeps the per-round fixed cost from
         # being paid across spark.sql.shuffle.partitions near-empty
-        # blocks/tasks (round 12 — same discipline as pagerank's node
-        # cache; measured: the post-contraction rounds at sf0.1 run over
-        # ~5k edges but paid 32-partition stages for every star op)
+        # blocks/tasks (same discipline as pagerank's node cache; measured:
+        # the post-contraction rounds at sf0.1 run over ~5k edges but paid
+        # 32-partition stages for every star op)
         return max(1, min(
             -(-n_rows // 250_000),
             edges.sparkSession.sparkContext.defaultParallelism,
@@ -124,28 +123,19 @@ def connected_components(
     n_in = n_edges
     for _ in range(max_iter):
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # eager localCheckpoint: materialize AND truncate lineage each round
-        new_e = (
-            _small_star(_large_star(sym, bcast), bcast)
-            .coalesce(_nparts(n_in))
-            .localCheckpoint(eager=True)
+        # materialize AND truncate lineage each round; the checkpoint job
+        # also yields the count + order-free hash (bit_xor, not sum: ANSI
+        # mode throws on int64 sum overflow, and the edge list is distinct
+        # so xor has no self-cancellation pairs) and then the previous
+        # round's blocks are freed
+        e, st = materialize(
+            _small_star(_large_star(sym, bcast), bcast).coalesce(_nparts(n_in)),
+            e,
+            n=F.count(F.lit(1)),
+            h=F.expr("bit_xor(xxhash64(u, v))"),
         )
-        # one tiny action on the materialized frame: count + order-free hash
-        # (bit_xor, not sum: ANSI mode throws on int64 sum overflow, and the
-        # edge list is distinct so xor has no self-cancellation pairs)
-        stat = new_e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        stat = (stat["n"], stat["h"])
+        stat = (st["n"], st["h"])
         n_in = int(stat[0])
-        # ACTUALLY free the previous round's checkpoint blocks now that
-        # new_e is materialized. Dataset.unpersist() (the round-6 shape)
-        # is a silent no-op on localCheckpointed frames; blocks piled up
-        # one round at a time until repeated sf10 runs OOMed the JVM —
-        # see operators/ckpt.py.
-        release_local_checkpoint(e)
-        e = new_e
         if stat == prev_stat:
             break
         prev_stat = stat

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.operators.ckpt import materialize
 
 
 def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -98,50 +98,43 @@ def bfs_hops(
     plain shuffle join. The visited set grows monotonically and is
     localCheckpoint-ed per level to cut lineage (same segmenting discipline
     as pagerank/connected_components; at 100 TB the checkpoint would be a
-    durable table swap). One `count()` action per level drives loop
-    termination — that is the frontier-size scalar every distributed BFS
-    needs, not a data collect.
+    durable table swap). The frontier-size scalar that drives loop
+    termination is counted by each level's checkpoint job, so a level runs
+    no separate action. ``max_iter`` is a depth limit: nodes further than
+    ``max_iter`` hops are absent from the result, not an error.
     """
-    visited = (
+    count = {"n": F.count(F.lit(1))}
+    frontier, st = materialize(
         seeds.select(F.col(node).cast("long").alias(node))
         .distinct()
-        .select(node, F.lit(0).alias("hops"))
-        .localCheckpoint()
+        .select(node, F.lit(0).alias("hops")),
+        **count,
     )
-    # materialize the edge list ONCE before the loop (round 11): every
-    # level joins against e, and without the checkpoint each level
-    # re-executed the caller's entire edge DERIVATION (for the registered
-    # graph_bfs that is a 3-table fact join + distinct, re-run per hop —
-    # the same disease sql_recursive had). Same discipline as pagerank's
-    # cached norm table.
+    visited = frontier
+    # materialize the edge list ONCE before the loop: every level joins
+    # against e, and without the checkpoint each level re-executed the
+    # caller's entire edge DERIVATION (for the registered graph_bfs that
+    # is a 3-table fact join + distinct, re-run per hop — the same disease
+    # sql_recursive had). Same discipline as pagerank's cached norm table.
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     ).distinct().localCheckpoint(eager=True)
-    frontier = visited
-    frontier_rows = frontier.count()
     for level in range(1, max_iter + 1):
         f = frontier.select(F.col(node).alias("src"))
-        if frontier_rows <= broadcast_frontier_max:
+        if st["n"] <= broadcast_frontier_max:
             f = F.broadcast(f)
-        nxt = (
+        nxt, st = materialize(
             e.join(f, "src")
             .select(F.col("dst").alias(node))
             .distinct()
             .join(visited.select(node), node, "left_anti")
-            .select(node, F.lit(level).alias("hops"))
-            .localCheckpoint()
+            .select(node, F.lit(level).alias("hops")),
+            **count,
         )
-        frontier_rows = nxt.count()
-        if frontier_rows == 0:
+        if st["n"] == 0:
             break
-        old = visited
-        visited = visited.unionByName(nxt).localCheckpoint()
-        # real block release per level (Dataset.unpersist is a no-op on
-        # localCheckpointed frames — ckpt.py); the previous frontier is
-        # also done once the new visited materialized, except at level 1
-        # where it IS the old visited frame
-        release_local_checkpoint(old)
-        if frontier is not old:
-            release_local_checkpoint(frontier)
+        # the old visited set and the previous frontier (at level 1 the
+        # same frame) are done once the new visited set materialized
+        visited, _ = materialize(visited.unionByName(nxt), visited, frontier)
         frontier = nxt
     return visited

@@ -24,9 +24,10 @@ Scale discipline (same rules as operators/pagerank.py):
   otherwise explode the join);
 - each round's graph is eagerly localCheckpoint-ed and the previous one
   released, truncating the logical plan (it otherwise doubles per round);
-- the only loop-body action beyond the eager checkpoint is an O(n·k)
-  changed-edge count on the just-materialized frame (early exit when a
-  round converges — NN-Descent usually needs 3-5);
+- the loop body runs no action beyond the eager checkpoint: the
+  changed-edge count (early exit when a round converges — NN-Descent
+  usually needs 3-5) is summed by the round's checkpoint job
+  (``ckpt.materialize``) over a tag on the newly scored rows;
 - searching never touches the build: it reads the persisted (id, nbr)
   graph plus corpus vectors by equi-join — store both bucketed by id and
   the per-hop candidate lookup is shuffle-free on a cluster.
@@ -47,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.operators.ckpt import materialize
 from corintick_spark.operators.similarity import _cosine, _dot, _norm2
 from corintick_spark.operators.spread import spread_input
 
@@ -115,12 +116,16 @@ def knn_graph(
     level for 10 rounds). The union of ≥2 independent bucketings is an
     expander — like the union of random regular graphs — which is exactly
     the global-random-neighbor init of the paper, at linear total cost
-    (n·init_rounds·bucket_factor·k pairs). The one driver-side action
-    besides the per-round checkpoint is a corpus count to size buckets.
+    (n·init_rounds·bucket_factor·k pairs). The corpus count that sizes
+    buckets is read off the vector table's checkpoint job.
+
+    ``iters`` is a budget: the descent stops early when a round changes no
+    edge, and running out of rounds returns the graph so far.
     """
     bk = build_k or k
-    vecs = spread_input(_prep(corpus, id_col, vec_col)).localCheckpoint()
-    n = vecs.count()
+    vecs = spread_input(_prep(corpus, id_col, vec_col))
+    vecs, st = materialize(vecs, n=F.count(F.lit(1)))
+    n = st["n"]
     if n == 0:
         return vecs.sparkSession.createDataFrame(
             [], "id long, nbr long, score double, rank int"
@@ -170,23 +175,25 @@ def knn_graph(
             # rides along in the union below.
             .join(fwd, ["id", "nbr"], "left_anti")
         )
+        # _new tags the scored rows: they are anti-joined against the old
+        # edges, so the tagged survivors are exactly the changed edges
         scored = _score_pairs(two_hop, vecs).filter(F.col("score").isNotNull())
-        new_graph = _top_k(
-            graph.select("id", "nbr", "score").unionByName(scored), bk
-        ).localCheckpoint()
-        changed = (
-            new_graph.select("id", "nbr")
-            .join(graph.select("id", "nbr"), ["id", "nbr"], "left_anti")
-            .count()
+        graph, st = materialize(
+            _top_k(
+                graph.select("id", "nbr", "score", F.lit(0).alias("_new"))
+                .unionByName(scored.withColumn("_new", F.lit(1))),
+                bk,
+            ),
+            graph,
+            changed=F.sum("_new"),
         )
-        release_local_checkpoint(graph)
-        graph = new_graph
-        if changed == 0:
+        if not st["changed"]:
             break
 
     w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("nbr"))
     return (
-        graph.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        graph.select("id", "nbr", "score")
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
     )
 
@@ -213,7 +220,9 @@ def graph_search(
     of Q probes costs ``hops`` shuffle-bounded jobs regardless of corpus
     size. Per-probe state is ≤ beam·k rows per hop; the visited set is
     what bounds re-scoring, and it is checkpointed with the beam each hop
-    to keep the plan flat.
+    to keep the plan flat. ``hops`` is a budget: the walk stops early when
+    a hop adds nothing to any beam, and running out of hops returns the
+    beams so far.
 
     Entry points are PER-PROBE: every probe scores a shared deterministic
     ``sample_size``-node sample (smallest xxhash64(id, seed) — TakeOrdered,
@@ -284,25 +293,23 @@ def graph_search(
             .join(visited, ["q_id", "c_id"], "left_anti")
         )
         gained = scored(expand)
-        new_best = (
-            best.unionByName(gained)
+        # _new tags the gained rows: the visited anti-join keeps them off
+        # the old beam, so the tagged survivors are exactly the beam's growth
+        new_best, st = materialize(
+            best.select("q_id", "c_id", "score", F.lit(0).alias("_new"))
+            .unionByName(gained.withColumn("_new", F.lit(1)))
             .withColumn("_r", F.row_number().over(wb))
             .filter(F.col("_r") <= beam)
-            .drop("_r")
-            .localCheckpoint()
+            .drop("_r"),
+            grew=F.sum("_new"),
         )
-        new_visited = (
-            visited.unionByName(gained.select("q_id", "c_id"))
-            .distinct()
-            .localCheckpoint()
+        visited, _ = materialize(
+            visited.unionByName(gained.select("q_id", "c_id")).distinct(),
+            best,
+            visited,
         )
-        grew = new_best.join(
-            best.select("q_id", "c_id"), ["q_id", "c_id"], "left_anti"
-        ).count()
-        release_local_checkpoint(best)
-        release_local_checkpoint(visited)
-        best, visited = new_best, new_visited
-        if grew == 0:
+        best = new_best
+        if not st["grew"]:
             break
 
     return (

@@ -12,8 +12,8 @@ Scale discipline (the same rules as the connected-components driver loop):
 - the normalized edge list is partitioned by ``src`` ONCE, cached, and
   reused every iteration — only the small (node, rank) table moves through
   a shuffle per round;
-- INTRA-SEGMENT steps reference the previous rank frame exactly ONCE
-  (round 11): the join that re-attaches per-destination contributions to
+- INTRA-SEGMENT steps reference the previous rank frame exactly ONCE:
+  the join that re-attaches per-destination contributions to
   the node universe targets the STATIC cached node table, not the previous
   lazy rank frame, so the logical plan grows LINEARLY with segment length
   instead of ~2^K — which is what lets a full default run execute as one
@@ -23,19 +23,19 @@ Scale discipline (the same rules as the connected-components driver loop):
   previous one released, truncating the logical plan;
 - dangling mass (rank on nodes with no out-edges) stays IN-PLAN: it is
   summed in a sentinel group of the SAME per-round exchange that carries
-  the contributions (round 12 — one shuffle carries both) and broadcast
+  the contributions (one shuffle carries both) and broadcast
   cross-joined into the update — no ``.first()`` driver round-trip inside
   the update job;
 - contribution-less nodes are kept alive by zero-rows UNIONED into the
-  per-round aggregate (round 12), not by re-joining the aggregate against
+  per-round aggregate, not by re-joining the aggregate against
   the node universe — the old shape paid a second broadcast build plus a
   join per round (broadcast path) or a full extra join shuffle (shuffle
   path); 0.0 is the additive identity for the all-positive IEEE partial
   sums, so ranks are unchanged;
-- the only loop-body action besides the eager checkpoint is the
-  CONVERGENCE READ: sum of |Δrank| over the just-checkpointed frame — an
-  O(n_nodes) scan of in-memory partitions — which terminates the loop when
-  the L1 delta drops below ``tol``. ``_diff`` is computed only on the LAST
+- the loop body runs no action besides the eager checkpoint: the
+  CONVERGENCE READ (sum of |Δrank|, which terminates the loop when the L1
+  delta drops below ``tol``) is computed by the segment's checkpoint job
+  itself (``ckpt.materialize``). ``_diff`` is computed only on the LAST
   step of each segment (the only one the convergence read consumes), so
   intermediate steps stay single-reference.
 
@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.operators.ckpt import materialize
 
 
 def pagerank(
@@ -68,21 +68,23 @@ def pagerank(
     """Return (node, rank) after at most ``iterations`` rounds of weighted
     PageRank, stopping early once the L1 rank delta falls below ``tol``
     (``tol=0`` disables early exit — exact fixed-iteration semantics).
+    ``iterations`` is a budget: running out of it returns the ranks so far,
+    converged or not.
 
     edges: directed (src, dst[, weight]) list; parallel edges are merged by
     summing weights. Unweighted edges get weight 1. Ranks sum to 1 (dangling
     mass redistributed uniformly each round).
 
     ``checkpoint_every``: iterations per materialization segment. K update
-    rounds run as ONE Spark job; since round 11 intra-segment steps
-    reference their predecessor exactly once (contributions join against
+    rounds run as ONE Spark job; intra-segment steps reference their
+    predecessor exactly once (contributions join against
     the static node table), so the plan grows linearly in K and the old
     ~2^K blowup that forced K<=4 is gone. The convergence check happens at
     segment boundaries. On graphs WITH dangling nodes each step carries a
     second reference (the 1-row dangling-mass aggregate); its subtree
     dedupes via exchange reuse, but keep K modest (<=8) there.
 
-    ``merge_parallel`` (round 11): the parallel-edge merge
+    ``merge_parallel``: the parallel-edge merge
     (``groupBy(src, dst).sum(w)``) is one full shuffle of the edge list
     before the loop even starts. Callers whose edge construction already
     guarantees one row per (src, dst) pass ``False`` to skip it; the rows
@@ -123,10 +125,7 @@ def pagerank(
     ))
     # node table: ONE explode+groupBy pass over e yields the node set, the
     # static is_dangling flag (never appears as src) AND the per-source
-    # out-weight — round 11 folded out_w into this aggregation; the
-    # previous shape paid a second full aggregation pass over e inside the
-    # norm build (guide §2.4: two aggregations keyed compatibly can share
-    # one pass).
+    # out-weight (two aggregations keyed compatibly share one pass).
     nodes = (
         e.select(
             F.explode(
@@ -152,8 +151,8 @@ def pagerank(
         # the cache would otherwise pin the aggregation's full
         # spark.sql.shuffle.partitions layout (AQE cannot re-plan a cached
         # frame), and the per-round zero-rows branch then pays that many
-        # near-empty tasks EVERY round (measured round 12: 32 extra tasks
-        # per round at sf0.1). The node table is O(|nodes|) rows of three
+        # near-empty tasks EVERY round (measured: 32 extra tasks per round
+        # at sf0.1). The node table is O(|nodes|) rows of three
         # narrow columns — size its partitions like the edge list's.
         .coalesce(max(1, min(
             -(-n_edges // 1_000_000),
@@ -174,7 +173,7 @@ def pagerank(
         return empty
     has_dangling = bool(head["d"])
     bcast = n_nodes <= broadcast_nodes_max
-    # norm's layout (round 11, guide §2.4): on the BROADCAST path the rank
+    # norm's layout: on the BROADCAST path the rank
     # table is shipped to every task each round, so norm's partitioning is
     # irrelevant to the join — a coalesce to the same target count keeps
     # the few-large-tasks shape the loop wants WITHOUT paying a full
@@ -199,18 +198,13 @@ def pagerank(
     _dst_type = dict(norm.dtypes)["dst"]
 
     def step(prev: DataFrame, with_diff: bool) -> DataFrame:
-        # Round 12 (guide §2.4 — remove shuffles outright; verdict r11
-        # item 3): the old shape aggregated contributions, BROADCAST the
-        # aggregate, and LEFT-joined it back onto the node universe to
-        # re-attach contribution-less nodes (coalesce(contrib, 0)). One
-        # union row (dst=node, part=0.0) per node folded into the SAME
-        # aggregate makes every node's group exist, so the join and its
-        # broadcast build disappear — per round: ONE rank broadcast + ONE
-        # exchange, nothing else. Exact: 0.0 is the additive identity for
-        # the all-positive IEEE partial sums, and an empty old group's
-        # coalesce(NULL, 0.0) equals the new 0.0-only sum. On dangling
-        # graphs the dangling-mass total rides the SAME exchange as a
-        # sentinel group (_dang=true, dst=NULL) instead of a separate
+        # One union row (dst=node, part=0.0) per node folded into the
+        # contribution aggregate makes every node's group exist, so no
+        # join re-attaches contribution-less nodes — per round: ONE rank
+        # broadcast + ONE exchange, nothing else. Exact: 0.0 is the
+        # additive identity for the all-positive IEEE partial sums. On
+        # dangling graphs the dangling-mass total rides the SAME exchange
+        # as a sentinel group (_dang=true, dst=NULL) instead of a separate
         # aggregate job — one shuffle carries both.
         rank_src = prev.select(F.col("node").alias("src"), "rank")
         contrib_rows = norm.join(
@@ -285,16 +279,12 @@ def pagerank(
         plan = ranks
         for i in range(seg):
             plan = step(plan, with_diff=(i == seg - 1))
-        prev = ranks
-        ranks = plan.localCheckpoint(eager=True)  # one job per segment
-        # real release (Dataset.unpersist is a no-op on localCheckpointed
-        # frames — blocks otherwise accumulate per segment, ckpt.py)
-        release_local_checkpoint(prev)
+        # one job per segment, which also sums the convergence read (_diff
+        # is the last intra-segment iteration's L1 delta contribution per
+        # node); the previous segment's blocks are freed
+        ranks, st = materialize(plan, ranks, l1=F.sum("_diff"))
         done += seg
-        # convergence read: O(n_nodes) agg over the just-materialized
-        # in-memory frame — _diff is the last intra-segment iteration's
-        # L1 delta contribution per node
-        if tol > 0.0 and ranks.agg(F.sum("_diff")).first()[0] < tol:
+        if tol > 0.0 and st["l1"] < tol:
             break
     result = ranks.select("node", "rank")
     for frame in (norm, nodes, e):

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from corintick_spark.operators.ckpt import materialize
+
 BUCKETS = 1 << 16
 
 
@@ -119,8 +121,10 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
     per-(g, q) cumulative-sum window over the histogram DataFrame and the
     surviving (g, q, lo, hi, k) bounds stay a distributed
     (localCheckpointed) frame: the only driver traffic per pass is the
-    1-row isEmpty termination probe. GROUPS_MAX bounds the BROADCAST of
-    the bounds table (one row per active pair), not driver rows.
+    still-active pair count, read off the pass's own checkpoint job. The
+    loop runs until no pair is active (every pass narrows each active
+    range, so it needs no cap). GROUPS_MAX bounds the BROADCAST of the
+    bounds table (one row per active pair), not driver rows.
 
     Bucket arithmetic runs in DECIMAL so a full-width 64-bit domain
     (hi - lo + 1 = 2^64) cannot overflow BIGINT under ANSI; bucket ids
@@ -143,18 +147,17 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
         [(float(q), int(round(q * 1_000_000))) for q in qs],
         "q double, qm bigint",
     )
-    bounds = (
-        head.crossJoin(F.broadcast(qdf))
-        .select(
-            "g",
-            "q",
-            "lo",
-            "hi",
-            F.expr("greatest(1L, (qm * n + 999999) div 1000000)").alias("k"),
-        )
-        .localCheckpoint()
+    bounds = head.crossJoin(F.broadcast(qdf)).select(
+        "g",
+        "q",
+        "lo",
+        "hi",
+        F.expr("greatest(1L, (qm * n + 999999) div 1000000)").alias("k"),
     )
-    n_pairs = bounds.count()
+    # pairs whose candidate range is still wider than one value
+    active = F.count(F.when(F.col("lo") < F.col("hi"), 1))
+    bounds, st = materialize(bounds, n=F.count(F.lit(1)), active=active)
+    n_pairs = st["n"]
     if n_pairs > GROUPS_MAX:
         raise ValueError(
             f"{n_pairs // len(qs)} groups x {len(qs)} quantiles exceeds "
@@ -169,21 +172,20 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
                 "g", "q", F.col("lo").alias("value")
             )
         )
-        active = bounds.filter(F.col("lo") < F.col("hi"))
-        if active.isEmpty():
+        if st["active"] == 0:
             break
-        a = active.select(
+        a = bounds.filter(F.col("lo") < F.col("hi")).select(
             F.col("g").alias("g_b"),
             F.col("q").alias("q_b"),
             "lo",
             "hi",
             "k",
-            # _wide (round 11): per-pair flag — does (hi - lo) overflow a
-            # BIGINT bucket computation? Only then take the DECIMAL path;
-            # the common case runs plain 64-bit integer arithmetic, which
+            # _wide: per-pair flag — does (hi - lo) overflow a BIGINT
+            # bucket computation? Only then take the DECIMAL path; the
+            # common case runs plain 64-bit integer arithmetic, which
             # codegen executes an order of magnitude cheaper per row than
-            # interpreted BigDecimal ops (guide §1.2 step 2). try_subtract
-            # returns NULL on overflow, making the probe itself safe.
+            # interpreted BigDecimal ops. try_subtract returns NULL on
+            # overflow, making the probe itself safe.
             F.expr(
                 f"try_subtract(hi, lo) IS NULL"
                 f" OR try_subtract(hi, lo) >= {1 << 62}"
@@ -238,7 +240,8 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
                 "lo + (CAST(b AS DECIMAL(10,0)) + 1) * sz - 1) AS BIGINT)"
             ).alias("hi"),
             (F.col("k") - (F.col("cum") - F.col("c"))).alias("k"),
-        ).localCheckpoint()
+        )
+        bounds, st = materialize(bounds, active=active)
     out = solved_parts[0]
     for part in solved_parts[1:]:
         out = out.unionByName(part)
@@ -253,8 +256,8 @@ def grouped_quantile(
 ) -> "DataFrame":
     """Exact per-group discrete q-quantile, ALL groups refined together —
     see :func:`_grouped_refine` for the distributed-refinement shape
-    (histograms never collect to the driver; per-pass driver traffic is a
-    1-row probe). GROUPS_MAX bounds the broadcast bounds table.
+    (histograms never collect to the driver; per-pass driver traffic is
+    one count read off the pass's checkpoint job). GROUPS_MAX bounds the broadcast bounds table.
 
     Returns a DataFrame (group, value). NULL values excluded per group;
     groups with only NULLs are absent from the result."""

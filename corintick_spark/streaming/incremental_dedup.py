@@ -142,35 +142,37 @@ def _fold_processor(
     decisions_path: str,
     id_col: str,
     sign,
-    match_store,
-    intra_pairs,
+    pairs,
     longest_col: "str | None" = None,
 ):
     """The one foreachBatch fold body; a tier supplies only its signer and
-    its two matchers.
+    its matcher.
 
-    ``sign(batch)`` -> the batch's signature frame keyed by ``id_col`` (the
-    rows the store keeps); ``match_store(sig, store)`` -> (new_id,
-    corpus_id, ...) pairs of the signed batch against the store;
-    ``intra_pairs(sig)`` -> (a_id, b_id, ...) pairs within the batch.
-    ``longest_col``: keep the longest value of this column per intra-batch
-    cluster (id breaking ties) instead of the cluster minimum.
+    ``sign(batch)`` -> (the batch's signature checkpoint keyed by
+    ``id_col`` — the rows the store keeps — and its measure), both from
+    one checkpoint job (``dedup._minhash_sigs`` / ``dedup._hamming_sigs``);
+    ``pairs(sig, measure, store)`` -> (new_id, corpus_id, ...) pairs of
+    the signed batch against the store, and ``pairs(sig, measure)`` ->
+    (a_id, b_id, ...) pairs within the batch. The matcher checkpoints and
+    measures nothing of its own. ``longest_col``: keep the longest
+    value of this column per intra-batch cluster (id breaking ties)
+    instead of the cluster minimum.
 
-    Per micro-batch: sign the batch once, match it against the store,
-    cluster the intra-batch pairs, apply survivorship, then write
-    survivors and decisions to their epoch directories and release the
+    Per micro-batch: sign and measure the batch once, match it against the
+    store, cluster the intra-batch pairs, apply survivorship, then write
+    survivors and decisions to their epoch directories and release both
     checkpoints."""
     from corintick_spark.operators.dup_clusters import connected_components
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         # the one signing pass: the checkpoint feeds the store match, the
         # intra-batch pairs and the survivor write
-        sig = sign(batch_df).localCheckpoint(eager=True)
+        sig, measure = sign(batch_df)
 
         # vs the store (earlier batches + any warm-start corpus)
         prior = _store_epoch_paths(store_path, batch_id)
         if prior:
-            vs_store = match_store(sig, spark.read.parquet(*prior)).select(
+            vs_store = pairs(sig, measure, spark.read.parquet(*prior)).select(
                 "new_id", F.col("corpus_id").alias("matched_id")
             )
         else:
@@ -178,7 +180,7 @@ def _fold_processor(
 
         # intra-batch duplicate clusters: transitive closure of the batch's
         # pair graph; every non-keeper member is a dup matched to its keeper
-        labels = connected_components(intra_pairs(sig))
+        labels = connected_components(pairs(sig, measure))
         if longest_col is not None:
             stats = batch_df.select(
                 F.col(id_col).alias("node"),
@@ -289,11 +291,12 @@ def make_batch_processor(
         raise ValueError(f"unknown survivorship policy: {policy!r}")
     return _fold_processor(
         spark, store_path, decisions_path, id_col,
-        lambda b: D.minhash_signature_table(b, id_col, text, k, num_hashes),
-        lambda sig, store: D._minhash_pairs(
-            sig, id_col, num_hashes, bands, threshold, corpus=store
+        lambda b: D._minhash_sigs(
+            D.minhash_signature_table(b, id_col, text, k, num_hashes)
         ),
-        lambda sig: D._minhash_pairs(sig, id_col, num_hashes, bands, threshold),
+        lambda sig, nbytes, store=None: D._minhash_pairs(
+            sig, nbytes, id_col, num_hashes, bands, threshold, corpus=store
+        ),
         longest_col=text if policy == "longest_text" else None,
     )
 
@@ -348,17 +351,18 @@ def make_hamming_batch_processor(
     bytes are never re-decoded). Cross-batch matching is the bipartite
     :func:`corintick_spark.operators.dedup.hamming_join`; intra-batch
     clusters come from :func:`...dedup.hamming_pairs` + connected
-    components with min-id survivorship (the batch tiers' policy). Same
+    components with min-id survivorship (the batch tiers' policy), both
+    over the fold's one signature checkpoint and its non-null count. Same
     retry-idempotency contract: epoch-keyed OVERWRITE commits, the store
     read excludes the current epoch."""
-    cols = [sig_col] if isinstance(sig_col, str) else list(sig_col)
     return _fold_processor(
-        spark, store_path, decisions_path, id_col, signer,
-        lambda sig, store: D.hamming_join(
-            sig, store, id_col=id_col, sig_col=cols, max_hamming=max_hamming
-        ),
-        lambda sig: D.hamming_pairs(
-            sig, id_col=id_col, sig_col=cols, max_hamming=max_hamming
+        spark, store_path, decisions_path, id_col,
+        lambda b: D._hamming_sigs(signer(b), sig_col),
+        # the store match is the bipartite chunk join, the intra-batch
+        # pairs the self-join with its scheme picked from the count
+        lambda sig, n, store=None: D._hamming_band_join(
+            sig, store, id_col, sig_col, max_hamming, None,
+            "auto" if store is None else "chunk", n,
         ),
     )
 

@@ -24,7 +24,13 @@ _SLOW_FILES: dict[str, set[str]] = {
     # file -> allowlist of test functions that STAY in the fast gate
     "test_editjoin.py": set(),            # naive-crossJoin oracles, slow by design
     "test_graph_ingest.py": set(),        # streaming ANN ingest battery
-    "test_nndescent.py": set(),           # graph-ANN recall fits
+    "test_nndescent.py": {
+        # graph-ANN recall fits stay slow; these cheap cases cover the
+        # build and search loops that read their counts off checkpoints
+        "test_empty_corpus",
+        "test_zero_norm_never_pairs",
+        "test_rounds_read_counts_off_checkpoints",
+    },
     "test_graph_pq.py": set(),            # PQ/IVF recall fits
     "test_fit_sampling.py": set(),        # sampled-fit recall batteries
     "test_fuzz_expressions.py": set(),    # randomized expression battery
@@ -34,16 +40,26 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_batch_retry_is_exactly_once",
         "test_longest_text_policy_intra_batch",
         "test_fold_signs_batch_once",
+        "test_fold_measures_signatures_once",
     },
     "test_streaming_incremental_perceptual.py": {
         "test_cross_batch_planted_dup_hamming",
         "test_batch_retry_is_exactly_once_hamming",
         "test_fold_signs_batch_once_hamming",
+        "test_fold_checkpoints_signatures_once_hamming",
     },
     "test_streaming_heavyhitters.py": set(),
     "test_streaming_recovery.py": set(),
     "test_streaming_late.py": set(),
-    "test_quantile.py": set(),            # covered by agg_*median oracle rows
+    "test_quantile.py": {
+        # the grouped refinement loop, which reads its counts off the
+        # bounds checkpoints; the rest is covered by agg_*median oracle rows
+        "test_grouped_quantile_matches_reference",
+        "test_grouped_quantile_string_groups_and_null_only_group",
+        "test_grouped_quantiles_multi_matches_singles",
+        "test_grouped_refinement_is_distributed_no_big_collects",
+        "test_grouped_refinement_reads_counts_off_checkpoints",
+    },
     "test_zorder.py": {
         # the Morton order compact(zorder_by=...) writes into each file
         "test_tickstore_compact_zorder",
@@ -57,6 +73,12 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_connected_components_raises_without_fixpoint",
         "test_pagerank_matches_numpy_power_iteration",
         "test_operators_accept_empty_inputs",
+        # every loop round and measured build side reads its stats off its
+        # own checkpoint job (ckpt.materialize)
+        "test_connected_components_rounds_read_stats_off_checkpoints",
+        "test_pagerank_tol_read_rides_the_checkpoint",
+        "test_minhash_pairs_runs_no_action",
+        "test_hamming_band_join_runs_no_action",
         # the TickStore battery: its read path and schema sidecar changed
         "test_tickstore_roundtrip_and_overlap",
         "test_tickstore_per_write_metadata",
@@ -104,6 +126,11 @@ _SLOW_FILES: dict[str, set[str]] = {
     "test_ckpt_release.py": {
         # the scope contracts and the 20-run sf0.001 long session; the
         # 30-run long session at TEST_SF_DIR is the slow one
+        "test_materialize_stats_equal_a_separate_agg",
+        "test_materialize_runs_the_jobs_of_a_bare_checkpoint",
+        "test_materialize_empty_frame_counts_zero_sums_null",
+        "test_materialize_releases_only_after_materializing",
+        "test_materialize_shares_one_listener",
         "test_scope_releases_rdds_persisted_inside",
         "test_scope_keeps_cache_persisted_before",
         "test_nested_scopes_release_only_their_own",

@@ -1,0 +1,58 @@
+"""Driver-action and job-count spies for operator calls.
+
+``driver_actions`` patches the class of the frames the session actually
+creates (on Spark 4.1 classic that is
+``pyspark.sql.classic.dataframe.DataFrame``, which overrides the methods of
+``pyspark.sql.DataFrame``, so patching the base class sees nothing). Only
+outermost calls are recorded: ``first()`` runs ``collect()`` inside, and is
+recorded once, as ``first``.
+"""
+
+from __future__ import annotations
+
+import uuid
+from contextlib import contextmanager
+
+ACTIONS = ("count", "first", "collect", "isEmpty")
+
+
+@contextmanager
+def driver_actions(spark, monkeypatch, names=ACTIONS):
+    """Yield a list that collects ``(action, frame columns)`` for every
+    outermost call of ``names`` made while the context is open."""
+    cls = type(spark.range(1))
+    calls: list = []
+    depth = [0]
+
+    def wrap(name):
+        real = getattr(cls, name)
+
+        def spy(self, *a, **kw):
+            if depth[0] == 0:
+                calls.append((name, tuple(self.columns)))
+            depth[0] += 1
+            try:
+                return real(self, *a, **kw)
+            finally:
+                depth[0] -= 1
+
+        return spy
+
+    with monkeypatch.context() as m:
+        for name in names:
+            m.setattr(cls, name, wrap(name))
+        yield calls
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group. The
+    listener bus is drained first: without it the count lags."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count spy")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -63,3 +63,15 @@ def test_shuffle_path_matches_broadcast_path(spark):
     a = _run(spark, pairs, [0])
     b = _run(spark, pairs, [0], broadcast_frontier_max=0)
     assert a == b
+
+
+def test_levels_read_frontier_counts_off_checkpoints(spark, monkeypatch):
+    """Each level's frontier size is counted by that level's checkpoint
+    job: the whole search runs no count, first, collect or isEmpty."""
+    from tests.spy import driver_actions
+
+    edges, seeds = _edges(spark, [(0, 1), (1, 2), (2, 3), (0, 3)]), _seeds(spark, [0])
+    with driver_actions(spark, monkeypatch) as calls:
+        got = bfs_hops(edges, seeds)
+    assert calls == []
+    assert {r.node: r.hops for r in got.collect()} == {0: 0, 1: 1, 2: 2, 3: 1}

@@ -1,4 +1,5 @@
-"""Checkpoint lifetime (operators/ckpt.py::scope) and the streaming
+"""The checkpoint-and-measure step (operators/ckpt.py::materialize),
+checkpoint lifetime (operators/ckpt.py::scope) and the streaming
 worker-spawn-flake retry matcher. Without these, a Spark upgrade that
 changes py4j internals or the exception message would silently revert
 both to no-ops.
@@ -8,7 +9,10 @@ from __future__ import annotations
 
 import os
 
-from corintick_spark.operators.ckpt import release_local_checkpoint, scope
+import pyspark.sql.functions as F
+
+from corintick_spark.operators.ckpt import materialize, release_local_checkpoint, scope
+from tests.spy import count_jobs
 
 # the registered queries whose operators leave result-feeding checkpoints
 # alive when they return (nndescent/ANN frames are held across operator
@@ -23,6 +27,61 @@ _CHECKPOINTING_QUERIES = [
 
 def _persistent_ids(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _edge_stats():
+    return {"n": F.count(F.lit(1)), "s": F.expr("bit_xor(xxhash64(u, v))")}
+
+
+def _edges(spark, n=1000):
+    return spark.range(n).selectExpr("id AS u", "id * 7 % 113 AS v").repartition(3)
+
+
+def test_materialize_stats_equal_a_separate_agg(spark):
+    frame, st = materialize(_edges(spark), **_edge_stats())
+    want = frame.agg(*[c.alias(k) for k, c in _edge_stats().items()]).first()
+    assert st == want.asDict() and st["n"] == 1000
+    assert frame.count() == 1000
+
+
+def test_materialize_runs_the_jobs_of_a_bare_checkpoint(spark):
+    _, bare = count_jobs(spark, lambda: _edges(spark).localCheckpoint(eager=True))
+    _, measured = count_jobs(
+        spark, lambda: materialize(_edges(spark), **_edge_stats())
+    )
+    assert bare >= 1 and measured == bare
+
+
+def test_materialize_empty_frame_counts_zero_sums_null(spark):
+    frame, st = materialize(_edges(spark).filter("u < 0"), **_edge_stats())
+    assert st == {"n": 0, "s": None}
+    assert frame.count() == 0
+
+
+def test_materialize_releases_only_after_materializing(spark):
+    """The new frame reads the released one: releasing it first would
+    leave the checkpoint job without its input blocks."""
+    old = spark.range(100).localCheckpoint(eager=True)
+    old_rdd = old._jdf.queryExecution().analyzed().rdd().id()
+    assert old_rdd in _persistent_ids(spark)
+    new, st = materialize(old.selectExpr("id * 2 AS x"), old, n=F.count(F.lit(1)))
+    assert st == {"n": 100}
+    assert old_rdd not in _persistent_ids(spark)
+    assert new.agg(F.sum("x")).first()[0] == 9900
+    release_local_checkpoint(new)
+
+
+def test_materialize_shares_one_listener(spark):
+    """Each call's observation is unique, but the session keeps one
+    query-execution listener for all of them."""
+    manager = spark._jsparkSession.listenerManager()
+    materialize(spark.range(3), n=F.count(F.lit(1)))
+    before = len(manager.listListeners())
+    for i in range(30):
+        frame, st = materialize(spark.range(i), n=F.count(F.lit(1)))
+        assert st == {"n": i}
+        release_local_checkpoint(frame)
+    assert len(manager.listListeners()) == before
 
 
 def test_scope_releases_rdds_persisted_inside(spark):

@@ -158,6 +158,31 @@ def test_empty_corpus(spark):
     assert knn_graph(e, k=3, iters=1).count() == 0
 
 
+def test_rounds_read_counts_off_checkpoints(spark, monkeypatch):
+    """knn_graph's corpus count and each round's changed-edge count, and
+    graph_search's per-hop growth count, are read off the checkpoint jobs
+    (the changed/grown rows are tagged and summed): neither call runs a
+    count, first, collect or isEmpty."""
+    from tests.spy import driver_actions
+
+    df = spark.createDataFrame(_clustered_pdf(n_clusters=4, per_cluster=6, dim=8))
+    with driver_actions(spark, monkeypatch) as calls:
+        g = knn_graph(df, k=3, iters=2, build_k=4)
+    assert calls == []
+    graph = g.cache()
+    pdf = graph.toPandas()
+    assert list(graph.columns) == ["id", "nbr", "score", "rank"]
+    assert (pdf.groupby("id").size() == 3).all()
+    probes = df.filter(F.col("vec_id") < 4)
+    with driver_actions(spark, monkeypatch) as calls:
+        out = graph_search(probes, graph, df, k=2, beam=4, hops=2, sample_size=8)
+    assert calls == []
+    res = out.toPandas()
+    assert list(res.columns) == ["q_id", "c_id", "score", "rank"]
+    assert (res.groupby("q_id").size() == 2).all()
+    graph.unpersist()
+
+
 def test_graph_index_lifecycle(spark, clustered, tmp_path):
     from corintick_spark.operators.ann_index import GraphIndex
 

@@ -745,6 +745,81 @@ def test_pagerank_tol_early_exit_matches_fixpoint(spark):
     assert abs(sum(fast.values()) - 1.0) < 1e-9
 
 
+def test_connected_components_rounds_read_stats_off_checkpoints(spark, monkeypatch):
+    """Each round's edge count and xor-hash come from its checkpoint job:
+    the only action left is the pre-loop DISTINCT node-count head, which
+    observe cannot carry."""
+    from corintick_spark.operators.dup_clusters import connected_components
+    from tests.spy import driver_actions
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)] + [(20, 21)], "a_id long, b_id long"
+    )
+    with driver_actions(spark, monkeypatch) as calls:
+        labels = connected_components(edges)
+    assert calls == [("first", ("nn", "e2"))]
+    comp = {r.node: r.comp for r in labels.collect()}
+    assert comp == {**{i: 0 for i in range(13)}, 20: 20, 21: 20}
+
+
+def test_pagerank_tol_read_rides_the_checkpoint(spark, monkeypatch):
+    """The tol read is summed by each segment's checkpoint job: with an
+    early exit the only actions left are the two pre-loop sizing reads,
+    and the early-exit ranks match a fixed-iteration run."""
+    from corintick_spark.operators.pagerank import pagerank
+    from tests.spy import ACTIONS, driver_actions
+
+    # every node has out-edges: the single-reference (non-dangling) path
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"), ("c", "d")],
+        "src string, dst string",
+    )
+    exact = {r.node: r.rank for r in pagerank(df, iterations=60).collect()}
+    with driver_actions(spark, monkeypatch, (*ACTIONS, "localCheckpoint")) as calls:
+        fast = pagerank(df, iterations=60, tol=1e-9, checkpoint_every=4)
+    actions = [name for name, _ in calls if name != "localCheckpoint"]
+    assert actions == ["count", "first"]
+    # early exit: fewer segment checkpoints than the 15 a full run needs
+    assert len(calls) - len(actions) < 1 + 15
+    got = {r.node: r.rank for r in fast.collect()}
+    assert set(got) == set(exact)
+    for k in exact:
+        assert abs(exact[k] - got[k]) < 1e-8, (k, exact[k], got[k])
+
+
+def test_minhash_pairs_runs_no_action(spark, monkeypatch):
+    """The signature checkpoint job measures the build-side bytes, so the
+    MinHash band join and its verification run no action of their own."""
+    from corintick_spark.operators.dedup import minhash_lsh_pairs
+    from tests.spy import driver_actions
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    df = spark.createDataFrame(
+        [(1, base), (2, base + " today"), (3, "an entirely different text about cats")],
+        "doc_id long, text string",
+    )
+    with driver_actions(spark, monkeypatch) as calls:
+        pairs = minhash_lsh_pairs(df, threshold=0.5)
+    assert calls == []
+    assert [(r.a_id, r.b_id) for r in pairs.collect()] == [(1, 2)]
+
+
+def test_hamming_band_join_runs_no_action(spark, monkeypatch):
+    """The non-null signature count rides the signature checkpoint job:
+    the Hamming self-join runs no count of its own."""
+    from corintick_spark.operators.dedup import hamming_pairs
+    from tests.spy import driver_actions
+
+    sigs = spark.createDataFrame(
+        [(1, 0b1011), (2, 0b1010), (3, 1 << 40), (4, None)],
+        "doc_id long, sig long",
+    )
+    with driver_actions(spark, monkeypatch) as calls:
+        pairs = hamming_pairs(sigs, max_hamming=1)
+    assert calls == []
+    assert [(r.a_id, r.b_id, r.hamming) for r in pairs.collect()] == [(1, 2, 1)]
+
+
 def test_operators_accept_empty_inputs(spark):
     """Fresh-deployment state: every operator API must return an empty
     result on empty input, never throw (pagerank previously divided by its

@@ -134,8 +134,6 @@ def test_grouped_refinement_is_distributed_no_big_collects(spark, monkeypatch):
     reference on the same data."""
     import collections
 
-    from pyspark.sql import DataFrame
-
     from corintick_spark.operators.quantile import grouped_quantile
 
     n_groups = 10_000
@@ -160,14 +158,17 @@ def test_grouped_refinement_is_distributed_no_big_collects(spark, monkeypatch):
     }
 
     sizes = []
-    orig = DataFrame.collect
+    # the class of the session's frames: on Spark 4.1 classic it overrides
+    # pyspark.sql.DataFrame.collect, so a spy on the base class never fires
+    cls = type(df)
+    orig = cls.collect
 
     def spy(self):
         out = orig(self)
         sizes.append(len(out))
         return out
 
-    monkeypatch.setattr(DataFrame, "collect", spy)
+    monkeypatch.setattr(cls, "collect", spy)
     result = grouped_quantile(df, "g", "x", 0.5)
     inner = list(sizes)
     monkeypatch.undo()
@@ -175,3 +176,22 @@ def test_grouped_refinement_is_distributed_no_big_collects(spark, monkeypatch):
     got = {r.g: r.value for r in result.collect()}
     df.unpersist()
     assert got == want
+
+
+def test_grouped_refinement_reads_counts_off_checkpoints(spark, monkeypatch):
+    """The pair count (GROUPS_MAX guard) and every pass's still-active
+    count ride the bounds checkpoint jobs: the refinement over a
+    multi-pass domain runs no count, first, collect or isEmpty."""
+    from corintick_spark.operators.quantile import grouped_quantiles
+    from tests.spy import driver_actions
+
+    vals = [(g, ((i * 2654435761) % 1_000_003) * (g + 1)) for g in range(3) for i in range(200)]
+    df = spark.createDataFrame(vals, "g long, x bigint")
+    with driver_actions(spark, monkeypatch) as calls:
+        out = grouped_quantiles(df, "g", "x", [0.25, 0.5])
+    assert calls == []
+    got = {(r.g, r.q): r.value for r in out.collect()}
+    for g in range(3):
+        xs = sorted(x for gg, x in vals if gg == g)
+        for q in (0.25, 0.5):
+            assert got[(g, q)] == xs[-(-int(q * 1_000_000 * len(xs)) // 1_000_000) - 1]

@@ -213,3 +213,37 @@ def test_fold_signs_batch_once_hamming(spark):
         assert rows[11] == (False, None) and rows[12] == (True, 11)
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+def test_fold_checkpoints_signatures_once_hamming(spark, monkeypatch):
+    """Folding a batch against a non-empty store checkpoints and measures
+    its signatures ONCE: the store match and the intra-batch pairs read
+    the fold's own checkpoint and non-null count instead of each
+    checkpointing and counting a copy."""
+    from tests.spy import ACTIONS, driver_actions
+
+    work = tempfile.mkdtemp(prefix="incneardup_ckpt_")
+    try:
+        dec = os.path.join(work, "decisions")
+        proc = make_hamming_batch_processor(
+            spark, os.path.join(work, "store"), dec, _identity_signer, "sig",
+            max_hamming=0,
+        )
+        proc(spark.createDataFrame([(1, 9)], "doc_id long, sig long"), 0)
+        batch = spark.createDataFrame(
+            [(10, 9), (11, 5), (12, 5), (13, None)], "doc_id long, sig long"
+        )
+        with driver_actions(spark, monkeypatch, (*ACTIONS, "localCheckpoint")) as calls:
+            proc(batch, 1)
+        sig_ckpts = [c for c in calls if c[0] == "localCheckpoint" and "sig" in c[1]]
+        assert len(sig_ckpts) == 1
+        assert ("count", ("doc_id", "sig")) not in calls
+        out = spark.read.option("recursiveFileLookup", "true").parquet(dec)
+        rows = {
+            int(r.doc_id): (bool(r.is_dup), r.matched_id) for r in out.collect()
+        }
+        assert rows[10] == (True, 1)
+        assert rows[11] == (False, None) and rows[12] == (True, 11)
+        assert rows[13] == (False, None)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -23,22 +23,10 @@ import pytest
 
 from corintick_spark.snapshots import footer_entries
 from corintick_spark.storage import TickStore
+from tests.spy import count_jobs
 
 SCHEMA = "uid string, ts timestamp, value double"
 T0 = dt.datetime(2024, 1, 2)
-
-
-def _count_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted by job group."""
-    sc = spark.sparkContext
-    group = f"tickstore-manifest-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "tickstore manifest test")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _batch(spark, b, uids=("A", "B", "C", "D"), rows=100, span=dt.timedelta(hours=1)):
@@ -196,7 +184,7 @@ def test_integral_uids_list_and_read_from_the_manifest(spark, tmp_path):
     store = TickStore(spark, str(tmp_path / "store"))
     for b in (0, 1):
         store.write(_batch(spark, b).withColumn("uid", F.ascii("uid").cast("long")))
-    listed, jobs = _count_jobs(spark, lambda: store.list_uids())
+    listed, jobs = count_jobs(spark, lambda: store.list_uids())
     assert jobs == 0 and dict(listed.dtypes)["uid"] == "bigint"
     assert sorted(r["uid"] for r in listed.collect()) == [65, 66, 67, 68]
     _assert_exact(spark, store)
@@ -230,7 +218,7 @@ def test_int96_store_lists_and_reads_the_same_once_indexed(spark, tmp_path):
     window = (T0 + dt.timedelta(hours=3), T0 + dt.timedelta(hours=3, minutes=30))
     want_read = _micros(spark, full.filter((F.col("uid") == "A") & F.col("ts").between(*window)))
 
-    listed, jobs = _count_jobs(spark, lambda: store.list_uids().collect())
+    listed, jobs = count_jobs(spark, lambda: store.list_uids().collect())
     # the one aggregation over the stat-less files: its shuffle stage and
     # its result stage, each a job under adaptive execution
     assert jobs == 2
@@ -238,9 +226,9 @@ def test_int96_store_lists_and_reads_the_same_once_indexed(spark, tmp_path):
     assert _micros(spark, store.read(["A"], *window)) == want_read
 
     reopened = TickStore(spark, store.root)
-    listed, jobs = _count_jobs(spark, lambda: reopened.list_uids().collect())
+    listed, jobs = count_jobs(spark, lambda: reopened.list_uids().collect())
     assert jobs == 0 and sorted(map(tuple, listed)) == want_list
-    df2, jobs = _count_jobs(spark, lambda: reopened.read(["A"], *window))
+    df2, jobs = count_jobs(spark, lambda: reopened.read(["A"], *window))
     assert jobs == 0 and _micros(spark, df2) == want_read
     assert reopened.compact() == 5
     _assert_ts_stats(reopened)  # rewritten as micros
@@ -358,14 +346,14 @@ def test_reads_past_the_listing_threshold(spark, tmp_path):
             if e["uid"] == "A" and (end is None or e["lo"] <= store._bound_micros(end))
         ]
         assert len(opened) == n_files
-        df, jobs = _count_jobs(spark, lambda: store.read(["A"], start, end))
+        df, jobs = count_jobs(spark, lambda: store.read(["A"], start, end))
         assert jobs == 0, (start, end)
         want = full.filter(F.col("uid") == "A")
         if end is not None:
             want = want.filter(F.col("ts").between(F.lit(start), F.lit(end)))
         assert _micros(spark, df) == _micros(spark, want)
 
-    df, jobs = _count_jobs(spark, lambda: store.read(uids))
+    df, jobs = count_jobs(spark, lambda: store.read(uids))
     assert jobs == 1  # 40 uid files -> 40 uid directories: the listing job
     assert df.count() == 80
 

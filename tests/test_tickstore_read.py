@@ -12,29 +12,16 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import uuid
 
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
 from corintick_spark.storage import TickStore
+from tests.spy import count_jobs
 
 N_UIDS = 64
 ROWS_PER_UID = 6
-
-
-def _count_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted by job group."""
-    sc = spark.sparkContext
-    group = f"tickstore-read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "tickstore read test")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _t(minute: int) -> dt.datetime:
@@ -62,10 +49,10 @@ def _files(root: str) -> list[str]:
 
 
 def test_point_read_plans_without_jobs_and_collects_in_one(spark, store64):
-    df, build_jobs = _count_jobs(
+    df, build_jobs = count_jobs(
         spark, lambda: store64.read(["U07"], _t(1), _t(3), ["price"])
     )
-    rows, collect_jobs = _count_jobs(spark, df.collect)
+    rows, collect_jobs = count_jobs(spark, df.collect)
     assert (build_jobs, collect_jobs) == (0, 1)
     assert df.columns == ["uid", "ts", "price"]
     assert [(r["uid"], r["ts"], r["price"]) for r in sorted(rows, key=lambda r: r["ts"])] == [
@@ -74,10 +61,10 @@ def test_point_read_plans_without_jobs_and_collects_in_one(spark, store64):
 
 
 def test_absent_uid_reads_empty_frame_without_jobs(spark, store64):
-    df, build_jobs = _count_jobs(
+    df, build_jobs = count_jobs(
         spark, lambda: store64.read(["absent"], _t(1), _t(3), ["price"])
     )
-    rows, collect_jobs = _count_jobs(spark, df.collect)
+    rows, collect_jobs = count_jobs(spark, df.collect)
     assert (build_jobs, collect_jobs, rows) == (0, 0, [])
     assert df.dtypes == store64.read(["U01"], _t(1), _t(3), ["price"]).dtypes
     # no column projection: the scan's own column order and types
@@ -91,7 +78,7 @@ def test_uids_needing_path_escapes_round_trip(spark, tmp_path):
     store.write(_ticks(spark, uids))
     assert os.path.isdir(os.path.join(store._data_dir(), "uid=a%2Fb"))
     for i, u in enumerate(uids):
-        df, build_jobs = _count_jobs(spark, lambda: store.read([u]))
+        df, build_jobs = count_jobs(spark, lambda: store.read([u]))
         assert build_jobs == 0, u
         got = sorted((r["uid"], r["size"]) for r in df.collect())
         assert got == [(u, i * 100 + k) for k in range(ROWS_PER_UID)], u
@@ -129,7 +116,7 @@ def test_integral_uid_reads_its_directory(spark, tmp_path):
             "uid int, ts timestamp, price double",
         )
     )
-    df, build_jobs = _count_jobs(spark, lambda: store.read([3]))
+    df, build_jobs = count_jobs(spark, lambda: store.read([3]))
     assert build_jobs == 0
     assert sorted(r["price"] for r in df.collect()) == [0.0, 1.0, 2.0]
     assert dict(df.dtypes)["uid"] == "int"
