@@ -43,6 +43,9 @@ def kmeans_fit(
     """Train k cell centroids; returns a DataFrame (cell int, centroid
     array<double>) small enough to broadcast.
 
+    ``iters`` is the exact number of Lloyd rounds run, not a budget: the
+    loop never stops early on converged centroids.
+
     ``fit_sample_max``: centroids are fit on a deterministic hash-capped
     sample of at most ~this many vectors (operators/sampling.py) — the
     FAISS train()/add() split: assignment (kmeans_assign) still covers

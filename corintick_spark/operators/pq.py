@@ -145,6 +145,9 @@ def pq_fit(
     DataFrame (j int, cell int, centroid array<double>) of m*k rows —
     always broadcastable (m*k*(d/m) = d*k doubles total).
 
+    ``iters`` is the exact number of Lloyd rounds run, not a budget: the
+    loop never stops early on converged codebooks.
+
     ``fit_sample_max``: codebooks are fit on a deterministic hash-capped
     sample of at most ~this many vectors (operators/sampling.py) — the
     FAISS train()/add() split: pq_encode still quantizes every row, but

@@ -31,8 +31,13 @@ replace. It holds one entry per data file: its root-relative path, its uid
 (typed by the sidecar, from the plain layout's escaped ``uid=`` directory;
 bucketed files record none), its row count, and its ``ts`` min and max as
 epoch micros, read with pyarrow from the footers of the files the mutation
-added. ``read`` opens only the files the manifest selects and ``list_uids``
-aggregates the entries without opening a file. A store without a manifest
+added (such an entry is marked ``footer``). ``read`` opens only the files
+the manifest selects and ``list_uids`` aggregates the entries without
+opening a file. Like corintick's client-side read, a small point read
+(selected files of at most ``_LOCAL_ROWS`` rows, all with footer bounds, on
+the plain uid layout) is one pyarrow scan on the driver returned as a local
+relation; larger selections, the other layouts and files whose bounds did
+not come from their own footer stay a Spark scan. A store without a manifest
 (written before it existed, or by a plain ``partitionBy`` write) gets one on
 first use; files whose footers carry no ``ts`` statistics (INT96) get exact
 bounds once, from one Spark aggregation over only those files, and
@@ -62,6 +67,7 @@ import shutil
 import uuid
 from dataclasses import dataclass
 from datetime import datetime
+from functools import cached_property
 from urllib.parse import unquote, urlparse
 
 from py4j.protocol import Py4JError
@@ -109,6 +115,18 @@ def _evolve_schema(prior: StructType, new: StructType) -> StructType:
                 f"of {b.simpleString()} is not a widening the parquet reader applies"
             )
     return StructType(fields + list(incoming.values()))
+
+
+# The most rows a read's selected files may hold for the read to be served
+# by one pyarrow scan on the driver (TickStore._read_local); a larger
+# selection keeps the Spark scan. Set from scripts/measure_local_read.py on
+# 4 cores (local[4]): the local read saves the scan's ~0.1 s of planning but
+# pays ~4-8 us per returned row to turn the Arrow table into a local
+# relation and back. toPandas() of a whole uid was faster on it up to 2^13
+# rows and slower from 2^14, for rows of the tick schema, of 34 doubles and
+# of one double; an aggregate kept in Spark crossed between 2^12 and 2^13.
+# The cost follows rows, not bytes.
+_LOCAL_ROWS = 1 << 13
 
 
 def _hidden(name: str) -> bool:
@@ -266,9 +284,13 @@ class TickStore:
         any write recorded comes back with its recorded type (columns absent
         from older appends read as NULL), with no footer read. A read with
         uids or bounds opens only the files the manifest selects (see
-        :meth:`_scan_paths`), so a point read plans without a Spark job;
-        when no file is selected the result is an empty frame with the same
-        columns. A read with neither lists the data directory.
+        :meth:`_select`), so a point read plans without a Spark job; when no
+        file is selected the result is an empty frame with the same columns.
+        A selection of at most ``_LOCAL_ROWS`` rows that
+        :meth:`_served_locally` accepts is read on the driver with pyarrow
+        into a local relation (:meth:`_read_local`), which collects without
+        a Spark job; any other is a Spark scan of the selected files. A read
+        with neither uids nor bounds lists the data directory.
 
         ``merge_schema=True`` applies only to stores without a sidecar: it
         unions the schemas of every data file instead of inferring from one
@@ -285,27 +307,21 @@ class TickStore:
                 reader = reader.option("mergeSchema", "true")
             df = reader.parquet(data_dir)
         else:
-            paths = self._scan_paths(schema, uids, start, end)
-            if paths is None:
+            picked = self._select(schema, uids, start, end)
+            if picked is None:
                 df = self.spark.read.schema(schema).parquet(data_dir)
-            elif paths:
+            elif not picked[0]:
+                # limit(0) lets the optimizer see the frame is empty, so a
+                # collect runs no job either
+                df = self.spark.createDataFrame([], self._scan_schema(schema)).limit(0)
+            elif self._served_locally(schema, *picked, columns):
+                return self._read_local(schema, *picked, columns)
+            else:
                 df = (
                     self.spark.read.schema(schema)
                     .option("basePath", data_dir)
-                    .parquet(*paths)
+                    .parquet(*self._scan_paths(picked[0]))
                 )
-            else:
-                # the scan's columns: data columns, then a partition uid,
-                # all nullable; limit(0) lets the optimizer see the frame is
-                # empty, so a collect runs no job either
-                order = [
-                    f for f in schema.fields if self.bucket_uids or f.name != self.uid_col
-                ]
-                if not self.bucket_uids:
-                    order.append(schema[self.uid_col])
-                df = self.spark.createDataFrame(
-                    [], StructType([StructField(f.name, f.dataType) for f in order])
-                ).limit(0)
         if self.bucket_uids and "uid_bucket" in df.columns and uids is not None:
             # Bucket-level partition pruning: hash the requested uids with
             # the same (dtype-faithful) function the write path used, so a
@@ -328,10 +344,7 @@ class TickStore:
         if end is not None:
             df = df.filter(F.col(self.ts_col) <= F.lit(end).cast("timestamp"))
         if columns is not None:
-            keep = [self.uid_col, self.ts_col] + [
-                c for c in columns if c not in (self.uid_col, self.ts_col)
-            ]
-            df = df.select(*keep)
+            df = df.select(*self._projected(columns))
         return df
 
     # -- streaming ingestion (north_star: live tick ingestion via Spark) ----
@@ -696,9 +709,11 @@ class TickStore:
         commit it with one atomic replace; returns its entries. Entries of
         files it already lists are kept (Spark names every file it writes
         by a fresh job id, so a path is never rewritten); added files get
-        rows and ts bounds from their footers; files without usable ts
-        statistics get exact bounds from one Spark aggregation over only
-        those files. Uids are re-typed from the current sidecar."""
+        rows and ts bounds from their footers, marked ``footer`` (the mark
+        lets :meth:`_read_local` read them with pyarrow); files without
+        usable ts statistics get exact bounds, unmarked, from one Spark
+        aggregation over only those files. Uids are re-typed from the
+        current sidecar."""
         # imported here: without cached bytecode, compiling snapshots.py
         # would add ~10 ms to every session's set-up
         from corintick_spark.snapshots import footer_entries
@@ -719,6 +734,7 @@ class TickStore:
             bounds = e.pop("stats").get(self.ts_col)
             if bounds is not None:
                 e["lo"], e["hi"] = bounds
+                e["footer"] = True
         entries = [known.get(p) or fresh[p] for p in paths]
         if self._timed(schema):
             self._scan_bounds(schema, [e for e in entries if "lo" not in e])
@@ -777,17 +793,14 @@ class TickStore:
             return None
         return [st.st_ino, st.st_mtime_ns]
 
-    def _scan_paths(
-        self, schema: StructType, uids: list | None, start, end
-    ) -> list[str] | None:
-        """The data files a read opens: the manifest's files of the
-        requested uids whose ts bounds overlap ``[start, end]``. More paths
-        than Spark's parallel-listing threshold
-        (``spark.sql.sources.parallelPartitionDiscovery.threshold``) would
-        start a listing job, so past it the top-level partition directories
-        holding those files are passed instead (a read spanning more such
-        directories than the threshold still pays that job). None when the
-        read lists the whole data directory: no uids and no bounds, or
+    def _select(self, schema: StructType, uids: list | None, start, end):
+        """The manifest entries of the files a read opens: the requested
+        uids' files whose ts bounds overlap ``[start, end]``, as
+        ``(entries, bounds)``. ``bounds`` is ``(lo, hi)`` in epoch micros
+        (None for an open side) when the selection is exactly the read's
+        uid and ts filters — uids (if any) selected by value and every given
+        bound converted — and None otherwise. The selection is None when
+        the read lists the whole data directory: no uids and no bounds, or
         nothing the manifest can select on — uids that are not Python
         values of the recorded uid type (the ``isin`` filter would coerce
         them) or a bucketed layout, and no bounds on a timestamp ``ts``."""
@@ -803,17 +816,121 @@ class TickStore:
         if not by_uid and lo is None and hi is None:
             return None
         wanted = set(uids) if by_uid else None
-        files = [
-            e["path"]
+        entries = [
+            e
             for e in self._manifest()
             if (wanted is None or e["uid"] in wanted) and _overlaps(e, lo, hi)
         ]
+        exact = (
+            (uids is None or by_uid)
+            and (start is None or lo is not None)
+            and (end is None or hi is not None)
+        )
+        return entries, ((lo, hi) if exact else None)
+
+    def _scan_paths(self, entries: list[dict]) -> list[str]:
+        """The paths a Spark scan of ``entries``' files is handed. More
+        paths than Spark's parallel-listing threshold
+        (``spark.sql.sources.parallelPartitionDiscovery.threshold``) would
+        start a listing job, so past it the top-level partition directories
+        holding those files are passed instead (a read spanning more such
+        directories than the threshold still pays that job)."""
+        files = [e["path"] for e in entries]
         threshold = self.spark.conf.get(
             "spark.sql.sources.parallelPartitionDiscovery.threshold"
         )
         if len(files) > int(threshold):
             files = sorted({os.path.join(*p.split(os.sep)[:2]) for p in files})
         return [os.path.join(self.root, p) for p in files]
+
+    def _scan_schema(self, schema: StructType) -> StructType:
+        """The columns a Spark scan of ``data/`` returns: the data columns,
+        then the plain layout's partition uid, all nullable."""
+        order = [f for f in schema.fields if self.bucket_uids or f.name != self.uid_col]
+        if not self.bucket_uids:
+            order.append(schema[self.uid_col])
+        return StructType([StructField(f.name, f.dataType) for f in order])
+
+    def _projected(self, columns: list[str]) -> list[str]:
+        """A read's output columns for ``columns``: uid, ts, then the rest."""
+        pinned = (self.uid_col, self.ts_col)
+        return [*pinned, *(c for c in columns if c not in pinned)]
+
+    def _served_locally(
+        self, schema: StructType, entries: list[dict], bounds, columns: list[str] | None
+    ) -> bool:
+        """Whether a read of ``entries`` is served by :meth:`_read_local`:
+        the selection is exactly the read's filters (``bounds`` is set), the
+        layout is the plain uid one with a timestamp ``ts``, every requested
+        column is recorded, every file's ts bounds came from its own footer
+        (an INT64 instant without the legacy calendar rebase, so pyarrow
+        reads the values Spark reads), and the files hold at most
+        ``_LOCAL_ROWS`` rows."""
+        names = schema.fieldNames()
+        return (
+            bounds is not None
+            and not self.partition_by_date
+            and self._uid_kind(schema) is not None
+            and self._timed(schema)
+            and (columns is None or all(c in names for c in columns))
+            and all(e.get("footer") for e in entries)
+            and sum(e["rows"] for e in entries) <= _LOCAL_ROWS
+        )
+
+    def _read_local(
+        self, schema: StructType, entries: list[dict], bounds, columns: list[str] | None
+    ) -> DataFrame:
+        """``entries``' files read in one pyarrow scan on the driver and
+        returned as a local relation with the columns, order, types and
+        nullability of the Spark scan: each column typed by the sidecar
+        (absent ones NULL, narrow types widened), the rows whose ``ts`` lies
+        in the inclusive epoch-micros ``bounds``, and each file's uid from
+        its manifest entry."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        out = self._scan_schema(schema)
+        if columns is not None:
+            out = StructType([out[c] for c in self._projected(columns)])
+        types = {f.name: to_arrow_type(f.dataType) for f in out.fields}
+        arrow = pa.schema([(f.name, types[f.name]) for f in out.fields])
+        uid_of = {os.path.join(self.root, e["path"]): e["uid"] for e in entries}
+        dataset = ds.dataset(
+            list(uid_of),
+            schema=pa.schema([(n, t) for n, t in types.items() if n != self.uid_col]),
+            format="parquet",
+        )
+        ts, keep = pc.field(self.ts_col), pc.scalar(True)
+        lo, hi = bounds
+        if lo is not None:
+            keep &= ts >= pa.scalar(lo, types[self.ts_col])
+        if hi is not None:
+            keep &= ts <= pa.scalar(hi, types[self.ts_col])
+        batches = []
+        for tagged in dataset.scanner(filter=keep).scan_batches():
+            b = tagged.record_batch
+            uid = pa.repeat(
+                pa.scalar(uid_of[tagged.fragment.path], types[self.uid_col]), b.num_rows
+            )
+            batches.append(
+                pa.RecordBatch.from_arrays(
+                    [uid if f.name == self.uid_col else b.column(f.name) for f in out.fields],
+                    schema=arrow,
+                )
+            )
+        return self.spark.createDataFrame(pa.Table.from_batches(batches, arrow), out)
+
+    @cached_property
+    def _jvm_time(self):
+        """The JVM classes ``DateTimeUtils`` and ``UTF8String``, looked up
+        once: each package step of a py4j lookup is a round trip."""
+        jvm = self.spark._jvm
+        return (
+            jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils,
+            jvm.org.apache.spark.unsafe.types.UTF8String,
+        )
 
     def _bound_micros(self, value) -> int | None:
         """The epoch micros the read's ``F.lit(value).cast("timestamp")``
@@ -822,14 +939,11 @@ class TickStore:
         ``datetime`` goes through PySpark's literal converter (a naive one
         in the Python process's local time). None for any other value or
         one that does not convert, which keeps every file on that side."""
-        jvm = self.spark._jvm
-        utils = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils
+        utils, utf8 = self._jvm_time
         try:
             if isinstance(value, str):
                 zone = utils.getZoneId(self.spark.conf.get("spark.sql.session.timeZone"))
-                parsed = utils.stringToTimestamp(
-                    jvm.org.apache.spark.unsafe.types.UTF8String.fromString(value), zone
-                )
+                parsed = utils.stringToTimestamp(utf8.fromString(value), zone)
                 return parsed.get() if parsed.isDefined() else None
             if isinstance(value, datetime):
                 return utils.fromJavaTimestamp(value)

@@ -5,7 +5,8 @@ creates (on Spark 4.1 classic that is
 ``pyspark.sql.classic.dataframe.DataFrame``, which overrides the methods of
 ``pyspark.sql.DataFrame``, so patching the base class sees nothing). Only
 outermost calls are recorded: ``first()`` runs ``collect()`` inside, and is
-recorded once, as ``first``.
+recorded once, as ``first``. ``read_path`` pins which path a TickStore
+read takes, the Spark scan or the driver-local pyarrow scan.
 """
 
 from __future__ import annotations
@@ -56,3 +57,28 @@ def count_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def read_path(monkeypatch, path: str):
+    """Run TickStore reads on one path: ``"spark"`` forces the Spark scan
+    (the driver-local row bound set to 0); ``"local"`` keeps the default
+    and records the files each driver-local pyarrow scan is handed. Yields
+    that record, a list of file lists."""
+    import pyarrow.dataset as ds
+
+    from corintick_spark import storage
+
+    opened: list = []
+    with monkeypatch.context() as m:
+        if path == "spark":
+            m.setattr(storage, "_LOCAL_ROWS", 0)
+        else:
+            real = ds.dataset
+
+            def spy(source, *a, **kw):
+                opened.append(list(source))
+                return real(source, *a, **kw)
+
+            m.setattr(ds, "dataset", spy)
+        yield opened

@@ -23,7 +23,7 @@ import pytest
 
 from corintick_spark.snapshots import footer_entries
 from corintick_spark.storage import TickStore
-from tests.spy import count_jobs
+from tests.spy import count_jobs, read_path
 
 SCHEMA = "uid string, ts timestamp, value double"
 T0 = dt.datetime(2024, 1, 2)
@@ -110,16 +110,22 @@ def _assert_exact(spark, store: TickStore) -> None:
 # -- file skipping ------------------------------------------------------------
 
 
-def test_narrow_window_read_scans_one_file(spark, tmp_path):
+def test_narrow_window_read_scans_one_file(spark, tmp_path, monkeypatch):
     store = TickStore(spark, str(tmp_path / "store"))
     for b in range(10):
         store.write(_batch(spark, b))
     _assert_ts_stats(store)
     start = T0 + dt.timedelta(hours=4, minutes=10)
-    rows, metrics = _scan_metrics(store.read(["B"], start, start + dt.timedelta(minutes=5)))
-    # 100 ticks an hour: minutes 10..15 of hour 4 hold ticks 17..25
-    assert sorted(r["value"] for r in rows) == [41_000.0 + k for k in range(17, 26)]
-    assert metrics == {"numFiles": 1, "numOutputRows": 100}
+    for path in ("spark", "local"):
+        with read_path(monkeypatch, path) as opened:
+            df = store.read(["B"], start, start + dt.timedelta(minutes=5))
+            rows, metrics = _scan_metrics(df)
+        # 100 ticks an hour: minutes 10..15 of hour 4 hold ticks 17..25
+        assert sorted(r["value"] for r in rows) == [41_000.0 + k for k in range(17, 26)]
+        if path == "spark":
+            assert metrics == {"numFiles": 1, "numOutputRows": 100}
+        else:
+            assert [len(files) for files in opened] == [1]
 
 
 def test_footer_bounds_need_stats_in_every_row_group(tmp_path):
@@ -257,7 +263,7 @@ def new_york(spark):
     spark.conf.set(key, prior)
 
 
-def test_pruning_is_exact_at_file_bounds_in_any_time_zone(spark, tmp_path, new_york):
+def test_pruning_is_exact_at_file_bounds_in_any_time_zone(spark, tmp_path, new_york, monkeypatch):
     store = TickStore(spark, str(tmp_path / "store"))
     for b in range(6):
         store.write(_batch(spark, b, ("A",), rows=4))
@@ -290,15 +296,21 @@ def test_pruning_is_exact_at_file_bounds_in_any_time_zone(spark, tmp_path, new_y
                 (hi + 1, hi + 1, 0),   # one microsecond after it
             ]:
                 s, e = convert(start), convert(end)
-                rows, metrics = _scan_metrics(store.read(["A"], s, e))
                 want = full.filter(
                     F.col("ts").between(F.lit(s).cast("timestamp"), F.lit(e).cast("timestamp"))
                 )
-                assert sorted(r["value"] for r in rows) == sorted(
-                    r["value"] for r in want.collect()
-                ), (convert.__name__, start, end)
-                assert len(rows) == opened
-                assert metrics["numFiles"] <= 1, (convert.__name__, start, end)
+                for path in ("spark", "local"):
+                    with read_path(monkeypatch, path) as handed:
+                        rows, metrics = _scan_metrics(store.read(["A"], s, e))
+                    where = (path, convert.__name__, start, end)
+                    assert sorted(r["value"] for r in rows) == sorted(
+                        r["value"] for r in want.collect()
+                    ), where
+                    assert len(rows) == opened, where
+                    if path == "spark":
+                        assert metrics["numFiles"] <= 1, where
+                    else:
+                        assert sum(map(len, handed)) <= 1, where
 
 
 def test_pre_gregorian_tick_round_trips(spark, tmp_path):
@@ -317,11 +329,12 @@ def test_pre_gregorian_tick_round_trips(spark, tmp_path):
 # -- Spark's parallel-listing threshold ---------------------------------------
 
 
-def test_reads_past_the_listing_threshold(spark, tmp_path):
-    """More than 32 paths start Spark's parallel listing job: a read whose
-    selected files pass the threshold opens their uid directory instead,
-    so it still plans with 0 jobs; only a read spanning more than 32 uid
-    directories pays the listing job."""
+def test_reads_past_the_listing_threshold(spark, tmp_path, monkeypatch):
+    """More than 32 paths start Spark's parallel listing job: a Spark scan
+    whose selected files pass the threshold opens their uid directory
+    instead, so it still plans with 0 jobs; only a read spanning more than
+    32 uid directories pays the listing job. The driver-local read hands
+    pyarrow the selected files themselves and runs no job for any of these."""
     assert spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") == "32"
     store = TickStore(spark, str(tmp_path / "store"))
     key = "spark.sql.files.maxRecordsPerFile"
@@ -336,26 +349,31 @@ def test_reads_past_the_listing_threshold(spark, tmp_path):
 
     full = _directory_read(spark, store)
     step = dt.timedelta(hours=1) / 1000
-    for start, end, n_files in [
-        (None, None, 40),
-        (T0, T0 + 799 * step, 32),    # ticks 0..799: exactly 32 files
-        (T0, T0 + 800 * step, 33),
-    ]:
-        opened = [
-            e for e in _manifest(store)
-            if e["uid"] == "A" and (end is None or e["lo"] <= store._bound_micros(end))
-        ]
-        assert len(opened) == n_files
-        df, jobs = count_jobs(spark, lambda: store.read(["A"], start, end))
-        assert jobs == 0, (start, end)
-        want = full.filter(F.col("uid") == "A")
-        if end is not None:
-            want = want.filter(F.col("ts").between(F.lit(start), F.lit(end)))
-        assert _micros(spark, df) == _micros(spark, want)
+    for path in ("spark", "local"):
+        for start, end, n_files in [
+            (None, None, 40),
+            (T0, T0 + 799 * step, 32),    # ticks 0..799: exactly 32 files
+            (T0, T0 + 800 * step, 33),
+        ]:
+            opened = [
+                e for e in _manifest(store)
+                if e["uid"] == "A" and (end is None or e["lo"] <= store._bound_micros(end))
+            ]
+            assert len(opened) == n_files
+            with read_path(monkeypatch, path) as handed:
+                df, jobs = count_jobs(spark, lambda: store.read(["A"], start, end))
+            assert jobs == 0, (path, start, end)
+            assert sum(map(len, handed)) == (0 if path == "spark" else n_files)
+            want = full.filter(F.col("uid") == "A")
+            if end is not None:
+                want = want.filter(F.col("ts").between(F.lit(start), F.lit(end)))
+            assert _micros(spark, df) == _micros(spark, want)
 
-    df, jobs = count_jobs(spark, lambda: store.read(uids))
-    assert jobs == 1  # 40 uid files -> 40 uid directories: the listing job
-    assert df.count() == 80
+        with read_path(monkeypatch, path):
+            df, jobs = count_jobs(spark, lambda: store.read(uids))
+        # Spark: 40 uid files -> 40 uid directories, the listing job
+        assert jobs == (1 if path == "spark" else 0)
+        assert df.count() == 80
 
     plan = store.read()._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryFileIndex(1 paths)" in plan  # a full read lists data/

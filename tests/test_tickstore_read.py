@@ -1,8 +1,11 @@
 """TickStore read planning and the schema sidecar.
 
-A point read on the plain uid layout opens only the requested ``uid=<value>``
-directories with the recorded schema, so it plans without a Spark job and
-collects in one. The sidecar is the schema of record: partition values keep
+A point read on the plain uid layout opens only the files the manifest
+selects (the requested uids' files whose ``ts`` bounds overlap the range), so
+it plans without a Spark job. A small selection is read on the driver with
+pyarrow into a local relation, which collects without a job either; a larger
+one is a Spark scan of those files with the recorded schema, which collects
+in one. The sidecar is the schema of record: partition values keep
 their written type, appends may add columns or widen a type the parquet
 reader widens, and any other type change is refused before a file lands.
 """
@@ -18,7 +21,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from corintick_spark.storage import TickStore
-from tests.spy import count_jobs
+from tests.spy import count_jobs, read_path
 
 N_UIDS = 64
 ROWS_PER_UID = 6
@@ -48,16 +51,20 @@ def _files(root: str) -> list[str]:
     return sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
 
 
-def test_point_read_plans_without_jobs_and_collects_in_one(spark, store64):
-    df, build_jobs = count_jobs(
-        spark, lambda: store64.read(["U07"], _t(1), _t(3), ["price"])
-    )
-    rows, collect_jobs = count_jobs(spark, df.collect)
-    assert (build_jobs, collect_jobs) == (0, 1)
-    assert df.columns == ["uid", "ts", "price"]
-    assert [(r["uid"], r["ts"], r["price"]) for r in sorted(rows, key=lambda r: r["ts"])] == [
-        ("U07", _t(k), 700.0 + k) for k in (1, 2, 3)
-    ]
+def test_point_read_plans_without_jobs_and_collects_in_one(spark, store64, monkeypatch):
+    for path, jobs in [("spark", (0, 1)), ("local", (0, 0))]:
+        with read_path(monkeypatch, path) as opened:
+            df, build_jobs = count_jobs(
+                spark, lambda: store64.read(["U07"], _t(1), _t(3), ["price"])
+            )
+            rows, collect_jobs = count_jobs(spark, df.collect)
+        # a local relation collects without a job
+        assert (build_jobs, collect_jobs) == jobs, path
+        assert [len(files) for files in opened] == ([] if path == "spark" else [1])
+        assert df.columns == ["uid", "ts", "price"]
+        assert [(r["uid"], r["ts"], r["price"]) for r in sorted(rows, key=lambda r: r["ts"])] == [
+            ("U07", _t(k), 700.0 + k) for k in (1, 2, 3)
+        ]
 
 
 def test_absent_uid_reads_empty_frame_without_jobs(spark, store64):
