@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+from pandas.errors import OutOfBoundsDatetime
 
 from pyspark.sql import SparkSession
 import pyspark.sql.functions as F
@@ -34,6 +35,16 @@ from corintick_spark.storage import TickStore
 # hidden, which would make uid partition directories invisible
 _TS = "corintick_ts"
 _UID = "corintick_uid"
+
+
+def _wall_time(s: pd.Series, zone: str) -> pd.Series:
+    """A tz-aware timestamp column as naive wall times in ``zone``: in
+    nanoseconds when every value fits, else in its own unit."""
+    s = s.dt.tz_convert(zone).dt.tz_localize(None)
+    try:
+        return s.astype("datetime64[ns]")
+    except OutOfBoundsDatetime:
+        return s
 
 
 class Corintick:
@@ -86,11 +97,17 @@ class Corintick:
     ) -> pd.DataFrame:
         """Read one uid back as a pandas frame with its DatetimeIndex
         (inclusive range bounds, column-subset projection — the reference's
-        read contract)."""
+        read contract). Timestamps come back as ``toPandas()`` gives them,
+        naive wall times in the session time zone, in nanoseconds when
+        every value fits pandas' nanosecond range (1677-09-21 to
+        2262-04-11) and in the stored microseconds otherwise."""
         store = self._store(collection)
         sdf = store.read(uids=[uid], start=start, end=end, columns=columns)
-        pdf = sdf.drop(_UID).toPandas()
-        pdf[_TS] = pd.to_datetime(pdf[_TS])
+        pdf = sdf.drop(_UID).toArrow().to_pandas()
+        zone = self.spark.conf.get("spark.sql.session.timeZone")
+        for name in pdf.columns:
+            if isinstance(pdf[name].dtype, pd.DatetimeTZDtype):
+                pdf[name] = _wall_time(pdf[name], zone)
         out = pdf.sort_values(_TS).set_index(_TS)
         out.index.name = None
         return out

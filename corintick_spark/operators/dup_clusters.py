@@ -79,8 +79,9 @@ def connected_components(
     ``broadcast_nodes_max``: when the node count is at or below this, each
     star round's per-center minimum table (≤ |nodes| rows) is broadcast
     into its edge join instead of shuffled — AQE cannot infer that from a
-    localCheckpointed frame (no size statistics). Above the threshold the
-    shuffle path is the correct plan. The node count costs one aggregate
+    localCheckpointed frame, whose size statistics are the ones its origin
+    plan estimated (they grow with every round), not its own. Above the
+    threshold the shuffle path is the correct plan. The node count costs one aggregate
     over the already-checkpointed edge list, paid once before the loop
     (a separate action: ``observe`` rejects DISTINCT aggregates).
     """

@@ -94,8 +94,9 @@ def pagerank(
     ``broadcast_nodes_max``: when the node count is at or below this, the
     rank table is BROADCAST into both per-iteration joins instead of
     shuffled — AQE cannot make that call itself because a localCheckpointed
-    frame has no size statistics, so without the hint every round pays a
-    rank-side exchange. Each iteration then costs ONE shuffle (the
+    frame keeps the size statistics of the plan it came from, and a loop
+    that joins each round to the last one's estimate squares it every
+    round, so without the hint every round pays a rank-side exchange. Each iteration then costs ONE shuffle (the
     per-destination contribution aggregate) plus broadcasts of an
     O(n_nodes) frame. 1M nodes ≈ tens of MB — inside the configured 64 MB
     broadcast budget; above the threshold the shuffle path is the correct

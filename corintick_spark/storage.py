@@ -19,7 +19,14 @@ with ``ts`` as ``TIMESTAMP_MICROS`` so every footer carries its min/max:
 (a) a single-uid range read opens only that uid's files whose ts bounds
 overlap the range, and Spark skips row groups inside them on the same
 statistics, and (b) full scans stream in time order per uid without a sort.
-A write's cost is per file, so it shuffles into
+A write takes one of two routes to the same files. Like corintick's client,
+an append of a frame Spark already holds on the driver (its optimized plan
+is a ``LocalRelation``, as ``createDataFrame`` of a pandas frame builds)
+to the plain uid layout is fetched once with ``toArrow()`` and written by
+pyarrow, one file per ``uid=`` directory with Spark's footer keys: no
+shuffle and no Spark write job. Every other write (any other plan, the
+bucketed and dated layouts, an overwrite, maintenance rewrites, streaming
+micro-batches) is a Spark write; its cost is per file, so it shuffles into
 ``spark.sql.shuffle.partitions`` tasks (a fixed count AQE does not coalesce
 into one task) and those write the files in parallel. For very high uid
 cardinality (100 TB, millions of uids) use ``bucket_uids=N`` to hash uids
@@ -41,13 +48,15 @@ not come from their own footer stay a Spark scan. A store without a manifest
 (written before it existed, or by a plain ``partitionBy`` write) gets one on
 first use; files whose footers carry no ``ts`` statistics (INT96) get exact
 bounds once, from one Spark aggregation over only those files, and
-``compact`` rewrites them as micros. Every committed Spark write into
-``data/`` replaces ``data/_SUCCESS``; a manifest records that marker, so a
-write whose Spark job committed but whose manifest commit never ran (a
-crash between the two, or a write from outside TickStore) is adopted by the
-next open. A Spark job that fails aborts its task output, so its files
-never reach ``data/``; a rewrite that crashes leaves its files in
-``data.<tag>_tmp``, which no read lists.
+``compact`` rewrites them as micros. Every committed write into ``data/``
+replaces ``data/_SUCCESS`` (a Spark job commit does, and so does the
+driver-local write once its files are in place); a manifest records that
+marker, so a write whose files landed but whose manifest commit never ran
+(a crash between the two, or a write from outside TickStore) is adopted by
+the next open. A Spark job that fails aborts its task output, and a
+driver-local write that fails removes its staged files, so neither reaches
+``data/``; a rewrite that crashes leaves its files in ``data.<tag>_tmp``,
+which no read lists.
 
 Schema of record: every writer (``write``, ``upsert``, ``append_stream``)
 records the written columns and types in a ``_schema.json`` sidecar before
@@ -74,7 +83,10 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
     ByteType,
+    DateType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -83,6 +95,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -129,10 +142,58 @@ def _evolve_schema(prior: StructType, new: StructType) -> StructType:
 _LOCAL_ROWS = 1 << 13
 
 
+# Parquet codecs TickStore._write_local writes, by the session's
+# spark.sql.parquet.compression.codec: pyarrow's name for it and the
+# extension Spark gives its files. Spark's zstd level is parquet-mr's
+# default, 3. Any other codec keeps the Spark write.
+_LOCAL_CODECS = {
+    "none": ("none", ""),
+    "uncompressed": ("none", ""),
+    "snappy": ("snappy", ".snappy"),
+    "gzip": ("gzip", ".gz"),
+    "zstd": ("zstd", ".zstd"),
+}
+
+# Column types TickStore._write_local writes as the Spark write does (the
+# same parquet physical and logical type); a frame with any other column
+# keeps the Spark write.
+_LOCAL_TYPES = (
+    BooleanType,
+    ByteType,
+    ShortType,
+    IntegerType,
+    LongType,
+    FloatType,
+    DoubleType,
+    StringType,
+    BinaryType,
+    DateType,
+    TimestampType,
+    TimestampNTZType,
+)
+
+
 def _hidden(name: str) -> bool:
     """Names Spark's file index skips: a leading ``.``, or a leading ``_``
     that is not a partition directory such as ``_date=...``."""
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+# The characters Spark escapes as %XX in a partition directory name
+# (ExternalCatalogUtils.escapePathName, on a host that is not Windows).
+_PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset('"#%\'*/:=?\\\x7f{[]^')
+
+
+def _partition_dir(col: str, value) -> str:
+    """``col=value`` as Spark names a partition directory: Spark's null
+    partition ``__HIVE_DEFAULT_PARTITION__`` for a null or empty value, and
+    each character Spark escapes written as ``%XX``."""
+
+    def escape(text: str) -> str:
+        return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in text)
+
+    text = "" if value is None else str(value)
+    return f"{escape(col)}={escape(text) if text else '__HIVE_DEFAULT_PARTITION__'}"
 
 
 def _path_uid(path: str, kind):
@@ -183,6 +244,10 @@ class TickStore:
         """Append a frame. Mirrors corintick write: validates ts presence,
         optionally detects overlap with existing data for the same uids
         (api.py::Corintick.write † overlap warning), partitions by uid.
+        An append that :meth:`_written_locally` accepts (rows already on
+        the driver, plain uid layout) is written by :meth:`_write_local`
+        with pyarrow; any other write is the Spark write of
+        :meth:`_write_files`. Both leave the same files and manifest.
         """
         if self.uid_col not in df.columns or self.ts_col not in df.columns:
             raise ValueError(f"frame must have {self.uid_col!r} and {self.ts_col!r}")
@@ -194,7 +259,10 @@ class TickStore:
                     f"write overlaps existing data for uids: {[r[0] for r in sample]}"
                 )
         self._record_schema(df.schema, replace=mode == "overwrite")
-        self._write_files(df, self._data_dir(), mode)
+        if mode == "append" and self._written_locally(df):
+            self._write_local(df)
+        else:
+            self._write_files(df, self._data_dir(), mode)
         self._commit_manifest()
         if metadata:
             self.put_metadata(metadata)
@@ -242,6 +310,110 @@ class TickStore:
                 conf.unset(key)
             else:
                 conf.set(key, prior)
+
+    def _written_locally(self, df: DataFrame) -> bool:
+        """Whether an append of ``df`` is written by :meth:`_write_local`:
+        Spark already holds its rows on the driver (its optimized plan is a
+        ``LocalRelation``, as ``createDataFrame`` of a pandas frame under
+        ``spark.sql.execution.arrow.localRelationThreshold`` builds), the
+        layout is the plain uid one with a string or integral uid and a
+        timestamp ``ts``, every column has a flat type in
+        ``_LOCAL_TYPES``, and the session writes parquet with a codec in
+        ``_LOCAL_CODECS`` and without the legacy calendar rebase."""
+        schema = df.schema
+        conf = df.sparkSession.conf
+        return (
+            not self.partition_by_date
+            and self._uid_kind(schema) is not None
+            and self._timed(schema)
+            and all(isinstance(f.dataType, _LOCAL_TYPES) for f in schema.fields)
+            and conf.get("spark.sql.parquet.compression.codec").lower() in _LOCAL_CODECS
+            and conf.get("spark.sql.parquet.datetimeRebaseModeInWrite").upper() == "CORRECTED"
+            and df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+            == "LocalRelation"
+        )
+
+    def _write_local(self, df: DataFrame) -> None:
+        """Append a driver-held frame to the plain layout with pyarrow: no
+        shuffle and no Spark write job. The rows are fetched once with
+        ``toArrow()`` and sorted by uid directory, then ``ts`` (nulls
+        first, as Spark sorts); each directory's rows become one file
+        named like a Spark part file of a fresh job id, in the escaped
+        ``uid=`` directory Spark would use (a null or empty uid goes to
+        ``__HIVE_DEFAULT_PARTITION__``), with ``ts`` as
+        ``TIMESTAMP_MICROS``, the session's codec and Spark's footer keys,
+        so that readers, rebase modes and schema inference treat it as a
+        Spark-written file. Files are written into a hidden staging
+        directory and renamed into place only once all of them are written;
+        a failure removes what the write made. ``data/_SUCCESS`` is replaced
+        last, as a Spark job commit replaces it, so a crash before the
+        manifest commit is adopted by the next open."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        spark = df.sparkSession
+        codec, ext = _LOCAL_CODECS[spark.conf.get("spark.sql.parquet.compression.codec").lower()]
+        data = StructType([f for f in df.schema.fields if f.name != self.uid_col])
+        # pyarrow writes these beside its own ARROW:schema key, which repeats
+        # them (~1 KB a file for the tick schema): this pyarrow writes no
+        # key-value metadata without it
+        footer = {
+            "org.apache.spark.version": spark.version,
+            # the JSON Spark writes: its key order, no spaces
+            "org.apache.spark.sql.parquet.row.metadata": json.dumps(
+                data.jsonValue(), separators=(",", ":")
+            ),
+        }
+        table = df.toArrow()
+        uid = table.column(self.uid_col).combine_chunks()
+        if pa.types.is_string(uid.type):
+            # Spark writes an empty partition value as the null partition
+            uid = pc.if_else(pc.equal(uid, ""), pa.scalar(None, uid.type), uid)
+        order = pc.sort_indices(
+            pa.table({"u": uid, "t": table.column(self.ts_col)}),
+            [("u", "ascending"), ("t", "ascending")],
+            null_placement="at_start",
+        )
+        runs = pc.run_end_encode(uid.take(order))
+        rows = table.select(data.fieldNames()).take(order).replace_schema_metadata(footer)
+        # parquet-mr drops a column's dictionary once it stops paying, which
+        # for tick numerics is at once; pyarrow keeps it (files ~25% larger)
+        dictionary = [
+            f.name for f in data.fields if isinstance(f.dataType, (StringType, BinaryType))
+        ]
+        data_dir = self._data_dir()
+        job = uuid.uuid4()
+        stage = os.path.join(data_dir, f"_temporary-{job}")
+        os.makedirs(stage)
+        ends = runs.run_ends.to_pylist()
+        staged, placed = [], []
+        try:
+            for k, (value, start, end) in enumerate(
+                zip(runs.values.to_pylist(), [0, *ends], ends)
+            ):
+                name = f"part-{k:05d}-{job}.c000{ext}.parquet"
+                pq.write_table(
+                    rows.slice(start, end - start),
+                    os.path.join(stage, name),
+                    compression=codec,
+                    compression_level=3 if codec == "zstd" else None,
+                    use_dictionary=dictionary,
+                )
+                staged.append((name, self._uid_dir(value)))
+            for name, part in staged:
+                os.makedirs(part, exist_ok=True)
+                os.rename(os.path.join(stage, name), os.path.join(part, name))
+                placed.append(os.path.join(part, name))
+        except BaseException:
+            for path in placed:
+                os.remove(path)
+            raise
+        finally:
+            shutil.rmtree(stage)
+        marker = os.path.join(data_dir, f"._SUCCESS.{job}")
+        open(marker, "w").close()
+        os.replace(marker, os.path.join(data_dir, "_SUCCESS"))
 
     def _partitioned(self, df: DataFrame) -> tuple[DataFrame, list[str]]:
         """Apply the store's configured partition layout (plain uid, hashed
@@ -1017,12 +1189,9 @@ class TickStore:
             fh.write(schema.json())
 
     def _uid_dir(self, uid) -> str:
-        """The plain layout's ``uid=<value>`` directory, escaped the way
-        Spark writes partition directories."""
-        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        return os.path.join(
-            self._data_dir(), utils.getPartitionPathString(self.uid_col, str(uid))
-        )
+        """The plain layout's ``uid=<value>`` directory (see
+        :func:`_partition_dir`)."""
+        return os.path.join(self._data_dir(), _partition_dir(self.uid_col, uid))
 
     def _buckets_for(self, uids: list) -> list[int]:
         """Bucket ids for the given uids, hashed with the written uid dtype

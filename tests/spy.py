@@ -45,9 +45,9 @@ def driver_actions(spark, monkeypatch, names=ACTIONS):
         yield calls
 
 
-def count_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted by job group. The
-    listener bus is drained first: without it the count lags."""
+def _jobs_of(spark, fn):
+    """(fn(), ids of the Spark jobs fn ran), found by job group. The
+    listener bus is drained first: without it the ids lag."""
     sc = spark.sparkContext
     group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "job-count spy")
@@ -56,7 +56,22 @@ def count_jobs(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    out, jobs = _jobs_of(spark, fn)
+    return out, len(jobs)
+
+
+def count_stages(spark, fn):
+    """(fn(), number of Spark jobs fn ran, number of their stages). A job
+    with a shuffle runs a stage per side of each exchange, so stages equal
+    jobs only when no job shuffled."""
+    out, jobs = _jobs_of(spark, fn)
+    tracker = spark.sparkContext.statusTracker()
+    return out, len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
 
 
 @contextmanager

@@ -82,3 +82,20 @@ def test_separate_collections(store):
     d = store.read("A", collection="daily_bars")
     assert len(m) == len(d) == 200
     assert m.index[0].month == 3 and d.index[0].month == 5
+
+
+def test_pre_1677_tick_reads_back_in_micros(store):
+    """A tick outside pandas' nanosecond range comes back in microseconds
+    (a nanosecond frame cannot hold it); a read without one stays in
+    nanoseconds."""
+    idx = pd.DatetimeIndex(
+        np.array(["1500-03-01T12:00:00.000007", "2024-03-01T09:30:00"], dtype="datetime64[us]")
+    )
+    df = pd.DataFrame({"Close": [1.0, 2.0], "Volume": [10, 20]}, index=idx)
+    store.write("OLD", df)
+    back = store.read("OLD")
+    assert back.index.dtype == "datetime64[us]"
+    pd.testing.assert_frame_equal(back, df, check_freq=False)
+    recent = store.read("OLD", start="2024-01-01")
+    assert recent.index.dtype == "datetime64[ns]"
+    pd.testing.assert_frame_equal(recent, df.iloc[1:].set_axis(idx[1:].as_unit("ns")))

@@ -208,6 +208,19 @@ def test_write_without_manifest_commit_is_adopted(spark, tmp_path):
     _assert_exact(spark, fresh)
 
 
+def test_local_write_without_manifest_commit_is_adopted(spark, tmp_path):
+    """The same through the driver-local write, which replaces
+    data/_SUCCESS as a Spark job commit does."""
+    store = TickStore(spark, str(tmp_path / "store"))
+    store.write(_batch(spark, 0))
+    local = spark.createDataFrame(_batch(spark, 1, ("A", "Z")).toPandas(), SCHEMA)
+    assert store._written_locally(local)
+    store._write_local(local)
+    fresh = TickStore(spark, store.root)
+    assert fresh.read(["Z"]).count() == 100
+    _assert_exact(spark, fresh)
+
+
 # -- legacy stores and time zones ---------------------------------------------
 
 
