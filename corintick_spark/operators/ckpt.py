@@ -29,16 +29,32 @@ lifetime:
   with it.
 * Outside any scope nothing is released early: results ride Spark's
   ContextCleaner, which frees blocks once the JVM collects their RDD.
+
+The graph loops (PageRank, BFS, connected components) materialize their
+edge list with ``edge_stats`` and ask ``runs_locally`` which route the loop
+takes: an edge list of at most ``_LOCAL_EDGES`` rows runs the whole loop in
+numpy on the driver (operators/local_graph.py), with no checkpoint round.
 """
 
 from __future__ import annotations
 
 import uuid
 from contextlib import contextmanager
+from functools import reduce
+from operator import or_
 
+import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import IntegralType, StringType
 
 from corintick_spark.operators.observe import observe_metrics
+
+# Edge lists of at most this many rows run their graph loop on the driver.
+# In a sweep of 2^10-2^22 edges on 4 cores (CHANGES.md) the local route won
+# every size, but BFS's lead fell to ~20% from 2^20 edges up, while the
+# driver's share of the work keeps growing with the graph: the bound sits
+# there. More executor cores move the crossover down; re-measure on them.
+_LOCAL_EDGES = 1 << 20
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -77,6 +93,31 @@ def materialize(
     for old in release:
         release_local_checkpoint(old)
     return frame, obs.get if stats else {}
+
+
+def edge_stats(*ids: str) -> "dict[str, Column]":
+    """The stats a graph loop's edge-list checkpoint measures for its route
+    (pass them to :func:`materialize`): the row count ``n`` and the count
+    ``nulls`` of rows with a NULL in one of the ``ids`` columns."""
+    null = reduce(or_, (F.col(c).isNull() for c in ids))
+    return {"n": F.count(F.lit(1)), "nulls": F.count(F.when(null, 1))}
+
+
+def runs_locally(edges: DataFrame, st: dict, *ids: str) -> bool:
+    """Whether the loop over the materialized edge list ``edges``, measured
+    as ``st`` by :func:`edge_stats`, runs in numpy on the driver: at most
+    ``_LOCAL_EDGES`` rows, no NULL endpoint (each distributed loop gives a
+    NULL id its own join semantics), and integral or plain-string ``ids``,
+    whose equality and order Arrow shares with Spark. Every other edge list
+    takes the distributed loop."""
+    return (
+        st["n"] <= _LOCAL_EDGES
+        and st["nulls"] == 0
+        and all(
+            isinstance(t, IntegralType) or t == StringType()
+            for t in (edges.schema[c].dataType for c in ids)
+        )
+    )
 
 
 def _persistent_rdds(spark) -> dict:

@@ -11,6 +11,12 @@ plain min-label propagation which needs O(diameter) rounds — verified by
 the path-graph unit test in tests/test_operators.py).
 
 Scale discipline for the driver loop:
+- the canonical edge list is materialized once, and its checkpoint job
+  counts it. At most ``ckpt._LOCAL_EDGES`` (2^20) edges with integral or
+  string ids take the LOCAL route: one ``toArrow()`` and min-label pointer
+  jumping in numpy on the driver (operators/local_graph.py), returned as a
+  local relation — no star round runs. Larger edge lists take the
+  distributed loop below (the 100 TB path);
 - every iteration's edge frame is eagerly ``localCheckpoint``-ed and the
   previous one released: the next round reads the materialized blocks,
   and the logical plan is truncated each round (it otherwise doubles per
@@ -26,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import materialize
+from corintick_spark.operators.ckpt import edge_stats, materialize, runs_locally
 
 
 def _large_star(sym: DataFrame, bcast: bool) -> DataFrame:
@@ -74,7 +80,8 @@ def connected_components(
     must be totally ordered (numeric or string). Converges in O(log n)
     alternating-star rounds; ``max_iter`` is a fixpoint guard far above
     that, not a budget: exhausting it without reaching the fixpoint raises
-    RuntimeError.
+    RuntimeError. The local route (module docstring) runs to its fixpoint
+    with no rounds for ``max_iter`` to cap.
 
     ``broadcast_nodes_max``: when the node count is at or below this, each
     star round's per-center minimum table (≤ |nodes| rows) is broadcast
@@ -89,22 +96,27 @@ def connected_components(
         F.col("u") != F.col("v")
     )
 
-    # canonical directed (larger, smaller) start state
-    e = (
+    # canonical directed (larger, smaller) start state; the checkpoint job
+    # counts the edges for the route and the first round's sizing
+    e, st = materialize(
         raw.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-    ).localCheckpoint(eager=True)
-    # ONE aggregate over the materialized edge list feeds both the
-    # broadcast decision (exact node count) and the first round's
-    # checkpoint sizing (edge count). No node table is built: the fixpoint
+        ).distinct(),
+        **edge_stats("u", "v"),
+    )
+    if runs_locally(e, st, "u", "v"):
+        from corintick_spark.operators import local_graph
+
+        return local_graph.components(e)
+    # ONE aggregate over the materialized edge list feeds the broadcast
+    # decision (exact node count). No node table is built: the fixpoint
     # star forest contains exactly the original node set (every non-root
     # as a child `u`, every root as a `v`), so labels are read straight
     # off the final tiny forest.
     head = e.select(F.explode(F.array("u", "v")).alias("n")).agg(
-        F.countDistinct("n").alias("nn"), F.count(F.lit(1)).alias("e2")
+        F.countDistinct("n").alias("nn")
     ).first()
-    n_nodes, n_edges = int(head["nn"]), int(head["e2"]) // 2
+    n_nodes, n_edges = int(head["nn"]), st["n"]
     bcast = n_nodes <= broadcast_nodes_max
 
     def _nparts(n_rows: int) -> int:

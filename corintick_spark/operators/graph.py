@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import materialize
+from corintick_spark.operators.ckpt import edge_stats, materialize, runs_locally
 
 
 def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -102,23 +102,36 @@ def bfs_hops(
     termination is counted by each level's checkpoint job, so a level runs
     no separate action. ``max_iter`` is a depth limit: nodes further than
     ``max_iter`` hops are absent from the result, not an error.
+
+    Local route: the edge list is materialized once, and its checkpoint job
+    counts it. At most ``ckpt._LOCAL_EDGES`` (2^20) edges with no NULL
+    endpoint are read with one ``toArrow()`` and searched in numpy on the
+    driver (operators/local_graph.py), with the same ``max_iter`` depth
+    limit, and the result is a local relation; only larger edge lists run
+    the per-level loop above.
     """
-    count = {"n": F.count(F.lit(1))}
-    frontier, st = materialize(
-        seeds.select(F.col(node).cast("long").alias(node))
-        .distinct()
-        .select(node, F.lit(0).alias("hops")),
-        **count,
-    )
-    visited = frontier
     # materialize the edge list ONCE before the loop: every level joins
     # against e, and without the checkpoint each level re-executed the
     # caller's entire edge DERIVATION (for the registered graph_bfs that
     # is a 3-table fact join + distinct, re-run per hop — the same disease
-    # sql_recursive had). Same discipline as pagerank's cached norm table.
-    e = edges.select(
-        F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
-    ).distinct().localCheckpoint(eager=True)
+    # sql_recursive had). Same discipline as pagerank's edge list.
+    e, st = materialize(
+        edges.select(
+            F.col(src).cast("long").alias("src"),
+            F.col(dst).cast("long").alias("dst"),
+        ).distinct(),
+        **edge_stats("src", "dst"),
+    )
+    seeds = seeds.select(F.col(node).cast("long").alias(node))
+    if runs_locally(e, st, "src", "dst"):
+        from corintick_spark.operators import local_graph
+
+        return local_graph.bfs(e, seeds, node, max_iter)
+    count = {"n": F.count(F.lit(1))}
+    frontier, st = materialize(
+        seeds.distinct().select(node, F.lit(0).alias("hops")), **count
+    )
+    visited = frontier
     for level in range(1, max_iter + 1):
         f = frontier.select(F.col(node).alias("src"))
         if st["n"] <= broadcast_frontier_max:

@@ -9,6 +9,14 @@ formulation as plain DataFrame ops.
 
 Scale discipline (the same rules as the connected-components driver loop):
 
+- the normalized edge list is materialized ONCE (``ckpt.materialize``), and
+  its checkpoint job also counts it. An edge list of at most
+  ``ckpt._LOCAL_EDGES`` (2^20) rows with no NULL endpoint and integral or
+  string ids takes the LOCAL route: one ``toArrow()`` of the checkpoint and
+  a numpy power iteration on the driver (operators/local_graph.py) with
+  the same segment schedule and ``tol`` reads, returned as a local
+  relation — no loop round is a Spark job. Everything below describes the
+  distributed route, which every larger edge list takes (the 100 TB path);
 - the normalized edge list is partitioned by ``src`` ONCE, cached, and
   reused every iteration — only the small (node, rank) table moves through
   a shuffle per round;
@@ -50,7 +58,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import materialize
+from corintick_spark.operators.ckpt import (
+    edge_stats,
+    materialize,
+    release_local_checkpoint,
+    runs_locally,
+)
 
 
 def pagerank(
@@ -103,23 +116,27 @@ def pagerank(
     plan (rank table genuinely cluster-sized).
     """
     w = F.col(weight) if weight else F.lit(1.0)
-    # cached: the node table and norm both derive from e — without this the
-    # (possibly expensive) upstream edge construction re-executes once per
-    # derived frame before the loop even starts
+    # materialized once: the node table and norm both derive from e —
+    # without this the (possibly expensive) upstream edge construction
+    # re-executes once per derived frame before the loop even starts. The
+    # same job counts the edges for the route and the partition count.
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
     ).filter(F.col("w") > 0)
     if merge_parallel:
         e = e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-    e = e.cache()
+    e, st = materialize(e, **edge_stats("src", "dst"))
+    if runs_locally(e, st, "src", "dst"):
+        from corintick_spark.operators import local_graph
+
+        return local_graph.pagerank(e, damping, iterations, tol, checkpoint_every)
     # The partition COUNT is sized to the edge list (~250k edges per
     # partition, capped at 16x the cluster's core count), not inherited
     # from spark.sql.shuffle.partitions: the loop body touches norm 8-10
     # times, so per-task scheduling overhead on an over-partitioned edge
     # list multiplies across iterations (measured 2x on a 1.2M-edge graph
-    # at 32 partitions vs 4-8). e is cached, so the count() action here is
-    # the cache materialization, paid once.
-    n_edges = e.count()
+    # at 32 partitions vs 4-8).
+    n_edges = st["n"]
     nparts = max(1, min(
         -(-n_edges // 250_000),
         16 * e.sparkSession.sparkContext.defaultParallelism,
@@ -168,10 +185,9 @@ def pagerank(
     ).first()
     n_nodes = int(head["n"])  # one scalar, fixed for the whole run
     if n_nodes == 0:  # empty graph: empty result, not a ZeroDivisionError
-        empty = nodes.select("node", F.lit(0.0).alias("rank"))
-        for frame in (nodes, e):  # norm is built below, after this guard
-            frame.unpersist()
-        return empty
+        # norm is built below, after this guard; e stays, as empty reads it
+        nodes.unpersist()
+        return nodes.select("node", F.lit(0.0).alias("rank"))
     has_dangling = bool(head["d"])
     bcast = n_nodes <= broadcast_nodes_max
     # norm's layout: on the BROADCAST path the rank
@@ -288,6 +304,7 @@ def pagerank(
         if tol > 0.0 and st["l1"] < tol:
             break
     result = ranks.select("node", "rank")
-    for frame in (norm, nodes, e):
+    for frame in (norm, nodes):
         frame.unpersist()
+    release_local_checkpoint(e)
     return result

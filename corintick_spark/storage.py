@@ -275,11 +275,14 @@ class TickStore:
         file write goes through here. The shuffle has a fixed
         ``spark.sql.shuffle.partitions`` count, which AQE does not coalesce,
         so a write's files (its cost is per file) come from that many tasks
-        rather than one; each partition value still hashes to one task, so
-        one file per directory. Rows are sorted by the partition columns,
-        then ``ts`` (or the Morton key of ``zorder_by``): that meets the
-        planned write's required ordering, so Spark adds no sort of its own
-        and the time order reaches the files.
+        rather than one; each partition directory still hashes to one task,
+        so one file per directory. A string partition column is written as
+        ``nullif(col, '')``: NULL and ``""`` both name Spark's
+        ``__HIVE_DEFAULT_PARTITION__`` and read back as NULL, so they hash to
+        one task and sort together by ``ts``. Rows are sorted by the
+        partition columns, then ``ts`` (or the Morton key of ``zorder_by``):
+        that meets the planned write's required ordering, so Spark adds no
+        sort of its own and the time order reaches the files.
 
         Timestamps are written as ``TIMESTAMP_MICROS``, whose footers carry
         min/max (INT96, Spark's default, carries none). A write option does
@@ -288,6 +291,10 @@ class TickStore:
         a streaming micro-batch is the stream's, not the store's."""
         out, part_cols = self._partitioned(df)
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        types = dict(out.dtypes)
+        for c in part_cols:
+            if types[c] == "string":
+                out = out.withColumn(c, F.nullif(F.col(c), F.lit("")))
         out = out.repartition(n, *part_cols)
         if zorder_by:
             from corintick_spark.operators.zorder import with_zvalue

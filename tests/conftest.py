@@ -77,6 +77,14 @@ _SLOW_FILES: dict[str, set[str]] = {
         # own checkpoint job (ckpt.materialize)
         "test_connected_components_rounds_read_stats_off_checkpoints",
         "test_pagerank_tol_read_rides_the_checkpoint",
+        # the driver-local graph loops: id types, NULL endpoints, the one
+        # edge-list checkpoint, and the dangling tol test, whose distributed
+        # form stays slow (its dangling path is an open CHANGES.md FOUND)
+        "test_connected_components_string_long_and_null_ids",
+        "test_connected_components_local_route_runs_one_checkpoint",
+        "test_pagerank_string_long_and_null_ids",
+        "test_pagerank_local_route_runs_one_checkpoint",
+        "test_pagerank_tol_early_exit_matches_fixpoint_local",
         "test_minhash_pairs_runs_no_action",
         "test_hamming_band_join_runs_no_action",
         # the TickStore battery: its read path and schema sidecar changed

@@ -6,7 +6,9 @@ creates (on Spark 4.1 classic that is
 ``pyspark.sql.DataFrame``, so patching the base class sees nothing). Only
 outermost calls are recorded: ``first()`` runs ``collect()`` inside, and is
 recorded once, as ``first``. ``read_path`` pins which path a TickStore
-read takes, the Spark scan or the driver-local pyarrow scan.
+read takes, the Spark scan or the driver-local pyarrow scan, and
+``loop_route`` which route a graph loop takes, the distributed loop or the
+driver-local numpy one.
 """
 
 from __future__ import annotations
@@ -97,3 +99,43 @@ def read_path(monkeypatch, path: str):
 
             m.setattr(ds, "dataset", spy)
         yield opened
+
+
+ROUTES = ("local", "distributed")
+_LOCAL_LOOPS = ("pagerank", "bfs", "components")
+
+
+@contextmanager
+def loop_route(monkeypatch, route: str):
+    """Run the graph loops (``pagerank``, ``bfs_hops``,
+    ``connected_components``) on one route: ``"distributed"`` forces the
+    Spark loop (the local edge bound set below every count, 0 included);
+    ``"local"`` keeps the default bound. Yields a list of the
+    operators/local_graph.py loops that ran on the driver, by name."""
+    from corintick_spark.operators import ckpt, local_graph
+
+    taken: list = []
+    with monkeypatch.context() as m:
+        if route == "distributed":
+            m.setattr(ckpt, "_LOCAL_EDGES", -1)
+        for name in _LOCAL_LOOPS:
+            real = getattr(local_graph, name)
+
+            def spy(*a, _real=real, _name=name, **kw):
+                taken.append(_name)
+                return _real(*a, **kw)
+
+            m.setattr(local_graph, name, spy)
+        yield taken
+
+
+def both_routes(monkeypatch, loop: str, fn):
+    """``[fn() on the local route, fn() on the distributed route]``, after
+    checking that the local run ran ``loop`` on the driver and the
+    distributed one ran no local loop."""
+    out = []
+    for route in ROUTES:
+        with loop_route(monkeypatch, route) as taken:
+            out.append(fn())
+        assert taken == ([loop] if route == "local" else []), (route, taken)
+    return out

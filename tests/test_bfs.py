@@ -1,11 +1,14 @@
 """bfs_hops (operators/graph.py): shortest-hop semantics on hand-built
-graphs — chains, cycles, multi-source minima, direction, unreachability."""
+graphs — chains, cycles, multi-source minima, direction, unreachability —
+each run on both routes, the driver-local numpy search and the distributed
+per-level loop, which must return the same rows and schema."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from corintick_spark.operators.graph import bfs_hops
+from tests.spy import ACTIONS, both_routes, driver_actions, loop_route
 
 
 def _edges(spark, pairs):
@@ -16,62 +19,110 @@ def _seeds(spark, nodes):
     return spark.createDataFrame([(n,) for n in nodes], "node long")
 
 
-def _run(spark, pairs, seeds, **kw):
-    got = bfs_hops(_edges(spark, pairs), _seeds(spark, seeds), **kw)
-    return {r.node: r.hops for r in got.collect()}
+def _hops(frame):
+    rows = frame.collect()
+    assert len(rows) == len({r.node for r in rows})  # one row per node
+    return frame.schema, {r.node: r.hops for r in rows}
 
 
-def test_chain(spark):
-    assert _run(spark, [(0, 1), (1, 2), (2, 3)], [0]) == {
+def _run(spark, monkeypatch, pairs, seeds, edge_ddl="src long, dst long", **kw):
+    edges = spark.createDataFrame(pairs, edge_ddl)
+    local, dist = both_routes(
+        monkeypatch, "bfs", lambda: _hops(bfs_hops(edges, _seeds(spark, seeds), **kw))
+    )
+    assert local == dist
+    return local[1]
+
+
+def test_chain(spark, monkeypatch):
+    assert _run(spark, monkeypatch, [(0, 1), (1, 2), (2, 3)], [0]) == {
         0: 0, 1: 1, 2: 2, 3: 3,
     }
 
 
-def test_cycle_terminates_with_min_hops(spark):
-    assert _run(spark, [(0, 1), (1, 2), (2, 0)], [0]) == {0: 0, 1: 1, 2: 2}
+def test_cycle_terminates_with_min_hops(spark, monkeypatch):
+    assert _run(spark, monkeypatch, [(0, 1), (1, 2), (2, 0)], [0]) == {0: 0, 1: 1, 2: 2}
 
 
-def test_direction_respected(spark):
+def test_direction_respected(spark, monkeypatch):
     # edges point INTO the seed: nothing (else) is reachable
-    assert _run(spark, [(1, 0), (2, 0)], [0]) == {0: 0}
+    assert _run(spark, monkeypatch, [(1, 0), (2, 0)], [0]) == {0: 0}
 
 
-def test_multi_source_takes_nearest_seed(spark):
+def test_multi_source_takes_nearest_seed(spark, monkeypatch):
     # 0→1→2→3 and seed at 3: node 2 via chain is 2 hops from 0, but 4→2
     # makes it 1 hop from seed 4
-    hops = _run(spark, [(0, 1), (1, 2), (2, 3), (4, 2)], [0, 4])
+    hops = _run(spark, monkeypatch, [(0, 1), (1, 2), (2, 3), (4, 2)], [0, 4])
     assert hops == {0: 0, 4: 0, 1: 1, 2: 1, 3: 2}
 
 
-def test_shortcut_beats_long_path(spark):
+def test_shortcut_beats_long_path(spark, monkeypatch):
     # two routes 0→…→3: length 3 chain and a direct edge — hops must be 1
-    hops = _run(spark, [(0, 1), (1, 2), (2, 3), (0, 3)], [0])
+    hops = _run(spark, monkeypatch, [(0, 1), (1, 2), (2, 3), (0, 3)], [0])
     assert hops[3] == 1
 
 
-def test_seed_not_in_graph_still_reported(spark):
-    assert _run(spark, [(1, 2)], [99]) == {99: 0}
+def test_seed_not_in_graph_still_reported(spark, monkeypatch):
+    assert _run(spark, monkeypatch, [(1, 2)], [99]) == {99: 0}
 
 
-def test_max_iter_truncates(spark):
-    hops = _run(spark, [(0, 1), (1, 2), (2, 3)], [0], max_iter=2)
+def test_max_iter_truncates(spark, monkeypatch):
+    hops = _run(spark, monkeypatch, [(0, 1), (1, 2), (2, 3)], [0], max_iter=2)
     assert hops == {0: 0, 1: 1, 2: 2}
 
 
-def test_shuffle_path_matches_broadcast_path(spark):
+def test_shuffle_path_matches_broadcast_path(spark, monkeypatch):
     pairs = [(i, i + 1) for i in range(20)] + [(5, 15), (0, 10)]
-    a = _run(spark, pairs, [0])
-    b = _run(spark, pairs, [0], broadcast_frontier_max=0)
+    a = _run(spark, monkeypatch, pairs, [0])
+    b = _run(spark, monkeypatch, pairs, [0], broadcast_frontier_max=0)
     assert a == b
 
 
 def test_levels_read_frontier_counts_off_checkpoints(spark, monkeypatch):
     """Each level's frontier size is counted by that level's checkpoint
     job: the whole search runs no count, first, collect or isEmpty."""
-    from tests.spy import driver_actions
-
     edges, seeds = _edges(spark, [(0, 1), (1, 2), (2, 3), (0, 3)]), _seeds(spark, [0])
-    with driver_actions(spark, monkeypatch) as calls:
+    with loop_route(monkeypatch, "distributed"), driver_actions(spark, monkeypatch) as calls:
         got = bfs_hops(edges, seeds)
     assert calls == []
     assert {r.node: r.hops for r in got.collect()} == {0: 0, 1: 1, 2: 2, 3: 1}
+
+
+def test_local_route_runs_one_checkpoint_and_no_levels(spark, monkeypatch):
+    """The driver-local search checkpoints the edge list once (its count
+    rides that job), reads it and the seeds with one toArrow() each, and
+    runs no per-level checkpoint or action."""
+    edges, seeds = _edges(spark, [(0, 1), (1, 2), (2, 3), (0, 3)]), _seeds(spark, [0])
+    with loop_route(monkeypatch, "local") as taken, driver_actions(
+        spark, monkeypatch, (*ACTIONS, "localCheckpoint", "toArrow")
+    ) as calls:
+        got = bfs_hops(edges, seeds)
+    assert taken == ["bfs"]
+    assert [name for name, _ in calls] == ["localCheckpoint", "toArrow", "toArrow"]
+    assert {r.node: r.hops for r in got.collect()} == {0: 0, 1: 1, 2: 2, 3: 1}
+
+
+def test_string_and_long_ids(spark, monkeypatch):
+    """Ids are cast to long on both routes: numeric strings and ids past
+    32 bits search alike."""
+    big = 1 << 40
+    assert _run(
+        spark, monkeypatch, [("0", "1"), ("1", "2")], [0], "src string, dst string"
+    ) == {0: 0, 1: 1, 2: 2}
+    assert _run(spark, monkeypatch, [(big, big + 1), (big + 1, 5)], [big]) == {
+        big: 0, big + 1: 1, 5: 2,
+    }
+
+
+def test_null_endpoint_takes_distributed_route(spark, monkeypatch):
+    """An edge with a NULL endpoint sends the search to the distributed
+    loop, whose join semantics give NULL its own meaning; a NULL seed is
+    reported at hop 0 and reaches nothing on both routes."""
+    edges = _edges(spark, [(0, 1), (1, None), (None, 2)])
+    with loop_route(monkeypatch, "local") as taken:
+        got = {r.node: r.hops for r in bfs_hops(edges, _seeds(spark, [0])).collect()}
+    assert taken == []
+    assert got == {0: 0, 1: 1, None: 2}
+    assert _run(spark, monkeypatch, [(0, 1), (1, 2)], [0, None]) == {
+        0: 0, 1: 1, 2: 2, None: 0,
+    }

@@ -360,42 +360,59 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
     assert recall >= 0.4, f"IVF recall too low: {recall}"
 
 
-def test_connected_components_chain_and_islands(spark):
+def _components(monkeypatch, edges, **kw):
+    """connected_components(edges) on both routes, which must agree on the
+    schema and the rows (one per node): {node: comp}."""
+    from corintick_spark.operators.dup_clusters import connected_components
+    from tests.spy import both_routes
+
+    def run():
+        labels = connected_components(edges, **kw)
+        rows = labels.collect()
+        assert len(rows) == len({r["node"] for r in rows})
+        return labels.schema, {r["node"]: r["comp"] for r in rows}
+
+    local, dist = both_routes(monkeypatch, "components", run)
+    assert local == dist
+    return local[1]
+
+
+def test_connected_components_chain_and_islands(spark, monkeypatch):
     """Planted chain a-b-c plus isolated pair and singleton."""
-    from corintick_spark.operators.dup_clusters import connected_components, dup_clusters
+    from corintick_spark.operators.dup_clusters import dup_clusters
+    from tests.spy import both_routes
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "a_id long, b_id long"
     )
-    comp = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
+    comp = _components(monkeypatch, edges)
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[10] == comp[11] == 10
     docs = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 99]], "doc_id long")
-    out = {r["doc_id"]: (r["cluster_id"], r["is_keeper"]) for r in dup_clusters(docs, edges).collect()}
-    assert out[99] == (99, True)      # singleton keeps itself
-    assert out[1] == (1, True) and out[3] == (1, False)
-    assert out[10] == (10, True) and out[11] == (10, False)
+    for out in both_routes(monkeypatch, "components", lambda: {
+        r["doc_id"]: (r["cluster_id"], r["is_keeper"])
+        for r in dup_clusters(docs, edges).collect()
+    }):
+        assert out[99] == (99, True)      # singleton keeps itself
+        assert out[1] == (1, True) and out[3] == (1, False)
+        assert out[10] == (10, True) and out[11] == (10, False)
 
 
-def test_connected_components_path_graph_high_diameter(spark):
+def test_connected_components_path_graph_high_diameter(spark, monkeypatch):
     """A 64-node path (diameter 63) must converge within the default
     iteration cap — alternating large-star/small-star needs O(log n)
     rounds, unlike min-label propagation's O(diameter)."""
-    from corintick_spark.operators.dup_clusters import connected_components
-
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "a_id long, b_id long"
     )
-    comp = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
+    comp = _components(monkeypatch, edges)
     assert len(comp) == 64
     assert set(comp.values()) == {0}
 
 
-def test_connected_components_random_vs_union_find(spark):
+def test_connected_components_random_vs_union_find(spark, monkeypatch):
     """Randomized differential vs a driver-side union-find oracle."""
     import random
-
-    from corintick_spark.operators.dup_clusters import connected_components
 
     rng = random.Random(42)
     n = 200
@@ -416,19 +433,59 @@ def test_connected_components_random_vs_union_find(spark):
     want = {x: min(y for y in seen if find(y) == find(x)) for x in seen}
 
     df = spark.createDataFrame(edges, "a_id long, b_id long")
-    got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
-    assert got == want
+    assert _components(monkeypatch, df) == want
 
 
-def test_connected_components_raises_without_fixpoint(spark):
-    """Exhausting max_iter before the fixpoint is an error, not a forest
-    whose nodes may carry several component labels."""
+def test_connected_components_string_long_and_null_ids(spark, monkeypatch):
+    """String ids label by their smallest id in Spark's (byte) order, long
+    ids past 32 bits keep their value, and an edge with a NULL endpoint is
+    dropped (as a self-loop is) on both routes."""
+    words = spark.createDataFrame(
+        [("b", "a"), ("é", "z"), ("z", "Z"), ("q", "q"), (None, "x")],
+        "a_id string, b_id string",
+    )
+    assert _components(monkeypatch, words) == {
+        "a": "a", "b": "a", "Z": "Z", "z": "Z", "é": "Z",
+    }
+    big = 1 << 40
+    longs = spark.createDataFrame(
+        [(big + 2, big), (big, 7), (None, 3), (9, 9)], "a_id long, b_id long"
+    )
+    assert _components(monkeypatch, longs) == {big + 2: 7, big: 7, 7: 7}
+
+
+def test_connected_components_local_route_runs_one_checkpoint(spark, monkeypatch):
+    """The driver-local route checkpoints the edge list once (its count
+    rides that job), reads it with one toArrow() and runs no star round."""
     from corintick_spark.operators.dup_clusters import connected_components
+    from tests.spy import ACTIONS, driver_actions, loop_route
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)] + [(20, 21)], "a_id long, b_id long"
+    )
+    with loop_route(monkeypatch, "local") as taken, driver_actions(
+        spark, monkeypatch, (*ACTIONS, "localCheckpoint", "toArrow")
+    ) as calls:
+        labels = connected_components(edges)
+    assert taken == ["components"]
+    assert [name for name, _ in calls] == ["localCheckpoint", "toArrow"]
+    comp = {r.node: r.comp for r in labels.collect()}
+    assert comp == {**{i: 0 for i in range(13)}, 20: 20, 21: 20}
+
+
+def test_connected_components_raises_without_fixpoint(spark, monkeypatch):
+    """Exhausting max_iter before the fixpoint is an error, not a forest
+    whose nodes may carry several component labels. Only the distributed
+    loop has rounds to cap."""
+    from corintick_spark.operators.dup_clusters import connected_components
+    from tests.spy import loop_route
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "a_id long, b_id long"
     )
-    with pytest.raises(RuntimeError, match="max_iter=1"):
+    with loop_route(monkeypatch, "distributed"), pytest.raises(
+        RuntimeError, match="max_iter=1"
+    ):
         connected_components(edges, max_iter=1)
 
 
@@ -641,12 +698,29 @@ def test_resample_interp_semantics(spark):
     assert len(out) == 4
 
 
-def test_pagerank_matches_numpy_power_iteration(spark):
-    """Distributed PageRank must track a dense numpy power iteration with
+def _ranks(monkeypatch, edges, **kw):
+    """pagerank(edges) on both routes, which must agree on the schema and
+    the nodes, and on every rank to 1e-12: {node: rank} of the local one."""
+    from corintick_spark.operators.pagerank import pagerank
+    from tests.spy import both_routes
+
+    def run():
+        ranks = pagerank(edges, **kw)
+        rows = ranks.collect()
+        assert len(rows) == len({r.node for r in rows})
+        return ranks.schema, {r.node: r.rank for r in rows}
+
+    (schema, local), (dist_schema, dist) = both_routes(monkeypatch, "pagerank", run)
+    assert schema == dist_schema and local.keys() == dist.keys()
+    for node, rank in local.items():
+        assert abs(rank - dist[node]) < 1e-12, (node, rank, dist[node])
+    return local
+
+
+def test_pagerank_matches_numpy_power_iteration(spark, monkeypatch):
+    """PageRank on both routes must track a dense numpy power iteration with
     identical damping/dangling handling to ~1e-9."""
     import numpy as np
-
-    from corintick_spark.operators.pagerank import pagerank
 
     edges = [
         ("a", "b", 2.0), ("a", "c", 1.0), ("b", "c", 1.0),
@@ -654,10 +728,7 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         ("e", "d", 1.0),
     ]
     df = spark.createDataFrame(edges, "src string, dst string, w double")
-    got = {
-        r.node: r.rank
-        for r in pagerank(df, weight="w", damping=0.85, iterations=20).collect()
-    }
+    got = _ranks(monkeypatch, df, weight="w", damping=0.85, iterations=20)
 
     nodes = sorted({x for e in edges for x in e[:2]})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -724,63 +795,124 @@ def test_incremental_minhash_dedup(spark, tmp_path):
     assert all("text" not in l for l in scans), scans
 
 
-def test_pagerank_tol_early_exit_matches_fixpoint(spark):
+def _tol_fixpoint(spark, monkeypatch, route):
     """tol-based termination must land on the same fixpoint as a long
-    fixed-iteration run (within ~tol), including the dangling-mass path —
-    the in-plan broadcast aggregate must equal the collected scalar it
-    replaced. Ranks still sum to 1."""
+    fixed-iteration run (within ~tol) on ``route``, including the
+    dangling-mass path — the in-plan broadcast aggregate must equal the
+    collected scalar it replaced. Ranks still sum to 1."""
     from corintick_spark.operators.pagerank import pagerank
+    from tests.spy import loop_route
 
     # 'b' dangles (no out-edges): exercises the broadcast dangling aggregate
     edges = [("a", "b", 1.0), ("c", "a", 2.0), ("a", "c", 1.0)]
     df = spark.createDataFrame(edges, "src string, dst string, w double")
-    exact = {r.node: r.rank for r in pagerank(df, weight="w", iterations=80).collect()}
-    fast = {
-        r.node: r.rank
-        for r in pagerank(df, weight="w", iterations=80, tol=1e-10).collect()
-    }
+    with loop_route(monkeypatch, route):
+        exact = {r.node: r.rank for r in pagerank(df, weight="w", iterations=80).collect()}
+        fast = {
+            r.node: r.rank
+            for r in pagerank(df, weight="w", iterations=80, tol=1e-10).collect()
+        }
     assert set(exact) == set(fast) == {"a", "b", "c"}
     for k in exact:
         assert abs(exact[k] - fast[k]) < 1e-8, (k, exact[k], fast[k])
     assert abs(sum(fast.values()) - 1.0) < 1e-9
 
 
+def test_pagerank_tol_early_exit_matches_fixpoint(spark, monkeypatch):
+    """The distributed route's form. Its dangling path is the CHANGES.md
+    FOUND item (1-2 GB of driver heap per 4-step segment): slow tier."""
+    _tol_fixpoint(spark, monkeypatch, "distributed")
+
+
+def test_pagerank_tol_early_exit_matches_fixpoint_local(spark, monkeypatch):
+    _tol_fixpoint(spark, monkeypatch, "local")
+
+
+def test_pagerank_string_long_and_null_ids(spark, monkeypatch):
+    """String and long ids rank alike on both routes (int weights are summed
+    exactly); an edge with a NULL endpoint sends the graph to the
+    distributed loop."""
+    from corintick_spark.operators.pagerank import pagerank
+    from tests.spy import loop_route
+
+    cycle = [("a", "b", 1), ("b", "c", 2), ("c", "a", 3), ("a", "c", 1)]
+    words = spark.createDataFrame(cycle, "src string, dst string, w int")
+    big = 1 << 40
+    longs = spark.createDataFrame(
+        [(big + ord(s), big + ord(d), w) for s, d, w in cycle],
+        "src long, dst long, w int",
+    )
+    by_word = _ranks(monkeypatch, words, weight="w", iterations=12)
+    by_long = _ranks(monkeypatch, longs, weight="w", iterations=12)
+    assert by_long == {big + ord(k): r for k, r in by_word.items()}
+
+    nulls = spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("a", None), (None, "b")], "src string, dst string"
+    )
+    with loop_route(monkeypatch, "local") as taken:
+        pagerank(nulls, iterations=2).collect()
+    assert taken == []
+
+
+def test_pagerank_local_route_runs_one_checkpoint(spark, monkeypatch):
+    """The driver-local route checkpoints the edge list once (its count
+    rides that job), reads it with one toArrow() and runs no segment."""
+    from corintick_spark.operators.pagerank import pagerank
+    from tests.spy import ACTIONS, driver_actions, loop_route
+
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"), ("c", "d")],
+        "src string, dst string",
+    )
+    with loop_route(monkeypatch, "local") as taken, driver_actions(
+        spark, monkeypatch, (*ACTIONS, "localCheckpoint", "toArrow")
+    ) as calls:
+        ranks = pagerank(df, iterations=60, tol=1e-9, checkpoint_every=4)
+    assert taken == ["pagerank"]
+    assert [name for name, _ in calls] == ["localCheckpoint", "toArrow"]
+    assert abs(sum(r.rank for r in ranks.collect()) - 1.0) < 1e-9
+
+
 def test_connected_components_rounds_read_stats_off_checkpoints(spark, monkeypatch):
-    """Each round's edge count and xor-hash come from its checkpoint job:
-    the only action left is the pre-loop DISTINCT node-count head, which
+    """Each round's edge count and xor-hash come from its checkpoint job, as
+    the edge list's count comes from its own: on the distributed route the
+    only action left is the pre-loop DISTINCT node-count head, which
     observe cannot carry."""
     from corintick_spark.operators.dup_clusters import connected_components
-    from tests.spy import driver_actions
+    from tests.spy import driver_actions, loop_route
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)] + [(20, 21)], "a_id long, b_id long"
     )
-    with driver_actions(spark, monkeypatch) as calls:
+    with loop_route(monkeypatch, "distributed"), driver_actions(spark, monkeypatch) as calls:
         labels = connected_components(edges)
-    assert calls == [("first", ("nn", "e2"))]
+    assert calls == [("first", ("nn",))]
     comp = {r.node: r.comp for r in labels.collect()}
     assert comp == {**{i: 0 for i in range(13)}, 20: 20, 21: 20}
 
 
 def test_pagerank_tol_read_rides_the_checkpoint(spark, monkeypatch):
-    """The tol read is summed by each segment's checkpoint job: with an
-    early exit the only actions left are the two pre-loop sizing reads,
-    and the early-exit ranks match a fixed-iteration run."""
+    """The tol read is summed by each segment's checkpoint job, and the edge
+    count by the edge list's: on the distributed route, with an early exit,
+    the only action left is the pre-loop node-count read, and the
+    early-exit ranks match a fixed-iteration run."""
     from corintick_spark.operators.pagerank import pagerank
-    from tests.spy import ACTIONS, driver_actions
+    from tests.spy import ACTIONS, driver_actions, loop_route
 
     # every node has out-edges: the single-reference (non-dangling) path
     df = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"), ("c", "d")],
         "src string, dst string",
     )
-    exact = {r.node: r.rank for r in pagerank(df, iterations=60).collect()}
-    with driver_actions(spark, monkeypatch, (*ACTIONS, "localCheckpoint")) as calls:
-        fast = pagerank(df, iterations=60, tol=1e-9, checkpoint_every=4)
+    with loop_route(monkeypatch, "distributed"):
+        exact = {r.node: r.rank for r in pagerank(df, iterations=60).collect()}
+        with driver_actions(spark, monkeypatch, (*ACTIONS, "localCheckpoint")) as calls:
+            fast = pagerank(df, iterations=60, tol=1e-9, checkpoint_every=4)
     actions = [name for name, _ in calls if name != "localCheckpoint"]
-    assert actions == ["count", "first"]
+    assert actions == ["first"]
     # early exit: fewer segment checkpoints than the 15 a full run needs
-    assert len(calls) - len(actions) < 1 + 15
+    # (besides the edge list's and the initial ranks')
+    assert len(calls) - len(actions) < 2 + 15
     got = {r.node: r.rank for r in fast.collect()}
     assert set(got) == set(exact)
     for k in exact:
@@ -820,7 +952,7 @@ def test_hamming_band_join_runs_no_action(spark, monkeypatch):
     assert [(r.a_id, r.b_id, r.hamming) for r in pairs.collect()] == [(1, 2, 1)]
 
 
-def test_operators_accept_empty_inputs(spark):
+def test_operators_accept_empty_inputs(spark, monkeypatch):
     """Fresh-deployment state: every operator API must return an empty
     result on empty input, never throw (pagerank previously divided by its
     zero node count)."""
@@ -833,6 +965,7 @@ def test_operators_accept_empty_inputs(spark):
         resample_interp,
         resample_ohlc,
     )
+    from tests.spy import both_routes
 
     ev = spark.createDataFrame(
         [], "event_id long, ts timestamp, user_id long, value double"
@@ -852,8 +985,14 @@ def test_operators_accept_empty_inputs(spark):
     )
     assert exact_dedup(docs).count() == 0
     assert minhash_lsh_pairs(docs).count() == 0
-    assert connected_components(spark.createDataFrame([], "a_id long, b_id long")).count() == 0
-    assert pagerank(spark.createDataFrame([], "src string, dst string, w double"), weight="w").count() == 0
+    pairs = spark.createDataFrame([], "a_id long, b_id long")
+    edges = spark.createDataFrame([], "src string, dst string, w double")
+    assert both_routes(
+        monkeypatch, "components", lambda: connected_components(pairs).count()
+    ) == [0, 0]
+    assert both_routes(
+        monkeypatch, "pagerank", lambda: pagerank(edges, weight="w").count()
+    ) == [0, 0]
 
 
 def test_wav_header_parse_and_decode(spark):

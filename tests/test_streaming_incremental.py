@@ -298,10 +298,10 @@ def test_fold_signs_batch_once(spark, monkeypatch):
 def test_fold_measures_signatures_once(spark, monkeypatch):
     """The MinHash fold measures its batch signatures once, on the signing
     checkpoint job: neither the store match nor the intra-batch pairs runs
-    an aggregate over ``sig``. The one action left is connected
-    components' DISTINCT node-count head."""
+    an aggregate over ``sig``. On connected components' distributed route
+    the one action left is its DISTINCT node-count head."""
     from corintick_spark.streaming.incremental_dedup import make_batch_processor
-    from tests.spy import ACTIONS, driver_actions
+    from tests.spy import ACTIONS, driver_actions, loop_route
 
     work = tempfile.mkdtemp(prefix="incmeasure_")
     try:
@@ -315,13 +315,13 @@ def test_fold_measures_signatures_once(spark, monkeypatch):
             [(3, BASE + " extra"), (4, THIRD), (5, THIRD + " tail")],
             "doc_id long, text string",
         )
-        with driver_actions(spark, monkeypatch, (*ACTIONS, "localCheckpoint")) as calls:
+        with loop_route(monkeypatch, "distributed"), driver_actions(
+            spark, monkeypatch, (*ACTIONS, "localCheckpoint")
+        ) as calls:
             proc(batch, 1)
         sig_ckpts = [c for c in calls if c[0] == "localCheckpoint" and "sig" in c[1]]
         assert len(sig_ckpts) == 1
-        assert [c for c in calls if c[0] != "localCheckpoint"] == [
-            ("first", ("nn", "e2"))
-        ]
+        assert [c for c in calls if c[0] != "localCheckpoint"] == [("first", ("nn",))]
         out = spark.read.option("recursiveFileLookup", "true").parquet(dec)
         rows = {r.doc_id: (r.is_dup, r.matched_id) for r in out.collect()}
         assert rows[3] == (True, 1)

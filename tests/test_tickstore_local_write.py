@@ -137,9 +137,8 @@ def _write_both(spark, tmp_path, batches: list[tuple[list, str]]):
 
 def test_escaped_and_null_uids(spark, tmp_path, monkeypatch):
     """Escaped names, the ``uid="007"`` Spark would infer as 7, and a null
-    and an empty uid, both Spark's ``__HIVE_DEFAULT_PARTITION__`` (in
-    separate appends: within one, the Spark write hashes them to two
-    tasks and may write two files there)."""
+    and an empty uid in one append, both Spark's
+    ``__HIVE_DEFAULT_PARTITION__`` (one file there on both routes)."""
     uids = ["a/b", "x=y", "50%", "007", "plain"]
     rows = [
         (u, _t(k * 7 % 60), float(i * 100 + k), i * 100 + k)
@@ -150,8 +149,8 @@ def test_escaped_and_null_uids(spark, tmp_path, monkeypatch):
         spark,
         tmp_path,
         [
-            (rows + [(None, _t(3), 1.0, 1), (None, _t(1), 2.0, 2)], SCHEMA),
-            ([("", _t(2), 3.0, 3), ("a/b", _t(99), 4.0, 4)], SCHEMA),
+            (rows + [(None, _t(3), 1.0, 1), ("", _t(2), 3.0, 3), (None, _t(1), 2.0, 2)], SCHEMA),
+            ([("a/b", _t(99), 4.0, 4)], SCHEMA),
         ],
     )
     assert "data/uid=__HIVE_DEFAULT_PARTITION__" in _files(local)

@@ -148,3 +148,23 @@ def test_write_uses_shuffle_partitions_tasks_one_file_per_dir(spark, tmp_path):
     assert after.keys() == before.keys()
     assert all(after[d] == before[d] + 1 for d in before)
     _assert_files_time_sorted(store)
+
+
+def test_spark_write_null_and_empty_uid_share_one_file(spark, tmp_path):
+    """A NULL and an empty uid both name Spark's ``__HIVE_DEFAULT_PARTITION__``
+    directory; the Spark write hashes them to one task, so one append
+    leaves one file there, and both read back as NULL uids."""
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        ("A", t0, 1.0),
+        (None, t0 + dt.timedelta(minutes=1), 2.0),
+        ("", t0 + dt.timedelta(minutes=2), 3.0),
+    ]
+    store = TickStore(spark, str(tmp_path / "store"))
+    store.write(spark.createDataFrame(rows, SCHEMA).repartition(3))
+    assert {os.path.basename(d): k for d, k in _files_per_dir(store).items()} == {
+        "uid=A": 1,
+        "uid=__HIVE_DEFAULT_PARTITION__": 1,
+    }
+    got = sorted(store.read().collect(), key=lambda r: r.value)
+    assert [(r.uid, r.ts, r.value) for r in got] == [(u or None, ts, v) for u, ts, v in rows]
