@@ -103,18 +103,11 @@ class AnnIndex:
         (q_id, c_id, adc_dist, rank))."""
         from pyspark.sql import Window as W
 
-        from corintick_spark.operators.pq import _sq, _subvectors
+        from corintick_spark.operators.pq import _books, _dtab_frame, _no_candidates, _sq
 
-        mj = self.codebooks.select(F.max("j")).first()[0]
-        if mj is None:
-            return queries.limit(0).select(
-                F.col(self.id_col).alias("q_id"),
-                F.col(self.id_col).alias("c_id"),
-                F.lit(0.0).alias("adc_dist"),
-                F.lit(0).cast("bigint").alias("rank"),
-            )
-        m = mj + 1
-        sub = len(self.codebooks.select("centroid").first()[0])
+        cb = _books(self.codebooks)
+        if cb is None:
+            return _no_candidates(queries, self.id_col)
 
         q_vecs = queries.select(
             F.col(self.id_col).alias("q_id"),
@@ -130,24 +123,7 @@ class AnnIndex:
             .filter(F.col("_rk") <= nprobe)
             .select("q_id", "cell")
         )
-        dtab = (
-            _subvectors(queries, m, sub, self.id_col, self.vec_col)
-            .join(F.broadcast(self.codebooks), "j")
-            .withColumn("_d", _sq("sv", "centroid"))
-            .groupBy("_id", "j")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(cell, _d))), e -> e._d)"
-                ).alias("row")
-            )
-            .groupBy("_id")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(j, row))), e -> e.row)"
-                ).alias("dtab")
-            )
-            .select(F.col("_id").alias("q_id"), "dtab")
-        )
+        dtab = _dtab_frame(queries, cb, self.id_col, self.vec_col)
         adc = F.expr(
             "aggregate(zip_with(codes, dtab, (c, row) -> element_at(row, c + 1)),"
             " 0D, (s, v) -> s + v)"

@@ -1,29 +1,38 @@
 """Iterative clustering over embedding columns: k-means + IVF search.
 
 The "iterative algorithm" tier of the engine (driver contract: non-SQL-
-expressible ops get rows-only checks). Shapes follow MLlib's k-means: the
-driver loops a small fixed number of iterations, each iteration is one
-distributed assign (broadcast centroids → nearest-cell per vector) and one
-distributed update (per-cell component means); only the k×dim centroid
-matrix ever reaches the driver.
+expressible ops get rows-only checks). ``kmeans_fit`` is ``pq.pq_fit``'s
+Lloyd loop with one subspace: a fixed number of rounds over a hash-capped
+fit sample, each an assign (nearest cell per vector) and an update
+(per-cell component means). A sample of at most ``pq._LOCAL_FIT_DOUBLES``
+doubles is read to the driver once and fit in numpy; a larger one runs each
+round as one Spark job (MLlib's shape), and then only the k×dim centroid
+matrix reaches the driver.
 
 IVF (inverted-file) search then uses the trained cells as a coarse
 quantizer: corpus vectors are bucketed by nearest centroid once; a query
 probes only its `nprobe` nearest cells — the candidate join is an equi-join
 on cell id, the classic billion-scale ANN layout (FAISS IVF-Flat shape).
 
-Determinism: centroid init picks the k vectors with smallest xxhash64(id) —
-no RNG; float averaging is the only order-dependent step, so unit checks
-assert structure (coverage, counts, recall), not exact assignments.
+Determinism: centroid init picks the k vectors with smallest
+(xxhash64(id), id) — no RNG; float averaging is the only order-dependent
+step, so unit checks assert structure (coverage, counts, recall), not exact
+assignments.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
 from corintick_spark.operators.similarity import _cosine, _dot, _norm2
-from corintick_spark.operators.spread import spread_input
+from corintick_spark.session import local_relation
+
+_CELLS = StructType([
+    StructField("cell", IntegerType()),
+    StructField("centroid", ArrayType(DoubleType())),
+])
 
 
 def _sq_dist(a: str, b: str):
@@ -40,70 +49,27 @@ def kmeans_fit(
     vec_col: str = "embedding",
     fit_sample_max: int = 100_000,
 ) -> DataFrame:
-    """Train k cell centroids; returns a DataFrame (cell int, centroid
-    array<double>) small enough to broadcast.
+    """Train k cell centroids; returns a local relation (cell int, centroid
+    array<double>) small enough to broadcast, whose reads run no Spark job.
+    Fewer than k vectors give that many cells; no vectors, none.
 
-    ``iters`` is the exact number of Lloyd rounds run, not a budget: the
-    loop never stops early on converged centroids.
+    This is ``pq.pq_fit``'s Lloyd loop with one subspace (operators/pq.py::
+    _fit): a fit sample of at most ``pq._LOCAL_FIT_DOUBLES`` doubles runs in
+    numpy on the driver, a larger one one Spark job per round. ``iters``
+    is the exact number of Lloyd rounds run, not a budget: the loop never
+    stops early on converged centroids. NULL vectors are left out.
 
     ``fit_sample_max``: centroids are fit on a deterministic hash-capped
     sample of at most ~this many vectors (operators/sampling.py) — the
     FAISS train()/add() split: assignment (kmeans_assign) still covers
-    every row, but the iterative fit's per-round shuffles are bounded
-    regardless of corpus size. Corpora at or below the cap fit on every
-    row (bit-identical to the unsampled fit). 0/None disables."""
-    from corintick_spark.operators.sampling import hash_sample_cap
+    every row, but the fit reads a bounded sample regardless of corpus
+    size. Corpora at or below the cap fit on every row (bit-identical to
+    the unsampled fit). 0/None disables."""
+    from corintick_spark.operators.pq import _fit
 
-    spark = df.sparkSession
-    # persisted: read twice per iteration (assign + update) × iters rounds —
-    # without this every round re-scans and re-casts the source
-    vecs = (
-        hash_sample_cap(spread_input(df), id_col, fit_sample_max)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("_v"),
-        )
-        .persist()
-    )
-
-    init = (
-        vecs.withColumn("_h", F.xxhash64(F.col("_id")))
-        .orderBy("_h")
-        .limit(k)
-        .select("_v")
-        .collect()
-    )
-    centroids = [list(r["_v"]) for r in init]
-
-    for _ in range(iters):
-        cdf = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(centroids)], "cell int, centroid array<double>"
-        )
-        # single pass per round: the assign agg carries _v through (it is
-        # constant per _id group), so no big-big rejoin against vecs;
-        # per-cell component means via positional explode (k*dim rows out)
-        comp = (
-            vecs.crossJoin(F.broadcast(cdf))
-            .withColumn("_d", _sq_dist("_v", "centroid"))
-            .groupBy("_id")
-            .agg(
-                F.min_by("cell", F.struct(F.col("_d"), F.col("cell"))).alias("cell"),
-                F.first("_v").alias("_v"),
-            )
-            .select("cell", F.posexplode("_v").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", F.expr("transform(pm, e -> e.m)").alias("centroid"))
-            .collect()
-        )
-        new = {r["cell"]: list(r["centroid"]) for r in comp}
-        centroids = [new.get(i, centroids[i]) for i in range(k)]
-
-    vecs.unpersist()
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "cell int, centroid array<double>"
+    cb = _fit(df, 1, k, iters, id_col, vec_col, fit_sample_max)[0]
+    return local_relation(
+        df.sparkSession, _CELLS, [list(range(len(cb))), cb.tolist()]
     )
 
 

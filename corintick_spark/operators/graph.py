@@ -24,7 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import edge_stats, materialize, runs_locally
+from corintick_spark.operators.ckpt import (
+    edge_stats,
+    materialize,
+    release_local_checkpoint,
+    runs_locally,
+)
 
 
 def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -131,7 +136,7 @@ def bfs_hops(
     frontier, st = materialize(
         seeds.distinct().select(node, F.lit(0).alias("hops")), **count
     )
-    visited = frontier
+    visited, nxt = frontier, None
     for level in range(1, max_iter + 1):
         f = frontier.select(F.col(node).alias("src"))
         if st["n"] <= broadcast_frontier_max:
@@ -150,4 +155,9 @@ def bfs_hops(
         # same frame) are done once the new visited set materialized
         visited, _ = materialize(visited.unionByName(nxt), visited, frontier)
         frontier = nxt
+    # the result is its own checkpoint: the edge list, the last frontier
+    # and an empty last level are done
+    for done in (e, frontier, nxt):
+        if done is not None and done is not visited:
+            release_local_checkpoint(done)
     return visited

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.session import local_relation
 
 
 def _columns(frame: DataFrame, *names: str) -> "list[pa.Array]":
@@ -46,12 +47,6 @@ def _factorize(*arrays: pa.Array) -> "tuple[pa.Array, list[np.ndarray]]":
         pc.index_in(a, value_set=values).to_numpy().astype(np.int64)
         for a in arrays
     ]
-
-
-def _relation(frame: DataFrame, schema: StructType, columns: list) -> DataFrame:
-    """A local relation of ``columns`` (Arrow arrays) typed by ``schema``."""
-    table = pa.table(columns, names=schema.fieldNames())
-    return frame.sparkSession.createDataFrame(table, schema)
 
 
 def pagerank(
@@ -93,7 +88,7 @@ def pagerank(
         # the distributed route's empty result is a non-null literal
         StructField("rank", DoubleType(), n > 0),
     ])
-    return _relation(e, schema, [nodes, pa.array(rank, pa.float64())])
+    return local_relation(e.sparkSession, schema, [nodes, pa.array(rank, pa.float64())])
 
 
 def bfs(e: DataFrame, seeds: DataFrame, node: str, max_iter: int) -> DataFrame:
@@ -137,7 +132,7 @@ def bfs(e: DataFrame, seeds: DataFrame, node: str, max_iter: int) -> DataFrame:
         StructField(node, LongType(), nullable),
         StructField("hops", IntegerType(), False),
     ])
-    return _relation(e, schema, [out_nodes, out_hops])
+    return local_relation(e.sparkSession, schema, [out_nodes, out_hops])
 
 
 def components(e: DataFrame) -> DataFrame:
@@ -167,4 +162,4 @@ def components(e: DataFrame) -> DataFrame:
     schema = StructType([
         StructField("node", id_type, True), StructField("comp", id_type, True),
     ])
-    return _relation(e, schema, [nodes, nodes.take(pa.array(label))])
+    return local_relation(e.sparkSession, schema, [nodes, nodes.take(pa.array(label))])

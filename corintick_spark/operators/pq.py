@@ -10,10 +10,16 @@ the defaults (d=64, m=8, k=16) that is 256 bytes -> 8 bytes, 32x. At
 streams codes + a broadcast distance table instead of raw floats.
 
 Spark shape:
-- ``pq_fit``   — ONE distributed k-means over all m subspaces at once
-  (subspace id `j` is just another grouping column), so the driver loop is
-  `iters` rounds total, not `m * iters`. Only the m*k*(d/m) codebook floats
-  ever reach the driver.
+- ``pq_fit``   — ONE k-means over all m subspaces at once, on a hash-capped
+  fit sample (operators/sampling.py), so the loop is `iters` rounds total,
+  not `m * iters`. A sample of at most ``_LOCAL_FIT_DOUBLES`` doubles (the
+  default 100k-vector cap of 64-dim vectors is well under it) is read to the
+  driver with one ``toArrow()`` and its rounds run in numpy, as FAISS trains
+  on an in-memory sample; a larger one runs one Spark job per round (subspace
+  id `j` is a grouping column), and then only the m*k*(d/m) codebook floats
+  reach the driver. ``clustering.kmeans_fit`` is the same loop with m = 1.
+  The codebooks come back as a local relation built from Arrow, so the
+  ``collect()`` that encode and search take them with runs no Spark job.
 - ``pq_encode`` — one broadcast join + min_by per (vector, subspace);
   output is (id, codes array<int>) — the compact table a real deployment
   persists (durable parquet at scale; the raw floats are never re-read).
@@ -25,10 +31,11 @@ Spark shape:
   (probe sets are small by contract — same guard philosophy as
   brute_force_topk).
 
-Determinism: init picks per-subspace seeds by smallest xxhash64(id) — no
-RNG. Float averaging in the centroid update is the only order-dependent
-step, so correctness checks are structural (code ranges, compression
-ratio, recall vs exact scan), i.e. the rows-only driver tier.
+Determinism: init picks per-subspace seeds by smallest (xxhash64(id), id)
+— no RNG. Float averaging in the centroid update is the only
+order-dependent step (the two fit routes agree to ~1e-16 relative), so
+correctness checks are structural (code ranges, compression ratio, recall
+vs exact scan), i.e. the rows-only driver tier.
 """
 
 from __future__ import annotations
@@ -36,36 +43,40 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401 — resolves the stringified pd.Series hints
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    IntegralType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from corintick_spark.operators.spread import spread_input
+from corintick_spark.session import local_relation
 
+# Fit samples of at most this many doubles (rows x dim, 128 MiB) run their
+# Lloyd rounds in numpy on the driver; larger ones run one Spark job per
+# round. In a sweep of 2^10-2^17 rows at dim 64 and 256 on 4 cores
+# (CHANGES.md) the local route won every size, but its lead fell from ~6x
+# to ~1.5-1.9x from 2^24 doubles up, while the sample it holds on the
+# driver keeps growing: the bound sits there. It covers the default
+# 100k-vector cap up to dim 167. More executor cores move the crossover
+# down; re-measure on them.
+_LOCAL_FIT_DOUBLES = 1 << 24
 
-def _subvectors(df: DataFrame, m: int, sub: int, id_col: str, vec_col: str) -> DataFrame:
-    """Explode each vector into (id, j, sv): m rows of `sub`-dim slices."""
-    slices = F.expr(
-        f"transform(sequence(0, {m - 1}), j ->"
-        f" transform(slice({vec_col}, j * {sub} + 1, {sub}),"
-        f" x -> CAST(x AS DOUBLE)))"
-    )
-    return df.select(
-        F.col(id_col).alias("_id"), F.posexplode(slices).alias("j", "sv")
-    )
+_BOOKS = StructType([
+    StructField("j", IntegerType()),
+    StructField("cell", IntegerType()),
+    StructField("centroid", ArrayType(DoubleType())),
+])
 
 
 def _sq(a: str, b: str):
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
         " 0D, (s, v) -> s + v)"
-    )
-
-
-def _cb_array(books: dict, m: int, k: int):
-    """Codebooks as an (m, k, sub) numpy array for the vectorized UDFs."""
-    import numpy as np
-
-    return np.array(
-        [[list(books[(j, c)]) for c in range(k)] for j in range(m)],
-        dtype=np.float64,
     )
 
 
@@ -86,40 +97,51 @@ def _dists_batch(vals, cb):
     # any arithmetic), then subtract — same float64 ops in the same order
     x = np.stack(vals).astype(np.float64, copy=False).reshape(n, m, sub)
     acc = np.zeros((n, m, k))
+    d = np.empty((n, m, k))
     for p in range(sub):
-        d = x[:, :, None, p] - cb[None, :, :, p]
-        acc += d * d
+        np.subtract(x[:, :, None, p], cb[None, :, :, p], out=d)
+        np.multiply(d, d, out=d)
+        acc += d
     return acc
 
 
-def _codes_udf(books: dict, m: int, k: int):
-    """Vectorized quantizer (round 11, guide §4.2): a pandas UDF hands
-    whole Arrow batches to numpy — replaces the interpreted nested-HOF /
-    fan-out-join assignment, which paid per-element lambda interpretation
-    on every (row, subspace, cell) triple. np.argmin takes the FIRST
-    minimal index = smallest cell on ties, the same (d, cell) order as the
-    old min_by(struct(_d, cell))."""
+def _nearest(vals, cb):
+    """(n, m) nearest cell of each row's m subvectors: the argmin of
+    :func:`_dists_batch`, whose FIRST minimal index is the smallest cell on
+    ties (the (d, cell) order of the old min_by(struct(_d, cell))). Rows go
+    in chunks whose (rows, m, k) temporaries stay cache-sized; each row's
+    distances are the same in any chunk."""
     import numpy as np
-    import pandas as pd
 
-    cb = _cb_array(books, m, k)
+    m, k, _ = cb.shape
+    step = max(1, (1 << 15) // (m * k))
+    return np.concatenate(
+        [_dists_batch(vals[i:i + step], cb).argmin(axis=2)
+         for i in range(0, len(vals), step)]
+        or [np.zeros((0, m), dtype=np.int64)]
+    )
+
+
+def _codes_udf(cb):
+    """Vectorized quantizer over the (m, k, sub) codebook ``cb`` (round 11,
+    guide §4.2): a pandas UDF hands whole Arrow batches to numpy
+    (:func:`_nearest`) — replaces the interpreted nested-HOF /
+    fan-out-join assignment, which paid per-element lambda interpretation
+    on every (row, subspace, cell) triple."""
+    import pandas as pd
 
     @F.pandas_udf("array<int>")
     def codes(v: pd.Series) -> pd.Series:
-        d = _dists_batch(v.to_numpy(), cb)
-        out = d.argmin(axis=2).astype("int32")
-        return pd.Series(list(out))
+        return pd.Series(list(_nearest(v.to_numpy(), cb).astype("int32")))
 
     return codes
 
 
-def _dtab_udf(books: dict, m: int, k: int):
+def _dtab_udf(cb):
     """Vectorized ADC distance-table builder: dtab[j][cell] per query row,
     same layout and bit-identical doubles as the old two-stage
     collect_list aggregation (see _dists_batch)."""
     import pandas as pd
-
-    cb = _cb_array(books, m, k)
 
     @F.pandas_udf("array<array<double>>")
     def dtab(v: pd.Series) -> pd.Series:
@@ -131,69 +153,84 @@ def _dtab_udf(books: dict, m: int, k: int):
     return dtab
 
 
-def pq_fit(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fit_sample_max: int = 100_000,
-) -> DataFrame:
-    """Train m per-subspace codebooks of k centroids each, in one
-    distributed loop (subspace id is a grouping column). Returns a
-    DataFrame (j int, cell int, centroid array<double>) of m*k rows —
-    always broadcastable (m*k*(d/m) = d*k doubles total).
+def _books(codebooks: DataFrame):
+    """The (j, cell, centroid) ``codebooks`` frame as its (m, k, sub)
+    float64 array, from one ``collect()``; None when it is empty. A fit's
+    codebooks are a local relation, so the collect runs no Spark job."""
+    import numpy as np
 
-    ``iters`` is the exact number of Lloyd rounds run, not a budget: the
-    loop never stops early on converged codebooks.
+    rows = sorted(codebooks.collect(), key=lambda r: (r["j"], r["cell"]))
+    if not rows:
+        return None
+    m, k = rows[-1]["j"] + 1, max(r["cell"] for r in rows) + 1
+    return np.array([r["centroid"] for r in rows], dtype=np.float64).reshape(m, k, -1)
 
-    ``fit_sample_max``: codebooks are fit on a deterministic hash-capped
-    sample of at most ~this many vectors (operators/sampling.py) — the
-    FAISS train()/add() split: pq_encode still quantizes every row, but
-    the fit loop's per-round shuffles are bounded regardless of corpus
-    size. Corpora at or below the cap fit on every row (bit-identical
-    to the unsampled fit). 0/None disables."""
-    from corintick_spark.operators.sampling import hash_sample_cap
 
-    spark = df.sparkSession
-    head = df.select(vec_col).first()  # one-row action at fit time only
-    if head is None:  # empty input -> empty codebooks, never throw
-        return spark.createDataFrame([], "j int, cell int, centroid array<double>")
-    dim = len(head[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
+def _lloyd_local(fit_df: DataFrame, m: int, k: int, dim: int, iters: int):
+    """The Lloyd loop of :func:`_fit` in numpy on the driver: the fit frame
+    (``_id``, ``_v``) is read with one ``toArrow()``. Returns the (m, k',
+    sub) codebooks, k' = min(k, rows), or None when a vector holds a NULL
+    element or is not ``dim`` long (the distributed loop gives those its
+    own semantics).
+
+    Same steps as the distributed loop: init from the k rows smallest by
+    (xxhash64(_id), _id) (Arrow sorts NULL ids first and strings by bytes,
+    as Spark does), assignment by :func:`_nearest`, per-cell means, and an
+    empty cell keeps its centroid."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = fit_df.select("_id", F.xxhash64("_id").alias("_h"), "_v").toArrow()
+    v = t.column("_v").combine_chunks()
+    n = len(v)
+    ragged = pc.any(pc.not_equal(pc.list_value_length(v), dim)).as_py()
+    if v.flatten().null_count or ragged:
+        return None
     sub = dim // m
-
-    fit_df = (
-        hash_sample_cap(spread_input(df), id_col, fit_sample_max)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("_v"),
+    x = v.flatten().to_numpy().reshape(n, m, sub)
+    first = pc.sort_indices(
+        pa.table({"h": t.column("_h"), "id": t.column("_id")}),
+        sort_keys=[("h", "ascending"), ("id", "ascending")],
+        null_placement="at_start",
+    ).to_numpy()[:k]
+    kk = len(first)
+    cb = x[first].transpose(1, 0, 2).copy()  # (m, kk, sub)
+    offset = np.arange(m) * kk
+    for _ in range(iters):
+        idx = (_nearest(x, cb) + offset).ravel()  # (row, j) -> j * kk + cell
+        cnt = np.bincount(idx, minlength=m * kk)
+        sums = np.stack(
+            [np.bincount(idx, weights=x[:, :, p].ravel(), minlength=m * kk)
+             for p in range(sub)],
+            axis=1,
         )
-        .persist()
-    )
+        hit = cnt > 0
+        flat = cb.reshape(m * kk, sub)
+        flat[hit] = sums[hit] / cnt[hit, None]
+        cb = flat.reshape(m, kk, sub)
+    return cb
 
+
+def _lloyd_distributed(fit_df: DataFrame, m: int, k: int, sub: int, iters: int):
+    """The Lloyd loop of :func:`_fit` as Spark jobs: ONE job per round, one
+    map-side-combined shuffle of <= m*k*(d/m) partial rows. Returns the
+    (m, k', sub) codebooks, k' = min(k, rows)."""
+    import numpy as np
+
+    fit_df = spread_input(fit_df).persist()
     # Deterministic init — the k vectors with smallest id hash. xxhash64(id)
     # does not depend on the subspace, so the per-j rank order is the SAME
-    # id order for every j: one TakeOrdered over the fit frame replaces the
-    # round-1 window over the m-way exploded subvectors (identical cells).
-    init = (
-        fit_df.orderBy(F.xxhash64("_id"), "_id").limit(k).collect()
-    )
-    books = {
-        (j, c): list(r["_v"][j * sub:(j + 1) * sub])
-        for c, r in enumerate(init)
-        for j in range(m)
-    }
-
+    # id order for every j: one TakeOrdered over the fit frame.
+    init = fit_df.orderBy(F.xxhash64("_id"), "_id").limit(k).collect()
+    cb = np.array(
+        [r["_v"] for r in init], dtype=np.float64
+    ).reshape(len(init), m, sub).transpose(1, 0, 2).copy()
     for _ in range(iters):
-        # ONE job per round, one map-side-combined shuffle of <= m*k*(d/m)
-        # partial rows: the vectorized UDF (guide §4.2) assigns every
-        # subspace's cell in one Arrow batch pass (no fan-out join on j,
-        # no (_id, j) aggregation), and the centroid update explodes
-        # straight to (j, cell, pos, x) for a tiny partial+final average.
-        assigned = fit_df.select("_v", _codes_udf(books, m, k)("_v").alias("_cells"))
+        # the vectorized UDF (guide §4.2) assigns every subspace's cell in
+        # one Arrow batch pass, and the centroid update explodes straight
+        # to (j, cell, pos, x) for a tiny partial+final average.
+        assigned = fit_df.select("_v", _codes_udf(cb)("_v").alias("_cells"))
         comp = (
             assigned.select(
                 F.explode(
@@ -212,13 +249,86 @@ def pq_fit(
             .select("j", "cell", F.expr("transform(pm, e -> e.mu)").alias("centroid"))
             .collect()
         )
-        new = {(r["j"], r["cell"]): list(r["centroid"]) for r in comp}
-        books = {jc: new.get(jc, v) for jc, v in books.items()}
-
+        cb = cb.copy()  # the round's UDF closed over the old array
+        for r in comp:  # a cell no row chose keeps its centroid
+            cb[r["j"], r["cell"]] = r["centroid"]
     fit_df.unpersist()
-    return spark.createDataFrame(
-        [(j, c, v) for (j, c), v in sorted(books.items())],
-        "j int, cell int, centroid array<double>",
+    return cb
+
+
+def _fit(df, m, k, iters, id_col, vec_col, fit_sample_max):
+    """The one Lloyd mechanism behind :func:`pq_fit` (m subspaces) and
+    ``clustering.kmeans_fit`` (m = 1): ``iters`` rounds of k-means over each
+    of the m subspaces of the hash-capped fit sample (operators/sampling.py)
+    of ``df``'s non-NULL vectors. Returns the (m, k', sub) float64
+    codebooks, k' = min(k, rows), or an (m, 0, 0) array for no vectors.
+
+    The sample is counted once. One that holds at most
+    ``_LOCAL_FIT_DOUBLES`` doubles (rows x dim) runs the whole loop in numpy
+    on the driver (:func:`_lloyd_local`); a larger one, one with a NULL
+    element or ragged vectors, or one whose ids are neither integers nor
+    strings (the types whose order Arrow shares with Spark) runs the
+    distributed loop (one Spark job per round). Both start from the same
+    rows and assign with the same distances, so they find the same cells."""
+    from corintick_spark.operators.sampling import hash_sample_cap
+
+    sample, rows = hash_sample_cap(df, id_col, fit_sample_max)
+    fit_df = sample.select(
+        F.col(id_col).alias("_id"),
+        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("_v"),
+    ).filter(F.col("_v").isNotNull())
+    head = fit_df.select("_v").first()  # one-row action at fit time only
+    if head is None:  # no vectors -> empty codebooks, never throw
+        import numpy as np
+
+        return np.empty((m, 0, 0))
+    dim = len(head[0])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    if rows * dim <= _LOCAL_FIT_DOUBLES and isinstance(
+        fit_df.schema["_id"].dataType, (IntegralType, StringType)
+    ):
+        cb = _lloyd_local(fit_df, m, k, dim, iters)
+        if cb is not None:
+            return cb
+    return _lloyd_distributed(fit_df, m, k, dim // m, iters)
+
+
+def pq_fit(
+    df: DataFrame,
+    m: int = 8,
+    k: int = 16,
+    iters: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    fit_sample_max: int = 100_000,
+) -> DataFrame:
+    """Train m per-subspace codebooks of k centroids each. Returns a local
+    relation (j int, cell int, centroid array<double>) of m*k rows —
+    always broadcastable (m*k*(d/m) = d*k doubles total); reading it runs
+    no Spark job. Fewer than k vectors give that many cells; no vectors
+    give empty codebooks.
+
+    ``iters`` is the exact number of Lloyd rounds run, not a budget: the
+    loop never stops early on converged codebooks. NULL vectors are left
+    out of the fit.
+
+    ``fit_sample_max``: codebooks are fit on a deterministic hash-capped
+    sample of at most ~this many vectors (operators/sampling.py) — the
+    FAISS train()/add() split: pq_encode still quantizes every row, but
+    the fit reads a bounded sample regardless of corpus size. A sample of
+    at most ``_LOCAL_FIT_DOUBLES`` doubles is read to the driver once and
+    fit there in numpy; a larger one runs one Spark job per round (see
+    :func:`_fit`). Corpora at or below the cap fit on every row
+    (bit-identical to the unsampled fit). 0/None disables."""
+    import numpy as np
+
+    cb = _fit(df, m, k, iters, id_col, vec_col, fit_sample_max)
+    mm, kk, sub = cb.shape
+    j, cell = np.indices((mm, kk)).reshape(2, -1)
+    return local_relation(
+        df.sparkSession, _BOOKS,
+        [j.tolist(), cell.tolist(), cb.reshape(mm * kk, sub).tolist()],
     )
 
 
@@ -231,42 +341,39 @@ def pq_encode(
     """Quantize each vector to its m nearest-cell codes. Returns
     (id_col, codes array<int>) — the compact table that gets persisted at
     scale; one Arrow-batched projection, zero shuffles."""
-    mj = codebooks.select(F.max("j")).first()[0]
-    if mj is None:  # empty codebooks (empty fit input) -> empty codes
+    cb = _books(codebooks)
+    if cb is None:  # empty codebooks (empty fit input) -> empty codes
         return df.limit(0).select(
             F.col(id_col), F.expr("CAST(array() AS array<int>)").alias("codes")
         )
-    m = mj + 1
-    rows = codebooks.collect()  # m*k rows — the always-broadcastable table
-    k = max(r["cell"] for r in rows) + 1
-    books = {(r["j"], r["cell"]): list(r["centroid"]) for r in rows}
     # Vectorized quantization (round 11, guide §4.2): one Arrow-batched
     # projection — no m-way explode, no fan-out join, no (_id, j) + (_id)
     # double aggregation; ZERO shuffles. spread_input parallelizes the
     # single-file local scan the projection would otherwise inherit.
     return spread_input(df).select(
-        F.col(id_col), _codes_udf(books, m, k)(vec_col).alias("codes")
+        F.col(id_col), _codes_udf(cb)(vec_col).alias("codes")
     )
 
 
-def _dtab_frame(
-    queries: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Per-query ADC distance table (q_id, dtab[j][cell]) as ONE projection
-    over the crossJoined 1-row codebook (round 11) — replaces the m-way
-    explode + fan-out join + double collect_list aggregation. Same [j][cell]
-    layout and the same zip_with/aggregate float expression, so tables are
-    identical."""
-    rows = codebooks.collect()
-    k = max(r["cell"] for r in rows) + 1
-    books = {(r["j"], r["cell"]): list(r["centroid"]) for r in rows}
+def _dtab_frame(queries: DataFrame, cb, id_col: str, vec_col: str) -> DataFrame:
+    """Per-query ADC distance table (q_id, dtab[j][cell]) against the
+    (m, k, sub) codebook ``cb``, as ONE projection (round 11) — replaces the
+    m-way explode + fan-out join + double collect_list aggregation. Same
+    [j][cell] layout and the same zip_with/aggregate float expression, so
+    tables are identical."""
     return queries.select(
+        F.col(id_col).alias("q_id"), _dtab_udf(cb)(vec_col).alias("dtab")
+    )
+
+
+def _no_candidates(queries: DataFrame, id_col: str) -> DataFrame:
+    """The empty (q_id, c_id, adc_dist, rank) result of a top-k over empty
+    codebooks."""
+    return queries.limit(0).select(
         F.col(id_col).alias("q_id"),
-        _dtab_udf(books, m, k)(vec_col).alias("dtab"),
+        F.col(id_col).alias("c_id"),
+        F.lit(0.0).alias("adc_dist"),
+        F.lit(0).cast("bigint").alias("rank"),
     )
 
 
@@ -282,16 +389,10 @@ def pq_topk(
     JVM-side fold over the corpus codes. The corpus side reads ONLY the
     8-byte codes column; queries (with their m x k tables) are broadcast —
     probe sets are small by contract, the corpus is the big side."""
-    mj = codebooks.select(F.max("j")).first()[0]
-    if mj is None:  # empty codebooks -> no candidates
-        return queries.limit(0).select(
-            F.col(id_col).alias("q_id"),
-            F.col(id_col).alias("c_id"),
-            F.lit(0.0).alias("adc_dist"),
-            F.lit(0).cast("bigint").alias("rank"),
-        )
-    m = mj + 1
-    dtab = _dtab_frame(queries, codebooks, m, id_col, vec_col)
+    cb = _books(codebooks)
+    if cb is None:  # empty codebooks -> no candidates
+        return _no_candidates(queries, id_col)
+    dtab = _dtab_frame(queries, cb, id_col, vec_col)
 
     adc = F.expr(
         "aggregate(zip_with(codes, dtab, (c, row) -> element_at(row, c + 1)),"
@@ -339,15 +440,9 @@ def ivfpq_topk(
 
     from corintick_spark.operators.clustering import kmeans_assign
 
-    mj = codebooks.select(F.max("j")).first()[0]
-    if mj is None:
-        return queries.limit(0).select(
-            F.col(id_col).alias("q_id"),
-            F.col(id_col).alias("c_id"),
-            F.lit(0.0).alias("adc_dist"),
-            F.lit(0).cast("bigint").alias("rank"),
-        )
-    m = mj + 1
+    cb = _books(codebooks)
+    if cb is None:
+        return _no_candidates(queries, id_col)
 
     c_cells = kmeans_assign(corpus, cell_centroids, id_col, vec_col).select(
         F.col(id_col).alias("c_id"), "cell"
@@ -368,7 +463,7 @@ def ivfpq_topk(
         .select("q_id", "cell")
     )
 
-    dtab = _dtab_frame(queries, codebooks, m, id_col, vec_col)
+    dtab = _dtab_frame(queries, cb, id_col, vec_col)
 
     adc = F.expr(
         "aggregate(zip_with(codes, dtab, (c, row) -> element_at(row, c + 1)),"

@@ -23,8 +23,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from corintick_spark.operators.ckpt import materialize
+from corintick_spark.session import local_relation
 
 BUCKETS = 1 << 16
 
@@ -143,9 +145,10 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
     )
     # rank k = max(1, ceil(q*n)), fp-drift-free: q is quantized to ppm on
     # the driver; ceil-div is then exact bigint arithmetic in-plan
-    qdf = spark.createDataFrame(
-        [(float(q), int(round(q * 1_000_000))) for q in qs],
-        "q double, qm bigint",
+    qdf = local_relation(
+        spark,
+        StructType([StructField("q", DoubleType()), StructField("qm", LongType())]),
+        [[float(q) for q in qs], [int(round(q * 1_000_000)) for q in qs]],
     )
     bounds = head.crossJoin(F.broadcast(qdf)).select(
         "g",

@@ -17,7 +17,9 @@ that matter here:
   retries (no RNG, no partition-order dependence — unlike
   ``df.sample``, whose Bernoulli draw depends on partition split).
 - **One cheap aggregate**: the only driver-side cost is a count()
-  (column-pruned, no payload), paid once at fit time.
+  (column-pruned, no payload), paid once at fit time. It comes back
+  with the sample, and the fit sizes its route from it: a small sample
+  is read to the driver whole, a large one stays in Spark.
 - **Plan-friendly**: the filter is a scalar predicate on the scan — no
   shuffle, no sort, no per-partition top-N funneling into one task
   (the failure mode of ``orderBy(hash).limit(cap)`` at cluster scale).
@@ -49,19 +51,20 @@ def _threshold(cap: int, n: int) -> int:
     return max(1, int(_DENOM * cap / n))
 
 
-def hash_sample_cap(df: DataFrame, id_col: str, cap: int) -> DataFrame:
-    """Return ``df`` filtered to an expected ``cap`` rows, deterministically
-    by ``xxhash64(id_col)``. Returns ``df`` unchanged when it already has at
+def hash_sample_cap(df: DataFrame, id_col: str, cap: int) -> "tuple[DataFrame, int]":
+    """Return (``df`` filtered to an expected ``cap`` rows, deterministically
+    by ``xxhash64(id_col)``; the rows that sample is expected to hold).
+    ``df`` comes back unchanged, with its count, when it already has at
     most ``cap`` rows (or ``cap`` is falsy), so sub-cap corpora are
-    unaffected. The sample size is binomial around ``cap`` (exact-to-1e-6
-    fraction), which is what a fit stage wants — a size guarantee would
-    cost a global sort."""
-    if not cap:
-        return df
+    unaffected; otherwise the expected size is ``cap``. The sample size is
+    binomial around ``cap`` (exact-to-1e-6 fraction), which is what a fit
+    stage wants — a size guarantee would cost a global sort. ``df`` is
+    counted once, also when ``cap`` is falsy, so a fit stage can size its
+    route from the result without a second count."""
     n = df.count()  # one column-pruned aggregate, paid once at fit time
-    if n <= cap:
-        return df
+    if not cap or n <= cap:
+        return df, n
     thresh = _threshold(cap, n)
     return df.filter(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(_DENOM)) < F.lit(thresh)
-    )
+    ), cap

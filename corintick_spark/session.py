@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Confs that can be applied to an already-running session (dynamic).
 RUNTIME_CONFS: dict[str, str] = {
@@ -95,3 +96,15 @@ def get_spark(
     for k, v in {**static, **RUNTIME_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_relation(spark: SparkSession, schema: StructType, columns: list) -> DataFrame:
+    """A local relation of ``columns`` (one Arrow array or Python list per
+    field of ``schema``), built from an Arrow table and cast to ``schema``.
+    Reading it with ``collect()`` runs no Spark job and starts no Python
+    worker, unlike ``createDataFrame`` of a list of rows, whose plan is a
+    ``LogicalRDD`` over a Python RDD. pyarrow is imported here, not at
+    module load, to keep it off session setup."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns, names=schema.fieldNames()), schema)

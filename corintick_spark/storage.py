@@ -99,6 +99,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from corintick_spark.session import local_relation
+
 # (narrow, wide) type pairs Spark's parquet reader widens on read: a column
 # may change between them across appends, and the sidecar keeps the wide one.
 _READER_WIDENS = {
@@ -1207,8 +1209,8 @@ class TickStore:
         written = self._schema()
         if written is not None and self.uid_col in written.fieldNames():
             dtype = written[self.uid_col].dataType
-        tiny = self.spark.createDataFrame(
-            [(u,) for u in uids], StructType([StructField(self.uid_col, dtype)])
+        tiny = local_relation(
+            self.spark, StructType([StructField(self.uid_col, dtype)]), [list(uids)]
         )
         rows = tiny.select(
             F.pmod(F.xxhash64(F.col(self.uid_col)), F.lit(self.bucket_uids)).alias("b")

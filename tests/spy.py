@@ -6,9 +6,9 @@ creates (on Spark 4.1 classic that is
 ``pyspark.sql.DataFrame``, so patching the base class sees nothing). Only
 outermost calls are recorded: ``first()`` runs ``collect()`` inside, and is
 recorded once, as ``first``. ``read_path`` pins which path a TickStore
-read takes, the Spark scan or the driver-local pyarrow scan, and
+read takes, the Spark scan or the driver-local pyarrow scan,
 ``loop_route`` which route a graph loop takes, the distributed loop or the
-driver-local numpy one.
+driver-local numpy one, and ``fit_route`` the same for the k-means fits.
 """
 
 from __future__ import annotations
@@ -139,3 +139,28 @@ def both_routes(monkeypatch, loop: str, fn):
             out.append(fn())
         assert taken == ([loop] if route == "local" else []), (route, taken)
     return out
+
+
+@contextmanager
+def fit_route(monkeypatch, route: str):
+    """Run the k-means fits (``pq_fit``, ``kmeans_fit``) on one route:
+    ``"distributed"`` forces the Spark Lloyd loop (the local double bound
+    set below every sample, 0 included); ``"local"`` keeps the default
+    bound. Yields a list that gets ``"local"`` for each fit whose Lloyd
+    rounds ran in numpy on the driver."""
+    from corintick_spark.operators import pq
+
+    taken: list = []
+    real = pq._lloyd_local
+    with monkeypatch.context() as m:
+        if route == "distributed":
+            m.setattr(pq, "_LOCAL_FIT_DOUBLES", -1)
+
+        def spy(*a, **kw):
+            out = real(*a, **kw)
+            if out is not None:
+                taken.append("local")
+            return out
+
+        m.setattr(pq, "_lloyd_local", spy)
+        yield taken

@@ -126,3 +126,19 @@ def test_null_endpoint_takes_distributed_route(spark, monkeypatch):
     assert _run(spark, monkeypatch, [(0, 1), (1, 2)], [0, None]) == {
         0: 0, 1: 1, 2: 2, None: 0,
     }
+
+
+def test_distributed_search_leaves_only_its_result_checkpoint(spark, monkeypatch):
+    """Outside ckpt.scope, a distributed search releases its edge-list
+    checkpoint, its last frontier and an empty last level before it
+    returns, whether it stops at an empty level, at ``max_iter`` or before
+    any level: the only checkpoint it leaves alive is its result."""
+    edges, seeds = _edges(spark, [(0, 1), (1, 2), (2, 3)]), _seeds(spark, [0])
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    for max_iter in (30, 2, 0):
+        before = set(persisted().keySet())
+        with loop_route(monkeypatch, "distributed"):
+            got = bfs_hops(edges, seeds, max_iter=max_iter)
+        alive = set(persisted().keySet()) - before
+        assert alive == {got._jdf.queryExecution().analyzed().rdd().id()}, max_iter
+        assert len(got.collect()) == min(max_iter, 3) + 1

@@ -17,6 +17,7 @@ from corintick_spark.catalog import table
 from corintick_spark.operators.clustering import ivf_topk, kmeans_fit
 from corintick_spark.operators.pq import pq_encode, pq_fit, pq_topk
 from corintick_spark.operators.sampling import hash_sample_cap
+from tests.spy import fit_route
 
 
 def test_hash_sample_noop_under_cap(spark, sf_dir):
@@ -24,17 +25,19 @@ def test_hash_sample_noop_under_cap(spark, sf_dir):
     n = e.count()
     # at or above the corpus size the frame must pass through untouched
     # (same plan object, not merely same rows — no filter gets added)
-    assert hash_sample_cap(e, "vec_id", n) is e
-    assert hash_sample_cap(e, "vec_id", n + 1) is e
-    assert hash_sample_cap(e, "vec_id", 0) is e  # 0/None disables
+    for cap in (n, n + 1, 0):  # 0/None disables
+        frame, rows = hash_sample_cap(e, "vec_id", cap)
+        assert frame is e and rows == n
 
 
 def test_hash_sample_deterministic_and_sized(spark, sf_dir):
     e = table(spark, sf_dir, "embeddings")
     n = e.count()
     cap = n // 2
-    s1 = sorted(r[0] for r in hash_sample_cap(e, "vec_id", cap).select("vec_id").collect())
-    s2 = sorted(r[0] for r in hash_sample_cap(e, "vec_id", cap).select("vec_id").collect())
+    (f1, rows), (f2, _) = hash_sample_cap(e, "vec_id", cap), hash_sample_cap(e, "vec_id", cap)
+    assert rows == cap
+    s1 = sorted(r[0] for r in f1.select("vec_id").collect())
+    s2 = sorted(r[0] for r in f2.select("vec_id").collect())
     assert s1 == s2, "hash sample must be deterministic across runs"
     # binomial around cap: allow a wide but meaningful band
     assert 0.6 * cap <= len(s1) <= 1.4 * cap
@@ -85,12 +88,14 @@ def _pooled_recall(truth, got_rows):
     return hits / sum(len(v) for v in truth.values())
 
 
-def test_ivf_recall_with_active_cap(spark, sf_dir):
+def test_ivf_recall_with_active_cap(spark, sf_dir, monkeypatch):
     e = table(spark, sf_dir, "embeddings")
     probes = e.filter(F.col("vec_id") < 10)
     n = e.count()
-    # force the cap to bite: fit centroids on ~half the corpus
-    cents = kmeans_fit(e, k=16, iters=5, fit_sample_max=n // 2)
+    # force the cap to bite: fit centroids on ~half the corpus, on the
+    # distributed route so the Spark Lloyd loop keeps its recall coverage
+    with fit_route(monkeypatch, "distributed"):
+        cents = kmeans_fit(e, k=16, iters=5, fit_sample_max=n // 2)
     got = ivf_topk(probes, e, cents, k=5, nprobe=4).collect()
     # ivf_topk scores exact cosine inside probed cells; the sampled fit only
     # moves CELL BOUNDARIES, so recall stays well above similarity_ivf's 0.4
@@ -104,11 +109,12 @@ def test_ivf_recall_with_active_cap(spark, sf_dir):
     assert _pooled_recall(truth, got) >= 0.4
 
 
-def test_pq_recall_with_active_cap(spark, sf_dir):
+def test_pq_recall_with_active_cap(spark, sf_dir, monkeypatch):
     e = table(spark, sf_dir, "embeddings")
     probes = e.filter(F.col("vec_id") < 20)
     n = e.count()
-    books = pq_fit(e, m=8, k=16, iters=3, fit_sample_max=n // 2)
+    with fit_route(monkeypatch, "distributed"):
+        books = pq_fit(e, m=8, k=16, iters=3, fit_sample_max=n // 2)
     codes = pq_encode(e, books)
     got = pq_topk(probes, codes, books, k=5).collect()
     truth = _exact_l2_top5(e, probes)

@@ -20,6 +20,7 @@ import pytest
 
 from corintick_spark.operators.graph import triangles
 from corintick_spark.operators.pq import pq_encode, pq_fit, pq_topk
+from tests.spy import fit_route
 
 
 def test_triangles_known_graph(spark):
@@ -73,8 +74,12 @@ def test_triangles_numpy_differential(spark):
 
 @pytest.fixture(scope="module")
 def pq_stack(spark, sf_dir):
+    """Codebooks fit on the distributed route, so the Spark Lloyd loop
+    keeps its recall coverage (tests/test_fit_routes.py pins that the
+    driver-local route finds the same codebooks)."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = pq_fit(e, m=8, k=16, iters=3)
+    with pytest.MonkeyPatch.context() as mp, fit_route(mp, "distributed"):
+        books = pq_fit(e, m=8, k=16, iters=3)
     codes = pq_encode(e, books)
     return e, books, codes
 
