@@ -118,11 +118,13 @@ def _sized_build(
 ) -> "tuple[DataFrame, int | None]":
     """The measured broadcast-or-sized-shuffle choice of a join's build side.
 
-    A localCheckpointed frame INHERITS the originating plan's size estimate
-    (for the text tier: the compressed parquet bytes of the documents scan),
-    which undercounts exploded shingle arrays and banded rows by orders of
-    magnitude, so Catalyst cannot be trusted with the broadcast decision:
-    at sf30 it broadcast the shingle-bearing verification side off that
+    No plan estimate of these sides can be trusted with the broadcast
+    decision. A checkpoint with an array column keeps its originating
+    plan's estimate (for the text tier: the compressed parquet bytes of the
+    documents scan), and a row-width estimate, what ``ckpt.materialize``
+    gives other checkpoints, counts one element per array; both undercount
+    exploded shingle arrays and banded rows by orders of magnitude. At
+    sf30 Catalyst broadcast the shingle-bearing verification side off that
     estimate and the driver collect blew spark.driver.maxResultSize (1.2
     GiB of task results). Callers pass ``nbytes`` measured by the
     checkpoint job that materialized the side. At or under the threshold
@@ -217,8 +219,8 @@ def _minhash_sigs(sig: DataFrame) -> "tuple[DataFrame, int]":
     """Checkpoint an (id, shingles, sig) frame and measure its bytes in
     the same job: count + total shingle elements (~24 B each), the size
     every build-side choice of :func:`_minhash_pairs` reads."""
-    sig, st = materialize(sig, n=F.count(F.lit(1)), el=F.sum(F.size("shingles")))
-    return sig, (st["el"] or 0) * 24 + (st["n"] or 0) * 16
+    sig, st = materialize(sig, el=F.sum(F.size("shingles")))
+    return sig, (st["el"] or 0) * 24 + st["rows"] * 16
 
 
 def _minhash_pairs(
@@ -660,10 +662,9 @@ def hamming_join(
 
     Same pigeonhole banding as the self-join (d+1 chunks; a pair within
     distance d agrees on >= 1 chunk) over the bipartite form of the same
-    band join: the new side is typically a fresh mapInPandas decode
-    whose checkpointed frame inherits origin-plan size estimates
-    (SCALING.md), so the broadcast decision uses a MEASURED
-    count over the checkpoint — small batches broadcast their banded
+    band join: the new side is typically a fresh mapInPandas decode,
+    banded into several rows per signature, so the broadcast decision
+    uses a MEASURED count over the checkpoint — small batches broadcast their banded
     rows against the corpus scan (zero corpus shuffle), large ones pin
     a sized shuffle_hash. Returns (new_id, corpus_id, hamming)."""
     return _hamming_band_join(
@@ -679,8 +680,7 @@ def _words(sig_col: "str | list[str]") -> "list[str]":
 def _hamming_sigs(sigs: DataFrame, sig_col) -> "tuple[DataFrame, int]":
     """Checkpoint a signature frame and count its non-null signatures in
     the same job. The count feeds BOTH the scheme escalation and the
-    exchange sizing of :func:`_hamming_band_join` (inherited plan
-    estimates are untrustworthy on checkpointed frames, SCALING.md)."""
+    exchange sizing of :func:`_hamming_band_join`."""
     sigs, st = materialize(sigs, n=F.count(F.when(_sig_notnull(_words(sig_col)), 1)))
     return sigs, st["n"]
 

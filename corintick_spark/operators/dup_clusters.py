@@ -32,22 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import edge_stats, materialize, runs_locally
+from corintick_spark.operators.ckpt import materialize, runs_locally
 
 
-def _large_star(sym: DataFrame, bcast: bool) -> DataFrame:
+def _large_star(sym: DataFrame) -> DataFrame:
     """One large-star round over a symmetric directed edge list (u, v):
     connect every neighbor larger than the center to the neighborhood
-    minimum m = min(Γ(u) ∪ {u}). Output edges are (larger, smaller).
-
-    ``bcast``: broadcast the per-center minimum table into the edge join —
-    m has at most |nodes| rows, so when the node set is small relative to
-    the edge list (the common dedup-graph shape) this removes the edge-side
-    shuffle of the round's heaviest join."""
+    minimum m = min(Γ(u) ∪ {u}). Output edges are (larger, smaller)."""
     m = sym.groupBy("u").agg(F.min("v").alias("_mn"))
     m = m.select("u", F.least(F.col("u"), F.col("_mn")).alias("m"))
-    if bcast:
-        m = F.broadcast(m)
     return (
         sym.filter(F.col("v") > F.col("u"))
         .join(m, "u")
@@ -56,13 +49,12 @@ def _large_star(sym: DataFrame, bcast: bool) -> DataFrame:
     )
 
 
-def _small_star(directed: DataFrame, bcast: bool) -> DataFrame:
+def _small_star(directed: DataFrame) -> DataFrame:
     """One small-star round over edges already directed (larger, smaller):
     for each center u, connect u and all its smaller neighbors to the
     minimum of that set. Output stays directed (larger, smaller)."""
     m = directed.groupBy("u").agg(F.min("v").alias("m"))
-    mj = F.broadcast(m) if bcast else m
-    nbrs = directed.join(mj, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
+    nbrs = directed.join(m, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
     centers = m.select(F.col("u"), F.col("m").alias("v"))
     return nbrs.unionByName(centers).filter(F.col("u") != F.col("v")).distinct()
 
@@ -72,52 +64,35 @@ def connected_components(
     a: str = "a_id",
     b: str = "b_id",
     max_iter: int = 25,
-    broadcast_nodes_max: int = 1_000_000,
 ) -> DataFrame:
     """Return (node, comp) where comp = min node id of the component.
 
-    edges: undirected pair list (each edge once, any orientation). Node ids
-    must be totally ordered (numeric or string). Converges in O(log n)
+    edges: undirected pair list (each edge once, any orientation); self
+    loops and edges with a NULL endpoint are dropped. Node ids must be
+    totally ordered (numeric or string). Converges in O(log n)
     alternating-star rounds; ``max_iter`` is a fixpoint guard far above
     that, not a budget: exhausting it without reaching the fixpoint raises
     RuntimeError. The local route (module docstring) runs to its fixpoint
     with no rounds for ``max_iter`` to cap.
-
-    ``broadcast_nodes_max``: when the node count is at or below this, each
-    star round's per-center minimum table (≤ |nodes| rows) is broadcast
-    into its edge join instead of shuffled — AQE cannot infer that from a
-    localCheckpointed frame, whose size statistics are the ones its origin
-    plan estimated (they grow with every round), not its own. Above the
-    threshold the shuffle path is the correct plan. The node count costs one aggregate
-    over the already-checkpointed edge list, paid once before the loop
-    (a separate action: ``observe`` rejects DISTINCT aggregates).
     """
     raw = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).filter(
         F.col("u") != F.col("v")
     )
 
     # canonical directed (larger, smaller) start state; the checkpoint job
-    # counts the edges for the route and the first round's sizing
+    # counts the edges for the route and the first round's sizing. No node
+    # table is built: the fixpoint star forest contains exactly the
+    # original node set (every non-root as a child `u`, every root as a
+    # `v`), so labels are read straight off the final tiny forest.
     e, st = materialize(
         raw.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct(),
-        **edge_stats("u", "v"),
+        ).distinct()
     )
-    if runs_locally(e, st, "u", "v"):
+    if runs_locally(e, st["rows"], "u", "v"):
         from corintick_spark.operators import local_graph
 
         return local_graph.components(e)
-    # ONE aggregate over the materialized edge list feeds the broadcast
-    # decision (exact node count). No node table is built: the fixpoint
-    # star forest contains exactly the original node set (every non-root
-    # as a child `u`, every root as a `v`), so labels are read straight
-    # off the final tiny forest.
-    head = e.select(F.explode(F.array("u", "v")).alias("n")).agg(
-        F.countDistinct("n").alias("nn")
-    ).first()
-    n_nodes, n_edges = int(head["nn"]), st["n"]
-    bcast = n_nodes <= broadcast_nodes_max
 
     def _nparts(n_rows: int) -> int:
         # tail rounds shrink the edge list by orders of magnitude; sizing
@@ -133,7 +108,7 @@ def connected_components(
         ))
 
     prev_stat = None
-    n_in = n_edges
+    n_in = st["rows"]
     for _ in range(max_iter):
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         # materialize AND truncate lineage each round; the checkpoint job
@@ -142,12 +117,11 @@ def connected_components(
         # so xor has no self-cancellation pairs) and then the previous
         # round's blocks are freed
         e, st = materialize(
-            _small_star(_large_star(sym, bcast), bcast).coalesce(_nparts(n_in)),
+            _small_star(_large_star(sym)).coalesce(_nparts(n_in)),
             e,
-            n=F.count(F.lit(1)),
             h=F.expr("bit_xor(xxhash64(u, v))"),
         )
-        stat = (st["n"], st["h"])
+        stat = (st["rows"], st["h"])
         n_in = int(stat[0])
         if stat == prev_stat:
             break

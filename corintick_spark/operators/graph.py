@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from corintick_spark.operators.ckpt import (
-    edge_stats,
     materialize,
     release_local_checkpoint,
     runs_locally,
@@ -89,18 +88,19 @@ def bfs_hops(
     dst: str = "dst",
     node: str = "node",
     max_iter: int = 30,
-    broadcast_frontier_max: int = 1_000_000,
 ) -> DataFrame:
     """Multi-source shortest-hop BFS: (node, hops) for every node reachable
     from `seeds` following edge direction, hops = length of the SHORTEST
-    path (level-synchronous, so first discovery IS the minimum).
+    path (level-synchronous, so first discovery IS the minimum). Edges with
+    a NULL endpoint are dropped; a NULL seed is reported at hop 0 and
+    reaches nothing.
 
     Scale shape: each level is frontier ⋈ edges (equi-join on src) → new
-    nodes anti-joined against the visited set. The frontier is broadcast
-    while it stays under `broadcast_frontier_max` rows (the common case —
-    frontiers are ≪ |V|), so the per-level cost is one pass over the edge
-    partitions with NO edge shuffle; above the threshold it degrades to a
-    plain shuffle join. The visited set grows monotonically and is
+    nodes anti-joined against the visited set. Every level's frontier is a
+    checkpoint that carries its measured size, so AQE broadcasts it while
+    it is small (the common case — frontiers are ≪ |V|: one pass over the
+    edge partitions with NO edge shuffle) and shuffles it when it is not.
+    The visited set grows monotonically and is
     localCheckpoint-ed per level to cut lineage (same segmenting discipline
     as pagerank/connected_components; at 100 TB the checkpoint would be a
     durable table swap). The frontier-size scalar that drives loop
@@ -109,11 +109,11 @@ def bfs_hops(
     ``max_iter`` hops are absent from the result, not an error.
 
     Local route: the edge list is materialized once, and its checkpoint job
-    counts it. At most ``ckpt._LOCAL_EDGES`` (2^20) edges with no NULL
-    endpoint are read with one ``toArrow()`` and searched in numpy on the
-    driver (operators/local_graph.py), with the same ``max_iter`` depth
-    limit, and the result is a local relation; only larger edge lists run
-    the per-level loop above.
+    counts it. At most ``ckpt._LOCAL_EDGES`` (2^20) edges are read with one
+    ``toArrow()`` and searched in numpy on the driver
+    (operators/local_graph.py), with the same ``max_iter`` depth limit, and
+    the result is a local relation; only larger edge lists run the
+    per-level loop above.
     """
     # materialize the edge list ONCE before the loop: every level joins
     # against e, and without the checkpoint each level re-executed the
@@ -124,32 +124,26 @@ def bfs_hops(
         edges.select(
             F.col(src).cast("long").alias("src"),
             F.col(dst).cast("long").alias("dst"),
-        ).distinct(),
-        **edge_stats("src", "dst"),
+        )
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
     )
     seeds = seeds.select(F.col(node).cast("long").alias(node))
-    if runs_locally(e, st, "src", "dst"):
+    if runs_locally(e, st["rows"], "src", "dst"):
         from corintick_spark.operators import local_graph
 
         return local_graph.bfs(e, seeds, node, max_iter)
-    count = {"n": F.count(F.lit(1))}
-    frontier, st = materialize(
-        seeds.distinct().select(node, F.lit(0).alias("hops")), **count
-    )
+    frontier, st = materialize(seeds.distinct().select(node, F.lit(0).alias("hops")))
     visited, nxt = frontier, None
     for level in range(1, max_iter + 1):
-        f = frontier.select(F.col(node).alias("src"))
-        if st["n"] <= broadcast_frontier_max:
-            f = F.broadcast(f)
         nxt, st = materialize(
-            e.join(f, "src")
+            e.join(frontier.select(F.col(node).alias("src")), "src")
             .select(F.col("dst").alias(node))
             .distinct()
             .join(visited.select(node), node, "left_anti")
-            .select(node, F.lit(level).alias("hops")),
-            **count,
+            .select(node, F.lit(level).alias("hops"))
         )
-        if st["n"] == 0:
+        if st["rows"] == 0:
             break
         # the old visited set and the previous frontier (at level 1 the
         # same frame) are done once the new visited set materialized

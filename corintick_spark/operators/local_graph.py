@@ -54,8 +54,8 @@ def pagerank(
 ) -> DataFrame:
     """``operators.pagerank.pagerank`` over its (src, dst, w) edge list, with
     the distributed route's segment schedule: ``checkpoint_every`` rounds a
-    segment, at most 4 on graphs with a dangling node, and ``tol`` read only
-    at segment boundaries, so both routes run the same number of rounds."""
+    segment and ``tol`` read only at segment boundaries, so both routes run
+    the same number of rounds."""
     src, dst, w = _columns(e, "src", "dst", "w")
     nodes, (s, d) = _factorize(src, dst)
     n = len(nodes)
@@ -63,17 +63,14 @@ def pagerank(
     frac = w / np.bincount(s, weights=w, minlength=n)[s]
     dangling = np.ones(n, dtype=bool)
     dangling[s] = False
-    has_dangling = bool(dangling.any())
     k = max(1, checkpoint_every)
-    if has_dangling:
-        k = min(k, 4)
     rank = np.full(n, 1.0 / max(n, 1))
     done = 0
     while n and done < iterations:
         seg = min(k, iterations - done)
         for _ in range(seg):
             prev = rank
-            share = prev[dangling].sum() / n if has_dangling else 0.0
+            share = prev[dangling].sum() / n
             total = np.bincount(d, weights=prev[s] * frac, minlength=n)
             rank = (1.0 - damping) / n + damping * (total + share)
         done += seg

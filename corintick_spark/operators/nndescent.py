@@ -124,8 +124,8 @@ def knn_graph(
     """
     bk = build_k or k
     vecs = spread_input(_prep(corpus, id_col, vec_col))
-    vecs, st = materialize(vecs, n=F.count(F.lit(1)))
-    n = st["n"]
+    vecs, st = materialize(vecs)
+    n = st["rows"]
     if n == 0:
         return vecs.sparkSession.createDataFrame(
             [], "id long, nbr long, score double, rank int"
@@ -147,9 +147,9 @@ def knn_graph(
         )
         init = pairs if init is None else init.unionByName(pairs)
     init = init.distinct()
-    graph = _top_k(
-        _score_pairs(init, vecs).filter(F.col("score").isNotNull()), bk
-    ).localCheckpoint()
+    graph, _ = materialize(
+        _top_k(_score_pairs(init, vecs).filter(F.col("score").isNotNull()), bk)
+    )
 
     for it in range(iters):
         fwd = graph.select("id", "nbr")
@@ -239,10 +239,9 @@ def graph_search(
     persisted vectors) — detected by exact column set, skips the
     projection + norm recompute.
     """
-    if set(corpus.columns) == {"id", "vec", "n2"}:
-        vecs = corpus.localCheckpoint()
-    else:
-        vecs = spread_input(_prep(corpus, id_col, vec_col)).localCheckpoint()
+    if set(corpus.columns) != {"id", "vec", "n2"}:
+        corpus = spread_input(_prep(corpus, id_col, vec_col))
+    vecs, _ = materialize(corpus)
     adj = graph.select("id", "nbr")
 
     entry = (
@@ -272,13 +271,14 @@ def graph_search(
     wb = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
     first = q.select("q_id").crossJoin(F.broadcast(entry))
     seeded = scored(first)
-    best = (
+    best, _ = materialize(
         seeded.withColumn("_r", F.row_number().over(wb))
         .filter(F.col("_r") <= max(entries, beam))
         .drop("_r")
-        .localCheckpoint()
     )
-    visited = first.unionByName(best.select("q_id", "c_id")).distinct().localCheckpoint()
+    visited, _ = materialize(
+        first.unionByName(best.select("q_id", "c_id")).distinct()
+    )
 
     for _ in range(hops):
         frontier = (

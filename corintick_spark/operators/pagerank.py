@@ -21,19 +21,22 @@ Scale discipline (the same rules as the connected-components driver loop):
   reused every iteration — only the small (node, rank) table moves through
   a shuffle per round;
 - INTRA-SEGMENT steps reference the previous rank frame exactly ONCE:
-  the join that re-attaches per-destination contributions to
-  the node universe targets the STATIC cached node table, not the previous
-  lazy rank frame, so the logical plan grows LINEARLY with segment length
-  instead of ~2^K — which is what lets a full default run execute as one
-  Spark job (``checkpoint_every=8``) instead of paying a materialization
-  barrier every few steps;
+  contribution-less nodes are kept alive by rows of the STATIC cached node
+  table, and the dangling mass rides the rank frame itself (below), so the
+  logical plan grows LINEARLY with segment length instead of ~2^K — which
+  is what lets a full default run execute as one Spark job
+  (``checkpoint_every=8``) instead of paying a materialization barrier
+  every few steps;
 - each segment's rank frame is eagerly ``localCheckpoint``-ed and the
   previous one released, truncating the logical plan;
-- dangling mass (rank on nodes with no out-edges) stays IN-PLAN: it is
-  summed in a sentinel group of the SAME per-round exchange that carries
-  the contributions (one shuffle carries both) and broadcast
-  cross-joined into the update — no ``.first()`` driver round-trip inside
-  the update job;
+- dangling mass (rank on nodes with no out-edges) stays IN-PLAN and in
+  the SAME per-round join and exchange as the contributions: the rank
+  frame carries it as a sentinel row (node NULL), a pending offset that
+  every node's rank still has to add, and sentinel edges in the
+  normalized edge list move it (edges with a NULL endpoint are dropped up
+  front, so NULL is no node). Each segment's last step adds the offset in,
+  so every checkpoint holds true ranks — no ``.first()`` driver round-trip
+  inside the update job;
 - contribution-less nodes are kept alive by zero-rows UNIONED into the
   per-round aggregate, not by re-joining the aggregate against
   the node universe — the old shape paid a second broadcast build plus a
@@ -59,7 +62,7 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from corintick_spark.operators.ckpt import (
-    edge_stats,
+    broadcastable,
     materialize,
     release_local_checkpoint,
     runs_locally,
@@ -75,7 +78,6 @@ def pagerank(
     iterations: int = 10,
     tol: float = 0.0,
     checkpoint_every: int = 8,
-    broadcast_nodes_max: int = 1_000_000,
     merge_parallel: bool = True,
 ) -> DataFrame:
     """Return (node, rank) after at most ``iterations`` rounds of weighted
@@ -85,17 +87,16 @@ def pagerank(
     converged or not.
 
     edges: directed (src, dst[, weight]) list; parallel edges are merged by
-    summing weights. Unweighted edges get weight 1. Ranks sum to 1 (dangling
-    mass redistributed uniformly each round).
+    summing weights, and edges with a NULL endpoint are dropped. Unweighted
+    edges get weight 1. Ranks sum to 1 (dangling mass redistributed
+    uniformly each round).
 
     ``checkpoint_every``: iterations per materialization segment. K update
     rounds run as ONE Spark job; intra-segment steps reference their
     predecessor exactly once (contributions join against
     the static node table), so the plan grows linearly in K and the old
-    ~2^K blowup that forced K<=4 is gone. The convergence check happens at
-    segment boundaries. On graphs WITH dangling nodes each step carries a
-    second reference (the 1-row dangling-mass aggregate); its subtree
-    dedupes via exchange reuse, but keep K modest (<=8) there.
+    ~2^K blowup that forced K<=4 is gone, on graphs with dangling nodes
+    too. The convergence check happens at segment boundaries.
 
     ``merge_parallel``: the parallel-edge merge
     (``groupBy(src, dst).sum(w)``) is one full shuffle of the edge list
@@ -103,17 +104,6 @@ def pagerank(
     guarantees one row per (src, dst) pass ``False`` to skip it; the rows
     are identical by the caller's own construction. Leave ``True`` for raw
     edge lists.
-
-    ``broadcast_nodes_max``: when the node count is at or below this, the
-    rank table is BROADCAST into both per-iteration joins instead of
-    shuffled — AQE cannot make that call itself because a localCheckpointed
-    frame keeps the size statistics of the plan it came from, and a loop
-    that joins each round to the last one's estimate squares it every
-    round, so without the hint every round pays a rank-side exchange. Each iteration then costs ONE shuffle (the
-    per-destination contribution aggregate) plus broadcasts of an
-    O(n_nodes) frame. 1M nodes ≈ tens of MB — inside the configured 64 MB
-    broadcast budget; above the threshold the shuffle path is the correct
-    plan (rank table genuinely cluster-sized).
     """
     w = F.col(weight) if weight else F.lit(1.0)
     # materialized once: the node table and norm both derive from e —
@@ -122,11 +112,13 @@ def pagerank(
     # same job counts the edges for the route and the partition count.
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
-    ).filter(F.col("w") > 0)
+    ).filter(
+        (F.col("w") > 0) & F.col("src").isNotNull() & F.col("dst").isNotNull()
+    )
     if merge_parallel:
         e = e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-    e, st = materialize(e, **edge_stats("src", "dst"))
-    if runs_locally(e, st, "src", "dst"):
+    e, st = materialize(e)
+    if runs_locally(e, st["rows"], "src", "dst"):
         from corintick_spark.operators import local_graph
 
         return local_graph.pagerank(e, damping, iterations, tol, checkpoint_every)
@@ -136,7 +128,7 @@ def pagerank(
     # times, so per-task scheduling overhead on an over-partitioned edge
     # list multiplies across iterations (measured 2x on a 1.2M-edge graph
     # at 32 partitions vs 4-8).
-    n_edges = st["n"]
+    n_edges = st["rows"]
     nparts = max(1, min(
         -(-n_edges // 250_000),
         16 * e.sparkSession.sparkContext.defaultParallelism,
@@ -189,116 +181,111 @@ def pagerank(
         nodes.unpersist()
         return nodes.select("node", F.lit(0.0).alias("rank"))
     has_dangling = bool(head["d"])
-    bcast = n_nodes <= broadcast_nodes_max
-    # norm's layout: on the BROADCAST path the rank
-    # table is shipped to every task each round, so norm's partitioning is
-    # irrelevant to the join — a coalesce to the same target count keeps
-    # the few-large-tasks shape the loop wants WITHOUT paying a full
-    # payload shuffle up front (measured: norm materialization 2.4s ->
-    # ~0.6s at 1.17M edges). The shuffle path keeps the hash repartition
-    # on src: there the per-round rank exchange co-locates against it.
+    ranks, _ = materialize(nodes.select("node", F.lit(1.0 / n_nodes).alias("rank")))
+    # Every rank frame holds one row per node, but inside a segment it is a
+    # lazy aggregate whose estimate is the product of a join's inputs, so
+    # Catalyst plans a shuffle of norm each step (AQE converts the join to
+    # a broadcast only after both sides ran; measured +27% on graph_pagerank
+    # at sf0.1). The initial rank checkpoint's size is measured: broadcast
+    # the rank frames when it fits the session's broadcast threshold.
+    bcast = broadcastable(ranks)
+    # norm's layout: when the rank table is broadcast, norm's partitioning
+    # is irrelevant to the join, and a coalesce to the target count keeps
+    # the few-large-tasks shape the loop wants WITHOUT a full payload
+    # shuffle up front (measured: norm materialization 2.4s -> ~0.6s at
+    # 1.17M edges). Otherwise a hash repartition on src lets the per-round
+    # rank exchange co-locate against it.
     out_w = nodes.filter(~F.col("is_dangling")).select(
         F.col("node").alias("src"), "out_w"
     )
-    normed = e.join(F.broadcast(out_w) if bcast else out_w, "src").select(
+    norm = e.join(out_w, "src").select(
         "src", "dst", (F.col("w") / F.col("out_w")).alias("frac")
     )
+    if has_dangling:
+        # The dangling mass rides the rank frame as a pending uniform
+        # offset: a sentinel row (node NULL, rank s) means "add s to every
+        # node's rank". Sentinel edges carry it through the SAME join and
+        # exchange as the contributions: each dangling node sends its whole
+        # rank to the sentinel (frac 1), the sentinel sends every node v
+        # s * in_frac(v) (the sum of v's in-edge fractions) and itself
+        # s * (dangling node count). The sentinel's group then sums the
+        # true dangling mass D, and the update sets s' = d * D / n. When
+        # the rank table is not broadcast, the sentinel's edges share one
+        # join key: that partition's skew is left to AQE's skew-join split.
+        null = F.lit(None).cast(dict(norm.dtypes)["dst"])
+        dangling = nodes.filter(F.col("is_dangling"))
+        to_sentinel = dangling.select(
+            F.col("node").alias("src"), null.alias("dst"), F.lit(1.0).alias("frac")
+        )
+        in_frac = norm.groupBy("dst").agg(F.sum("frac").alias("frac"))
+        self_frac = dangling.agg(
+            F.count(F.lit(1)).cast("double").alias("frac")
+        ).select(null.alias("dst"), "frac")
+        from_sentinel = in_frac.unionByName(self_frac).select(
+            null.alias("src"), "dst", "frac"
+        )
+        norm = norm.unionByName(to_sentinel).unionByName(from_sentinel)
     norm = (
-        normed.coalesce(nparts) if bcast else normed.repartition(nparts, "src")
+        norm.coalesce(nparts) if bcast else norm.repartition(nparts, "src")
     ).cache()
-    # static node universe for the per-step left join — joining contribs
-    # against THIS (cached) frame instead of the previous rank frame is
-    # what keeps intermediate steps single-reference (module docstring)
-    node_univ = nodes.select("node", "is_dangling")
+    zero_rows = nodes.select(F.col("node").alias("dst"), F.lit(0.0).alias("_part"))
+    # the sentinel's NULL key has to meet its edges; without a sentinel a
+    # plain equi-join keeps norm's src partitioning usable by the join
+    on = (
+        F.col("src").eqNullSafe(F.col("_src")) if has_dangling
+        else F.col("src") == F.col("_src")
+    )
 
-    # node-id type for the dangling branch's NULL dst literal
-    _dst_type = dict(norm.dtypes)["dst"]
-
-    def step(prev: DataFrame, with_diff: bool) -> DataFrame:
-        # One union row (dst=node, part=0.0) per node folded into the
-        # contribution aggregate makes every node's group exist, so no
+    def step(prev: DataFrame) -> DataFrame:
+        # Each step references the previous rank frame exactly ONCE (the
+        # sentinel rides it), so a segment's plan grows linearly in its
+        # length. One union row (dst=node, part=0.0) per node folded into
+        # the contribution aggregate makes every node's group exist, so no
         # join re-attaches contribution-less nodes — per round: ONE rank
-        # broadcast + ONE exchange, nothing else. Exact: 0.0 is the
-        # additive identity for the all-positive IEEE partial sums. On
-        # dangling graphs the dangling-mass total rides the SAME exchange
-        # as a sentinel group (_dang=true, dst=NULL) instead of a separate
-        # aggregate job — one shuffle carries both.
-        rank_src = prev.select(F.col("node").alias("src"), "rank")
-        contrib_rows = norm.join(
-            F.broadcast(rank_src) if bcast else rank_src, "src"
-        ).select(
-            F.lit(False).alias("_dang"),
-            F.col("dst"),
-            (F.col("rank") * F.col("frac")).alias("_part"),
-        )
-        zero_rows = node_univ.select(
-            F.lit(False).alias("_dang"),
-            F.col("node").alias("dst"),
-            F.lit(0.0).alias("_part"),
-        )
-        unioned = contrib_rows.unionByName(zero_rows)
-        if has_dangling:
-            # rank mass sitting on dangling nodes, summed in the sentinel
-            # group of the same exchange. This is the second prev
-            # reference on dangling graphs (docstring: keep K modest
-            # there).
-            dang_rows = prev.join(
-                F.broadcast(node_univ.filter(F.col("is_dangling"))),
-                "node",
-                "left_semi",
-            ).select(
-                F.lit(True).alias("_dang"),
-                F.lit(None).cast(_dst_type).alias("dst"),
-                F.col("rank").alias("_part"),
-            )
-            unioned = unioned.unionByName(dang_rows)
-        agg = unioned.groupBy("_dang", "dst").agg(
-            F.sum("_part").alias("_sum")
-        )
-        if has_dangling:
-            dang_share = agg.filter(F.col("_dang")).select(
-                (F.coalesce(F.sum("_sum"), F.lit(0.0)) / n_nodes).alias(
-                    "_dang_share"
-                )
-            )
-            upd = agg.filter(~F.col("_dang")).crossJoin(
-                F.broadcast(dang_share)
-            )
-            dshare = F.col("_dang_share")
-        else:
-            upd = agg
-            dshare = F.lit(0.0)
-        new_rank = F.lit((1.0 - damping) / n_nodes) + F.lit(damping) * (
-            F.col("_sum") + dshare
-        )
-        out = upd.select(F.col("dst").alias("node"), new_rank.alias("rank"))
-        if not with_diff:
-            return out
-        prev_r = prev.select("node", F.col("rank").alias("_prev"))
+        # join + ONE exchange, nothing else. Exact: 0.0 is the additive
+        # identity for the all-positive IEEE partial sums.
+        rank_src = prev.select(F.col("node").alias("_src"), "rank")
         if bcast:
-            prev_r = F.broadcast(prev_r)
-        return out.join(prev_r, "node").select(
-            "node",
-            "rank",
-            F.abs(F.col("rank") - F.col("_prev")).alias("_diff"),
+            rank_src = F.broadcast(rank_src)
+        agg = (
+            norm.join(rank_src, on)
+            .select("dst", (F.col("rank") * F.col("frac")).alias("_part"))
+            .unionByName(zero_rows)
+            .groupBy("dst")
+            .agg(F.sum("_part").alias("_sum"))
         )
+        share = F.lit(damping / n_nodes) * F.col("_sum")
+        rank = F.lit((1.0 - damping) / n_nodes) + F.lit(damping) * F.col("_sum")
+        new_rank = F.when(F.col("dst").isNull(), share).otherwise(rank)
+        return agg.select(F.col("dst").alias("node"), new_rank.alias("rank"))
+
+    def settled(frame: DataFrame) -> DataFrame:
+        # the node ranks of ``frame`` with its pending offset added
+        if not has_dangling:
+            return frame
+        offset = frame.filter(F.col("node").isNull()).agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_s")
+        )
+        return frame.filter(F.col("node").isNotNull()).crossJoin(
+            F.broadcast(offset)
+        ).select("node", (F.col("rank") + F.col("_s")).alias("rank"))
 
     k = max(1, checkpoint_every)
-    if has_dangling:
-        # two prev references per step (contribs + dangling aggregate) →
-        # the plan still grows ~2^K per segment on this path; cap it
-        k = min(k, 4)
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
     done = 0
     while done < iterations:
         seg = min(k, iterations - done)
-        plan = ranks
-        for i in range(seg):
-            plan = step(plan, with_diff=(i == seg - 1))
-        # one job per segment, which also sums the convergence read (_diff
-        # is the last intra-segment iteration's L1 delta contribution per
-        # node); the previous segment's blocks are freed
+        prev = ranks
+        for _ in range(seg - 1):
+            prev = step(prev)
+        # one job per segment, which settles the offset (every checkpoint
+        # holds true ranks) and sums the convergence read: the last step's
+        # L1 delta, the only one that read consumes
+        prev_r = settled(prev).select("node", F.col("rank").alias("_prev"))
+        if bcast:
+            prev_r = F.broadcast(prev_r)
+        plan = settled(step(prev)).join(prev_r, "node").select(
+            "node", "rank", F.abs(F.col("rank") - F.col("_prev")).alias("_diff")
+        )
         ranks, st = materialize(plan, ranks, l1=F.sum("_diff"))
         done += seg
         if tol > 0.0 and st["l1"] < tol:

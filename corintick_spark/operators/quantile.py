@@ -159,8 +159,8 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
     )
     # pairs whose candidate range is still wider than one value
     active = F.count(F.when(F.col("lo") < F.col("hi"), 1))
-    bounds, st = materialize(bounds, n=F.count(F.lit(1)), active=active)
-    n_pairs = st["n"]
+    bounds, st = materialize(bounds, active=active)
+    n_pairs = st["rows"]
     if n_pairs > GROUPS_MAX:
         raise ValueError(
             f"{n_pairs // len(qs)} groups x {len(qs)} quantiles exceeds "

@@ -78,13 +78,16 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_connected_components_rounds_read_stats_off_checkpoints",
         "test_pagerank_tol_read_rides_the_checkpoint",
         # the driver-local graph loops: id types, NULL endpoints, the one
-        # edge-list checkpoint, and the dangling tol test, whose distributed
-        # form stays slow (its dangling path is an open CHANGES.md FOUND)
+        # edge-list checkpoint, and the dangling tol test on both routes
         "test_connected_components_string_long_and_null_ids",
         "test_connected_components_local_route_runs_one_checkpoint",
         "test_pagerank_string_long_and_null_ids",
         "test_pagerank_local_route_runs_one_checkpoint",
         "test_pagerank_tol_early_exit_matches_fixpoint_local",
+        "test_pagerank_tol_early_exit_matches_fixpoint",
+        # with sized checkpoints AQE picks the loops' joins: shuffled and
+        # broadcast runs agree
+        "test_distributed_loops_shuffle_path_matches_broadcast_path",
         "test_minhash_pairs_runs_no_action",
         "test_hamming_band_join_runs_no_action",
         # the TickStore battery: its read path and schema sidecar changed
@@ -139,6 +142,9 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_materialize_empty_frame_counts_zero_sums_null",
         "test_materialize_releases_only_after_materializing",
         "test_materialize_shares_one_listener",
+        "test_materialize_sizes_the_checkpoint_by_its_rows",
+        "test_pagerank_checkpoints_stay_sized_over_dangling_rounds",
+        "test_nndescent_round_checkpoints_stay_sized",
         "test_scope_releases_rdds_persisted_inside",
         "test_scope_keeps_cache_persisted_before",
         "test_nested_scopes_release_only_their_own",

@@ -101,6 +101,20 @@ def read_path(monkeypatch, path: str):
         yield opened
 
 
+@contextmanager
+def no_broadcast(spark):
+    """Turn broadcast joins off (``spark.sql.autoBroadcastJoinThreshold``
+    -1) while the context is open, so every join Catalyst or AQE plans
+    shuffles; the session's value is restored on exit."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 ROUTES = ("local", "distributed")
 _LOCAL_LOOPS = ("pagerank", "bfs", "components")
 

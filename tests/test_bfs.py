@@ -8,7 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from corintick_spark.operators.graph import bfs_hops
-from tests.spy import ACTIONS, both_routes, driver_actions, loop_route
+from tests.spy import ACTIONS, both_routes, driver_actions, loop_route, no_broadcast
 
 
 def _edges(spark, pairs):
@@ -72,9 +72,12 @@ def test_max_iter_truncates(spark, monkeypatch):
 
 
 def test_shuffle_path_matches_broadcast_path(spark, monkeypatch):
+    """With broadcast joins off, every level's frontier join shuffles: the
+    rows match the run where AQE broadcasts the small frontiers."""
     pairs = [(i, i + 1) for i in range(20)] + [(5, 15), (0, 10)]
     a = _run(spark, monkeypatch, pairs, [0])
-    b = _run(spark, monkeypatch, pairs, [0], broadcast_frontier_max=0)
+    with no_broadcast(spark):
+        b = _run(spark, monkeypatch, pairs, [0])
     assert a == b
 
 
@@ -114,16 +117,17 @@ def test_string_and_long_ids(spark, monkeypatch):
     }
 
 
-def test_null_endpoint_takes_distributed_route(spark, monkeypatch):
-    """An edge with a NULL endpoint sends the search to the distributed
-    loop, whose join semantics give NULL its own meaning; a NULL seed is
-    reported at hop 0 and reaches nothing on both routes."""
-    edges = _edges(spark, [(0, 1), (1, None), (None, 2)])
-    with loop_route(monkeypatch, "local") as taken:
-        got = {r.node: r.hops for r in bfs_hops(edges, _seeds(spark, [0])).collect()}
-    assert taken == []
-    assert got == {0: 0, 1: 1, None: 2}
-    assert _run(spark, monkeypatch, [(0, 1), (1, 2)], [0, None]) == {
+def test_null_endpoint_edges_are_dropped(spark, monkeypatch):
+    """Edges with a NULL endpoint are dropped before either route runs, so
+    NULL is never reached; a NULL seed is reported at hop 0 and reaches
+    nothing on both routes."""
+    assert _run(spark, monkeypatch, [(0, 1), (1, None), (None, 2)], [0]) == {
+        0: 0, 1: 1,
+    }
+    assert _run(spark, monkeypatch, [(0, None), (1, None), (0, 1)], [0]) == {
+        0: 0, 1: 1,
+    }
+    assert _run(spark, monkeypatch, [(0, 1), (1, 2), (None, 0)], [0, None]) == {
         0: 0, 1: 1, 2: 2, None: 0,
     }
 

@@ -8,8 +8,10 @@ both to no-ops.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
+from pyspark.sql.types import ArrayType
 
 from corintick_spark.operators.ckpt import materialize, release_local_checkpoint, scope
 from tests.spy import count_jobs
@@ -40,7 +42,7 @@ def _edges(spark, n=1000):
 def test_materialize_stats_equal_a_separate_agg(spark):
     frame, st = materialize(_edges(spark), **_edge_stats())
     want = frame.agg(*[c.alias(k) for k, c in _edge_stats().items()]).first()
-    assert st == want.asDict() and st["n"] == 1000
+    assert st == {**want.asDict(), "rows": 1000} and st["n"] == 1000
     assert frame.count() == 1000
 
 
@@ -54,8 +56,84 @@ def test_materialize_runs_the_jobs_of_a_bare_checkpoint(spark):
 
 def test_materialize_empty_frame_counts_zero_sums_null(spark):
     frame, st = materialize(_edges(spark).filter("u < 0"), **_edge_stats())
-    assert st == {"n": 0, "s": None}
+    assert st == {"rows": 0, "n": 0, "s": None}
     assert frame.count() == 0
+    assert _size(frame) <= 1
+
+
+def _size(frame) -> int:
+    """The sizeInBytes Catalyst estimates for ``frame``."""
+    return frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
+def _row_width(frame) -> int:
+    """Spark's estimated bytes per row of ``frame`` (getSizePerRow)."""
+    return 8 + frame._jdf.schema().defaultSize()
+
+
+@contextmanager
+def _sized_checkpoints(monkeypatch, module):
+    """Wrap ``module.materialize`` so every checkpoint it returns is checked:
+    a frame without array columns must estimate at most its counted rows
+    times its row width (a frame with one keeps its plan's estimate).
+    Yields the list of (rows, estimate) pairs checked."""
+    real = module.materialize
+    checked = []
+
+    def wrapper(*a, **kw):
+        frame, st = real(*a, **kw)
+        if not any(isinstance(f.dataType, ArrayType) for f in frame.schema):
+            rows, size = frame.count(), _size(frame)
+            assert size <= max(rows, 1) * _row_width(frame), (rows, size)
+            checked.append((rows, size))
+        return frame, st
+
+    monkeypatch.setattr(module, "materialize", wrapper)
+    yield checked
+
+
+def test_materialize_sizes_the_checkpoint_by_its_rows(spark):
+    """The checkpoint of a grouped frame estimates rows x row width, not the
+    estimate of the plan it came from, and AQE broadcasts it in a join."""
+    frame, st = materialize(_edges(spark).groupBy("v").agg(F.count("u").alias("n")))
+    assert st["rows"] == 113
+    assert _size(frame) == 113 * _row_width(frame)
+    joined = _edges(spark).join(frame, "v")
+    joined.collect()
+    assert "BroadcastHashJoin" in joined._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pagerank_checkpoints_stay_sized_over_dangling_rounds(spark, monkeypatch):
+    """The distributed PageRank loop over a graph with a dangling node, one
+    checkpoint a round for 40 rounds: no checkpoint estimate grows past
+    its rows x row width (each round used to multiply the last one's), and
+    the ranks still sum to 1."""
+    from corintick_spark.operators import pagerank as pr
+    from tests.spy import loop_route
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("c", "a"), ("a", "c"), ("d", "a")], "src string, dst string"
+    )
+    with loop_route(monkeypatch, "distributed"), _sized_checkpoints(
+        monkeypatch, pr
+    ) as checked:
+        ranks = pr.pagerank(edges, iterations=40, checkpoint_every=1)
+        total = sum(r.rank for r in ranks.collect())
+    assert len(checked) == 2 + 40
+    assert abs(total - 1.0) < 1e-9
+
+
+def test_nndescent_round_checkpoints_stay_sized(spark, monkeypatch):
+    """One NN-Descent round (the ann_knn_graph shape on a tiny corpus): its
+    graph checkpoints estimate at most rows x row width."""
+    from corintick_spark.operators import nndescent
+
+    rows = [(i, [float(i % 3), float(i % 5) + 1.0, 1.0]) for i in range(24)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with _sized_checkpoints(monkeypatch, nndescent) as checked:
+        graph = nndescent.knn_graph(corpus, k=3, iters=1, build_k=4)
+    assert len(checked) == 2  # the initial graph and the round's
+    assert graph.count() == 24 * 3
 
 
 def test_materialize_releases_only_after_materializing(spark):
@@ -64,8 +142,8 @@ def test_materialize_releases_only_after_materializing(spark):
     old = spark.range(100).localCheckpoint(eager=True)
     old_rdd = old._jdf.queryExecution().analyzed().rdd().id()
     assert old_rdd in _persistent_ids(spark)
-    new, st = materialize(old.selectExpr("id * 2 AS x"), old, n=F.count(F.lit(1)))
-    assert st == {"n": 100}
+    new, st = materialize(old.selectExpr("id * 2 AS x"), old)
+    assert st == {"rows": 100}
     assert old_rdd not in _persistent_ids(spark)
     assert new.agg(F.sum("x")).first()[0] == 9900
     release_local_checkpoint(new)
@@ -75,11 +153,11 @@ def test_materialize_shares_one_listener(spark):
     """Each call's observation is unique, but the session keeps one
     query-execution listener for all of them."""
     manager = spark._jsparkSession.listenerManager()
-    materialize(spark.range(3), n=F.count(F.lit(1)))
+    materialize(spark.range(3))
     before = len(manager.listListeners())
     for i in range(30):
-        frame, st = materialize(spark.range(i), n=F.count(F.lit(1)))
-        assert st == {"n": i}
+        frame, st = materialize(spark.range(i))
+        assert st == {"rows": i}
         release_local_checkpoint(frame)
     assert len(manager.listListeners()) == before
 

@@ -819,8 +819,6 @@ def _tol_fixpoint(spark, monkeypatch, route):
 
 
 def test_pagerank_tol_early_exit_matches_fixpoint(spark, monkeypatch):
-    """The distributed route's form. Its dangling path is the CHANGES.md
-    FOUND item (1-2 GB of driver heap per 4-step segment): slow tier."""
     _tol_fixpoint(spark, monkeypatch, "distributed")
 
 
@@ -830,11 +828,8 @@ def test_pagerank_tol_early_exit_matches_fixpoint_local(spark, monkeypatch):
 
 def test_pagerank_string_long_and_null_ids(spark, monkeypatch):
     """String and long ids rank alike on both routes (int weights are summed
-    exactly); an edge with a NULL endpoint sends the graph to the
-    distributed loop."""
-    from corintick_spark.operators.pagerank import pagerank
-    from tests.spy import loop_route
-
+    exactly); edges with a NULL endpoint are dropped on both routes, so
+    NULL is no node and the ranks of the rest sum to 1."""
     cycle = [("a", "b", 1), ("b", "c", 2), ("c", "a", 3), ("a", "c", 1)]
     words = spark.createDataFrame(cycle, "src string, dst string, w int")
     big = 1 << 40
@@ -849,9 +844,10 @@ def test_pagerank_string_long_and_null_ids(spark, monkeypatch):
     nulls = spark.createDataFrame(
         [("a", "b"), ("b", "a"), ("a", None), (None, "b")], "src string, dst string"
     )
-    with loop_route(monkeypatch, "local") as taken:
-        pagerank(nulls, iterations=2).collect()
-    assert taken == []
+    for iterations in (1, 2, 3):
+        ranks = _ranks(monkeypatch, nulls, iterations=iterations)
+        assert ranks.keys() == {"a", "b"}
+        assert abs(sum(ranks.values()) - 1.0) < 1e-12, ranks
 
 
 def test_pagerank_local_route_runs_one_checkpoint(spark, monkeypatch):
@@ -875,9 +871,8 @@ def test_pagerank_local_route_runs_one_checkpoint(spark, monkeypatch):
 
 def test_connected_components_rounds_read_stats_off_checkpoints(spark, monkeypatch):
     """Each round's edge count and xor-hash come from its checkpoint job, as
-    the edge list's count comes from its own: on the distributed route the
-    only action left is the pre-loop DISTINCT node-count head, which
-    observe cannot carry."""
+    the edge list's count comes from its own: the distributed route runs
+    no action besides its checkpoints."""
     from corintick_spark.operators.dup_clusters import connected_components
     from tests.spy import driver_actions, loop_route
 
@@ -886,7 +881,7 @@ def test_connected_components_rounds_read_stats_off_checkpoints(spark, monkeypat
     )
     with loop_route(monkeypatch, "distributed"), driver_actions(spark, monkeypatch) as calls:
         labels = connected_components(edges)
-    assert calls == [("first", ("nn",))]
+    assert calls == []
     comp = {r.node: r.comp for r in labels.collect()}
     assert comp == {**{i: 0 for i in range(13)}, 20: 20, 21: 20}
 
@@ -917,6 +912,33 @@ def test_pagerank_tol_read_rides_the_checkpoint(spark, monkeypatch):
     assert set(got) == set(exact)
     for k in exact:
         assert abs(exact[k] - got[k]) < 1e-8, (k, exact[k], got[k])
+
+
+def test_distributed_loops_shuffle_path_matches_broadcast_path(spark, monkeypatch):
+    """With broadcast joins off, every join of the distributed PageRank and
+    connected-components rounds shuffles: ranks and labels match the runs
+    where AQE broadcasts the small checkpoints."""
+    from corintick_spark.operators.dup_clusters import connected_components
+    from corintick_spark.operators.pagerank import pagerank
+    from tests.spy import loop_route, no_broadcast
+
+    pairs = [(i, (i * 7 + 3) % 40) for i in range(40)] + [(41, 42), (43, 41)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    cc_edges = edges.withColumnRenamed("src", "a_id").withColumnRenamed("dst", "b_id")
+
+    def run():
+        ranks = {r.node: r.rank for r in pagerank(edges, iterations=6).collect()}
+        labels = {r.node: r.comp for r in connected_components(cc_edges).collect()}
+        return ranks, labels
+
+    with loop_route(monkeypatch, "distributed"):
+        (ranks, labels) = run()
+        with no_broadcast(spark):
+            (shuffled_ranks, shuffled_labels) = run()
+    assert labels == shuffled_labels
+    assert ranks.keys() == shuffled_ranks.keys()
+    for node, rank in ranks.items():
+        assert abs(rank - shuffled_ranks[node]) < 1e-12, (node, rank)
 
 
 def test_minhash_pairs_runs_no_action(spark, monkeypatch):

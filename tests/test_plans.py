@@ -317,18 +317,19 @@ def test_covariance_shuffles_cells_not_vectors(spark, sf_dir):
 
 
 def test_cc_star_rounds_broadcast_min_tables(spark):
-    """connected_components' star rounds must plan BroadcastHashJoin for
-    the per-center minimum tables when bcast is on (AQE can't make that
-    call — localCheckpointed inputs have no size statistics), and fall
-    back to a shuffle join when it is off (the >1M-node posture)."""
+    """connected_components' star rounds read sized checkpoints, so Catalyst
+    plans BroadcastHashJoin for the per-center minimum tables on its own,
+    and a shuffle join once broadcasts are off (the posture of a node set
+    past the broadcast threshold)."""
+    from corintick_spark.operators.ckpt import materialize
     from corintick_spark.operators.dup_clusters import _large_star
+    from tests.spy import no_broadcast
 
-    e = spark.createDataFrame(
-        [(2, 1), (3, 2), (5, 4)], "u long, v long"
-    ).localCheckpoint(eager=True)
+    e, _ = materialize(spark.createDataFrame([(2, 1), (3, 2), (5, 4)], "u long, v long"))
     sym = e.unionByName(e.selectExpr("v as u", "u as v"))
-    on = _large_star(sym, True)._jdf.queryExecution().executedPlan().toString()
-    off = _large_star(sym, False)._jdf.queryExecution().executedPlan().toString()
+    on = _large_star(sym)._jdf.queryExecution().executedPlan().toString()
+    with no_broadcast(spark):
+        off = _large_star(sym)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in on
     assert "BroadcastHashJoin" not in off
 

@@ -298,8 +298,8 @@ def test_fold_signs_batch_once(spark, monkeypatch):
 def test_fold_measures_signatures_once(spark, monkeypatch):
     """The MinHash fold measures its batch signatures once, on the signing
     checkpoint job: neither the store match nor the intra-batch pairs runs
-    an aggregate over ``sig``. On connected components' distributed route
-    the one action left is its DISTINCT node-count head."""
+    an aggregate over ``sig``, and connected components' distributed route
+    runs no action besides its checkpoints."""
     from corintick_spark.streaming.incremental_dedup import make_batch_processor
     from tests.spy import ACTIONS, driver_actions, loop_route
 
@@ -321,7 +321,7 @@ def test_fold_measures_signatures_once(spark, monkeypatch):
             proc(batch, 1)
         sig_ckpts = [c for c in calls if c[0] == "localCheckpoint" and "sig" in c[1]]
         assert len(sig_ckpts) == 1
-        assert [c for c in calls if c[0] != "localCheckpoint"] == [("first", ("nn",))]
+        assert [c for c in calls if c[0] != "localCheckpoint"] == []
         out = spark.read.option("recursiveFileLookup", "true").parquet(dec)
         rows = {r.doc_id: (r.is_dup, r.matched_id) for r in out.collect()}
         assert rows[3] == (True, 1)
